@@ -16,6 +16,7 @@ fixed options, no timestamps in the metadata).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import struct
@@ -48,11 +49,16 @@ EPOCH0_MS = 1_704_067_200_000
 
 #: topic -> payload format (the export_bulk topic set)
 TOPIC_FORMATS = {"spx_index": "json", "spx_options": "json", "es_futures": "msgpack"}
+#: Kafka partitions of every generated topic
+N_PARTITIONS = 8
 
 
 # ---------------------------------------------------------------------------
 # MessagePack encoder (independent of the program's codec, so a symmetric
 # encode/decode bug cannot cancel out)
+
+
+_DOUBLE = struct.Struct(">d")
 
 
 def msgpack_pack(obj) -> bytes:
@@ -61,36 +67,40 @@ def msgpack_pack(obj) -> bytes:
     return bytes(out)
 
 
+@functools.lru_cache(maxsize=4096)
+def _packed_str(s: str) -> bytes:
+    b = s.encode("utf-8")
+    if len(b) < 32:
+        return bytes([0xA0 | len(b)]) + b
+    return (b"\xd9" + bytes([len(b)]) if len(b) < 256 else b"\xda" + struct.pack(">H", len(b))) + b
+
+
 def _pack(obj, out: bytearray) -> None:
-    if obj is None:
-        out.append(0xC0)
-    elif obj is True or obj is False:
-        out.append(0xC3 if obj else 0xC2)
-    elif isinstance(obj, int):
+    t = type(obj)
+    if t is dict:
+        out += bytes([0x80 | len(obj)]) if len(obj) < 16 else b"\xde" + struct.pack(">H", len(obj))
+        for k, v in obj.items():
+            _pack(k, out)
+            _pack(v, out)
+    elif t is str:
+        out += _packed_str(obj)
+    elif t is float:
+        out += b"\xcb" + _DOUBLE.pack(obj)
+    elif t is int:
         if 0 <= obj < 128:
             out.append(obj)
         elif 0 <= obj < 2**32:
             out += b"\xce" + struct.pack(">I", obj)
         else:
             out += b"\xd3" + struct.pack(">q", obj)
-    elif isinstance(obj, float):
-        out += b"\xcb" + struct.pack(">d", obj)
-    elif isinstance(obj, str):
-        b = obj.encode("utf-8")
-        if len(b) < 32:
-            out.append(0xA0 | len(b))
-        else:
-            out += b"\xd9" + bytes([len(b)]) if len(b) < 256 else b"\xda" + struct.pack(">H", len(b))
-        out += b
-    elif isinstance(obj, (list, tuple)):
+    elif t is bool:
+        out.append(0xC3 if obj else 0xC2)
+    elif obj is None:
+        out.append(0xC0)
+    elif t is list or t is tuple:
         out += bytes([0x90 | len(obj)]) if len(obj) < 16 else b"\xdc" + struct.pack(">H", len(obj))
         for x in obj:
             _pack(x, out)
-    elif isinstance(obj, dict):
-        out += bytes([0x80 | len(obj)]) if len(obj) < 16 else b"\xde" + struct.pack(">H", len(obj))
-        for k, v in obj.items():
-            _pack(k, out)
-            _pack(v, out)
     else:
         raise TypeError(f"cannot pack {type(obj).__name__}")
 
@@ -99,55 +109,64 @@ def _pack(obj, out: bytearray) -> None:
 # topic payloads
 
 
-def _payload(topic: str, rng: np.random.Generator, seq: int) -> dict:
-    px = round(4700.0 + float(rng.normal(0, 40)), 2)
-    meta = {"exchange": "CBOE", "seq": seq}
-    if topic == "spx_index":
-        data = {
-            "symbol": "SPX",
-            "price": px,
-            "bid": round(px - 0.25, 2),
-            "ask": round(px + 0.25, 2),
-            "volume": int(rng.integers(0, 5000)),
-        }
-        return {"event_type": "market_data", "source": "ibkr", "data": data, "metadata": meta}
-    if topic == "spx_options":
-        strike = float(4500 + 5 * int(rng.integers(0, 80)))
-        mid = round(abs(px - strike) * 0.1 + float(rng.uniform(1, 30)), 2)
-        data = {
-            "symbol": "SPX",
-            "strike": strike,
-            "right": "C" if rng.random() < 0.5 else "P",
-            "expiry": f"2024-0{1 + int(rng.integers(0, 6))}-16",
-            "bid": round(mid - 0.05, 2),
-            "ask": round(mid + 0.05, 2),
-            "last": mid,
-            "volume": int(rng.integers(0, 2000)),
-            "open_interest": int(rng.integers(0, 50000)),
-            "implied_vol": round(float(rng.uniform(0.08, 0.6)), 4),
-            "underlying_price": px,
-            "greeks": {
-                "delta": round(float(rng.uniform(-1, 1)), 4),
-                "gamma": round(float(rng.uniform(0, 0.01)), 6),
-                "theta": round(float(rng.uniform(-5, 0)), 4),
-                "vega": round(float(rng.uniform(0, 8)), 4),
-                "rho": round(float(rng.uniform(-2, 2)), 4),
+def _payloads(topic: str, rng: np.random.Generator, seqs: list[int]) -> list[dict]:
+    """One payload per sequence number. Each random field is drawn for the
+    whole batch at once."""
+    n = len(seqs)
+    px = np.round(4700.0 + rng.normal(0, 40, n), 2).tolist()
+    if topic in ("spx_index", "es_futures"):
+        head = {"symbol": "SPX"} if topic == "spx_index" else {"symbol": "ES", "contract": "ESH4"}
+        volume = rng.integers(0, 5000 if topic == "spx_index" else 3000, n).tolist()
+        return [
+            {
+                "event_type": "market_data",
+                "source": "ibkr",
+                "data": {**head, "price": p, "bid": round(p - 0.25, 2), "ask": round(p + 0.25, 2), "volume": v},
+                "metadata": {"exchange": "CBOE", "seq": seq},
+            }
+            for p, v, seq in zip(px, volume, seqs)
+        ]
+    if topic != "spx_options":
+        raise KeyError(topic)
+    strike = (4500.0 + 5 * rng.integers(0, 80, n)).tolist()
+    mid = np.round(np.abs(np.array(px) - strike) * 0.1 + rng.uniform(1, 30, n), 2).tolist()
+    right = np.where(rng.random(n) < 0.5, "C", "P").tolist()
+    month = rng.integers(1, 7, n).tolist()
+    volume = rng.integers(0, 2000, n).tolist()
+    oi = rng.integers(0, 50000, n).tolist()
+    iv = np.round(rng.uniform(0.08, 0.6, n), 4).tolist()
+    greeks = {
+        "delta": np.round(rng.uniform(-1, 1, n), 4).tolist(),
+        "gamma": np.round(rng.uniform(0, 0.01, n), 6).tolist(),
+        "theta": np.round(rng.uniform(-5, 0, n), 4).tolist(),
+        "vega": np.round(rng.uniform(0, 8, n), 4).tolist(),
+        "rho": np.round(rng.uniform(-2, 2, n), 4).tolist(),
+    }
+    n_exchanges = rng.integers(1, 5, n).tolist()
+    exchanges = ["CBOE", "PHLX", "ISE", "AMEX"]
+    return [
+        {
+            "event_type": "option_quote",
+            "source": "ibkr",
+            "data": {
+                "symbol": "SPX",
+                "strike": strike[i],
+                "right": right[i],
+                "expiry": f"2024-0{month[i]}-16",
+                "bid": round(mid[i] - 0.05, 2),
+                "ask": round(mid[i] + 0.05, 2),
+                "last": mid[i],
+                "volume": volume[i],
+                "open_interest": oi[i],
+                "implied_vol": iv[i],
+                "underlying_price": px[i],
+                "greeks": {k: v[i] for k, v in greeks.items()},
+                "exchanges": exchanges[: n_exchanges[i]],
             },
-            "exchanges": ["CBOE", "PHLX", "ISE", "AMEX"][: 1 + int(rng.integers(0, 4))],
+            "metadata": {"exchange": "CBOE", "seq": seq, "feed": "opra"},
         }
-        meta["feed"] = "opra"
-        return {"event_type": "option_quote", "source": "ibkr", "data": data, "metadata": meta}
-    if topic == "es_futures":
-        data = {
-            "symbol": "ES",
-            "contract": "ESH4",
-            "price": px,
-            "bid": round(px - 0.25, 2),
-            "ask": round(px + 0.25, 2),
-            "volume": int(rng.integers(0, 3000)),
-        }
-        return {"event_type": "market_data", "source": "ibkr", "data": data, "metadata": meta}
-    raise KeyError(topic)
+        for i, seq in enumerate(seqs)
+    ]
 
 
 def _corrupt(fmt: str, rng: np.random.Generator) -> bytes:
@@ -204,42 +223,48 @@ def topic_batch(
     topic: str,
     n: int,
     *,
-    fmt: str | None = None,
-    n_partitions: int = 8,
     day_lo: int = 0,
     day_hi: int = 30,
     next_offsets: dict[int, int] | None = None,
     null_ts_share: float = 0.0,
     corrupt_share: float = 0.0,
 ) -> TopicBatch:
-    """`n` records spread over `n_partitions` partitions and the event
+    """`n` records spread over `N_PARTITIONS` partitions and the event
     days [day_lo, day_hi). Offsets continue per partition from
     `next_offsets` (updated in place); timestamps rise with offset within
-    a partition, as a broker assigns them.
+    a partition, as a broker assigns them. Exactly `round(share * n)`
+    rows, at seeded positions, carry a null timestamp or a corrupt
+    payload.
     """
-    fmt = fmt or TOPIC_FORMATS[topic]
+    fmt = TOPIC_FORMATS[topic]
     next_offsets = next_offsets if next_offsets is not None else {}
     ts = np.sort(rng.integers(EPOCH0_MS + day_lo * DAY_MS, EPOCH0_MS + day_hi * DAY_MS, n))
-    parts = rng.integers(0, n_partitions, n)
-    null_ts = rng.random(n) < null_ts_share
+    parts = rng.integers(0, N_PARTITIONS, n).tolist()
+    picked = rng.permutation(n)
+    n_null_ts, n_corrupt = round(null_ts_share * n), round(corrupt_share * n)
+    null_ts = np.zeros(n, bool)
+    null_ts[picked[:n_null_ts]] = True
     # a corrupt payload always carries a timestamp, so it is committed
-    corrupt = (rng.random(n) < corrupt_share) & ~null_ts
-    out = TopicBatch(topic=topic, fmt=fmt)
-    for i in range(n):
-        p = int(parts[i])
-        off = next_offsets.get(p, 0)
-        next_offsets[p] = off + 1
-        out.partition.append(p)
-        out.offset.append(off)
-        out.timestamp.append(None if null_ts[i] else int(ts[i]))
-        out.key.append(f"{topic}-{p}-{off}")
-        if corrupt[i]:
-            out.value.append(_corrupt(fmt, rng))
-        else:
-            out.value.append(encode(fmt, _payload(topic, rng, p * 10**9 + off)))
-    out.n_null_ts = int(null_ts.sum())
-    out.n_corrupt = int(corrupt.sum())
-    return out
+    corrupt = np.zeros(n, bool)
+    corrupt[picked[n_null_ts : n_null_ts + n_corrupt]] = True
+    offsets = []
+    for p in parts:
+        offsets.append(next_offsets.get(p, 0))
+        next_offsets[p] = offsets[-1] + 1
+    payloads = _payloads(topic, rng, [p * 10**9 + off for p, off in zip(parts, offsets)])
+    return TopicBatch(
+        topic=topic,
+        fmt=fmt,
+        partition=parts,
+        offset=offsets,
+        timestamp=[None if z else t for z, t in zip(null_ts.tolist(), ts.tolist())],
+        key=[f"{topic}-{p}-{off}" for p, off in zip(parts, offsets)],
+        value=[
+            _corrupt(fmt, rng) if bad else encode(fmt, d) for bad, d in zip(corrupt.tolist(), payloads)
+        ],
+        n_null_ts=n_null_ts,
+        n_corrupt=n_corrupt,
+    )
 
 
 def redeliver(rng: np.random.Generator, prev: TopicBatch, share: float) -> TopicBatch:

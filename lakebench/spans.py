@@ -200,11 +200,15 @@ def median(xs) -> float:
     return statistics.median(xs) if xs else 0.0
 
 
-def tail_quantile(n: int, ladder=(0.5, 0.75, 0.9, 0.99, 0.999)) -> float | None:
-    """The highest quantile in `ladder` that leaves at least ten of `n`
-    samples beyond it; None when not even the median does."""
+#: the quantiles a latency may be reported at
+QUANTILES = (0.5, 0.75, 0.9, 0.99, 0.999)
+
+
+def tail_quantile(n: int) -> float | None:
+    """The highest of `QUANTILES` that leaves at least ten of `n` samples
+    beyond it; None when not even the median does."""
     best = None
-    for q in ladder:
+    for q in QUANTILES:
         if n - math.ceil(q * n) >= 10:
             best = q
     return best

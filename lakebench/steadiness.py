@@ -2,7 +2,7 @@
 """Run the benchmark over several seeds and report how steady each
 end-to-end metric is.
 
-    python3 lakebench/steadiness.py --seeds 1-10 [--workloads export_bulk] [--md out.md]
+    python3 lakebench/steadiness.py --seeds 1-10 [--workloads export_bulk]
 
 Reads the command, run length, workloads and bounds from BENCHMARK.json
 (run from the repository root). For each workload and metric it prints
@@ -38,7 +38,6 @@ def main() -> int:
     p = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     p.add_argument("--seeds", default="1-10")
     p.add_argument("--workloads", default=None, help="comma-separated subset")
-    p.add_argument("--md", default=None, help="append a markdown table to this file")
     args = p.parse_args()
 
     with open("BENCHMARK.json") as f:
@@ -81,9 +80,6 @@ def main() -> int:
             f"| {w} | {m} | {med:.4g} | {s:.4f}{mark} | {b} | {', '.join(f'{v:.4g}' for v in vals)} |"
         )
     print("\n".join(lines))
-    if args.md:
-        with open(args.md, "a") as f:
-            f.write(f"\nSeeds {args.seeds}:\n\n" + "\n".join(lines) + "\n")
     return 0 if ok else 1
 
 

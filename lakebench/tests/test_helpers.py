@@ -16,19 +16,17 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import gen  # noqa: E402
-from spans import Span, self_times, tail_quantile  # noqa: E402
-
-LADDER = (0.5, 0.75, 0.9, 0.99, 0.999)
+from spans import QUANTILES, Span, self_times, tail_quantile  # noqa: E402
 
 
 @pytest.mark.parametrize("n", range(1, 3001))
 def test_reported_percentile_has_ten_samples_beyond(n):
-    q = tail_quantile(n, LADDER)
+    q = tail_quantile(n)
     if q is None:
         assert n - math.ceil(0.5 * n) < 10
         return
     assert n - math.ceil(q * n) >= 10
-    higher = [x for x in LADDER if x > q]
+    higher = [x for x in QUANTILES if x > q]
     assert all(n - math.ceil(x * n) < 10 for x in higher)
 
 
@@ -119,5 +117,5 @@ def test_msgpack_encoder_round_trips_through_the_package_codec():
 
     rng = np.random.default_rng(1)
     for topic in gen.TOPIC_FORMATS:
-        payload = gen._payload(topic, rng, 12345)
-        assert msgpack_codec.unpackb(gen.msgpack_pack(payload)) == payload
+        for payload in gen._payloads(topic, rng, [12345, 67890]):
+            assert msgpack_codec.unpackb(gen.msgpack_pack(payload)) == payload
