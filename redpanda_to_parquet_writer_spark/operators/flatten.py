@@ -91,13 +91,3 @@ def project_kafka_envelope(df: DataFrame) -> DataFrame:
         F.col("key").cast("string").alias("kafka_key"),
         F.col("value"),
     )
-
-
-def strip_prefix(df: DataFrame, prefix: str = "value.") -> DataFrame:
-    """Prefix-strip rename (P4, reader:304-325) as one select."""
-    return df.select(
-        *[
-            F.col(f"`{c}`").alias(c[len(prefix):]) if c.startswith(prefix) else F.col(c)
-            for c in df.columns
-        ]
-    )

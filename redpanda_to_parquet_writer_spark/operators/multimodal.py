@@ -3392,71 +3392,6 @@ WAV_FRAMES = (200, 300)  # n_frames = 200 + id % 300
 WAV_AMP = (7919, 32000)  # amp = 1 + (id * 7919) % 32000
 
 
-AUDIO_FEATURES_SCHEMA = StructType(
-    [
-        StructField("n_frames", LongType()),
-        StructField("peak_abs", LongType()),
-        StructField("sum_square", LongType()),
-        StructField("zero_crossings", LongType()),
-        StructField("lead_silence", LongType()),
-        StructField("trail_silence", LongType()),
-    ]
-)
-
-
-def decode_wav_features(data: bytes) -> tuple[int, int, int, int, int, int]:
-    """Audio-quality features over decoded PCM — the filters an audio
-    training pipeline runs before keeping a clip: exact-integer peak,
-    energy (sum of sample^2), zero-crossing count (strict sign flips,
-    zeros don't cross), and leading/trailing silence run lengths
-    (|s| == 0), the inputs to silence trimming. Mono 16-bit only, all
-    numpy over the frame buffer — no Python per-sample loop."""
-    import array
-    import io
-    import wave
-
-    import numpy as np
-
-    try:
-        with wave.open(io.BytesIO(data), "rb") as w:
-            if w.getnchannels() != 1 or w.getsampwidth() != 2:
-                raise ValueError("audio features: mono 16-bit PCM only")
-            frames = w.readframes(w.getnframes())
-    except (wave.Error, EOFError, RuntimeError) as exc:
-        raise ValueError(f"bad wav: {exc}") from exc
-    s = np.frombuffer(frames, dtype="<i2").astype(np.int64)
-    n = int(s.size)
-    if n == 0:
-        return (0, 0, 0, 0, 0, 0)
-    peak = int(np.abs(s).max())
-    sum_sq = int((s * s).sum())
-    signs = np.sign(s)
-    zc = int(((signs[1:] * signs[:-1]) < 0).sum())
-    nz = np.flatnonzero(s)
-    lead = int(nz[0]) if nz.size else n
-    trail = int(n - 1 - nz[-1]) if nz.size else 0
-    return (n, peak, sum_sq, zc, lead, trail)
-
-
-def synth_ramp_wav(seed: int) -> bytes:
-    """Deterministic mono waveform with real structure: sample t is
-    ((seed + 3*t) % 17) - 8 — zeros (silence), sign changes, and a
-    bounded peak — wrapped in `lead`/`trail` explicit zero padding so
-    the silence-trim features bite. Every feature is an exact integer
-    expression of (seed, t), replayable by analytic SQL."""
-    n = WAV_FRAMES[0] + seed % WAV_FRAMES[1]
-    lead = seed % 5
-    trail = (3 * seed) % 4
-    body = [((seed + 3 * t) % 17) - 8 for t in range(n)]
-    # guarantee the body's edges are non-silent so lead/trail are exact
-    if body[0] == 0:
-        body[0] = 1
-    if body[-1] == 0:
-        body[-1] = -1
-    samples = [0] * lead + body + [0] * trail
-    return encode_wav_pcm16(samples, WAV_SAMPLE_RATE)
-
-
 def synth_square_wav(seed: int) -> bytes:
     """Deterministic mono square wave from an integer seed: every sample
     is +/-amp, so peak_abs == amp and mean_square == amp^2 EXACTLY —

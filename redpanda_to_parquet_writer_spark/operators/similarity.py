@@ -4,7 +4,10 @@ Training-data-pipeline operators over an `array<float>` embedding column:
   - brute-force cosine top-k (the exact baseline)
   - LSH-bucketed ANN via random-hyperplane signatures (the scale path:
     collapses the O(n*q) pair space to per-bucket joins)
-  - embedding-cosine near-duplicate pairs
+  - IVF and IVFADC top-k, inline (`ivf_topk`, `ivfadc_topk`) and over
+    ONE persisted index type: `write_ivf_index` writes it,
+    `build_ivf_index` trains and sizes it, `ivf_topk_indexed` serves it
+  - embedding-cosine near-duplicate pairs, PQ, int8 and k-means
   - per-group vector norm statistics
 
 All dot products / norms are built-in higher-order functions
@@ -14,6 +17,8 @@ reproducible across engines.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -246,12 +251,15 @@ def ivf_assign(
     vec_col: str = "v",
     centroid_id_col: str = "cluster_id",
     centroid_vec_col: str = "cv",
+    on: str | None = None,
 ) -> DataFrame:
     """Coarse quantizer: assign each vector to its max-cosine centroid.
 
     Centroids broadcast (they're tiny by construction), so assignment is
     a map-side cross product + per-vector argmax — zero shuffle. Returns
-    (id, v, cluster_id).
+    (id, v, cluster_id). `on` names a column both sides carry (the
+    persisted index's `shard`): each vector then ranks only the
+    centroids of its own shard, and the column rides into the output.
 
     r17 note: a one-row-broadcast-array + `array_max(transform(...))`
     rewrite (no groupBy exchange) was priced and REJECTED — Spark never
@@ -261,13 +269,13 @@ def ivf_assign(
     posting-list note). The codegen'd join fan-out + max_by collapse
     stays.
     """
-    scored = df.join(F.broadcast(centroids)).withColumn(
+    scored = df.join(F.broadcast(centroids), on).withColumn(
         "__sim", cosine(F.col(vec_col), F.col(centroid_vec_col))
     )
     # per-vector argmax via max_by on a (sim, -cluster_id) struct: ties
     # break to the LOWEST cluster id, deterministically
     return (
-        scored.groupBy(id_col)
+        scored.groupBy(id_col, *([on] if on else []))
         .agg(
             F.first(vec_col).alias(vec_col),
             F.max_by(
@@ -275,19 +283,6 @@ def ivf_assign(
                 F.struct(F.col("__sim"), -F.col(centroid_id_col)),
             ).alias(centroid_id_col),
         )
-    )
-
-
-def _centroid_rows(
-    centroids: DataFrame,
-    centroid_id_col: str = "cluster_id",
-    centroid_vec_col: str = "cv",
-) -> list[tuple[int, list[float]]]:
-    """Collect the (tiny by contract) codebook as rows sorted by
-    centroid id — the closure feed for the vectorized assignment path."""
-    return sorted(
-        (int(r[centroid_id_col]), [float(x) for x in r[centroid_vec_col]])
-        for r in centroids.collect()
     )
 
 
@@ -308,27 +303,23 @@ def materialize_centroids(centroids: DataFrame) -> DataFrame:
         (int(r["cluster_id"]), [float(x) for x in r["cv"]])
         for r in centroids.collect()
     ]
-    out = spark.createDataFrame(rows, "cluster_id int, cv array<double>")
-    # stats ride along (rows just passed through the driver anyway) so
-    # the sharded build can write its stats sidecar with ZERO extra
-    # jobs (VERDICT r15 #1) — an implementation detail, not API: every
-    # consumer falls back to a bounded aggregate when absent. dim is
-    # the MAX over rows (matching `_codebook_stats_job`'s max(size)),
-    # so a malformed short first vector cannot understate the sidecar
-    out._codebook_stats = (len(rows), max((len(r[1]) for r in rows), default=0))
-    return out
+    return spark.createDataFrame(rows, "cluster_id int, cv array<double>")
 
 
 def _rank_probes(
     queries: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, n_probe: int
 ) -> DataFrame:
-    """Rank the (local, broadcast) codebook per query and keep the
-    `n_probe` nearest lists — shared by the inline and persisted-index
-    IVF paths so their probe semantics cannot drift apart."""
+    """Rank the (broadcast) codebook per query and keep the `n_probe`
+    nearest lists — shared by the inline and persisted-index IVF paths
+    so their probe semantics cannot drift apart. A codebook carrying a
+    `shard` column (the persisted index's, `_combined_books`) ranks per
+    (query, shard): shards partition the corpus, so a neighbor can live
+    in any of them and every query probes `n_probe` lists in each."""
+    shard = ["shard"] if "shard" in centroids.columns else []
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
-    qw = Window.partitionBy("query_id").orderBy(
+    qw = Window.partitionBy("query_id", *shard).orderBy(
         F.col("__sim").desc(), F.col("cluster_id").asc()
     )
     return (
@@ -336,14 +327,22 @@ def _rank_probes(
         .withColumn("__sim", cosine(F.col("qv"), F.col("cv")))
         .withColumn("__pr", F.row_number().over(qw))
         .filter(F.col("__pr") <= n_probe)
-        .select("query_id", "qv", "cluster_id")
+        .select("query_id", "qv", *shard, "cluster_id")
     )
 
 
-def _score_probed_candidates(candidates: DataFrame, probes: DataFrame) -> DataFrame:
-    """Exact-cosine verify of (cluster_id-joined) candidates against the
-    probe batch — the UNROUNDED (query_id, neighbor_id, sim) frame both
-    the single-index and sharded tails rank over.
+def _score_probed(
+    candidates: DataFrame, probes: DataFrame, on, lut: DataFrame | None = None
+) -> DataFrame:
+    """Verify the candidates of the probed lists — joined to their probe
+    rows on `on` (`cluster_id` inline, `shard` + `cluster_id` on the
+    persisted index) — into the UNROUNDED frame every IVF tail ranks.
+
+    Without `lut`, exact cosine against the query vector: (query_id,
+    neighbor_id, sim). With the ADC lookup table (`_pq_query_lut`), the
+    (subspace, code) posting rows join the broadcast LUT and sum exact
+    decimals: (query_id, neighbor_id, adc_dec) — no float vector is
+    touched at query time, and the sum is order-proof.
 
     The probe side is a QUERY BATCH (n_queries x n_probe rows) — small
     by contract relative to the corpus-sized candidate side, so it
@@ -351,19 +350,17 @@ def _score_probed_candidates(candidates: DataFrame, probes: DataFrame) -> DataFr
     sub-plan overshoot the auto-broadcast threshold and the join falls
     back to SortMerge, shuffling the whole assigned corpus on
     cluster_id (the r5 bench drift's cause)."""
-    return (
-        candidates.join(F.broadcast(probes), on="cluster_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", cosine(F.col("qv"), F.col("v")))
-        .select("query_id", "neighbor_id", "sim")
+    joined = candidates.join(F.broadcast(probes), on=on).filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-
-
-#: deterministic per-query candidate order shared by every IVF tail —
-#: unrounded sim desc, ties to the lowest neighbor id
-def _topk_window():
-    return Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
+    if lut is None:
+        return joined.withColumn("sim", cosine(F.col("qv"), F.col("v"))).select(
+            "query_id", "neighbor_id", "sim"
+        )
+    return (
+        joined.join(F.broadcast(lut), ["query_id", "subspace", "code"])
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum("ddec").alias("adc_dec"))
     )
 
 
@@ -372,76 +369,58 @@ def _topk_window():
 TOPK_SALTS = 64
 
 
-def _rank_topk(scored: DataFrame, k: int, salted: bool = False) -> DataFrame:
-    """Per-query top-k over an unrounded scored frame; rounding happens
-    AFTER ranking so shard unions re-rank on exactly the values the
-    single-index path ranks on.
+def _rank_topk(
+    scored: DataFrame, k: int, salted: bool = False, final: bool = True
+) -> DataFrame:
+    """Per-query top-k over an UNROUNDED `_score_probed` frame: cosine
+    `sim` descending, or ADC `adc_dec` ascending, ties to the lowest
+    neighbor id. Rounding (cosine) and the double cast (ADC) happen
+    AFTER ranking, so every IVF path ranks on exactly the same values.
 
-    Skew shape (r14 — found by the degenerate-vector probe): a top-k
-    window partitioned by query_id alone streams EVERY probed candidate
-    of a query through ONE task. `salted=True` runs a two-level
-    selection instead: a per-(query, salt-of-neighbor) partial top-k
-    (any one window task bounded at candidates/64) feeds the global
-    rank, whose input is ≤ 64 × k rows per query. Top-k is selection —
-    it decomposes over ANY partition of the candidates (every global
-    top-k row is its salt's top-k row), so the rows are IDENTICAL to
-    the flat window's for any input, tie-breaks included (both levels
-    order by unrounded sim desc, neighbor asc); gated bitwise by the
-    suite's serve-equality tests and the oracle.
+    `salted=True` runs a two-level selection: a per-(query,
+    salt-of-neighbor) partial top-k (any one window task bounded at
+    candidates/64) feeds the global rank, whose input is <= 64 x k rows
+    per query. Top-k is selection — it decomposes over ANY partition of
+    the candidates — so the rows are IDENTICAL to the flat window's for
+    any input, tie-breaks included (gated by the serve-equality tests
+    and the salted_topk fuzz family). The persisted serve salts when
+    the index has more than one shard: its per-query candidate volume
+    is n_shards x n_probe x list_len, which grows with the shard count
+    and becomes the corpus on a degenerate hot list (measured 6.96 s vs
+    2.38 s for an 8-query batch over 200k identical vectors at 4
+    shards). A single shard ranks in one window: its candidates are
+    bounded at n_probe x target_list_len by the codebook-scaling
+    contract, and the extra exchange + window stage measured a fixed
+    0.1-0.2 s per serve on the sf0.1 bench.
 
-    Who salts (the r14 bench_diff adjudication): the SHARDED serve —
-    its per-query candidate volume is n_shards × n_probe × list_len,
-    which GROWS with the shard count (~10^5 rows per query in one task
-    at max sharding) and becomes the corpus itself on a degenerate
-    hot list (measured 6.96s vs 2.38s for an 8-query batch over 200k
-    identical vectors at 4 shards). The flat paths stay single-level:
-    their candidates are bounded at n_probe × target_list_len (~5k
-    rows) by the codebook-scaling contract, and the extra exchange +
-    window stage measured as a fixed ~0.1-0.2s per serve on the sf0.1
-    bench (ann_ivf_append_topk 0.13→0.38s) — a constant the bounded
-    window never pays back.
+    `final=False` keeps the unrounded score and drops the rank — the
+    per-chunk selection of the chunked serve, whose global re-rank must
+    order by the values the unchunked plan ranks on (rounding first
+    could reorder sub-1e-6 near-ties across chunks).
     """
+    adc = "adc_dec" in scored.columns
+    score = "adc_dec" if adc else "sim"
+    order = [
+        F.col(score).asc() if adc else F.col(score).desc(),
+        F.col("neighbor_id").asc(),
+    ]
     if salted:
         salt = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(TOPK_SALTS))
-        pre = Window.partitionBy("query_id", salt).orderBy(
-            F.col("sim").desc(), F.col("neighbor_id").asc()
-        )
+        pre = Window.partitionBy("query_id", salt).orderBy(*order)
         scored = scored.withColumn("__pr", F.row_number().over(pre)).filter(
             F.col("__pr") <= k
         ).drop("__pr")
-    ranked = scored.withColumn("rank", F.row_number().over(_topk_window())).filter(
-        F.col("rank") <= k
+    ranked = scored.withColumn(
+        "rank", F.row_number().over(Window.partitionBy("query_id").orderBy(*order))
+    ).filter(F.col("rank") <= k)
+    if not final:
+        return ranked.select("query_id", "neighbor_id", score)
+    out = (
+        F.col(score).cast("double").alias("adc_dist")
+        if adc
+        else F.round(score, 6).alias("sim")
     )
-    return ranked.select(
-        "query_id", "neighbor_id", F.round("sim", 6).alias("sim"), "rank"
-    )
-
-
-def _topk_unrounded(scored: DataFrame, k: int) -> DataFrame:
-    """Per-query top-k KEEPING the unrounded sims (no rank column) —
-    the per-chunk selection of the chunked serve, whose global re-rank
-    must order by the same unrounded values the unchunked plan ranks on
-    (rounding first could reorder sub-1e-6 near-ties across chunks).
-    Same salted two-level task shape as `_rank_topk(salted=True)`."""
-    salt = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(TOPK_SALTS))
-    pre = Window.partitionBy("query_id", salt).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__pr", F.row_number().over(pre))
-        .filter(F.col("__pr") <= k)
-        .withColumn("__r", F.row_number().over(_topk_window()))
-        .filter(F.col("__r") <= k)
-        .select("query_id", "neighbor_id", "sim")
-    )
-
-
-def _verify_and_rank_topk(
-    candidates: DataFrame, probes: DataFrame, k: int, salted: bool = False
-) -> DataFrame:
-    """Exact-cosine verify + per-query top-k over (cluster_id-joined)
-    candidates — the shared tail of both IVF paths."""
-    return _rank_topk(_score_probed_candidates(candidates, probes), k, salted=salted)
+    return ranked.select("query_id", "neighbor_id", out, "rank")
 
 
 def ivf_topk(
@@ -471,1489 +450,7 @@ def ivf_topk(
     c = df.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v"))
     assigned = ivf_assign(c, centroids, "neighbor_id", "v")
     probes = _rank_probes(queries, centroids, id_col, vec_col, n_probe)
-    return _verify_and_rank_topk(assigned, probes, k)
-
-
-def build_ivf_index(
-    df: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_arrow: bool = False,
-) -> None:
-    """Persist the IVF inverted lists as a `cluster_id`-partitioned
-    parquet table — the production ANN serving layout: assignment runs
-    ONCE at index-build time (broadcast codebook, map-side), and every
-    later query reads only its probed clusters' partition directories.
-
-    At 100 TB this is the difference between re-assigning the corpus per
-    query batch and a directory-pruned read of n_probe/n_centroids of
-    the index. `use_arrow=True` swaps the assignment for the vectorized
-    numpy path (`ivf_assign_arrow`) — the build-time accelerator when
-    the assignment exchange dominates; serving is unchanged.
-    """
-    _write_ivf_rows(df, centroids, path, id_col, vec_col, "overwrite", use_arrow)
-
-
-def append_ivf_index(
-    df: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """INCREMENTAL index maintenance: assign ONLY the new vectors
-    against the (frozen) codebook and append their rows into the
-    existing cluster-partitioned layout — the existing inverted lists
-    are never read, never rewritten. At 100 TB this is how a serving
-    index tracks a growing corpus: each ingest batch costs one
-    broadcast-assign + a partitioned append of just its own rows, and
-    `ivf_topk_indexed` reads the union transparently (new part files
-    land inside the same cluster_id= directories).
-
-    The codebook must be the one the index was built with — appending
-    under a different quantizer silently corrupts list membership, so
-    callers snapshot centroids alongside the index (same contract as
-    PQ codebooks in `build_ivfadc_index`). Append-equals-rebuild is
-    oracle-gated (`ann_ivf_append_topk` shares `ann_ivf_topk`'s
-    oracle) and property-tested."""
-    _write_ivf_rows(df, centroids, path, id_col, vec_col, "append")
-
-
-def append_ivf_index_arrow(
-    df: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """`append_ivf_index` with the vectorized assignment path."""
-    _write_ivf_rows(df, centroids, path, id_col, vec_col, "append", use_arrow=True)
-
-
-def _batch_matrix(pdf, vec_col: str, dim: int):
-    """Build one Arrow batch's (n x dim) float64 matrix, flagging dirty
-    rows instead of letting numpy densify a NULL/ragged column into a
-    0-d or object array (whose matmul error names neither the row nor
-    the cause — ADVICE r8). Returns (mat, bad): bad rows (NULL vector,
-    wrong length, or non-1-d) are zero-filled in mat and True in the
-    mask; the caller decides the contract (route to the lowest cluster
-    like the JVM NULL-sim ordering, or fail fast naming the ids)."""
-    import numpy as np
-
-    n = len(pdf)
-    mat = np.zeros((n, dim), dtype=np.float64)
-    bad = np.zeros(n, dtype=bool)
-    for i, x in enumerate(pdf[vec_col]):
-        if x is None:
-            bad[i] = True
-            continue
-        arr = np.asarray(x, dtype=np.float64)
-        if arr.ndim != 1 or arr.shape[0] != dim:
-            bad[i] = True
-        else:
-            mat[i] = arr
-    return mat, bad
-
-
-def _assign_batch_np(vecs, cmat, cnorm):
-    """Vectorized cosine argmax for one Arrow batch — the assignment
-    contract shared by `ivf_assign_arrow` and `assign_encode_arrow`
-    (factored so the tie/zero-norm rules live ONCE): ties go to the
-    FIRST maximum (= lowest cluster id, the JVM max_by order), and
-    zero-norm / all-NaN rows take index 0 (= lowest cluster id,
-    matching the JVM NULL-sim ordering — pinned in tests)."""
-    import numpy as np
-
-    sims = vecs @ cmat.T
-    denom = np.sqrt((vecs * vecs).sum(axis=1))[:, None] * cnorm[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = np.where(denom > 0, sims / denom, np.nan)
-    valid = ~np.all(np.isnan(sims), axis=1)
-    best = np.zeros(len(vecs), dtype=np.int64)
-    if valid.any():
-        best[valid] = np.nanargmax(sims[valid], axis=1)
-    return best
-
-
-def ivf_assign_arrow(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """`ivf_assign`'s Arrow-batched numpy twin: per batch, ONE
-    (batch x dim) @ (dim x k) matmul + row-normalization + argmax —
-    fully vectorized, zero shuffle (mapInPandas is narrow), the
-    centroid matrix rides the closure (k x dim doubles).
-
-    When to use which (measured, SCALING.md r8 note): the JVM
-    broadcast-join + max_by formulation keeps everything in Spark's
-    evaluation machinery at the price of one corpus exchange on the
-    vector id; this path removes that exchange AND the per-pair
-    higher-order-function folds, at the price of an Arrow hop. It is
-    the build-time accelerator for very large index builds where the
-    assignment exchange dominates.
-
-    Tie-breaking matches `ivf_assign` (lowest cluster id wins: argmax
-    scans the id-ordered score matrix and returns the first maximum).
-    Zero-norm vectors land in the LOWEST cluster id on both paths (the
-    JVM max_by orders struct(NULL sim, -cluster_id) with NULL smallest,
-    so the greatest -cluster_id wins — pinned in tests). NULL and
-    wrong-length vectors ALSO land in the lowest cluster id (ADVICE
-    r8): the JVM path's zip_with pads a ragged pair with NULLs, so its
-    cosine is NULL and max_by picks the lowest id — this path detects
-    those rows per batch (`_batch_matrix`) instead of crashing with an
-    opaque numpy shape error. Exact equality
-    with the JVM path is NOT guaranteed on adversarial near-ties (numpy
-    pairwise-sums dot products; the JVM folds left-to-right, so the two
-    can differ in final ulps) — equality of the SERVED top-k on the
-    fixtures is pinned in tests/test_similarity.py.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = _centroid_rows(centroids)
-    ids = np.array([cid for cid, _ in rows], dtype=np.int64)
-    cmat = np.array([cv for _, cv in rows], dtype=np.float64)  # k x dim
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))  # k
-
-    def batches(it):
-        for pdf in it:
-            vecs, bad = _batch_matrix(pdf, vec_col, cmat.shape[1])  # n x dim
-            best = _assign_batch_np(vecs, cmat, cnorm)
-            # NULL / wrong-length vectors -> LOWEST cluster id, the same
-            # place the JVM path's NULL cosine lands them (zip_with pads
-            # a ragged pair with NULLs -> NULL sim -> max_by's
-            # struct(NULL, -cluster_id) ordering picks the lowest id)
-            best[bad] = 0
-            out = pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    vec_col: pdf[vec_col].values,
-                    "cluster_id": ids[best].astype("int32"),
-                }
-            )
-            yield out
-
-    return df.select(id_col, vec_col).mapInPandas(
-        batches, f"{id_col} long, {vec_col} array<double>, cluster_id int"
-    )
-
-
-def _write_ivf_rows(
-    df, centroids, path, id_col, vec_col, mode, use_arrow: bool = False
-) -> None:
-    c = df.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    # the arrow path collects the codebook rows itself; only the JVM
-    # join path needs the local-relation rebuild (it references the
-    # codebook inside the plan)
-    if use_arrow:
-        assigned = ivf_assign_arrow(c, centroids, "neighbor_id", "v")
-    else:
-        assigned = ivf_assign(c, materialize_centroids(centroids), "neighbor_id", "v")
-    (
-        assigned.repartition("cluster_id")
-        .write.partitionBy("cluster_id")
-        .mode(mode)
-        .parquet(path)
-    )
-
-
-def _materialize_probes(probes: DataFrame, reliable: bool) -> DataFrame:
-    """Materialize the bounded probe sub-plan once for its two consumers.
-
-    reliable=False (default, serving hot path): `localCheckpoint` —
-    executor-memory blocks, freed by the ContextCleaner with the result;
-    an executor loss before the caller consumes the result fails that
-    query (caller retries).
-
-    reliable=True (VERDICT r8 #6): `checkpoint()` against the
-    context's configured checkpoint directory — blocks live on shared
-    storage, so the returned plan survives executor churn without a
-    retry. Requires `spark.sparkContext.setCheckpointDir(...)` pointing
-    at storage every executor can read (HDFS/S3 on a cluster); raises
-    immediately when unset rather than letting Spark fail mid-query.
-    Same rows either way — the materialization strategy is not part of
-    the query semantics (bitwise equality is pinned in tests)."""
-    if not reliable:
-        return probes.localCheckpoint(eager=True)
-    sc = probes.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        raise ValueError(
-            "reliable=True needs a checkpoint directory: call "
-            "spark.sparkContext.setCheckpointDir(<shared path>) first"
-        )
-    # persist-bracket the reliable checkpoint (ADVICE r10 #2): Spark's
-    # reliable RDD checkpoint runs a SECOND job to write the checkpoint
-    # files, which would recompute the probe sub-plan from scratch;
-    # caching first lets that write read cached blocks instead (the
-    # same discipline as dedup.py's _ckpt_fresh_stats)
-    probes = probes.persist()
-    try:
-        return probes.checkpoint(eager=True)
-    finally:
-        probes.unpersist()
-
-
-def ivf_topk_indexed(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_probe: int = 4,
-    reliable: bool = False,
-    verify_parallelism: int | None = None,
-    salted: bool = False,
-) -> DataFrame:
-    """IVF top-k over a PERSISTED index (`build_ivf_index`): rank the
-    codebook per query, collect ONLY the distinct probed cluster ids
-    (bounded by the codebook size — n_centroids ints no matter how many
-    queries arrive), and filter the index scan with a LITERAL isin so
-    Catalyst prunes the non-probed partition directories (the plan
-    shows PartitionFilters). Candidates then join on cluster_id and
-    verify with exact cosine, identical semantics to `ivf_topk` — but
-    the corpus is never re-assigned and never fully read.
-
-    The ranked probe frame itself (query vectors included) stays
-    DISTRIBUTED: only the distinct probed cluster ids reach the driver,
-    so the path scales with the query batch (VERDICT r5 #4). The probe
-    sub-plan is computed ONCE via `localCheckpoint(eager=True)` and
-    shared by its two consumers (the distinct-id collect and the
-    candidate join). A plain persist()/unpersist() bracket can't do
-    this: unpersisting before return evicts the cache before the caller
-    evaluates the join, and never unpersisting accumulates executor
-    storage across serving calls. Checkpoint blocks are executor-side
-    (never driver memory), sized by the query batch (n_queries ×
-    n_probe rows), and freed by the ContextCleaner as soon as the
-    returned result is released (VERDICT r6 #4).
-
-    Failure mode (ADVICE r7): localCheckpoint truncates lineage, so an
-    executor loss between the checkpoint and the caller's evaluation of
-    the returned join makes THAT query fail (no recompute path) — the
-    caller simply retries it; the index itself is durable parquet and
-    unaffected. For a serving tier that must survive executor churn
-    without query retries, pass `reliable=True`: the probe sub-plan is
-    checkpointed to the context's configured checkpoint dir instead
-    (`_materialize_probes`, VERDICT r8 #6) — identical rows, durable
-    blocks.
-
-    `verify_parallelism`: same escape hatch as the sharded serve's —
-    repartition the pruned candidate slice before the exact-cosine
-    verify when a hot list's parquet files compress past byte-range
-    splitting (see `ivf_topk_indexed_sharded`). Default None keeps the
-    shuffle-free plan.
-
-    Degenerate-corpus contract (r15, VERDICT r14 #6 — measured, not
-    assumed): the per-query candidate volume "bounded at n_probe ×
-    list_len ≈ 5k rows" is an AVERAGE a degenerate corpus defeats —
-    200k identical vectors all tie into ONE list, so the pruned scan
-    is one corpus-sized directory. Measured on exactly that corpus
-    (scripts/probe_degenerate_vectors.py §5, 8-query batch, min-of-3):
-    default 18.8s, `salted=True` alone 19.1s (NO help),
-    `verify_parallelism=32` alone 2.61s (the fix), both 2.65s. On the
-    FLAT serve the bottleneck is entirely the ONE-TASK VERIFY — the
-    hot list's parquet RLE-compresses past byte-range splitting — not
-    the top-k window (8 query-partitioned window tasks of ~200k rows
-    each run in parallel and never dominate), so the recommendation
-    here is `verify_parallelism`, unlike the sharded serve where the
-    n_shards-growing per-query candidate volume made the salted
-    two-level rank the structural fix. `salted=True` remains available
-    and row-identical (selection decomposes — gated in tests, fuzz
-    family #12) for query batches whose per-query candidate stream
-    does dominate; it stays opt-in because a healthy flat corpus is
-    contract-bounded and the extra exchange+window stage is a fixed
-    ~0.1-0.2s it never pays back (the r14 bench_diff adjudication).
-    The STRUCTURAL fix for identical vectors remains exact pre-dedup
-    (SCALING.md): collapse bitwise-equal vectors first, then no list
-    is hot anywhere.
-    """
-    centroids = materialize_centroids(centroids)
-    probes = _materialize_probes(
-        _rank_probes(queries, centroids, id_col, vec_col, n_probe), reliable
-    )
-    # driver-side state is O(n_centroids), never O(n_queries)
-    probed_clusters = sorted(
-        int(r["cluster_id"])
-        for r in probes.select("cluster_id").distinct().collect()
-    )
-    index = spark.read.parquet(index_path).filter(
-        F.col("cluster_id").isin(probed_clusters)
-    )
-    if verify_parallelism is not None:
-        index = index.repartition(verify_parallelism)
-    return _verify_and_rank_topk(index, probes, k, salted=salted)
-
-
-#: Inverted-list length the serving-flatness measurement was taken at:
-#: the sf10 probe (200k vectors) read 0.63s serve with a FIXED k=16
-#: (lists ~12.5k, candidates ~50k/query) and 0.215s after rebuilding
-#: with k=160 — i.e. lists of 200k/160 = 1250 — at the same n_probe
-#: (candidates ~5k; SCALING.md "codebook scaling"). Per-query serve
-#: cost is n_probe x list_len, so this is the knob that keeps serving
-#: flat as the corpus grows.
-IVF_TARGET_LIST_LEN = 1250
-
-
-def select_n_centroids(
-    n_rows: int,
-    target_list_len: int = IVF_TARGET_LIST_LEN,
-    k_min: int = 4,
-    k_max: int = 65536,
-) -> int:
-    """The codebook-scaling contract (VERDICT r10 #4): pick the IVF
-    centroid count so inverted lists stay bounded as the corpus grows —
-    k = clamp(ceil(n_rows / target_list_len), k_min, k_max).
-
-    Why a contract and not a footnote: the sf10 campaign MEASURED that
-    indexed serve time tracks per-list candidate volume (n_probe x
-    n_rows/k), so a fixed k re-couples serving to corpus size — 100x
-    data at k=16 grew serve 0.28 -> 0.74s, while k ∝ corpus restored
-    0.215s (SCALING.md). Mean list length is n_rows/k <= target_list_len
-    by construction whenever the k_min/k_max clamps are inactive.
-
-    Bounds: k_min keeps tiny corpora from degenerating to one list
-    (probe selectivity needs > n_probe lists to mean anything); k_max
-    caps quantizer cost — past k_max * target_list_len rows (~82M at
-    the defaults) lists grow again and the scale path is sharding the
-    index (one codebook per shard), not a single ever-larger codebook.
-    Build cost grows with k (assignment is k-wide): the deterministic
-    JVM join measured 31 -> 319s for 16 -> 160 at sf10, while the
-    Arrow path (`ivf_assign_arrow`) batch-matmuls the k width.
-    """
-    if n_rows < 0:
-        raise ValueError(f"n_rows must be >= 0, got {n_rows}")
-    if target_list_len < 1:
-        raise ValueError(f"target_list_len must be >= 1, got {target_list_len}")
-    if not 1 <= k_min <= k_max:
-        raise ValueError(f"need 1 <= k_min <= k_max, got {k_min}..{k_max}")
-    k = -(-n_rows // target_list_len)  # ceil
-    return max(k_min, min(k_max, k))
-
-
-def build_ivf_index_auto(
-    df: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_list_len: int = IVF_TARGET_LIST_LEN,
-    n_updates: int = 1,
-    use_arrow: bool = False,
-    max_train_rows: int | None = None,
-    train_use_arrow: bool = False,
-) -> DataFrame:
-    """Production index build with the codebook sized BY the corpus:
-    counts the corpus once, selects k via `select_n_centroids`, trains
-    the Lloyd codebook, and persists the inverted lists. Returns the
-    LOCAL centroid relation (the codebook the caller must snapshot for
-    `append_ivf_index` / `ivf_topk_indexed` — same contract as
-    `build_ivf_index`).
-
-    The count is one column-pruned scan; at 100 TB the row count is
-    typically already known (catalog stats / ingest bookkeeping), so
-    callers with a known n can call `select_n_centroids` +
-    `kmeans_lloyd_centroids` + `build_ivf_index` directly — this
-    wrapper just makes the scaling contract the default path.
-
-    Codebook TRAINING is sample-bounded (VERDICT r16 #4): at most
-    `max_train_rows` vectors (None -> 256 * k) feed the Lloyd updates,
-    so training cost stays flat as the corpus grows — and because the
-    count is already in hand here, a corpus that fits the cap skips the
-    sample plan node entirely (byte-identical plan AND centroids to the
-    pre-cap build). `train_use_arrow` picks the vectorized assignment
-    for the TRAINING passes independently of `use_arrow` (which governs
-    the index-write assignment), because the two have different
-    correctness contracts: the write assignment is served-top-k-gated,
-    the trainer is centroid-fixture-gated.
-    """
-    n_rows = df.count()
-    k = select_n_centroids(n_rows, target_list_len)
-    cap = _resolve_train_cap(k, max_train_rows)
-    cents = kmeans_lloyd_centroids(
-        df,
-        id_col,
-        vec_col,
-        k=k,
-        n_updates=n_updates,
-        # count in hand: a corpus inside the cap trains unbounded (0),
-        # keeping the plan and centroids byte-identical to the pre-cap
-        # build instead of adding an identity top-N node
-        max_train_rows=0 if (cap is None or n_rows <= cap) else cap,
-        use_arrow=train_use_arrow,
-    )
-    build_ivf_index(df, cents, path, id_col, vec_col, use_arrow=use_arrow)
-    return cents
-
-
-def select_n_shards(
-    n_rows: int,
-    target_list_len: int = IVF_TARGET_LIST_LEN,
-    k_max: int = 65536,
-) -> int:
-    """The sharding contract (VERDICT r12 #5) — the escalation twin of
-    `select_n_centroids`: past k_max * target_list_len rows (~82M at
-    the defaults) a single codebook's inverted lists grow again no
-    matter what (`select_n_centroids` clamps k at k_max), so the index
-    must split into shards, each holding at most one clamped codebook's
-    capacity:
-
-        n_shards = ceil(n_rows / (k_max * target_list_len))
-
-    By construction every shard's expected row count is
-    n_rows / n_shards <= k_max * target_list_len, so each per-shard
-    `select_n_centroids` stays UNDER its clamp and every list at target
-    length — the property `build_ivf_index_auto_sharded` relies on,
-    property-tested across the boundary in tests."""
-    if n_rows < 0:
-        raise ValueError(f"n_rows must be >= 0, got {n_rows}")
-    if target_list_len < 1:
-        raise ValueError(f"target_list_len must be >= 1, got {target_list_len}")
-    if k_max < 1:
-        raise ValueError(f"k_max must be >= 1, got {k_max}")
-    cap = k_max * target_list_len
-    return max(1, -(-n_rows // cap))  # ceil, never 0
-
-
-#: Spark's hard per-relation broadcast-table ceiling (8 GiB). The
-#: chunk-sizing default budgets HALF of it: the raw-vector estimate
-#: (n_centroids x dim x 8 bytes) undercounts the broadcast relation's
-#: real JVM footprint (UnsafeRow + array headers per codebook row, plus
-#: the driver holding the built relation while executors fetch it), so
-#: self-sized chunks leave the other half as headroom.
-BROADCAST_TABLE_CEILING_BYTES = 8 * 1024**3
-
-
-def select_chunk_shards(
-    shard_centroids: dict[int, int],
-    dim: int,
-    budget_bytes: int = BROADCAST_TABLE_CEILING_BYTES // 2,
-) -> int:
-    """The chunk-sizing contract (VERDICT r14 #4) — the serving twin of
-    `select_n_shards`: pick the LARGEST `chunk_shards` whose combined
-    per-chunk codebook broadcast stays inside `budget_bytes`, from the
-    ACTUAL per-shard codebook sizes (counts of the relations the caller
-    is about to serve), not the k_max worst case — real codebooks sit
-    at n_shard/target_list_len << k_max, so the worst-case formula in
-    `ivf_topk_indexed_sharded`'s contract would chunk ~20x too eagerly.
-
-    Sizing is against the LARGEST shard codebook (chunk_shards x
-    max_shard_bytes <= budget), so EVERY chunk of that many shards fits
-    the budget no matter how the sorted-shard order composes them.
-    Floor is 1 (one shard per chunk): a single shard's codebook is
-    bounded by the build clamp at k_max x dim x 8 bytes (~400 MB at
-    dim=768), far inside any sane budget — if even that exceeds
-    `budget_bytes` the caller asked for an impossible budget and gets a
-    ValueError rather than a silently over-budget broadcast. Capped at
-    n_shards (more than all shards is just the one-shot serve).
-    `ivf_topk_indexed_sharded_chunked` self-sizes with this when
-    `chunk_shards=None`, measuring the real codebook counts with one
-    bounded aggregate job."""
-    if not shard_centroids:
-        raise ValueError("shard_centroids must map shard -> n_centroids")
-    if dim < 1:
-        raise ValueError(f"dim must be >= 1, got {dim}")
-    if budget_bytes < 1:
-        raise ValueError(f"budget_bytes must be >= 1, got {budget_bytes}")
-    if any(n < 0 for n in shard_centroids.values()):
-        raise ValueError(f"centroid counts must be >= 0, got {shard_centroids}")
-    n_shards = len(shard_centroids)
-    max_bytes = max(shard_centroids.values()) * dim * 8
-    if max_bytes == 0:  # all-empty codebooks: any chunking fits
-        return n_shards
-    if max_bytes > budget_bytes:
-        raise ValueError(
-            f"largest shard codebook is {max_bytes} bytes, over the "
-            f"{budget_bytes}-byte budget — even one-shard chunks cannot "
-            "serve within it; rebuild with a larger target_list_len or "
-            "raise the budget"
-        )
-    return min(n_shards, budget_bytes // max_bytes)
-
-
-def _select_chunk_workers(worst_chunk_bytes: int, n_chunks: int, cap: int = 8) -> int:
-    """Bound the chunked serve's CONCURRENT chunk preparations so the
-    fan-out's transient broadcast footprint stays inside the same
-    envelope the one-shot serve occupies (r15 — the scale reflection on
-    the thread fan-out itself): each chunk's prep runs its probe job
-    eagerly, and that job BROADCASTS the chunk's combined codebook, so
-    `workers × worst_chunk_bytes` of broadcast tables are live at once
-    until the ContextCleaner frees them. Tiny codebooks (every healthy
-    corpus) keep the full `cap`-way overlap; chunks sized near the
-    budget serialize down to however many fit the 8 GiB ceiling
-    together — never below 1, which is the serial loop the fan-out
-    replaced."""
-    if n_chunks < 1:
-        raise ValueError(f"n_chunks must be >= 1, got {n_chunks}")
-    if worst_chunk_bytes <= 0:  # empty codebooks broadcast nothing
-        return min(cap, n_chunks)
-    return max(
-        1, min(cap, n_chunks, BROADCAST_TABLE_CEILING_BYTES // worst_chunk_bytes)
-    )
-
-
-def _shard_router(id_col: str, n_shards: int):
-    """Deterministic shard assignment: pmod(xxhash64(id), n_shards) —
-    id-type-agnostic, stable across runs/partitionings, and the SAME
-    expression routes build, append, and (if a caller ever needs it)
-    per-shard lookup, so a vector can never change shards."""
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
-
-
-def _stage_routed(
-    df: DataFrame, staging_path: str, id_col: str, vec_col: str, n_shards: int
-) -> DataFrame:
-    """Route-once staging shared by the sharded build and append: write
-    (id, vec) shard-partitioned under `staging_path/__ivf_shard=<s>/`
-    (one scan + one write) and return the staged relation, so every
-    per-shard pass directory-prunes to its own bytes.
-
-    Scratch contract (ADVICE r13): `staging_path` is SCRATCH — it is
-    overwritten if anything already lives there (mode('overwrite')), and
-    callers delete it after a successful build/append via
-    `_remove_staging` (the default; pass cleanup_staging=False upstream
-    to keep it, e.g. to reuse the routed layout across retries). Point
-    it at a dedicated scratch directory, never at data you keep."""
-    (
-        df.select(id_col, vec_col)
-        .withColumn("__ivf_shard", _shard_router(id_col, n_shards))
-        .repartition("__ivf_shard")
-        .write.partitionBy("__ivf_shard")
-        .mode("overwrite")
-        .parquet(staging_path)
-    )
-    return df.sparkSession.read.parquet(staging_path)
-
-
-#: Hadoop connectors that address the SAME object-store location under
-#: different scheme spellings — normalized to one token so the staging
-#: guard compares locations, not connector names (ADVICE r15 #1).
-_SCHEME_ALIASES = {"s3": "s3", "s3a": "s3", "s3n": "s3"}
-
-
-def _path_segments(p: str) -> list[str]:
-    """Normalize a path/URI into comparison segments so the staging
-    guard compares LOCATIONS, not spellings (ADVICE r15 #1): a
-    `file:` URI strips its scheme and resolves through the LOCAL
-    branch — `file:///tmp/idx`, `file:/tmp/idx`, and `/tmp/idx` all
-    yield the same segments (abspath/normpath also folds relative vs
-    absolute spellings, and normpath collapses the URI's repeated
-    leading slashes); aliased object-store schemes (s3/s3a/s3n — one
-    bucket, three Hadoop connectors) normalize to one leading token.
-    Other scheme'd URIs (hdfs://, abfs://) keep their lowercased
-    scheme as the first segment and drop empty segments — good enough
-    to detect equality and containment, which is all the guard
-    needs."""
-    import os as _os
-
-    if p.lower().startswith("file:"):
-        rest = p[len("file:") :]
-        if rest.startswith("//") and not rest.startswith("///"):
-            # authority-bearing file URI (file://A/p): Hadoop's Path
-            # treats A as the AUTHORITY and resolves the path to /p —
-            # folding A into the path would let the two-slash typo
-            # 'file://tmp/idx' (Hadoop path: /idx) slip past a guard
-            # comparing against '/idx'
-            rest = rest[2:]
-            rest = rest[rest.find("/") :] if "/" in rest else "/"
-        p = "/" + rest.lstrip("/")
-    elif "://" in p:
-        scheme, rest = p.split("://", 1)
-        scheme = scheme.lower()
-        # the scheme token keeps its '://' so it can never equal a
-        # LOCAL path segment (a real '/s3/bkt' scratch dir must not
-        # collide with 's3://bkt')
-        return [_SCHEME_ALIASES.get(scheme, scheme) + "://"] + [
-            s for s in rest.rstrip("/").split("/") if s
-        ]
-    return [s for s in _os.path.normpath(_os.path.abspath(p)).split(_os.sep) if s]
-
-
-def _check_staging_disjoint(staging_path: str, path: str) -> None:
-    """Refuse a staging_path that equals, contains, or lives inside the
-    index path (ADVICE r14 #1): `_stage_routed` OVERWRITES the staging
-    tree and the default `cleanup_staging=True` recursively DELETES it
-    after a successful build/append — a caller who points staging at
-    the index (or a parent of it) would get the freshly written index
-    silently destroyed by its own 'successful' run."""
-    a, b = _path_segments(staging_path), _path_segments(path)
-    if a[: len(b)] == b or b[: len(a)] == a:
-        raise ValueError(
-            f"staging_path {staging_path!r} overlaps the index path "
-            f"{path!r}: staging is scratch (overwritten, then deleted on "
-            "success) and must be a disjoint directory"
-        )
-
-
-def _remove_staging(spark, staging_path: str) -> None:
-    """Delete a `_stage_routed` scratch tree through the Hadoop
-    FileSystem API (storage-agnostic: local, HDFS, or object store —
-    whatever filesystem the path's scheme resolves to)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(staging_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
-
-
-#: Codebook-stats sidecar filename (VERDICT r15 #1). Underscore-prefixed
-#: so Spark's file index treats it as hidden — `spark.read.parquet` on
-#: the sharded layout never sees it (the `_SUCCESS` convention).
-_CODEBOOK_STATS_SIDECAR = "_codebook_stats.json"
-
-
-def _sidecar_jpath(spark, index_path: str):
-    jvm = spark._jvm
-    return jvm.org.apache.hadoop.fs.Path(
-        f"{index_path.rstrip('/')}/{_CODEBOOK_STATS_SIDECAR}"
-    )
-
-
-def _write_codebook_sidecar(
-    spark, index_path: str, counts: dict[int, int], dim: int
-) -> None:
-    """Persist `{shard: n_centroids}` + dim next to a sharded index
-    (VERDICT r15 #1): the stats are KNOWN at build time (the per-shard
-    codebooks are local relations whose rows just passed through the
-    driver), so writing them once makes the chunked serve's
-    self-sizing FREE — without the sidecar every `chunk_shards=None`
-    serve call pays a ~2s fixed-scheduling aggregate job to re-measure
-    what the build already knew. Storage-agnostic (Hadoop FileSystem,
-    same as `_remove_staging`); overwritten on rebuild.
-
-    BEST-EFFORT by contract: the sidecar is an optimization whose read
-    side already treats absent/corrupt as 'run the fallback job', so a
-    transient failure of this small driver-side PUT must not fail an
-    otherwise-complete multi-minute build/append (nor skip its staging
-    cleanup) — the only cost of a missing sidecar is the ~2s job. The
-    degradation is OBSERVABLE (VERDICT r16 #3): a persistent FS failure
-    (permissions, quota) would otherwise silently reintroduce that job
-    on every serve forever with nothing in any log to say why, so the
-    except path warns with the path and cause.
-
-    ATOMIC (ADVICE r16 #3): the payload lands under a dot-prefixed temp
-    name and is renamed over the final path — rename is atomic on
-    HDFS/local and good-enough on object stores — so a driver crash
-    mid-write can never leave a truncated sidecar for a concurrent
-    serve to trip the fallback on. And a FAILED overwrite can never
-    leave the OLD sidecar describing a REBUILT index (ADVICE r16 #2 —
-    stale counts would mis-size chunk_shards and the fan-out's memory
-    envelope): the previous sidecar is deleted before the rename slot,
-    and the failure path best-effort deletes whatever remains."""
-    import json
-    import warnings
-
-    jpath = tmp = fs = None
-    try:
-        jpath = _sidecar_jpath(spark, index_path)
-        tmp = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{index_path.rstrip('/')}/.{_CODEBOOK_STATS_SIDECAR}.tmp"
-        )
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        out = fs.create(tmp, True)
-        try:
-            payload = {
-                "dim": int(dim),
-                "counts": {
-                    str(int(s)): int(n) for s, n in sorted(counts.items())
-                },
-            }
-            out.write(bytearray(json.dumps(payload).encode("utf-8")))
-        finally:
-            out.close()
-        # HDFS rename does not overwrite: clear the old sidecar first.
-        # Readers racing this window see 'absent' -> bounded fallback
-        # job, never a stale or partial file.
-        fs.delete(jpath, False)
-        if not fs.rename(tmp, jpath):
-            raise IOError(f"rename {tmp} -> {jpath} returned false")
-    except Exception as e:
-        warnings.warn(
-            f"codebook-stats sidecar write failed for {index_path!r} "
-            f"({e!r}); index is complete and correct, but self-sized "
-            "serves pay the bounded stats job (~2s) until a later "
-            "build/append rewrites the sidecar",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        for leftover in (tmp, jpath):
-            if leftover is not None and fs is not None:
-                try:
-                    fs.delete(leftover, False)
-                except Exception:
-                    pass
-
-
-def _read_codebook_sidecar(spark, index_path: str):
-    """Read the build-time stats sidecar; returns (counts, dim) or
-    None when absent/unreadable — the serve falls back to the bounded
-    aggregate job, so a missing or corrupt sidecar can never fail a
-    query, only cost the pre-sidecar fixed ~2s again."""
-    import json
-
-    try:
-        jpath = _sidecar_jpath(spark, index_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return None
-        stream = fs.open(jpath)
-        try:
-            text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        payload = json.loads(text)
-        counts = {int(s): int(n) for s, n in payload["counts"].items()}
-        dim = int(payload["dim"])
-        if dim < 1 or any(n < 0 for n in counts.values()):
-            return None
-        return counts, dim
-    except Exception:
-        return None
-
-
-def _local_codebook_stats(codebooks: dict[int, DataFrame]):
-    """(counts, dim) from the `_codebook_stats` attribute
-    `materialize_centroids` stashes on every local codebook relation —
-    zero Spark jobs. None when any codebook lacks the attribute (a
-    caller-constructed relation); the build then falls back to the
-    bounded aggregate job once, at build time."""
-    counts: dict[int, int] = {}
-    dim = 0
-    for s, book in codebooks.items():
-        st = getattr(book, "_codebook_stats", None)
-        if st is None:
-            return None
-        counts[int(s)] = int(st[0])
-        dim = max(dim, int(st[1]))
-    return counts, max(dim, 1)
-
-
-def _codebook_stats_job(codebooks: dict[int, DataFrame]):
-    """The bounded fallback measurement: ONE aggregate over the
-    (tiny-by-contract) codebook relations — n_shards rows of
-    (count, dim) reach the driver, nothing else. Costs a fixed ~2s of
-    Spark job scheduling even on 20-row local relations (measured),
-    which is exactly why the sidecar exists; this runs only when the
-    sidecar is absent. A NULL centroid vector raises a targeted error
-    naming the bad shards (ADVICE r15 #3) instead of letting
-    F.size(NULL) drive a confusing 'dim must be >= 1' downstream."""
-    from functools import reduce
-
-    stats = (
-        reduce(
-            DataFrame.unionByName,
-            [
-                codebooks[s].select(
-                    F.lit(int(s)).alias("shard"),
-                    F.size("cv").alias("d"),
-                    F.col("cv").isNull().cast("int").alias("bad"),
-                )
-                for s in sorted(codebooks)
-            ],
-        )
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("d").alias("dim"),
-            F.sum("bad").alias("n_null"),
-        )
-        .collect()
-    )
-    null_shards = sorted(
-        int(r["shard"]) for r in stats if int(r["n_null"] or 0) > 0
-    )
-    if null_shards:
-        raise ValueError(
-            f"codebook shards {null_shards} contain NULL centroid vectors "
-            "(cv) — rebuild those shards' codebooks before serving"
-        )
-    measured = {int(r["shard"]): int(r["n"]) for r in stats}
-    # counts keyed by the CALLER's original codebook keys (an int-like
-    # str key from a JSON-round-tripped snapshot manifest must index
-    # back into this dict downstream); empty codebooks count as 0
-    counts = {s: measured.get(int(s), 0) for s in codebooks}
-    dim = max(
-        (int(r["dim"]) for r in stats if r["dim"] is not None), default=1
-    )
-    return counts, max(dim, 1)
-
-
-def build_ivf_index_sharded(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_list_len: int = IVF_TARGET_LIST_LEN,
-    n_updates: int = 1,
-    use_arrow: bool = False,
-    staging_path: str | None = None,
-    cleanup_staging: bool = True,
-    max_train_rows: int | None = None,
-    train_use_arrow: bool = False,
-) -> dict[int, DataFrame]:
-    """The scale path PAST the codebook clamp (`select_n_centroids`
-    k_max): past ~k_max * target_list_len rows (~82M at the defaults) a
-    single codebook's lists grow again no matter what — SCALING.md names
-    sharding as the answer, and this implements it: the corpus routes
-    deterministically into `n_shards` disjoint shards (xxhash64 on the
-    id), each shard trains its OWN codebook sized by ITS row count and
-    persists its own cluster-partitioned inverted lists under
-    `path/shard=<s>/`. Every shard's n is corpus/n_shards, so a caller
-    splitting at the clamp keeps every per-shard k under k_max and every
-    list at target length — serving cost per shard stays flat, and
-    shards serve in parallel.
-
-    Returns {shard: local codebook relation} — the caller snapshots the
-    WHOLE dict alongside the index (the same snapshot contract as the
-    single codebook of `build_ivf_index`); `ivf_topk_indexed_sharded`
-    consumes it. The build also persists a `_codebook_stats.json`
-    sidecar ({shard: n_centroids} + dim) at the index root (VERDICT
-    r15 #1) — stats it has for free — so the chunked serve's
-    self-sizing and fan-out width read exact bytes from one FS
-    metadata lookup instead of a ~2s per-serve aggregate job.
-
-    Build fans n_shards independent builds (each a bounded count +
-    Lloyd train + partitioned write into its own directory) over a
-    thread pool — Spark's scheduler runs jobs from multiple submitter
-    threads concurrently, so one shard's Lloyd driver round-trips
-    overlap another's assignment/write stages instead of serializing
-    (the 200k-vector probe measured the per-shard build phases leaving
-    the cluster underutilized). At the corpus sizes where sharding
-    matters, one build per ~82M-vector shard also stays the right
-    granularity for retries and incremental rebuilds.
-
-    Input-scan cost (ADVICE r12): each shard's build passes over ITS
-    input several times (count, Lloyd updates, assign+write). With the
-    default in-plan routing every pass is `df.filter(router == s)` — a
-    FULL-corpus scan that discards (n_shards-1)/n_shards of its rows,
-    so total bytes read grow as n_shards x passes x corpus. Pass
-    `staging_path` to route ONCE instead: the corpus is written
-    shard-partitioned (`staging_path/__ivf_shard=<s>/`, one scan + one
-    write), and every per-shard pass becomes a directory-pruned read of
-    only that shard's bytes — passes x corpus total, n_shards-free.
-    That is the 100-TB shape; in-plan routing stays the default because
-    below a few corpus passes the extra staging write costs more than
-    the filtered re-scans (and needs scratch storage). Staged and
-    in-plan builds serve identically (Lloyd init/updates are
-    deterministic and rounding-pinned, so routing layout cannot leak
-    into the codebook — gated in tests).
-
-    `staging_path` is SCRATCH (ADVICE r13): whatever already lives
-    there is overwritten, and after a SUCCESSFUL build the tree is
-    deleted (pass `cleanup_staging=False` to keep the routed layout —
-    e.g. to inspect it or reuse it for an immediate re-build). A failed
-    build leaves the staging in place for retry.
-
-    Each shard's codebook TRAINS on a bounded sample (VERDICT r16 #4 —
-    `max_train_rows`, None -> 256 x that shard's k; `train_use_arrow`
-    picks the vectorized training assignment): see
-    `kmeans_lloyd_centroids`. This is what makes TRAINED codebooks
-    affordable at sharding scale — without the cap each shard's every
-    Lloyd update joins its full slice against its codebook (~40 billion
-    joined rows per pass at 20M vectors x per-shard k=2000).
-    """
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    if staging_path is not None:
-        _check_staging_disjoint(staging_path, path)
-
-    staged = (
-        None
-        if staging_path is None
-        else _stage_routed(df, staging_path, id_col, vec_col, n_shards)
-    )
-
-    def _build(s: int):
-        if staged is not None:
-            # partition-pruned: reads only __ivf_shard=<s>/ bytes
-            part = staged.filter(F.col("__ivf_shard") == s).drop("__ivf_shard")
-        else:
-            part = df.filter(_shard_router(id_col, n_shards) == s)
-        return s, build_ivf_index_auto(
-            part,
-            f"{path}/shard={s}",
-            id_col,
-            vec_col,
-            target_list_len=target_list_len,
-            n_updates=n_updates,
-            use_arrow=use_arrow,
-            max_train_rows=max_train_rows,
-            train_use_arrow=train_use_arrow,
-        )
-
-    if n_shards == 1:
-        books = dict([_build(0)])
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(8, n_shards)) as ex:
-            books = dict(ex.map(_build, range(n_shards)))
-    # stats sidecar (VERDICT r15 #1): {shard: n_centroids} + dim are in
-    # hand right here (local codebook relations), so persist them next
-    # to the layout — the chunked serve self-sizes from the sidecar
-    # instead of paying a ~2s aggregate job per serve call
-    stats = _local_codebook_stats(books) or _codebook_stats_job(books)
-    _write_codebook_sidecar(df.sparkSession, path, *stats)
-    if staging_path is not None and cleanup_staging:
-        _remove_staging(df.sparkSession, staging_path)
-    return books
-
-
-def build_ivf_index_auto_sharded(
-    df: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_list_len: int = IVF_TARGET_LIST_LEN,
-    k_max: int = 65536,
-    n_updates: int = 1,
-    use_arrow: bool = False,
-    staging_path: str | None = None,
-    cleanup_staging: bool = True,
-    max_train_rows: int | None = None,
-    train_use_arrow: bool = False,
-) -> dict[int, DataFrame]:
-    """The fully-automatic index build (VERDICT r12 #5): counts the
-    corpus once, picks the shard count from the sharding contract
-    (`select_n_shards` — 1 below k_max * target_list_len rows, more
-    above), and builds. Below the clamp boundary this degenerates to a
-    single shard — one codebook sized by `select_n_centroids`, exactly
-    the flat `build_ivf_index_auto` quantizer, laid out under
-    `path/shard=0/` so every auto index serves uniformly through
-    `ivf_topk_indexed_sharded` (a 1-shard serve is the flat plan plus a
-    constant-true shard predicate). Past the boundary, sharding engages
-    automatically instead of silently letting lists grow past target
-    length under the k_max clamp.
-
-    Returns the {shard: codebook} dict — the snapshot contract of
-    `build_ivf_index_sharded`, which this wraps. Property-tested across
-    the clamp boundary (flat below, sharded above, per-shard k under
-    k_max, serve equal on the fixture)."""
-    n_shards = select_n_shards(df.count(), target_list_len, k_max)
-    return build_ivf_index_sharded(
-        df,
-        path,
-        n_shards,
-        id_col,
-        vec_col,
-        target_list_len=target_list_len,
-        n_updates=n_updates,
-        use_arrow=use_arrow,
-        staging_path=staging_path,
-        cleanup_staging=cleanup_staging,
-        max_train_rows=max_train_rows,
-        train_use_arrow=train_use_arrow,
-    )
-
-
-def ivf_topk_indexed_sharded(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    codebooks: dict[int, DataFrame],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_probe: int = 4,
-    reliable: bool = False,
-    verify_parallelism: int | None = None,
-) -> DataFrame:
-    """Serve a sharded IVF index (`build_ivf_index_sharded`) as ONE
-    union job: every query probes EVERY shard's codebook (shards
-    partition the corpus, so a neighbor can live in any of them), all
-    probed candidates verify with exact cosine, and the global top-k
-    ranks once over the combined frame.
-
-    Plan shape (VERDICT r12 #2 — the fixed costs collapse): the serve
-    preparation used to be a PER-SHARD chain of small blocking jobs
-    (codebook collect, probe checkpoint, probed-id collect, pruned
-    read), so even threaded, the work was linear in n_shards — 3.9s vs
-    1.5s flat for an 8-query batch at 4 shards on the 200k-vector probe
-    corpus. Now the fixed costs are paid ONCE regardless of n_shards:
-
-      1. ONE combined codebook relation: the per-shard codebooks (tiny
-         by contract) union JVM-side with a `lit(shard)` tag — zero
-         driver materialization (VERDICT r13 #2 removed the old
-         collect-then-createDataFrame round-trip, which serialized
-         sum(n_centroids_shard) x dim doubles through Python twice
-         before the first probe).
-      2. ONE probe-ranking job: row_number windowed per (query_id,
-         shard) keeps the n_probe nearest lists IN EACH SHARD — the
-         same probes the per-shard loop produced, in one plan.
-      3. ONE probe materialization (`_materialize_probes`; reliable=True
-         for the durable tier) shared by both consumers.
-      4. ONE bounded collect of the distinct probed (shard, cluster_id)
-         pairs — O(sum n_centroids_shard) ints, never O(n_queries).
-      5. ONE index scan: the shard directories are siblings under a
-         two-level `shard=<s>/cluster_id=<c>/` hive layout, so a single
-         `spark.read.parquet(index_path)` with the OR-of-conjunctions
-         partition predicate prunes to exactly the probed directories
-         (PartitionFilters in the plan — asserted in tests).
-      6. ONE verify join on (shard, cluster_id) + ONE global top-k
-         (itself two-level since r14 — see `_rank_topk`).
-
-    Equality with the per-shard formulation (gated bitwise in tests at
-    two shard counts against the unsharded build): the old path kept a
-    local top-k per shard before re-ranking the union — a row-bound
-    optimization, not a semantic one (a shard-local top-k contains
-    every global-top-k row living in that shard, so dropping the rest
-    never changes the final rank). Ranking once over all probed
-    candidates returns the same rows; rounding still happens once,
-    after the final rank, on unrounded sims (`_rank_topk`).
-
-    Driver/broadcast bound (the contract, stated like `select_n_shards`
-    states its boundary): the combined codebook the probe join
-    broadcasts is sum over shards of n_centroids_shard x dim doubles.
-    Per the build contracts each shard's k <= k_max (65536), so the
-    worst case is n_shards x k_max x dim x 8 bytes — at dim=768 that is
-    ~400 MB per CLAMPED shard, and Spark's 8 GB broadcast-table ceiling
-    admits ~20 fully-clamped shards (far more when per-shard k sits at
-    the usual n_shard/target_list_len << k_max, since
-    `select_n_shards` keeps every shard UNDER the clamp). Past that,
-    serve in codebook chunks — `ivf_topk_indexed_sharded_chunked`, the
-    same escalation shape sharding itself applies to the index, gated
-    bitwise-equal to this serve in tests. The OR-of-conjunctions partition predicate grows as
-    sum(n_centroids) literals worst-case, but is bounded in practice by
-    the PROBED pairs: <= n_queries x n_probe x n_shards and never more
-    than the directory count.
-
-    `verify_parallelism` (r14, found by the degenerate-vector probe):
-    the exact-cosine verify runs in the SCAN's tasks, and its task
-    count is the pruned files' BYTE count — which a pathological list
-    defeats twice over: a hot list holds a whole shard in one
-    directory, and if its vectors are near-identical, parquet
-    RLE/dictionary encoding shrinks the file so far that byte-range
-    splitting yields ONE task for a corpus-sized decompressed verify
-    (measured: 200k identical vectors -> 4 single-file lists, the
-    8-query verify+rank tail ran 7.4s on 4 of 32 cores; repartitioned,
-    2.8s). Set it (e.g. to the cluster's core count) to shuffle the
-    pruned candidate slice before the verify; default None keeps the
-    shuffle-free plan, which is right whenever file splitting already
-    yields parallelism — every healthy corpus. The structural fix for
-    identical vectors remains exact pre-dedup (SCALING.md).
-    """
-    if not codebooks:
-        raise ValueError("codebooks must map shard -> codebook relation")
-    scored = _sharded_scored(
-        spark,
-        index_path,
-        queries,
-        codebooks,
-        id_col,
-        vec_col,
-        n_probe,
-        reliable,
-        verify_parallelism,
-    )
-    return _rank_topk(scored, k, salted=True)
-
-
-def _sharded_scored(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    codebooks: dict[int, DataFrame],
-    id_col: str,
-    vec_col: str,
-    n_probe: int,
-    reliable: bool,
-    verify_parallelism: int | None,
-    index_df: DataFrame | None = None,
-) -> DataFrame:
-    """Steps 1-6 of the collapsed sharded serve, returning the UNROUNDED
-    (query_id, neighbor_id, sim) verify frame — shared by the one-shot
-    serve (`ivf_topk_indexed_sharded`) and the chunked escalation
-    (`ivf_topk_indexed_sharded_chunked`), whose global re-rank must see
-    unrounded sims to stay bitwise-equal to the unchunked plan.
-
-    `index_df` (r16): the chunked serve passes ONE pre-resolved index
-    relation shared by every chunk, so the file LISTING of the whole
-    shard=/cluster_id= tree happens once per serve instead of once per
-    chunk — per-chunk `spark.read.parquet` re-lists every partition
-    directory, a cost that grows with the index (measured as part of
-    the 2M decade probe's per-chunk overhead) and that an object store
-    turns into thousands of LIST calls per chunk. Filtering a shared
-    relation prunes partitions identically (the FileIndex is resolved
-    once, each chunk's OR-of-conjunctions predicate prunes against it),
-    so the plan per chunk is unchanged — gated bitwise by the
-    chunked-serve equality tests and fuzz family #13."""
-    # 1. combined (shard, cluster_id, cv) codebook relation: union the
-    # per-shard local relations JVM-side with a lit(shard) tag — no
-    # collect, no re-createDataFrame, no driver round-trip
-    from functools import reduce
-
-    cents = reduce(
-        DataFrame.unionByName,
-        [
-            codebooks[s].select(
-                F.lit(int(s)).cast("int").alias("shard"),
-                F.col("cluster_id").cast("int").alias("cluster_id"),
-                _as_double(F.col("cv")).alias("cv"),
-            )
-            for s in sorted(codebooks)
-        ],
-    )
-
-    # 2.+3. one probe job: n_probe nearest lists per (query, shard)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    qw = Window.partitionBy("query_id", "shard").orderBy(
-        F.col("__sim").desc(), F.col("cluster_id").asc()
-    )
-    probes = _materialize_probes(
-        q.join(F.broadcast(cents))
-        .withColumn("__sim", cosine(F.col("qv"), F.col("cv")))
-        .withColumn("__pr", F.row_number().over(qw))
-        .filter(F.col("__pr") <= n_probe)
-        .select("query_id", "qv", "shard", "cluster_id"),
-        reliable,
-    )
-
-    # 4. bounded driver state: distinct probed (shard, cluster) pairs
-    probed: dict[int, list[int]] = {}
-    for r in probes.select("shard", "cluster_id").distinct().collect():
-        probed.setdefault(int(r["shard"]), []).append(int(r["cluster_id"]))
-
-    # 5. one scan, pruned to the probed shard=/cluster_id= directories
-    cond = F.lit(False)
-    for s in sorted(probed):
-        cond = cond | (
-            (F.col("shard") == s) & F.col("cluster_id").isin(sorted(probed[s]))
-        )
-    index = (
-        index_df if index_df is not None else spark.read.parquet(index_path)
-    ).filter(cond)
-    if verify_parallelism is not None:
-        index = index.repartition(verify_parallelism)
-
-    # 6. verify on (shard, cluster_id) — a probe of shard s may only
-    # match shard s's lists — then one global top-k
-    return (
-        index.join(F.broadcast(probes), on=["shard", "cluster_id"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", cosine(F.col("qv"), F.col("v")))
-        .select("query_id", "neighbor_id", "sim")
-    )
-
-
-def ivf_topk_indexed_sharded_chunked(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    codebooks: dict[int, DataFrame],
-    chunk_shards: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_probe: int = 4,
-    reliable: bool = False,
-    verify_parallelism: int | None = None,
-    broadcast_budget_bytes: int = BROADCAST_TABLE_CEILING_BYTES // 2,
-) -> DataFrame:
-    """The escalation past the collapsed serve's broadcast ceiling
-    (`ivf_topk_indexed_sharded`'s documented contract): the combined
-    codebook broadcast is sum-over-shards of n_centroids × dim doubles
-    — ~400 MB per CLAMPED shard at dim=768 — so past ~20 fully-clamped
-    shards one broadcast would cross Spark's 8 GB broadcast-table
-    ceiling. This serves the SAME index in codebook CHUNKS of
-    `chunk_shards` shards each: every chunk is one collapsed serve
-    (one bounded broadcast, one pruned scan, its own salted top-k —
-    a per-chunk k is a row bound, not a semantic one, exactly like the
-    old per-shard local top-k), and the global rank re-ranks the
-    unioned per-chunk top-k on unrounded sims. Selection decomposes
-    over any partition of the shards, so the rows are IDENTICAL to the
-    unchunked serve for any input (gated in tests at two chunk sizes).
-
-    Cost shape: fixed costs are paid once per CHUNK (ceil(n_shards /
-    chunk_shards) times), not per shard — and since r15 the chunks'
-    preparations OVERLAP instead of queueing (VERDICT r14 #2): each
-    chunk's `_sharded_scored` runs two blocking driver actions eagerly
-    (the probe `localCheckpoint` and the bounded probed-pairs collect,
-    ~1.3s of measured fixed cost per chunk), the chunks are independent
-    until the final union, and Spark's scheduler accepts jobs from
-    multiple submitter threads — so the chunk plans build on a
-    ThreadPoolExecutor, the same fan-out shape (and the same
-    shared-SparkSession thread-safety argument: session and reads are
-    thread-safe, each thread builds its own lazy plan, nothing mutates
-    shared state) as `build_ivf_index_sharded` and
-    `append_ivf_index_sharded`. `ex.map` keeps chunk order, so the
-    unioned plan is the same plan the serial loop built. Since r16 the
-    two per-chunk costs that SCALE WITH THE CORPUS are also paid once
-    per serve, not once per chunk (found by the 2M decade probe, where
-    they dominated): the bounded query batch materializes once (each
-    chunk's eager probe job used to re-evaluate the caller's `queries`
-    lineage — a parquet scan per chunk), and ONE shared index relation
-    is resolved so every chunk prunes the same FileIndex instead of
-    re-LISTING the whole shard=/cluster_id= tree (thousands of
-    object-store LIST calls per chunk at scale) — measured at 2M/8
-    shards: 4 chunks dropped from 2.1-2.25x the one-shot serve to
-    1.02x (SCALING.md, SCALING_CURVE_r16.jsonl). The fan-out's
-    WIDTH is itself budgeted (`_select_chunk_workers`): each concurrent
-    prep's probe job holds its chunk's codebook broadcast live, so
-    naive 8-way overlap of budget-sized chunks would put up to 8 ×
-    budget of broadcast tables in memory at once — 4× the very ceiling
-    chunking exists to respect; workers are capped at ceiling //
-    worst_chunk_bytes — the ACTUAL worst chunk whenever stats are in
-    hand (the build-time sidecar, or the self-sizing job's counts),
-    the declared `broadcast_budget_bytes` bound only on a sidecar-less
-    explicit-chunk_shards serve. CAVEAT on that last path (ADVICE r15
-    #2): with no sidecar and no sizing job the serve cannot see actual
-    chunk bytes, so the 8 GiB envelope guarantee holds only if the
-    caller's chunks honor `broadcast_budget_bytes` — size chunk_shards
-    with `select_chunk_shards` against the same budget (explicit
-    callers with tiny chunks pass a matching small budget to widen the
-    overlap). Tiny codebooks keep the full 8-way overlap, budget-sized
-    chunks serialize down to the 2 that fit the ceiling together,
-    never below the 1-way serial loop this replaced.
-
-    Sizing (VERDICT r14 #4, free since r16 — VERDICT r15 #1):
-    `chunk_shards=None` (the default) SELF-SIZES via
-    `select_chunk_shards` from the per-shard codebook stats the BUILD
-    already knew: `build_ivf_index_sharded` persists
-    `{shard: n_centroids}` + dim as a `_codebook_stats.json` sidecar
-    next to the layout (appends backfill it), so self-sizing is one FS
-    metadata read — no Spark job. Only a sidecar-less index (or one
-    whose sidecar doesn't cover the served shards) falls back to the
-    bounded aggregate job (`_codebook_stats_job`, a fixed ~2s of
-    scheduling per serve call — Spark jobs have that floor even on
-    local relations); a serving tier below the broadcast ceiling
-    should still call `ivf_topk_indexed_sharded` directly. The largest
-    chunk whose worst-case combined codebook fits
-    `broadcast_budget_bytes` is chosen (recovering the one-shot serve
-    whenever everything fits, which is every corpus below ~20 clamped
-    shards). Pass an explicit `chunk_shards` to override. Per-chunk
-    selections keep UNROUNDED sims (`_topk_unrounded`) so the global
-    re-rank orders by exactly the values the unchunked plan ranks on —
-    rounding first could reorder sub-1e-6 near-ties across chunks;
-    rounding still happens exactly once, after the final rank.
-    """
-    if not codebooks:
-        raise ValueError("codebooks must map shard -> codebook relation")
-    from functools import reduce
-
-    # per-shard stats: the build-time SIDECAR first (VERDICT r15 #1 —
-    # one FS metadata read, zero Spark jobs; `build_ivf_index_sharded`
-    # writes it, `append_ivf_index_sharded` backfills it), and only
-    # when it's absent AND self-sizing needs counts, the bounded
-    # aggregate job (`_codebook_stats_job`, a fixed ~2s of scheduling
-    # even on 20-row local relations — the cost the sidecar removes).
-    # BOTH serve paths consume the stats: self-sizing picks
-    # chunk_shards, and the fan-out width gets EXACT worst-chunk bytes
-    # instead of trusting the caller's declared budget (ADVICE r15 #2).
-    counts = dim = None
-    sidecar = _read_codebook_sidecar(spark, index_path)
-    if sidecar is not None:
-        sc_counts, sc_dim = sidecar
-        if all(int(s) in sc_counts for s in codebooks):
-            # keyed by the caller's ORIGINAL keys — the chunk dicts
-            # below index with them (int-like str keys must keep working)
-            counts = {s: sc_counts[int(s)] for s in codebooks}
-            dim = sc_dim
-    if chunk_shards is None:
-        if counts is None:
-            counts, dim = _codebook_stats_job(codebooks)
-        chunk_shards = select_chunk_shards(counts, dim, broadcast_budget_bytes)
-    if chunk_shards < 1:
-        raise ValueError(f"chunk_shards must be >= 1, got {chunk_shards}")
-    shards = sorted(codebooks)
-    chunks = [
-        {s: codebooks[s] for s in shards[i : i + chunk_shards]}
-        for i in range(0, len(shards), chunk_shards)
-    ]
-
-    shared_index: DataFrame | None = None
-
-    def _chunk_top(chunk: dict[int, DataFrame]) -> DataFrame:
-        return _topk_unrounded(
-            _sharded_scored(
-                spark,
-                index_path,
-                queries,
-                chunk,
-                id_col,
-                vec_col,
-                n_probe,
-                reliable,
-                verify_parallelism,
-                index_df=shared_index,
-            ),
-            k,
-        )
-
-    if len(chunks) == 1:
-        tops = [_chunk_top(chunks[0])]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # r16 (found by the 2M decade probe — per-chunk overhead grew
-        # with the CORPUS, not just the chunk count): pay the two
-        # corpus-scaled per-chunk costs ONCE per serve. (a) Every
-        # chunk's eager probe job re-evaluated the caller's `queries`
-        # lineage — a parquet scan at minimum, at 2M ~a row group of
-        # decode per chunk — so the bounded query batch materializes
-        # once here (same blocks-and-failure contract as the probe
-        # materialization: executor-side, ContextCleaner-freed,
-        # `reliable=True` for the durable tier). (b) Every chunk's
-        # `spark.read.parquet(index_path)` re-LISTED the whole
-        # shard=/cluster_id= tree (thousands of directories at scale;
-        # thousands of object-store LIST calls per chunk) — the
-        # relation resolves once and every chunk prunes the shared
-        # FileIndex with its own partition predicate, an identical
-        # per-chunk plan. Both gated bitwise (chunked-equality tests,
-        # near-tie fixture, fuzz family #13).
-        queries = _materialize_probes(
-            queries.select(F.col(id_col), F.col(vec_col)), reliable
-        )
-        shared_index = spark.read.parquet(index_path)
-
-        # concurrency is bounded so workers x worst_chunk_bytes stays
-        # inside the one-shot serve's own 8 GiB envelope
-        # (`_select_chunk_workers`): each concurrent prep holds its
-        # chunk's codebook broadcast live. With stats in hand (the
-        # sidecar, or the self-sizing job) the bound uses the ACTUAL
-        # worst chunk bytes on BOTH paths (ADVICE r15 #2); only a
-        # sidecar-less explicit-chunk_shards serve falls back to
-        # `broadcast_budget_bytes` as the caller's declared per-chunk
-        # bound (the same bound the chunking contract asks them to
-        # size chunk_shards against — see the docstring caveat).
-        if counts is not None:
-            worst_chunk_bytes = max(
-                sum(counts[s] for s in chunk) * dim * 8 for chunk in chunks
-            )
-        else:
-            worst_chunk_bytes = broadcast_budget_bytes
-        workers = _select_chunk_workers(worst_chunk_bytes, len(chunks))
-        with ThreadPoolExecutor(max_workers=workers) as ex:
-            tops = list(ex.map(_chunk_top, chunks))
-
-    return _rank_topk(reduce(DataFrame.unionByName, tops), k)
-
-
-def append_ivf_index_sharded(
-    df: DataFrame,
-    codebooks: dict[int, DataFrame],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_arrow: bool = False,
-    staging_path: str | None = None,
-    cleanup_staging: bool = True,
-) -> None:
-    """Incremental maintenance of a SHARDED index — the operation
-    sharding exists for (the corpus outgrew one codebook, so it is
-    still growing): route the NEW vectors with the SAME xxhash64
-    router the build used (`_shard_router` — n_shards is recovered
-    from the codebook dict, so a batch can never route differently
-    than its index), assign each slice against its shard's FROZEN
-    codebook, and append into that shard's cluster-partitioned layout.
-    Per-shard semantics are `append_ivf_index` verbatim: existing
-    lists are never read or rewritten, and append-equals-rebuild holds
-    per shard exactly as it does for the single index (same frozen
-    quantizer ⇒ same assignments ⇒ same directories; gated in tests).
-
-    The codebook-freshness caveat compounds under sharding: appending
-    under ANY shard's stale codebook silently corrupts THAT shard's
-    lists, so callers snapshot the whole dict with the index (the
-    `build_ivf_index_sharded` contract). The build's
-    `_codebook_stats.json` sidecar stays correct across appends by
-    construction (the codebooks are frozen); an index built before the
-    sidecar existed gets it backfilled here, so one append upgrades a
-    pre-r16 index to free serve-time self-sizing.
-
-    Input-scan cost (VERDICT r13 #3 — the build's route-once option,
-    inherited): with the default in-plan routing each shard's append
-    pass is `df.filter(router == s)` — a FULL-batch scan that discards
-    (n_shards-1)/n_shards of its rows, so a large backfill batch
-    re-scans itself n_shards times. Pass `staging_path` to route ONCE:
-    the batch is written shard-partitioned (one scan + one write) and
-    every per-shard append becomes a directory-pruned read of only its
-    shard's bytes. Same default and same crossover as the build:
-    in-plan for the usual small incremental batch (the staging write
-    costs more than the filtered re-scans), staged for dozens-of-shards
-    backfills on real storage. Staged ≡ in-plan is gated in tests (the
-    router is the same expression either way, so a row can never land
-    in a different shard). `staging_path` follows `_stage_routed`'s
-    scratch contract: overwritten if non-empty, cleaned up afterwards.
-    """
-    if not codebooks:
-        raise ValueError("codebooks must map shard -> codebook relation")
-    n_shards = len(codebooks)
-    if sorted(codebooks) != list(range(n_shards)):
-        raise ValueError(
-            f"codebooks must cover shards 0..{n_shards - 1}, got {sorted(codebooks)}"
-        )
-    if staging_path is not None:
-        _check_staging_disjoint(staging_path, path)
-
-    staged = (
-        None
-        if staging_path is None
-        else _stage_routed(df, staging_path, id_col, vec_col, n_shards)
-    )
-
-    def _append(s: int) -> None:
-        if staged is not None:
-            part = staged.filter(F.col("__ivf_shard") == s).drop("__ivf_shard")
-        else:
-            part = df.filter(_shard_router(id_col, n_shards) == s)
-        _write_ivf_rows(
-            part,
-            codebooks[s],
-            f"{path}/shard={s}",
-            id_col,
-            vec_col,
-            "append",
-            use_arrow=use_arrow,
-        )
-
-    # per-shard appends write into disjoint shard=<s>/ directories —
-    # independent jobs, fanned out like the build (thread pool)
-    if n_shards == 1:
-        _append(0)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(8, n_shards)) as ex:
-            list(ex.map(_append, range(n_shards)))
-    if staging_path is not None and cleanup_staging:
-        _remove_staging(df.sparkSession, staging_path)
-    # sidecar consistency (VERDICT r15 #1): appends never change the
-    # (frozen) codebooks, so an existing sidecar stays correct by
-    # construction; an index built before the sidecar existed gets it
-    # BACKFILLED here — one bounded aggregate at append (maintenance)
-    # time buys every later serve call its free self-sizing.
-    # BEST-EFFORT end to end, AFTER staging cleanup (ADVICE r16 #1):
-    # by this line the append has durably completed, so nothing in the
-    # backfill — the sidecar probe, the fallback stats job's transient
-    # Spark failures or its targeted NULL-centroid error, the write —
-    # may make the call raise (a caller retrying a 'failed' append
-    # would double-append the batch) or skip the cleanup above.
-    spark = df.sparkSession
-    try:
-        if _read_codebook_sidecar(spark, path) is None:
-            stats = _local_codebook_stats(codebooks) or _codebook_stats_job(
-                codebooks
-            )
-            _write_codebook_sidecar(spark, path, *stats)
-    except Exception as e:
-        import warnings
-
-        warnings.warn(
-            f"codebook-stats sidecar backfill failed for {path!r} "
-            f"({e!r}); the append itself completed — self-sized serves "
-            "pay the bounded stats job (~2s) until a later append "
-            "backfills the sidecar",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+    return _rank_topk(_score_probed(assigned, probes, "cluster_id"), k)
 
 
 def deterministic_centroids(
@@ -2335,7 +832,7 @@ def ivfadc_topk(
 
     Plan: codebooks broadcast everywhere; the only corpus-sized shuffle
     is attaching codes to assignments (at serving time this join IS the
-    persisted index — see build_ivf_index for the partitioned layout);
+    persisted index — see write_ivf_index for the partitioned layout);
     the probe join is bounded by the probed lists, and the ADC aggregate
     partial-aggregates map-side over exact decimals (rank order-proof).
 
@@ -2351,7 +848,7 @@ def ivfadc_topk(
     must carry the full vector THROUGH the argmax exchange to slice it
     afterwards, i.e. it moves the heavy bytes through a shuffle the
     composition never pays (guide §8's exact warning). Same verdict for
-    the persisted build (`_write_ivfadc_rows`), which repartitions by
+    the persisted build (`write_ivf_index`), which repartitions by
     cluster_id either way.
     """
     _pq_check(m, dim)
@@ -2371,7 +868,7 @@ def ivfadc_topk(
         "query_id", "cluster_id"
     )
     lut = _pq_query_lut(queries, codebooks, m, dim, id_col, vec_col)
-    return _adc_score_rank(index, probes, lut, k)
+    return _rank_topk(_score_probed(index, probes, "cluster_id", lut), k)
 
 
 def _pq_query_lut(
@@ -2389,249 +886,745 @@ def _pq_query_lut(
     )
 
 
-def _adc_score_rank(index: DataFrame, probes: DataFrame, lut: DataFrame, k: int) -> DataFrame:
-    """Shared IVFADC scoring tail: candidates from the probed lists join
-    the broadcast LUT, accumulate exact decimals, rank per query. Both
-    the inline and the persisted-index paths end here, so their scoring
-    semantics cannot drift apart."""
-    scored = (
-        index.join(F.broadcast(probes), "cluster_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "subspace", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("ddec").alias("adc_dec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dec").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("adc_dec").cast("double").alias("adc_dist"),
-            "rank",
+# --- The persisted IVF index -------------------------------------------------
+# ONE index type: parquet laid out as `shard=<s>/cluster_id=<c>/`, where an
+# unsharded index is shard 0. Posting rows hold either the vector
+# (neighbor_id, v) or its PQ codes (neighbor_id, subspace, code), so IVFADC
+# is an encoding on the same layout, not a second index. `write_ivf_index`
+# writes it (build with mode="overwrite", maintain with mode="append"),
+# `build_ivf_index` trains and sizes the codebooks, and `ivf_topk_indexed`
+# serves any shard count, either encoding. The registry rows
+# ann_ivf_indexed_topk, ann_ivf_append_topk, ann_ivfadc_indexed_topk,
+# ann_ivfadc_recall_audit and ann_ivfadc_compact_topk gate it against the
+# inline `ivf_topk`/`ivfadc_topk` oracles.
+
+
+#: Inverted-list length the serving-flatness measurement was taken at:
+#: the sf10 probe (200k vectors) read 0.63s serve with a FIXED k=16
+#: (lists ~12.5k, candidates ~50k/query) and 0.215s after rebuilding
+#: with k=160 — i.e. lists of 200k/160 = 1250 — at the same n_probe
+#: (candidates ~5k; SCALING.md "codebook scaling"). Per-query serve
+#: cost is n_probe x list_len, so this is the knob that keeps serving
+#: flat as the corpus grows.
+IVF_TARGET_LIST_LEN = 1250
+
+
+def select_n_centroids(
+    n_rows: int,
+    target_list_len: int = IVF_TARGET_LIST_LEN,
+    k_min: int = 4,
+    k_max: int = 65536,
+) -> int:
+    """The codebook-scaling contract (VERDICT r10 #4): pick the IVF
+    centroid count so inverted lists stay bounded as the corpus grows —
+    k = clamp(ceil(n_rows / target_list_len), k_min, k_max).
+
+    Why a contract and not a footnote: the sf10 campaign MEASURED that
+    indexed serve time tracks per-list candidate volume (n_probe x
+    n_rows/k), so a fixed k re-couples serving to corpus size — 100x
+    data at k=16 grew serve 0.28 -> 0.74s, while k ∝ corpus restored
+    0.215s (SCALING.md). Mean list length is n_rows/k <= target_list_len
+    by construction whenever the k_min/k_max clamps are inactive.
+
+    Bounds: k_min keeps tiny corpora from degenerating to one list
+    (probe selectivity needs > n_probe lists to mean anything); k_max
+    caps quantizer cost — past k_max * target_list_len rows (~82M at
+    the defaults) lists grow again and the scale path is sharding the
+    index (one codebook per shard), not a single ever-larger codebook.
+    Build cost grows with k (assignment is k-wide): the deterministic
+    JVM join measured 31 -> 319s for 16 -> 160 at sf10.
+    """
+    if n_rows < 0:
+        raise ValueError(f"n_rows must be >= 0, got {n_rows}")
+    if target_list_len < 1:
+        raise ValueError(f"target_list_len must be >= 1, got {target_list_len}")
+    if not 1 <= k_min <= k_max:
+        raise ValueError(f"need 1 <= k_min <= k_max, got {k_min}..{k_max}")
+    k = -(-n_rows // target_list_len)  # ceil
+    return max(k_min, min(k_max, k))
+
+
+def select_n_shards(
+    n_rows: int,
+    target_list_len: int = IVF_TARGET_LIST_LEN,
+    k_max: int = 65536,
+) -> int:
+    """The sharding contract (VERDICT r12 #5) — the escalation twin of
+    `select_n_centroids`: past k_max * target_list_len rows (~82M at
+    the defaults) a single codebook's inverted lists grow again no
+    matter what (`select_n_centroids` clamps k at k_max), so the index
+    must split into shards, each holding at most one clamped codebook's
+    capacity:
+
+        n_shards = ceil(n_rows / (k_max * target_list_len))
+
+    By construction every shard's expected row count is
+    n_rows / n_shards <= k_max * target_list_len, so each per-shard
+    `select_n_centroids` stays UNDER its clamp and every list at target
+    length — the property `build_ivf_index` relies on,
+    property-tested across the boundary in tests."""
+    if n_rows < 0:
+        raise ValueError(f"n_rows must be >= 0, got {n_rows}")
+    if target_list_len < 1:
+        raise ValueError(f"target_list_len must be >= 1, got {target_list_len}")
+    if k_max < 1:
+        raise ValueError(f"k_max must be >= 1, got {k_max}")
+    cap = k_max * target_list_len
+    return max(1, -(-n_rows // cap))  # ceil, never 0
+
+
+#: Spark's hard per-relation broadcast-table ceiling (8 GiB). The
+#: chunk-sizing default budgets HALF of it: the raw-vector estimate
+#: (n_centroids x dim x 8 bytes) undercounts the broadcast relation's
+#: real JVM footprint (UnsafeRow + array headers per codebook row, plus
+#: the driver holding the built relation while executors fetch it), so
+#: self-sized chunks leave the other half as headroom.
+BROADCAST_TABLE_CEILING_BYTES = 8 * 1024**3
+
+
+def select_chunk_shards(
+    shard_centroids: dict[int, int],
+    dim: int,
+    budget_bytes: int = BROADCAST_TABLE_CEILING_BYTES // 2,
+) -> int:
+    """The chunk-sizing contract (VERDICT r14 #4) — the serving twin of
+    `select_n_shards`: pick the LARGEST `chunk_shards` whose combined
+    per-chunk codebook broadcast stays inside `budget_bytes`, from the
+    ACTUAL per-shard codebook sizes (counts of the relations the caller
+    is about to serve), not the k_max worst case — real codebooks sit
+    at n_shard/target_list_len << k_max, so the worst-case formula in
+    `ivf_topk_indexed`'s contract would chunk ~20x too eagerly.
+
+    Sizing is against the LARGEST shard codebook (chunk_shards x
+    max_shard_bytes <= budget), so EVERY chunk of that many shards fits
+    the budget no matter how the sorted-shard order composes them.
+    Floor is 1 (one shard per chunk): a single shard's codebook is
+    bounded by the build clamp at k_max x dim x 8 bytes (~400 MB at
+    dim=768), far inside any sane budget — if even that exceeds
+    `budget_bytes` the caller asked for an impossible budget and gets a
+    ValueError rather than a silently over-budget broadcast. Capped at
+    n_shards (more than all shards is just the one-shot serve).
+    `ivf_topk_indexed` self-sizes with this when `chunk_shards=None`,
+    from the codebook sizes the index writer persisted."""
+    if not shard_centroids:
+        raise ValueError("shard_centroids must map shard -> n_centroids")
+    if dim < 1:
+        raise ValueError(f"dim must be >= 1, got {dim}")
+    if budget_bytes < 1:
+        raise ValueError(f"budget_bytes must be >= 1, got {budget_bytes}")
+    if any(n < 0 for n in shard_centroids.values()):
+        raise ValueError(f"centroid counts must be >= 0, got {shard_centroids}")
+    n_shards = len(shard_centroids)
+    max_bytes = max(shard_centroids.values()) * dim * 8
+    if max_bytes == 0:  # all-empty codebooks: any chunking fits
+        return n_shards
+    if max_bytes > budget_bytes:
+        raise ValueError(
+            f"largest shard codebook is {max_bytes} bytes, over the "
+            f"{budget_bytes}-byte budget — even one-shard chunks cannot "
+            "serve within it; rebuild with a larger target_list_len or "
+            "raise the budget"
         )
+    return min(n_shards, budget_bytes // max_bytes)
+
+
+def _select_chunk_workers(worst_chunk_bytes: int, n_chunks: int, cap: int = 8) -> int:
+    """Bound the chunked serve's CONCURRENT chunk preparations so the
+    fan-out's transient broadcast footprint stays inside the same
+    envelope the one-shot serve occupies (r15 — the scale reflection on
+    the thread fan-out itself): each chunk's prep runs its probe job
+    eagerly, and that job BROADCASTS the chunk's combined codebook, so
+    `workers × worst_chunk_bytes` of broadcast tables are live at once
+    until the ContextCleaner frees them. Tiny codebooks (every healthy
+    corpus) keep the full `cap`-way overlap; chunks sized near the
+    budget serialize down to however many fit the 8 GiB ceiling
+    together — never below 1, which is the serial loop the fan-out
+    replaced."""
+    if n_chunks < 1:
+        raise ValueError(f"n_chunks must be >= 1, got {n_chunks}")
+    if worst_chunk_bytes <= 0:  # empty codebooks broadcast nothing
+        return min(cap, n_chunks)
+    return max(
+        1, min(cap, n_chunks, BROADCAST_TABLE_CEILING_BYTES // worst_chunk_bytes)
     )
 
 
-def build_ivfadc_index(
-    df: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
-    path: str,
-    m: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_arrow: bool = False,
-) -> None:
-    """Persist the IVFADC index as cluster_id-partitioned parquet of
-    (neighbor_id, subspace, code) rows — assignment AND PQ encoding run
-    ONCE at build time; the float vectors never appear in the index.
-    At 100 TB this is the billion-vector serving layout: each query
-    batch directory-prunes to its probed lists and reads only byte
-    codes (~32x smaller than the embeddings). `use_arrow=True` swaps in
-    the one-pass vectorized assign+encode (`assign_encode_arrow`)."""
-    _write_ivfadc_rows(
-        df, centroids, codebooks, path, m, dim, id_col, vec_col, "overwrite",
-        use_arrow,
-    )
+def _shard_router(id_col: str, n_shards: int):
+    """Deterministic shard assignment: pmod(xxhash64(id), n_shards) —
+    id-type-agnostic, stable across runs/partitionings, and the SAME
+    expression routes build, append, and (if a caller ever needs it)
+    per-shard lookup, so a vector can never change shards."""
+    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
 
 
-def append_ivfadc_index(
-    df: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
-    path: str,
-    m: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental maintenance for the IVFADC byte-code index — the
-    `append_ivf_index` twin: new vectors assign against the FROZEN
-    coarse quantizer and PQ-encode against the FROZEN codebooks, then
-    append into the existing cluster_id= directories; existing code
-    rows are never read or rewritten. Both quantizers must be the ones
-    the index was built with (snapshot them beside the index) —
-    appending under different ones silently corrupts list membership
-    and code semantics. Append-equals-rebuild is property-tested; after
-    many small appends, `sources.parquet.compact_parquet(...,
-    partition_by=['cluster_id'])` rewrites the lists at target file
-    size with serving results unchanged (also tested)."""
-    _write_ivfadc_rows(
-        df, centroids, codebooks, path, m, dim, id_col, vec_col, "append"
-    )
-
-
-def assign_encode_arrow(
-    df: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
-    m: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Vectorized IVFADC index rows — `ivf_assign_arrow`'s twin for the
-    byte-code index: ONE mapInPandas pass computes cluster membership
-    (batch matmul + argmax, ties to the lowest cluster id, zero-norm ->
-    lowest cluster — same contract as the JVM path) AND the m PQ codes
-    (per-subspace squared-distance matmul + argmin, ties to the lower
-    code). Zero shuffle, both quantizer matrices ride the closure;
-    output is (neighbor_id, cluster_id, subspace, code) rows, m per
-    vector — the exact shape `_write_ivfadc_rows` persists. The JVM
-    composition stays the gated default (fold-order ulps, see
-    `ivf_assign_arrow`); served-top-k equality on the fixtures is
-    pinned in tests. NULL / wrong-length vectors raise a ValueError
-    naming the offending ids (ADVICE r8): unlike coarse assignment —
-    where the JVM contract routes dirty rows to the lowest cluster —
-    PQ codes for an undefined vector would silently corrupt the
-    persisted index, so the build path fails fast instead."""
-    import numpy as np
-    import pandas as pd
-
-    _pq_check(m, dim)
-    width = dim // m
-    crows = _centroid_rows(centroids)
-    cids = np.array([cid for cid, _ in crows], dtype=np.int64)
-    cmat = np.array([cv for _, cv in crows], dtype=np.float64)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-    cb: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in codebooks.collect():
-        cb.setdefault(int(r["subspace"]), []).append(
-            (int(r["code"]), [float(x) for x in r["cv"]])
+def _shard_books(centroids) -> dict[int, DataFrame]:
+    """Normalize the coarse quantizer to {shard: codebook}: one relation
+    is a single-shard index (shard 0); a dict must map every shard
+    0..n-1 to its own codebook. Int-like str keys (a codebook snapshot
+    round-tripped through JSON metadata) are accepted."""
+    books = centroids if isinstance(centroids, dict) else {0: centroids}
+    books = {int(s): b for s, b in books.items()}
+    if not books or sorted(books) != list(range(len(books))):
+        raise ValueError(
+            f"codebooks must cover shards 0..n-1, got {sorted(books)}"
         )
-    sub_codes = []
-    sub_mats = []
-    for s in range(m):
-        entries = sorted(cb.get(s, []))
-        sub_codes.append(np.array([c for c, _ in entries], dtype=np.int64))
-        sub_mats.append(np.array([cv for _, cv in entries], dtype=np.float64))
+    return books
 
-    def batches(it):
-        for pdf in it:
-            vecs, bad = _batch_matrix(pdf, vec_col, dim)
-            if bad.any():
-                # a NULL/ragged vector has no defined PQ codes; writing
-                # one would silently corrupt the persisted index, so the
-                # BUILD path fails fast naming the rows (ADVICE r8)
-                # repr, not int(): a non-int-coercible id must not swap
-                # the diagnostic for an opaque cast error (ADVICE r9)
-                bad_ids = [repr(v) for v in pdf[id_col].values[bad][:5]]
-                raise ValueError(
-                    f"assign_encode_arrow: NULL or wrong-length {vec_col!r} "
-                    f"for {id_col}={bad_ids} (expected length {dim}); filter "
-                    "or repair these rows before the index build"
-                )
-            n = len(vecs)
-            best = _assign_batch_np(vecs, cmat, cnorm)
-            codes = np.empty((n, m), dtype=np.int64)
-            for s in range(m):
-                sv = vecs[:, s * width : (s + 1) * width]
-                csub = sub_mats[s]
-                # ||sv - c||^2 = ||sv||^2 - 2 sv.c + ||c||^2 ; argmin is
-                # first occurrence -> lower code on exact ties
-                d = (
-                    (sv * sv).sum(axis=1)[:, None]
-                    - 2.0 * (sv @ csub.T)
-                    + (csub * csub).sum(axis=1)[None, :]
-                )
-                codes[:, s] = sub_codes[s][np.argmin(d, axis=1)]
-            out = pd.DataFrame(
-                {
-                    "neighbor_id": np.repeat(pdf[id_col].values, m),
-                    "cluster_id": np.repeat(cids[best].astype("int32"), m),
-                    "subspace": np.tile(np.arange(m, dtype=np.int32), n),
-                    "code": codes.reshape(-1).astype("int32"),
-                }
+
+def _combined_books(books: dict[int, DataFrame]) -> DataFrame:
+    """The per-shard codebooks as ONE (shard, cluster_id, cv) relation,
+    unioned JVM-side with a literal shard tag — no collect and no
+    driver round-trip (VERDICT r13 #2), so the writer and the serve
+    broadcast one codebook whatever the shard count."""
+    return reduce(
+        DataFrame.unionByName,
+        [
+            books[s].select(
+                F.lit(s).cast("int").alias("shard"),
+                F.col("cluster_id").cast("int").alias("cluster_id"),
+                _as_double(F.col("cv")).alias("cv"),
             )
-            yield out
-
-    return df.select(id_col, vec_col).mapInPandas(
-        batches, "neighbor_id long, cluster_id int, subspace int, code int"
+            for s in sorted(books)
+        ],
     )
 
 
-def _write_ivfadc_rows(
-    df, centroids, codebooks, path, m, dim, id_col, vec_col, mode,
-    use_arrow: bool = False,
+#: Codebook-stats sidecar filename (VERDICT r15 #1). Underscore-prefixed
+#: so Spark's file index treats it as hidden — `spark.read.parquet` on
+#: the index never sees it (the `_SUCCESS` convention).
+_CODEBOOK_STATS_SIDECAR = "_codebook_stats.json"
+
+
+def _sidecar_jpath(spark, index_path: str):
+    jvm = spark._jvm
+    return jvm.org.apache.hadoop.fs.Path(
+        f"{index_path.rstrip('/')}/{_CODEBOOK_STATS_SIDECAR}"
+    )
+
+
+def _codebook_stats(codebooks: dict[int, DataFrame]):
+    """The ONE source of codebook sizes: ({shard: n_centroids}, dim)
+    measured by one bounded aggregate over the (tiny-by-contract)
+    codebook relations — n_shards rows reach the driver, nothing else.
+    dim is the MAX vector length over rows, so a malformed short first
+    vector cannot understate the broadcast bytes. The writer persists
+    the result as the index's sidecar; the serve re-measures only when
+    the sidecar is absent or unreadable. A NULL centroid vector raises
+    a targeted error naming the bad shards (ADVICE r15 #3) instead of
+    letting F.size(NULL) drive a confusing 'dim must be >= 1'
+    downstream."""
+    stats = (
+        reduce(
+            DataFrame.unionByName,
+            [
+                codebooks[s].select(
+                    F.lit(int(s)).alias("shard"),
+                    F.size("cv").alias("d"),
+                    F.col("cv").isNull().cast("int").alias("bad"),
+                )
+                for s in sorted(codebooks)
+            ],
+        )
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max("d").alias("dim"),
+            F.sum("bad").alias("n_null"),
+        )
+        .collect()
+    )
+    null_shards = sorted(
+        int(r["shard"]) for r in stats if int(r["n_null"] or 0) > 0
+    )
+    if null_shards:
+        raise ValueError(
+            f"codebook shards {null_shards} contain NULL centroid vectors "
+            "(cv) — rebuild those shards' codebooks before serving"
+        )
+    measured = {int(r["shard"]): int(r["n"]) for r in stats}
+    # empty codebooks count as 0
+    counts = {s: measured.get(int(s), 0) for s in codebooks}
+    dim = max(
+        (int(r["dim"]) for r in stats if r["dim"] is not None), default=1
+    )
+    return counts, max(dim, 1)
+
+
+def _write_codebook_sidecar(
+    spark, index_path: str, counts: dict[int, int], dim: int
 ) -> None:
-    _pq_check(m, dim)
-    if use_arrow:
-        # the arrow path collects centroid/codebook rows itself — no
-        # local-relation rebuild needed
-        index = assign_encode_arrow(
-            df, centroids, codebooks, m, dim, id_col, vec_col
+    """Persist `_codebook_stats` ({shard: n_centroids} + dim) next to
+    the index, so a self-sized serve reads its chunking from one
+    FileSystem metadata lookup instead of a Spark job (a fixed ~2 s of
+    scheduling even on 20-row local relations). Storage-agnostic
+    (Hadoop FileSystem API).
+
+    BEST-EFFORT: a failure of this small driver-side PUT must not fail
+    an otherwise-complete index write (the serve then measures the
+    codebooks itself); it warns with the path and cause (VERDICT r16
+    #3). ATOMIC (ADVICE r16 #3): the payload lands under a dot-prefixed
+    temp name and is renamed over the final path, so a crash mid-write
+    never leaves a truncated sidecar; and the previous sidecar is
+    deleted first (HDFS rename does not overwrite), with the failure
+    path deleting whatever remains, so a failed overwrite can never
+    leave an OLD sidecar describing a rebuilt index (ADVICE r16 #2)."""
+    import json
+    import warnings
+
+    jpath = tmp = fs = None
+    try:
+        jpath = _sidecar_jpath(spark, index_path)
+        tmp = spark._jvm.org.apache.hadoop.fs.Path(
+            f"{index_path.rstrip('/')}/.{_CODEBOOK_STATS_SIDECAR}.tmp"
         )
-    else:
-        centroids = materialize_centroids(centroids)
-        c = df.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v")
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        out = fs.create(tmp, True)
+        try:
+            payload = {
+                "dim": int(dim),
+                "counts": {
+                    str(int(s)): int(n) for s, n in sorted(counts.items())
+                },
+            }
+            out.write(bytearray(json.dumps(payload).encode("utf-8")))
+        finally:
+            out.close()
+        fs.delete(jpath, False)
+        if not fs.rename(tmp, jpath):
+            raise IOError(f"rename {tmp} -> {jpath} returned false")
+    except Exception as e:
+        warnings.warn(
+            f"codebook-stats sidecar write failed for {index_path!r} "
+            f"({e!r}); index is complete and correct, but self-sized "
+            "serves measure the codebooks (one small job) until a later "
+            "write rewrites the sidecar",
+            RuntimeWarning,
+            stacklevel=2,
         )
-        assigned = ivf_assign(c, centroids, "neighbor_id", "v").select(
-            "neighbor_id", "cluster_id"
+        for leftover in (tmp, jpath):
+            if leftover is not None and fs is not None:
+                try:
+                    fs.delete(leftover, False)
+                except Exception:
+                    pass
+
+
+def _read_codebook_sidecar(spark, index_path: str):
+    """Read the sidecar; returns (counts, dim) or None when absent or
+    unreadable — the serve then measures the codebooks, so a missing
+    or corrupt sidecar can never fail a query."""
+    import json
+
+    try:
+        jpath = _sidecar_jpath(spark, index_path)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not fs.exists(jpath):
+            return None
+        stream = fs.open(jpath)
+        try:
+            text = spark._jvm.org.apache.commons.io.IOUtils.toString(
+                stream, "UTF-8"
+            )
+        finally:
+            stream.close()
+        payload = json.loads(text)
+        counts = {int(s): int(n) for s, n in payload["counts"].items()}
+        dim = int(payload["dim"])
+        if dim < 1 or any(n < 0 for n in counts.values()):
+            return None
+        return counts, dim
+    except Exception:
+        return None
+
+
+def write_ivf_index(
+    df: DataFrame,
+    centroids,
+    path: str,
+    mode: str = "overwrite",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    pq_codebook: DataFrame | None = None,
+    m: int | None = None,
+    dim: int | None = None,
+) -> None:
+    """THE index writer: assign every vector to its coarse list and
+    persist the posting rows as `shard=<s>/cluster_id=<c>/` parquet —
+    assignment runs ONCE, at write time, and every later serve reads
+    only its probed directories. At 100 TB that is the difference
+    between re-assigning the corpus per query batch and a
+    directory-pruned read of n_probe/n_centroids of the index.
+
+    `centroids` is one codebook relation (cluster_id, cv) — a
+    single-shard index — or {shard: codebook} for shards 0..n-1 (the
+    `build_ivf_index` result). Rows route to shards with the
+    deterministic `_shard_router`, so a vector can never change shard,
+    and each assigns only against its own shard's codebook
+    (`ivf_assign(on="shard")`): one scan, one broadcast, one write job
+    whatever the shard count.
+
+    `mode="overwrite"` builds (replacing whatever was at `path`);
+    `mode="append"` is INCREMENTAL maintenance: only the new vectors
+    assign against the (frozen) codebooks and land in the existing
+    directories — existing lists are never read or rewritten, and the
+    serve reads the union transparently. The codebooks must be the
+    ones the index was built with — appending under a different
+    quantizer silently corrupts list membership (pinned by a test), so
+    callers snapshot them beside the index. Append-equals-rebuild is
+    oracle-gated (`ann_ivf_append_topk`) and property-tested; after
+    many small appends `sources.parquet.compact_parquet(...,
+    partition_by=["shard", "cluster_id"])` rewrites the lists at target
+    file size with serving results unchanged (`ann_ivfadc_compact_topk`).
+
+    Passing `pq_codebook` (`pq_codebooks`, with its `m` and `dim`)
+    writes PQ codes instead of vectors: (neighbor_id, subspace, code)
+    rows, ~32x smaller than the embeddings, served by the ADC tail. The
+    PQ codebook is frozen with the index exactly like the coarse one.
+
+    The write also persists the codebook sizes (`_codebook_stats`) as a
+    sidecar for the serve's chunk sizing: an overwrite measures them
+    before writing (a NULL centroid fails fast, before any row lands);
+    an append backfills a missing sidecar, best-effort, AFTER its rows
+    are durable (ADVICE r16 #1: a caller retrying a 'failed' append
+    would double-append the batch).
+
+    r17 note: fusing the PQ encode into the assignment lineage was
+    priced and REJECTED with the inline composition (see `ivfadc_topk`):
+    both groupBys shuffle only narrow pre-aggregated state, while the
+    fused lineage carries the full vector through the argmax exchange.
+    """
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
+    books = _shard_books(centroids)
+    if pq_codebook is not None:
+        _pq_check(m, dim)
+    spark = df.sparkSession
+    n_shards = len(books)
+    stats = _codebook_stats(books) if mode == "overwrite" else None
+    shard = _shard_router(id_col, n_shards) if n_shards > 1 else F.lit(0)
+    c = df.select(
+        F.col(id_col).alias("neighbor_id"),
+        _as_double(F.col(vec_col)).alias("v"),
+        shard.cast("int").alias("shard"),
+    )
+    rows = ivf_assign(c, _combined_books(books), "neighbor_id", "v", on="shard")
+    if pq_codebook is not None:
+        codes = pq_encode(df, pq_codebook, m, dim, id_col, vec_col)
+        rows = rows.select("neighbor_id", "shard", "cluster_id").join(
+            codes.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id"
         )
-        codes = pq_encode(df, codebooks, m, dim, id_col, vec_col).withColumnRenamed(
-            id_col, "neighbor_id"
-        )
-        index = assigned.join(codes, "neighbor_id")
     (
-        index
-        .repartition("cluster_id")
-        .write.partitionBy("cluster_id")
+        rows.repartition("shard", "cluster_id")
+        .write.partitionBy("shard", "cluster_id")
         .mode(mode)
         .parquet(path)
     )
+    if stats is not None:
+        _write_codebook_sidecar(spark, path, *stats)
+        return
+    try:
+        if _read_codebook_sidecar(spark, path) is None:
+            _write_codebook_sidecar(spark, path, *_codebook_stats(books))
+    except Exception as e:
+        import warnings
+
+        warnings.warn(
+            f"codebook-stats sidecar backfill failed for {path!r} "
+            f"({e!r}); the append itself completed — self-sized serves "
+            "measure the codebooks (one small job) until a later write "
+            "backfills the sidecar",
+            RuntimeWarning,
+            stacklevel=2,
+        )
 
 
-def ivfadc_topk_indexed(
+def build_ivf_index(
+    df: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_shards: int | None = None,
+    target_list_len: int = IVF_TARGET_LIST_LEN,
+    n_updates: int = 1,
+    max_train_rows: int | None = None,
+) -> dict[int, DataFrame]:
+    """The production build: size, train and write the index in one
+    call. Returns {shard: local codebook relation} — the snapshot the
+    caller keeps beside the index for `write_ivf_index(mode="append")`
+    and `ivf_topk_indexed`.
+
+    Sizing. `n_shards=None` counts the corpus once and picks the shard
+    count from the sharding contract (`select_n_shards` — 1 below
+    k_max x target_list_len rows, ~82M at the defaults, more above),
+    so sharding engages by itself instead of lists silently growing
+    past target length under the k_max clamp. Rows route to shards by
+    `_shard_router`; each shard's codebook sizes by ITS row count
+    (`select_n_centroids`), so every list stays at target length and
+    serving cost per shard stays flat.
+
+    Training. Each codebook is the deterministic Lloyd quantizer
+    (`kmeans_lloyd_centroids`, `n_updates` updates) on a bounded sample
+    (VERDICT r16 #4 — at most `max_train_rows` vectors, None -> 256 x
+    that shard's k), so training cost stays flat as the corpus grows;
+    with the count in hand, a shard that fits the cap trains unbounded,
+    keeping plan and centroids byte-identical to the pre-cap build.
+    Shards train concurrently on a thread pool — Spark's scheduler runs
+    jobs from several submitter threads, so one shard's Lloyd driver
+    round-trips overlap another's stages. Input-scan cost (ADVICE r12):
+    each shard's passes filter the full input by the router; the write
+    itself is one pass (`write_ivf_index`); a PQ-code index over the same
+    codebooks is one more `write_ivf_index(df, books, path,
+    pq_codebook=...)`.
+    """
+    if n_shards is not None and n_shards < 1:
+        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
+    n_rows = df.count() if n_shards is None else None
+    if n_shards is None:
+        n_shards = select_n_shards(n_rows, target_list_len)
+
+    def _train(s: int):
+        if n_shards == 1:
+            part = df
+            n = df.count() if n_rows is None else n_rows
+        else:
+            part = df.filter(_shard_router(id_col, n_shards) == s)
+            n = part.count()
+        k = select_n_centroids(n, target_list_len)
+        cap = _resolve_train_cap(k, max_train_rows)
+        return s, kmeans_lloyd_centroids(
+            part,
+            id_col,
+            vec_col,
+            k=k,
+            n_updates=n_updates,
+            # count in hand: a shard inside the cap trains unbounded (0)
+            max_train_rows=0 if (cap is None or n <= cap) else cap,
+        )
+
+    if n_shards == 1:
+        books = dict([_train(0)])
+    else:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(8, n_shards)) as ex:
+            books = dict(ex.map(_train, range(n_shards)))
+    write_ivf_index(df, books, path, "overwrite", id_col, vec_col)
+    return books
+
+
+def _materialize_probes(probes: DataFrame, reliable: bool) -> DataFrame:
+    """Materialize the bounded probe sub-plan once for its two consumers.
+
+    reliable=False (default, serving hot path): `localCheckpoint` —
+    executor-memory blocks, freed by the ContextCleaner with the result;
+    an executor loss before the caller consumes the result fails that
+    query (caller retries).
+
+    reliable=True (VERDICT r8 #6): `checkpoint()` against the
+    context's configured checkpoint directory — blocks live on shared
+    storage, so the returned plan survives executor churn without a
+    retry. Requires `spark.sparkContext.setCheckpointDir(...)` pointing
+    at storage every executor can read (HDFS/S3 on a cluster); raises
+    immediately when unset rather than letting Spark fail mid-query.
+    Same rows either way — the materialization strategy is not part of
+    the query semantics (bitwise equality is pinned in tests)."""
+    if not reliable:
+        return probes.localCheckpoint(eager=True)
+    sc = probes.sparkSession.sparkContext
+    if sc.getCheckpointDir() is None:
+        raise ValueError(
+            "reliable=True needs a checkpoint directory: call "
+            "spark.sparkContext.setCheckpointDir(<shared path>) first"
+        )
+    # persist-bracket the reliable checkpoint (ADVICE r10 #2): Spark's
+    # reliable RDD checkpoint runs a SECOND job to write the checkpoint
+    # files, which would recompute the probe sub-plan from scratch;
+    # caching first lets that write read cached blocks instead (the
+    # same discipline as dedup.py's _ckpt_fresh_stats)
+    probes = probes.persist()
+    try:
+        return probes.checkpoint(eager=True)
+    finally:
+        probes.unpersist()
+
+
+def ivf_topk_indexed(
     spark,
     index_path: str,
     queries: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
-    m: int,
-    dim: int,
-    k: int = 3,
-    n_probe: int = 4,
+    centroids,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    k: int = 3,
+    n_probe: int = 4,
     reliable: bool = False,
+    chunk_shards: int | None = None,
+    pq_codebook: DataFrame | None = None,
+    m: int | None = None,
+    dim: int | None = None,
 ) -> DataFrame:
-    """IVFADC over a PERSISTED index (`build_ivfadc_index`): rank the
-    codebook per query, collect only the distinct probed cluster ids
-    (O(n_centroids) driver state), filter the index scan with a LITERAL
-    isin so partition pruning reads n_probe/n_centroids of the codes,
-    and score with the shared broadcast-LUT tail — identical semantics
-    to `ivfadc_topk`, but the corpus is never re-assigned, never
-    re-encoded, and never read outside the probed directories. Like
-    `ivf_topk_indexed`, the bounded probe sub-plan is materialized ONCE
-    (`localCheckpoint(eager=True)`) and shared by both consumers; the
-    executor-side blocks are freed by the ContextCleaner when the
-    result is released (VERDICT r6 #4). Executor-loss failure mode and
-    the `reliable=True` durable-checkpoint variant: see
-    `ivf_topk_indexed` / `_materialize_probes` (ADVICE r7, VERDICT r8
-    #6)."""
-    _pq_check(m, dim)
-    centroids = materialize_centroids(centroids)
-    probes = _materialize_probes(
-        _rank_probes(queries, centroids, id_col, vec_col, n_probe).select(
-            "query_id", "cluster_id"
-        ),
-        reliable,
+    """THE index serve, for any shard count and either encoding: probe
+    every shard's codebook, prune the index scan to the probed
+    directories, verify, and rank once. Same rows as the inline
+    `ivf_topk` (or, with `pq_codebook`, `ivfadc_topk`) whenever the
+    quantizers are the same — but the corpus is never
+    re-assigned and never fully read. `centroids` is the codebook
+    relation or {shard: codebook} dict the index was written with.
+
+    Scoring tail. Without `pq_codebook`, exact cosine on the stored
+    vectors: (query_id, neighbor_id, sim, rank). With it (and its `m`,
+    `dim`), the ADC lookup table is built once per query batch and the
+    (subspace, code) rows score as exact-decimal lookup sums:
+    (query_id, neighbor_id, adc_dist, rank). Over more than one shard
+    the rank is the salted two-level one (`_rank_topk`).
+
+    Chunking. Every query probes every shard's codebook, so the probe
+    join broadcasts sum over shards of n_centroids x dim doubles — up
+    to ~400 MB per k_max-clamped shard at dim=768, past Spark's 8 GB
+    broadcast-table ceiling at ~20 clamped shards. Shards then serve in
+    chunks of `chunk_shards`: each chunk is one probe/prune/verify with
+    its own top-k (a row bound, not a semantic one — selection
+    decomposes over any partition of the shards), and the global rank
+    re-ranks the union on unrounded scores, so rows are IDENTICAL to a
+    one-chunk serve (gated in tests and the chunked_serve fuzz family).
+    `chunk_shards=None` sizes itself (`select_chunk_shards`, half the
+    ceiling) from the codebook sizes — the sidecar the writer persisted,
+    else `_codebook_stats` — which is one chunk for every index below
+    ~20 clamped shards. A single shard needs no sizing at all. Chunk
+    preparations (each runs two blocking driver actions) overlap on a
+    thread pool whose width keeps workers x worst-chunk bytes inside the
+    ceiling (`_select_chunk_workers`); the query batch materializes once
+    and one index relation is resolved for all chunks, so neither the
+    queries' lineage nor the index's directory listing repeats per chunk
+    (measured at 2M vectors / 8 shards: 4 chunks dropped from 2.1-2.25x
+    the one-shot serve to 1.02x; SCALING.md).
+
+    Failure mode (ADVICE r7): the probe sub-plan is materialized with
+    `localCheckpoint`, which truncates lineage, so an executor loss
+    between the checkpoint and the caller's evaluation of the result
+    fails THAT query (the caller retries; the index is durable parquet).
+    `reliable=True` checkpoints to the context's checkpoint dir instead
+    (`_materialize_probes`, VERDICT r8 #6) — identical rows, durable
+    blocks.
+
+    Degenerate corpus (r15, measured): 200k identical vectors tie into
+    ONE list, so the pruned scan is one corpus-sized directory whose
+    parquet RLE-compresses past byte-range splitting — a one-task
+    verify (18.8 s for an 8-query batch; repartitioning the candidates
+    to 32 tasks read 2.61 s). The structural fix is exact pre-dedup
+    (SCALING.md): collapse bitwise-equal vectors first, then no list is
+    hot anywhere.
+    """
+    books = _shard_books(centroids)
+    if chunk_shards is not None and chunk_shards < 1:
+        raise ValueError(f"chunk_shards must be >= 1, got {chunk_shards}")
+    if pq_codebook is not None:
+        _pq_check(m, dim)
+    n_shards = len(books)
+    stats = None
+    if n_shards > 1 and (chunk_shards is None or chunk_shards < n_shards):
+        stats = _read_codebook_sidecar(spark, index_path)
+        if stats is None or not set(books) <= set(stats[0]):
+            stats = _codebook_stats(books)
+        if chunk_shards is None:
+            chunk_shards = select_chunk_shards(*stats)
+    size = chunk_shards or n_shards
+    chunks = [
+        {s: books[s] for s in range(i, min(i + size, n_shards))}
+        for i in range(0, n_shards, size)
+    ]
+    if len(chunks) > 1:
+        queries = _materialize_probes(
+            queries.select(F.col(id_col), F.col(vec_col)), reliable
+        )
+    index = spark.read.parquet(index_path)
+    lut = (
+        None
+        if pq_codebook is None
+        else _pq_query_lut(queries, pq_codebook, m, dim, id_col, vec_col)
     )
-    probed_clusters = sorted(
-        int(r["cluster_id"])
-        for r in probes.select("cluster_id").distinct().collect()
+
+    def scored(chunk: dict[int, DataFrame]) -> DataFrame:
+        """Probe, prune and verify one chunk of shards into the
+        UNROUNDED `_score_probed` frame. The fixed costs are paid once
+        per chunk, never per shard (VERDICT r12 #2):
+
+          1. ONE combined codebook relation (`_combined_books`).
+          2. ONE probe-ranking job: the n_probe nearest lists per
+             (query, shard).
+          3. ONE probe materialization (`_materialize_probes`) shared
+             by its two consumers.
+          4. ONE bounded collect of the distinct probed (shard,
+             cluster_id) pairs — O(sum of n_centroids) ints, never
+             O(n_queries): the probe frame itself (query vectors
+             included) stays distributed (VERDICT r5 #4).
+          5. ONE index scan with a LITERAL OR-of-conjunctions partition
+             predicate, so Catalyst prunes to exactly the probed
+             directories (PartitionFilters in the plan — asserted in
+             tests).
+          6. ONE verify join on (shard, cluster_id): a probe of shard s
+             may only match shard s's lists."""
+        probes = _rank_probes(
+            queries, _combined_books(chunk), id_col, vec_col, n_probe
+        )
+        if lut is not None:
+            probes = probes.drop("qv")  # ADC never touches a float vector
+        probes = _materialize_probes(probes, reliable)
+        probed: dict[int, list[int]] = {}
+        for r in probes.select("shard", "cluster_id").distinct().collect():
+            probed.setdefault(int(r["shard"]), []).append(int(r["cluster_id"]))
+        cond = F.lit(False)
+        for s in sorted(probed):
+            cond = cond | (
+                (F.col("shard") == s) & F.col("cluster_id").isin(sorted(probed[s]))
+            )
+        return _score_probed(index.filter(cond), probes, ["shard", "cluster_id"], lut)
+
+    if len(chunks) == 1:
+        return _rank_topk(scored(books), k, salted=n_shards > 1)
+    from concurrent.futures import ThreadPoolExecutor
+
+    counts, stats_dim = stats
+    worst = max(sum(counts[s] for s in c) * stats_dim * 8 for c in chunks)
+    with ThreadPoolExecutor(_select_chunk_workers(worst, len(chunks))) as ex:
+        tops = list(
+            ex.map(lambda c: _rank_topk(scored(c), k, True, final=False), chunks)
+        )
+    return _rank_topk(reduce(DataFrame.unionByName, tops), k)
+
+
+def _batch_matrix(pdf, vec_col: str, dim: int):
+    """Build one Arrow batch's (n x dim) float64 matrix, flagging dirty
+    rows instead of letting numpy densify a NULL/ragged column into a
+    0-d or object array (whose matmul error names neither the row nor
+    the cause — ADVICE r8). Returns (mat, bad): bad rows (NULL vector,
+    wrong length, or non-1-d) are zero-filled in mat and True in the
+    mask, and `_lloyd_assign_arrow` routes them to the lowest cluster
+    like the JVM NULL-dist ordering."""
+    import numpy as np
+
+    n = len(pdf)
+    mat = np.zeros((n, dim), dtype=np.float64)
+    bad = np.zeros(n, dtype=bool)
+    for i, x in enumerate(pdf[vec_col]):
+        if x is None:
+            bad[i] = True
+            continue
+        arr = np.asarray(x, dtype=np.float64)
+        if arr.ndim != 1 or arr.shape[0] != dim:
+            bad[i] = True
+        else:
+            mat[i] = arr
+    return mat, bad
+
+
+def _centroid_rows(centroids: DataFrame) -> list[tuple[int, list[float]]]:
+    """Collect the (tiny by contract) codebook as rows sorted by
+    centroid id — the closure feed for the vectorized assignment path."""
+    return sorted(
+        (int(r["cluster_id"]), [float(x) for x in r["cv"]])
+        for r in centroids.collect()
     )
-    index = spark.read.parquet(index_path).filter(
-        F.col("cluster_id").isin(probed_clusters)
-    )
-    lut = _pq_query_lut(queries, codebooks, m, dim, id_col, vec_col)
-    return _adc_score_rank(index, probes, lut, k)
 
 
 def sq_dist(a: Column, b: Column) -> Column:
@@ -2748,9 +1741,8 @@ def _lloyd_assign_arrow(v: DataFrame, cents: DataFrame, id_col: str) -> DataFram
     rounding; the JVM folds (x-y)^2 left-to-right and half-up rounds
     the decimal repr — both land on the same 1e-6 grid except at exact
     grid-boundary / tie values): fixture equality of the TRAINED
-    CENTROIDS is pinned in tests, the same contract as
-    `ivf_assign_arrow`'s served-top-k gate. The oracle-gated default
-    path stays the JVM pass."""
+    CENTROIDS is pinned in tests. The oracle-gated default path stays
+    the JVM pass."""
     import numpy as np
     import pandas as pd
 
@@ -2838,7 +1830,7 @@ def kmeans_lloyd_centroids(
     1e-6-grid-boundary ties (see `_lloyd_assign_arrow`).
 
     Returns a LOCAL (cluster_id, cv) relation (`materialize_centroids`),
-    ready to broadcast into `ivf_topk`/`build_ivf_index`; per-update
+    ready to broadcast into `ivf_topk`/`write_ivf_index`; per-update
     driver traffic is k x dim doubles, never rows (the same contract as
     `kmeans_lloyd_assign`, whose loop this factors out).
     """
@@ -2898,7 +1890,7 @@ def kmeans_lloyd_assign(
         groupBy exchanges one (id, vec) row per vector per iteration
         (the honest cost of the join+max_by formulation — see the
         SCALING.md r8 note for why the zero-shuffle expression rewrite
-        loses, and `ivf_assign_arrow` for the vectorized shape a
+        loses, and `_lloyd_assign_arrow` for the vectorized shape a
         Lloyd-at-true-scale run would use);
       - the update step posexplodes to (cluster, dim, x) and
         partial-aggregates map-side, so the per-iteration shuffle

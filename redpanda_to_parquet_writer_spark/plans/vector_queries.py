@@ -105,9 +105,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k over a PERSISTED cluster-partitioned index — the
-    production ANN serving shape: `build_ivf_index` writes the inverted
-    lists once (partitionBy cluster_id), then the probe reads ONLY the
-    probed clusters via literal partition pruning (PartitionFilters in
+    production ANN serving shape: `write_ivf_index` writes the inverted
+    lists once (partitionBy shard, cluster_id), then the probe reads ONLY
+    the probed clusters via literal partition pruning (PartitionFilters in
     the plan, asserted in tests/test_plan_quality.py). Same semantics as
     `ann_ivf_topk`, gated by the identical oracle — at corpus scale the
     index is built once and each query batch touches
@@ -126,7 +126,7 @@ def ann_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _cached_index(
         "ivf_index",
         sf_dir,
-        lambda p: S.build_ivf_index(emb, centroids, p, "vec_id", "embedding"),
+        lambda p: S.write_ivf_index(emb, centroids, p, "overwrite"),
         params=(IVF_CENTROIDS,),
     )
     queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
@@ -138,8 +138,8 @@ def ann_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental serving-index maintenance under the oracle gate:
     build the IVF index on HALF the corpus (even vec_ids), APPEND the
-    other half (`append_ivf_index` — assigns only the new vectors
-    against the frozen codebook, existing lists never read or
+    other half (`write_ivf_index(mode="append")` — assigns only the new
+    vectors against the frozen codebook, existing lists never read or
     rewritten), then serve with `ivf_topk_indexed`. Shares
     `ann_ivf_topk`'s oracle, so append-equals-rebuild is the gated
     property: any row the append path drops, duplicates or mis-assigns
@@ -152,12 +152,8 @@ def ann_ivf_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _build(p: str) -> None:
-        S.build_ivf_index(
-            emb.filter(F.col("vec_id") % 2 == 0), centroids, p, "vec_id", "embedding"
-        )
-        S.append_ivf_index(
-            emb.filter(F.col("vec_id") % 2 == 1), centroids, p, "vec_id", "embedding"
-        )
+        S.write_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), centroids, p, "overwrite")
+        S.write_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), centroids, p, "append")
 
     path = _cached_index(
         "ivf_append", sf_dir, _build, params=(IVF_CENTROIDS, "mod2-append")
@@ -221,8 +217,8 @@ def ann_ivfadc_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized index: where the IVF audit measures only probe loss, this
     one also charges the PQ/ADC approximation (candidates the byte-code
     distance mis-ranks out of the top-k). The audited side is the
-    PERSISTED index (`ivfadc_topk_indexed`), i.e. the plan a 100-TB
-    serving tier actually runs; it is oracle-equated with `ivfadc_topk`,
+    PERSISTED codes index (`ivf_topk_indexed` with the PQ codebook),
+    i.e. the plan a 100-TB serving tier actually runs; it is oracle-equated with `ivfadc_topk`,
     so the audit measures quantization error, not implementation drift.
 
     Same output contract as `ann_recall_audit`: per query n_exact (=k),
@@ -238,15 +234,18 @@ def ann_ivfadc_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _cached_index(
         "ivfadc_index",
         sf_dir,
-        lambda p: S.build_ivfadc_index(emb, centroids, cb, p, PQ_M, EMB_DIM),
+        lambda p: S.write_ivf_index(
+            emb, centroids, p, pq_codebook=cb, m=PQ_M, dim=EMB_DIM
+        ),
         params=(IVF_CENTROIDS, PQ_M, PQ_KSUB, EMB_DIM),
     )
     exact = S.brute_force_topk(emb, queries, "vec_id", "embedding", TOPK_K).select(
         "query_id", "neighbor_id"
     )
     approx = (
-        S.ivfadc_topk_indexed(
-            spark, path, queries, centroids, cb, PQ_M, EMB_DIM, TOPK_K, IVF_PROBE
+        S.ivf_topk_indexed(
+            spark, path, queries, centroids, k=TOPK_K, n_probe=IVF_PROBE,
+            pq_codebook=cb, m=PQ_M, dim=EMB_DIM,
         )
         .select("query_id", "neighbor_id")
         .withColumn("m", F.lit(1))
@@ -310,12 +309,12 @@ def ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_ivfadc_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC over a PERSISTED cluster-partitioned codes index — the
-    billion-vector serving shape end to end: `build_ivfadc_index`
-    assigns AND PQ-encodes the corpus once (float vectors never enter
+    billion-vector serving shape end to end: `write_ivf_index` with the
+    PQ codebook assigns AND PQ-encodes the corpus once (float vectors never enter
     the index), then the probe directory-prunes to the probed lists and
     scores byte codes via the shared broadcast-LUT tail. Same semantics
     and oracle as `ann_ivfadc_topk` (see
-    operators/similarity.py:ivfadc_topk_indexed)."""
+    operators/similarity.py:ivf_topk_indexed)."""
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = S.materialize_centroids(
         S.deterministic_centroids(emb, IVF_CENTROIDS, "vec_id", "embedding")
@@ -326,12 +325,15 @@ def ann_ivfadc_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _cached_index(
         "ivfadc_index",
         sf_dir,
-        lambda p: S.build_ivfadc_index(emb, centroids, cb, p, PQ_M, EMB_DIM),
+        lambda p: S.write_ivf_index(
+            emb, centroids, p, pq_codebook=cb, m=PQ_M, dim=EMB_DIM
+        ),
         params=(IVF_CENTROIDS, PQ_M, PQ_KSUB, EMB_DIM),
     )
     queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
-    return S.ivfadc_topk_indexed(
-        spark, path, queries, centroids, cb, PQ_M, EMB_DIM, TOPK_K, IVF_PROBE
+    return S.ivf_topk_indexed(
+        spark, path, queries, centroids, k=TOPK_K, n_probe=IVF_PROBE,
+        pq_codebook=cb, m=PQ_M, dim=EMB_DIM,
     )
 
 
@@ -1077,11 +1079,12 @@ def ann_ivfadc_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-append + compaction on the incremental IVFADC index
     (VERDICT r7 #4): build the byte-code index on a THIRD of the corpus,
     append the other two thirds in two separate batches
-    (`append_ivfadc_index` — frozen quantizers, existing lists never
-    read), COMPACT the accumulated small files
-    (`sources.parquet.compact_parquet` with partition_by=['cluster_id'],
-    snapshot-write, never in-place), then serve from the compacted copy
-    with `ivfadc_topk_indexed`. Shares `ann_ivfadc_topk`'s oracle, so
+    (`write_ivf_index(mode="append")` — frozen quantizers, existing
+    lists never read), COMPACT the accumulated small files
+    (`sources.parquet.compact_parquet` with
+    partition_by=['shard', 'cluster_id'], snapshot-write, never
+    in-place), then serve from the compacted copy with
+    `ivf_topk_indexed`. Shares `ann_ivfadc_topk`'s oracle, so
     append-then-compact-equals-rebuild is the gated property: a row any
     append drops or duplicates, a list compaction mis-places, or a code
     byte that doesn't survive the rewrite flips the hash.
@@ -1103,19 +1106,17 @@ def ann_ivfadc_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build(p: str) -> None:
         stage = f"{p}_stage"
-        S.build_ivfadc_index(
-            emb.filter(F.col("vec_id") % 3 == 0), centroids, cb, stage, PQ_M, EMB_DIM
-        )
-        for batch in (1, 2):
-            S.append_ivfadc_index(
+        for batch, mode in ((0, "overwrite"), (1, "append"), (2, "append")):
+            S.write_ivf_index(
                 emb.filter(F.col("vec_id") % 3 == batch),
                 centroids,
-                cb,
                 stage,
-                PQ_M,
-                EMB_DIM,
+                mode,
+                pq_codebook=cb,
+                m=PQ_M,
+                dim=EMB_DIM,
             )
-        compact_parquet(spark, stage, p, partition_by=["cluster_id"])
+        compact_parquet(spark, stage, p, partition_by=["shard", "cluster_id"])
         shutil.rmtree(stage, ignore_errors=True)  # staging copy served its purpose
 
     path = _cached_index(
@@ -1125,8 +1126,9 @@ def ann_ivfadc_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         params=(IVF_CENTROIDS, PQ_M, PQ_KSUB, EMB_DIM, "mod3-append-compact"),
     )
     queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
-    return S.ivfadc_topk_indexed(
-        spark, path, queries, centroids, cb, PQ_M, EMB_DIM, TOPK_K, IVF_PROBE
+    return S.ivf_topk_indexed(
+        spark, path, queries, centroids, k=TOPK_K, n_probe=IVF_PROBE,
+        pq_codebook=cb, m=PQ_M, dim=EMB_DIM,
     )
 
 

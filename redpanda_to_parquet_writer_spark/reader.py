@@ -51,13 +51,21 @@ def _resolve_date(date: str | None) -> str | None:
     return date
 
 
+#: infix of the snapshots `deduplicate_table` writes beside a topic
+DEDUP_SNAPSHOT_INFIX = "__dedup_"
+
+
 def get_available_topics(base_dir: str) -> list[str]:
-    """Topics = table directories under the base (driver-side listing)."""
+    """Topics = table directories under the base (driver-side listing).
+    Dedup snapshots (`<topic>__dedup_<ts>`) are copies of a topic, not
+    topics, so discovery skips them."""
     if not os.path.isdir(base_dir):
         return []
     return sorted(
         d for d in os.listdir(base_dir)
-        if os.path.isdir(os.path.join(base_dir, d)) and not d.startswith(".")
+        if os.path.isdir(os.path.join(base_dir, d))
+        and not d.startswith(".")
+        and DEDUP_SNAPSHOT_INFIX not in d
     )
 
 
@@ -172,7 +180,9 @@ def deduplicate_table(
     """Content dedup keep-first over a topic table (reader entry point 3).
 
     Snapshot semantics: writes `<topic>__dedup_<ts>` next to the source
-    and leaves the original untouched (the backup, S17). Returns
+    and leaves the original untouched (the backup, S17). `<ts>` carries
+    microseconds, so back-to-back calls never collide on the `error`
+    save mode. Returns
     before/after/removed counts like the reference's summary
     (reader:794-819).
     """
@@ -183,9 +193,8 @@ def deduplicate_table(
         df, content_cols=[c for c in df.columns if not c.startswith("kafka_") and c != "date"],
         order_cols=order_cols,
     )
-    snapshot = os.path.join(
-        base_dir, f"{topic}__dedup_{datetime.now(timezone.utc).strftime('%Y%m%dT%H%M%S')}"
-    )
+    stamp = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%S%f")
+    snapshot = os.path.join(base_dir, f"{topic}{DEDUP_SNAPSHOT_INFIX}{stamp}")
     (
         deduped.write.partitionBy("date").mode("error").parquet(snapshot)
         if "date" in deduped.columns

@@ -70,20 +70,6 @@ def kafka_options(
 ALL_NON_INTERNAL_TOPICS_PATTERN = r"^(?!__).*"
 
 
-def batch_reader(
-    spark: SparkSession,
-    cfg: EngineConfig,
-    topics: str | list[str] | None = None,
-    pattern: str | None = None,
-    starting_offsets: dict[str, dict[int, int]] | str = "earliest",
-    ending_offsets: str = "latest",
-) -> DataFrame:
-    """Bounded drain (T2): read everything available, then stop."""
-    opts = kafka_options(cfg, topics, pattern, starting_offsets)
-    reader = spark.read.format("kafka").options(**opts)
-    return reader.option("endingOffsets", ending_offsets).load()
-
-
 def stream_reader(
     spark: SparkSession,
     cfg: EngineConfig,

@@ -91,24 +91,6 @@ def read_versioned_union(spark: SparkSession, root: str) -> DataFrame:
     return out
 
 
-def read_partitioned(
-    spark: SparkSession,
-    root: str,
-    columns: list[str] | None = None,
-    merge_schema: bool = False,
-) -> DataFrame:
-    """Read a partitioned table root (S9/S10 layout), optionally projected
-    (S7) and with schema merging across versioned writes (SURVEY 1.4).
-    """
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(root)
-    if columns:
-        df = df.select(*columns)
-    return df
-
-
 def compact_parquet(
     spark: SparkSession,
     src_root: str,

@@ -57,6 +57,30 @@ def _strip_reused_subtrees(plan: str) -> str:
     return "\n".join(out_lines)
 
 
+def normalize_ids(plan: str) -> str:
+    """Renumber expression ids (`#N`), exchange plan ids and lambda
+    variable suffixes by first appearance within the plan. Spark draws
+    all three from session-wide counters, so the raw text of a plan
+    depends on everything the session planned before it; renumbered,
+    two checkouts' plans compare byte for byte."""
+    for pattern, fmt in (
+        (r"#(\d+)", "#{}"),
+        (r"plan_id=(\d+)", "plan_id={}"),
+        (r"(?<=lambda )(\w+?)_(\d+)", None),
+    ):
+        seen: dict[str, int] = {}
+
+        def renumber(m, fmt=fmt, seen=seen):
+            key = m.group(0)
+            seen.setdefault(key, len(seen))
+            if fmt is None:
+                return f"{m.group(1)}_{seen[key]}"
+            return fmt.format(seen[key])
+
+        plan = re.sub(pattern, renumber, plan)
+    return plan
+
+
 def summarize(plan: str) -> dict[str, object]:
     plan = _strip_reused_subtrees(plan)
     joins = sorted(
@@ -91,7 +115,7 @@ def main() -> None:
             continue
         rows.append((name, summarize(p)))
         if name in FLAGSHIPS:
-            full[name] = p
+            full[name] = normalize_ids(p)
 
     out = [
         "# PLANS — physical-plan audit of every registered query",
@@ -106,7 +130,9 @@ def main() -> None:
         "`limit`ed head); `joins` = physical join strategies; `TOaP` = "
         "top-k plans as TakeOrderedAndProject (no global sort); `push` = "
         "filters reach the parquet scan; `scans` = parquet scan count "
-        "(a doubled scan means a missing reuse).",
+        "(a doubled scan means a missing reuse). Full plans renumber "
+        "expression and plan ids by first appearance, so they compare "
+        "across checkouts.",
         "",
         "| query | exch | 1part | joins | semi/anti | win | TOaP | push | scans |",
         "|---|---|---|---|---|---|---|---|---|",

@@ -510,7 +510,7 @@ def fuzz_lsh_salted_bucket_cap(rng, spark) -> bool:
 
 def fuzz_salted_topk(rng, spark) -> bool:
     """The r14 two-level salted top-k (`_rank_topk(salted=True)`, the
-    sharded serve's rank) vs the flat single-window form, on random
+    rank of a sharded index's serve) vs the flat single-window form, on random
     scored frames with engineered near-ties: duplicate sims (the
     tie-break path), sims differing by less than the 1e-6 rounding
     grain (the order-by-unrounded path), hot queries with many
@@ -545,8 +545,8 @@ def fuzz_salted_topk(rng, spark) -> bool:
 
 
 def fuzz_chunked_serve(rng, spark) -> bool:
-    """r15 family #13 (VERDICT r14 #5): the chunked sharded serve
-    (`ivf_topk_indexed_sharded_chunked`) vs the one-shot collapsed
+    """r15 family #13 (VERDICT r14 #5): the chunked serve of a sharded
+    index (`ivf_topk_indexed` with `chunk_shards`) vs the one-chunk
     serve on random corpora — random dims, shard counts, chunk sizes
     (including >= n_shards, the degenerate one-chunk case, and None,
     the self-sizing contract), duplicate vectors (tie-break path), and
@@ -557,9 +557,8 @@ def fuzz_chunked_serve(rng, spark) -> bool:
     import tempfile
 
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-        ivf_topk_indexed_sharded,
-        ivf_topk_indexed_sharded_chunked,
+        build_ivf_index,
+        ivf_topk_indexed,
     )
 
     dim = rng.choice([4, 8, 16])
@@ -586,12 +585,11 @@ def fuzz_chunked_serve(rng, spark) -> bool:
     k = rng.randint(1, 4)
     n_probe = rng.randint(1, 4)
     with tempfile.TemporaryDirectory(prefix="fuzz_chunked_") as tmp:
-        books = build_ivf_index_sharded(
-            df, f"{tmp}/idx", n_shards, n_updates=0, use_arrow=True
-        )
+        books = build_ivf_index(df, f"{tmp}/idx", n_shards=n_shards, n_updates=0)
         ref = _rows_sorted(
-            ivf_topk_indexed_sharded(
-                spark, f"{tmp}/idx", queries, books, k=k, n_probe=n_probe
+            ivf_topk_indexed(
+                spark, f"{tmp}/idx", queries, books, k=k, n_probe=n_probe,
+                chunk_shards=n_shards,
             )
         )
         # one explicit chunking (1..n_shards+1 covers forced chunks and
@@ -599,14 +597,14 @@ def fuzz_chunked_serve(rng, spark) -> bool:
         # self-sizing default (chunk_shards=None)
         for chunk_shards in (rng.randint(1, n_shards + 1), None):
             got = _rows_sorted(
-                ivf_topk_indexed_sharded_chunked(
+                ivf_topk_indexed(
                     spark,
                     f"{tmp}/idx",
                     queries,
                     books,
-                    chunk_shards,
                     k=k,
                     n_probe=n_probe,
+                    chunk_shards=chunk_shards,
                 )
             )
             if got != ref:

@@ -6,7 +6,7 @@ serve time grow 0.28 -> 0.74s across 100x data, while k ∝ corpus
 (k=160 at 200k vectors — lists of 1250) restored 0.215s at the same
 n_probe (SCALING.md "codebook scaling"). `select_n_centroids` promotes
 that measurement into a tested contract on the index-build path, and
-`build_ivf_index_auto` makes it the default build.
+`build_ivf_index` makes it the default build.
 
 The decade test here replays the measured pair at 1/100 corpus size:
 the sf0.1 embeddings fixture (2,000 vectors) and a synthesized 10x
@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from redpanda_to_parquet_writer_spark.operators.similarity import (
     IVF_TARGET_LIST_LEN,
-    build_ivf_index_auto,
+    build_ivf_index,
     select_n_centroids,
 )
 
@@ -104,13 +104,14 @@ def test_candidate_volume_bounded_across_decades(spark, tmp_path):
     stats = {}
     for name, df, n in (("sf0.1", emb, n1), ("sf1", emb10, 10 * n1)):
         k = select_n_centroids(n, target_list_len=target)
-        cents = build_ivf_index_auto(
+        books = build_ivf_index(
             df,
             str(tmp_path / name),
             target_list_len=target,
             n_updates=0,  # init-only codebook: list geometry, not recall
-            use_arrow=True,
         )
+        assert sorted(books) == [0]  # far below the sharding boundary
+        cents = books[0]
         mean_len, n_lists = _mean_list_len(spark, str(tmp_path / name))
         stats[name] = (k, mean_len, n_lists)
 
@@ -140,45 +141,57 @@ def _served(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_sharded_index_serves_identically_at_two_shard_counts(spark, tmp_path):
-    """`build_ivf_index_sharded` + `ivf_topk_indexed_sharded` must
-    return the unsharded build's rows BITWISE at n_shards=2 and 4.
+@pytest.mark.parametrize("encoding", ["vectors", "pq"])
+@pytest.mark.parametrize("n_shards", [1, 2, 3])
+def test_index_serves_inline_rows_at_any_shard_count(
+    spark, tmp_path, n_shards, encoding
+):
+    """`build_ivf_index` + `ivf_topk_indexed` must return the inline
+    reference's rows BITWISE at every shard count: `ivf_topk` for vector
+    postings, `ivfadc_topk` for PQ-code postings (the ADC tail).
 
     The config makes the equality a guarantee, not a coincidence: with
-    the default target the fixture selects k_min=4 centroids per shard
-    and per codebook, and n_probe=4 covers them all — both paths verify
-    the full corpus with exact cosine, so any divergence is a bug in
-    the shard routing, the local-top-k containment, or the union
-    re-rank (ties, rounding order), which is exactly what this pins."""
+    the default target the fixture selects k_min=4 centroids per shard,
+    the inline reference uses a 4-centroid codebook, and n_probe=4
+    covers them all — both paths score the full corpus (exact cosine,
+    or ADC sums of the same codes), so any divergence is a bug in the
+    shard routing, the pruning, or the (salted) rank — ties and
+    rounding order included — which is exactly what this pins."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
+        deterministic_centroids,
+        ivf_topk,
         ivf_topk_indexed,
-        ivf_topk_indexed_sharded,
+        ivfadc_topk,
+        pq_codebooks,
+        write_ivf_index,
+    )
+    from redpanda_to_parquet_writer_spark.plans.vector_queries import (
+        EMB_DIM,
+        PQ_KSUB,
+        PQ_M,
     )
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    queries = emb.limit(5)
-    cents = build_ivf_index_auto(emb, str(tmp_path / "flat"), use_arrow=True)
-    flat = _served(
-        ivf_topk_indexed(spark, str(tmp_path / "flat"), queries, cents, k=3, n_probe=4)
+    queries = emb.filter(F.col("vec_id") < 5)
+    cents = deterministic_centroids(emb, 4)
+    pq = {}
+    if encoding == "pq":
+        cb = pq_codebooks(emb, PQ_M, PQ_KSUB, EMB_DIM)
+        pq = {"pq_codebook": cb, "m": PQ_M, "dim": EMB_DIM}
+        inline = ivfadc_topk(emb, queries, cents, cb, PQ_M, EMB_DIM, k=3, n_probe=4)
+    else:
+        inline = ivf_topk(emb, queries, cents, k=3, n_probe=4)
+    books = build_ivf_index(emb, str(tmp_path / "idx"), n_shards=n_shards)
+    assert sorted(books) == list(range(n_shards))
+    if pq:  # the same codebooks, PQ codes instead of vectors
+        write_ivf_index(emb, books, str(tmp_path / "idx"), **pq)
+    served = _served(
+        ivf_topk_indexed(
+            spark, str(tmp_path / "idx"), queries, books, k=3, n_probe=4, **pq
+        )
     )
-    assert len(flat) == 15  # 5 queries x k=3, fully ranked
-    for n_shards in (2, 4):
-        books = build_ivf_index_sharded(
-            emb, str(tmp_path / f"sh{n_shards}"), n_shards, use_arrow=True
-        )
-        assert sorted(books) == list(range(n_shards))
-        served = _served(
-            ivf_topk_indexed_sharded(
-                spark,
-                str(tmp_path / f"sh{n_shards}"),
-                queries,
-                books,
-                k=3,
-                n_probe=4,
-            )
-        )
-        assert served == flat, f"n_shards={n_shards} diverged from unsharded"
+    assert len(served) == 15  # 5 queries x k=3, fully ranked
+    assert served == _served(inline), f"n_shards={n_shards} diverged from inline"
 
 
 def test_sharded_codebooks_sized_by_their_own_shard(spark, tmp_path):
@@ -188,18 +201,16 @@ def test_sharded_codebooks_sized_by_their_own_shard(spark, tmp_path):
     target bound."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
         _shard_router,
-        build_ivf_index_sharded,
     )
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     target, n_shards = 25, 4
-    books = build_ivf_index_sharded(
+    books = build_ivf_index(
         emb,
         str(tmp_path / "sh"),
-        n_shards,
+        n_shards=n_shards,
         target_list_len=target,
         n_updates=0,
-        use_arrow=True,
     )
     shard_counts = {
         int(r["s"]): r["c"]
@@ -223,26 +234,20 @@ def test_sharded_codebooks_sized_by_their_own_shard(spark, tmp_path):
 
 
 def test_shard_router_rejects_bad_counts():
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-    )
-
     with pytest.raises(ValueError):
-        build_ivf_index_sharded(None, "/tmp/x", 0)
+        build_ivf_index(None, "/tmp/x", n_shards=0)
 
 
 def test_sharded_append_equals_rebuild(spark, tmp_path):
-    """`append_ivf_index_sharded` must route with the build's router
-    and assign under each shard's frozen codebook: building on 80% of
-    the fixture, then appending the remaining 20%, must serve the SAME
-    rows as a from-scratch sharded build over the full corpus with the
-    SAME codebooks (same frozen quantizer => same assignments => same
-    directories — the single-index append contract, per shard)."""
+    """`write_ivf_index(mode="append")` must route with the build's
+    router and assign under each shard's frozen codebook: building on
+    80% of the fixture, then appending the remaining 20%, must serve the
+    SAME rows as a from-scratch write over the full corpus with the SAME
+    codebooks (same frozen quantizer => same assignments => same
+    directories — the append contract, per shard)."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        _write_ivf_rows,
-        append_ivf_index_sharded,
-        build_ivf_index_sharded,
-        ivf_topk_indexed_sharded,
+        ivf_topk_indexed,
+        write_ivf_index,
     )
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
@@ -253,32 +258,19 @@ def test_sharded_append_equals_rebuild(spark, tmp_path):
     queries = emb.limit(5)
     n_shards = 2
 
-    books = build_ivf_index_sharded(
-        head, str(tmp_path / "grown"), n_shards, use_arrow=True
-    )
-    append_ivf_index_sharded(tail, books, str(tmp_path / "grown"), use_arrow=True)
+    books = build_ivf_index(head, str(tmp_path / "grown"), n_shards=n_shards)
+    write_ivf_index(tail, books, str(tmp_path / "grown"), "append")
 
     # rebuild over the full corpus under the SAME (frozen) codebooks
-    from redpanda_to_parquet_writer_spark.operators.similarity import _shard_router
-
-    for s in range(n_shards):
-        _write_ivf_rows(
-            emb.filter(_shard_router("vec_id", n_shards) == s),
-            books[s],
-            str(tmp_path / "rebuilt" / f"shard={s}"),
-            "vec_id",
-            "embedding",
-            "overwrite",
-            use_arrow=True,
-        )
+    write_ivf_index(emb, books, str(tmp_path / "rebuilt"), "overwrite")
 
     grown = _served(
-        ivf_topk_indexed_sharded(
+        ivf_topk_indexed(
             spark, str(tmp_path / "grown"), queries, books, k=3, n_probe=4
         )
     )
     rebuilt = _served(
-        ivf_topk_indexed_sharded(
+        ivf_topk_indexed(
             spark, str(tmp_path / "rebuilt"), queries, books, k=3, n_probe=4
         )
     )
@@ -287,17 +279,16 @@ def test_sharded_append_equals_rebuild(spark, tmp_path):
 
 def test_sharded_append_rejects_sparse_codebook_dict():
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        append_ivf_index_sharded,
+        write_ivf_index,
     )
 
     with pytest.raises(ValueError):
-        append_ivf_index_sharded(None, {}, "/tmp/x")
+        write_ivf_index(None, {}, "/tmp/x", "append")
     with pytest.raises(ValueError):
-        append_ivf_index_sharded(None, {0: None, 2: None}, "/tmp/x")
+        write_ivf_index(None, {0: None, 2: None}, "/tmp/x", "append")
 
 
 # --- the sharding contract: select_n_shards (VERDICT r12 #5) ----------------
-
 
 def test_select_n_shards_contract():
     from redpanda_to_parquet_writer_spark.operators.similarity import (
@@ -433,26 +424,26 @@ def test_chunk_fanout_workers_respect_broadcast_envelope():
         _select_chunk_workers(1024, 0)
 
 
-def test_chunked_serve_self_sizes_within_budget(spark, tmp_path):
-    """`chunk_shards=None` (the r15 default) must self-size from the
-    ACTUAL codebook sizes: the default budget admits everything (one
-    chunk = the one-shot plan), a budget of exactly 2 max-shard
-    codebooks forces 2-shard chunks, and either way the served rows
-    stay BITWISE equal to the one-shot serve."""
+def test_chunked_serve_self_sizes_within_budget(spark, tmp_path, monkeypatch):
+    """`chunk_shards=None` (the default) must self-size from the ACTUAL
+    codebook sizes: the default budget admits everything (one chunk =
+    the one-shot plan), a budget of exactly 2 max-shard codebooks forces
+    2-shard chunks, and either way the served rows stay BITWISE equal to
+    the one-shot serve."""
+    from redpanda_to_parquet_writer_spark.operators import similarity as sim
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-        ivf_topk_indexed_sharded,
-        ivf_topk_indexed_sharded_chunked,
+        ivf_topk_indexed,
         select_chunk_shards,
     )
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     queries = emb.limit(5)
     n_shards = 4
-    books = build_ivf_index_sharded(emb, str(tmp_path / "sh"), n_shards, use_arrow=True)
+    books = build_ivf_index(emb, str(tmp_path / "sh"), n_shards=n_shards)
     base = _served(
-        ivf_topk_indexed_sharded(
-            spark, str(tmp_path / "sh"), queries, books, k=3, n_probe=4
+        ivf_topk_indexed(
+            spark, str(tmp_path / "sh"), queries, books, k=3, n_probe=4,
+            chunk_shards=n_shards,
         )
     )
 
@@ -463,292 +454,103 @@ def test_chunked_serve_self_sizes_within_budget(spark, tmp_path):
     # default budget: everything fits -> the contract picks one chunk
     assert select_chunk_shards(counts, dim) == n_shards
     got_default = _served(
-        ivf_topk_indexed_sharded_chunked(
-            spark, str(tmp_path / "sh"), queries, books, k=3, n_probe=4
-        )
+        ivf_topk_indexed(spark, str(tmp_path / "sh"), queries, books, k=3, n_probe=4)
     )
     assert got_default == base
 
     # a budget of exactly two max-shard codebooks forces 2-shard chunks
     assert select_chunk_shards(counts, dim, 2 * max_bytes) == 2
+    chosen = []
+
+    def _two_codebook_budget(counts_, dim_):
+        chosen.append(select_chunk_shards(counts_, dim_, 2 * max_bytes))
+        return chosen[-1]
+
+    monkeypatch.setattr(sim, "select_chunk_shards", _two_codebook_budget)
     got_forced = _served(
-        ivf_topk_indexed_sharded_chunked(
-            spark,
-            str(tmp_path / "sh"),
-            queries,
-            books,
-            k=3,
-            n_probe=4,
-            broadcast_budget_bytes=2 * max_bytes,
-        )
+        ivf_topk_indexed(spark, str(tmp_path / "sh"), queries, books, k=3, n_probe=4)
     )
+    assert chosen == [2]
     assert got_forced == base
 
 
-def test_auto_sharded_escalates_across_the_boundary(spark, tmp_path):
-    """`build_ivf_index_auto_sharded` must stay FLAT (one shard, one
+def test_auto_sharded_escalates_across_the_boundary(spark, tmp_path, monkeypatch):
+    """`build_ivf_index(n_shards=None)` must stay FLAT (one shard, one
     codebook) below k_max * target_list_len rows and shard past it —
     exercised on the 500-row fixture by shrinking the boundary. The
-    1-shard auto layout must serve BITWISE what the flat auto build
-    serves (the degenerate shard is the flat plan plus a shard
-    predicate)."""
+    1-shard auto layout must serve BITWISE what the inline `ivf_topk`
+    serves under the same codebook (the degenerate shard is the flat
+    plan plus a shard predicate)."""
+    from redpanda_to_parquet_writer_spark.operators import similarity as sim
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_auto_sharded,
+        ivf_topk,
         ivf_topk_indexed,
-        ivf_topk_indexed_sharded,
     )
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     queries = emb.limit(5)
 
     # below the boundary (defaults: cap ~82M >> 500) -> flat, 1 shard
-    books = build_ivf_index_auto_sharded(
-        emb, str(tmp_path / "auto_flat"), use_arrow=True
-    )
+    books = build_ivf_index(emb, str(tmp_path / "auto_flat"))
     assert sorted(books) == [0]
-    flat_auto = build_ivf_index_auto(emb, str(tmp_path / "flat"), use_arrow=True)
     served_1 = _served(
-        ivf_topk_indexed_sharded(
+        ivf_topk_indexed(
             spark, str(tmp_path / "auto_flat"), queries, books, k=3, n_probe=4
         )
     )
-    served_flat = _served(
-        ivf_topk_indexed(
-            spark, str(tmp_path / "flat"), queries, flat_auto, k=3, n_probe=4
-        )
-    )
+    served_flat = _served(ivf_topk(emb, queries, books[0], k=3, n_probe=4))
     assert served_1 == served_flat and len(served_1) == 15
 
     # past the boundary (cap = k_max * target = 10 * 10 = 100 < 500
     # rows) -> escalates to ceil(500/100) = 5 shards, each with its own
     # codebook sized by its shard
-    books5 = build_ivf_index_auto_sharded(
+    select_n_shards = sim.select_n_shards
+    monkeypatch.setattr(
+        sim, "select_n_shards", lambda n, t: select_n_shards(n, t, k_max=10)
+    )
+    books5 = build_ivf_index(
         emb,
         str(tmp_path / "auto_sharded"),
         target_list_len=10,
-        k_max=10,
         n_updates=0,
-        use_arrow=True,
     )
     assert sorted(books5) == list(range(5))
-    served_5 = ivf_topk_indexed_sharded(
+    served_5 = ivf_topk_indexed(
         spark, str(tmp_path / "auto_sharded"), queries, books5, k=3, n_probe=4
     )
     assert served_5.count() == 15
 
 
-def test_staged_build_routes_once_and_serves_identically(spark, tmp_path):
-    """`build_ivf_index_sharded(staging_path=...)` must (a) write the
-    routed corpus shard-partitioned so per-shard builds read only their
-    own directory, and (b) serve BITWISE what the in-plan-routed build
-    serves (routing layout cannot leak into the deterministic Lloyd
-    codebook)."""
-    import os
-
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-        ivf_topk_indexed_sharded,
-    )
-
-    emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    queries = emb.limit(5)
-    n_shards = 4
-
-    books_a = build_ivf_index_sharded(
-        emb, str(tmp_path / "inplan"), n_shards, use_arrow=True
-    )
-    books_b = build_ivf_index_sharded(
-        emb,
-        str(tmp_path / "staged"),
-        n_shards,
-        use_arrow=True,
-        staging_path=str(tmp_path / "routing"),
-        cleanup_staging=False,  # keep the scratch tree to inspect the layout
-    )
-    # the staging layout is the route-once artifact: one dir per shard
-    staged_dirs = sorted(
-        d for d in os.listdir(tmp_path / "routing") if d.startswith("__ivf_shard=")
-    )
-    assert staged_dirs == [f"__ivf_shard={s}" for s in range(n_shards)]
-    # identical codebooks shard by shard…
-    for s in range(n_shards):
-        assert sorted(
-            (int(r["cluster_id"]), [round(x, 9) for x in r["cv"]])
-            for r in books_a[s].collect()
-        ) == sorted(
-            (int(r["cluster_id"]), [round(x, 9) for x in r["cv"]])
-            for r in books_b[s].collect()
-        ), s
-    # …and identical served rows
-    a = _served(
-        ivf_topk_indexed_sharded(
-            spark, str(tmp_path / "inplan"), queries, books_a, k=3, n_probe=4
-        )
-    )
-    b = _served(
-        ivf_topk_indexed_sharded(
-            spark, str(tmp_path / "staged"), queries, books_b, k=3, n_probe=4
-        )
-    )
-    assert a == b and len(a) == 15
-
-
-def test_staging_is_scratch_cleaned_after_success(spark, tmp_path):
-    """`staging_path` is SCRATCH (ADVICE r13): the default build deletes
-    the routed tree after success (cleanup_staging=True), and a
-    pre-existing file at the path is clobbered by the routing write."""
-    import os
-
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-    )
-
-    emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    routing = tmp_path / "routing"
-    routing.mkdir()
-    (routing / "leftover.txt").write_text("scratch contract: overwritten")
-    build_ivf_index_sharded(
-        emb, str(tmp_path / "idx"), 2, use_arrow=True, staging_path=str(routing)
-    )
-    assert not os.path.exists(routing)
-
-
-def test_staging_overlapping_index_path_rejected(spark, tmp_path):
-    """ADVICE r14 #1: staging is overwritten then deleted, so a
-    staging_path that equals, contains, or lives inside the index path
-    would destroy the index on a 'successful' run — both sharded entry
-    points must refuse it BEFORE any write happens."""
-    import pytest
-
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        _check_staging_disjoint,
-        append_ivf_index_sharded,
-        build_ivf_index_sharded,
-    )
-
-    # the guard itself: equal, parent-of, child-of, and URI forms
-    for staging, path in [
-        ("/idx", "/idx"),
-        ("/idx/", "/idx"),
-        ("/a/b", "/a/b/c"),  # staging contains the index
-        ("/a/b/c", "/a/b"),  # staging inside the index
-        ("s3://bkt/idx", "s3://bkt/idx/shard=0"),
-        ("relative/../x", "x"),  # normalizes to the same local dir
-    ]:
-        with pytest.raises(ValueError, match="overlaps the index path"):
-            _check_staging_disjoint(staging, path)
-    # disjoint siblings (and lookalike prefixes) pass
-    _check_staging_disjoint("/a/scratch", "/a/idx")
-    _check_staging_disjoint("/a/idx_scratch", "/a/idx")  # not a segment prefix
-    _check_staging_disjoint("s3://bkt/scratch", "s3://bkt/idx")
-
-    emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    idx = tmp_path / "idx"
-    books = build_ivf_index_sharded(emb, str(idx), 2, use_arrow=True)
-    # build: refuse before touching storage
-    with pytest.raises(ValueError, match="overlaps the index path"):
-        build_ivf_index_sharded(
-            emb, str(idx), 2, use_arrow=True, staging_path=str(idx)
-        )
-    with pytest.raises(ValueError, match="overlaps the index path"):
-        build_ivf_index_sharded(
-            emb, str(idx), 2, use_arrow=True, staging_path=str(tmp_path)
-        )
-    # append: same refusal; the existing index survives untouched
-    batch = emb.limit(3).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    with pytest.raises(ValueError, match="overlaps the index path"):
-        append_ivf_index_sharded(
-            batch, books, str(idx), staging_path=str(idx / "shard=0")
-        )
-    assert spark.read.parquet(str(idx)).count() == emb.count()
-
-
-def test_staged_append_routes_once_and_appends_identically(spark, tmp_path):
-    """`append_ivf_index_sharded(staging_path=...)` (VERDICT r13 #3)
-    must append EXACTLY what the in-plan-routed append appends — same
-    router expression either way, so a staged batch can never land a
-    vector in a different shard or list — and clean up its scratch tree
-    by default, like the build."""
-    import os
-
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        append_ivf_index_sharded,
-        build_ivf_index_sharded,
-        ivf_topk_indexed_sharded,
-    )
-
-    emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    n = emb.count()
-    head = emb.filter(F.col("vec_id") < int(n * 0.8))
-    tail = emb.filter(F.col("vec_id") >= int(n * 0.8))
-    queries = emb.limit(5)
-    n_shards = 2
-
-    books = build_ivf_index_sharded(
-        head, str(tmp_path / "inplan"), n_shards, use_arrow=True
-    )
-    books_b = build_ivf_index_sharded(
-        head, str(tmp_path / "staged"), n_shards, use_arrow=True
-    )
-    append_ivf_index_sharded(tail, books, str(tmp_path / "inplan"), use_arrow=True)
-    append_ivf_index_sharded(
-        tail,
-        books_b,
-        str(tmp_path / "staged"),
-        use_arrow=True,
-        staging_path=str(tmp_path / "routing"),
-    )
-    assert not os.path.exists(tmp_path / "routing")  # scratch cleaned up
-
-    a = _served(
-        ivf_topk_indexed_sharded(
-            spark, str(tmp_path / "inplan"), queries, books, k=3, n_probe=4
-        )
-    )
-    b = _served(
-        ivf_topk_indexed_sharded(
-            spark, str(tmp_path / "staged"), queries, books_b, k=3, n_probe=4
-        )
-    )
-    assert a == b and len(a) == 15
-
-
 def test_chunked_serve_equals_unchunked(spark, tmp_path):
-    """`ivf_topk_indexed_sharded_chunked` (r14 — the escalation past the
+    """Chunked serving (`chunk_shards` — the escalation past the
     combined-codebook broadcast ceiling) must serve BITWISE what the
-    one-shot collapsed serve serves, at every chunking: per-chunk top-k
-    is a row bound (selection decomposes over any partition of the
-    shards), per-chunk sims stay unrounded into the global re-rank, and
-    chunk_shards >= n_shards degenerates to the unchunked plan."""
+    one-chunk serve serves, at every chunking: per-chunk top-k is a row
+    bound (selection decomposes over any partition of the shards),
+    per-chunk scores stay unrounded into the global re-rank, and
+    chunk_shards >= n_shards degenerates to the one-chunk plan."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-        ivf_topk_indexed_sharded,
-        ivf_topk_indexed_sharded_chunked,
+        ivf_topk_indexed,
     )
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     queries = emb.limit(5)
     n_shards = 4
-    books = build_ivf_index_sharded(emb, str(tmp_path / "sh"), n_shards, use_arrow=True)
+    books = build_ivf_index(emb, str(tmp_path / "sh"), n_shards=n_shards)
 
     base = _served(
-        ivf_topk_indexed_sharded(
-            spark, str(tmp_path / "sh"), queries, books, k=3, n_probe=4
-        )
+        ivf_topk_indexed(spark, str(tmp_path / "sh"), queries, books, k=3, n_probe=4)
     )
     assert len(base) == 15
     for chunk_shards in (1, 2, 4, 7):
         got = _served(
-            ivf_topk_indexed_sharded_chunked(
+            ivf_topk_indexed(
                 spark,
                 str(tmp_path / "sh"),
                 queries,
                 books,
-                chunk_shards,
                 k=3,
                 n_probe=4,
+                chunk_shards=chunk_shards,
             )
         )
         assert got == base, chunk_shards
@@ -760,16 +562,14 @@ def test_chunked_rerank_orders_sub_rounding_near_ties(spark, tmp_path):
     6-decimal value), with the higher unrounded sim on the HIGHER
     neighbor id. The unchunked serve ranks the higher-sim candidate
     first; a chunked re-rank over ROUNDED per-chunk sims would see a
-    tie and flip the order to the lower id. `_topk_unrounded` must keep
-    the unchunked order across chunks."""
+    tie and flip the order to the lower id. `_rank_topk(final=False)`
+    must keep the unchunked order across chunks."""
     import math
 
     from pyspark.sql import functions as F
 
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-        ivf_topk_indexed_sharded,
-        ivf_topk_indexed_sharded_chunked,
+        ivf_topk_indexed,
     )
 
     # pick two ids the router sends to DIFFERENT shards (n_shards=2)
@@ -794,18 +594,16 @@ def test_chunked_rerank_orders_sub_rounding_near_ties(spark, tmp_path):
     rows += [(100 + j, [0.0, 1.0, float(j), 1.0]) for j in range(8)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    books = build_ivf_index_sharded(
-        emb, str(tmp_path / "idx"), 2, n_updates=0, use_arrow=True
-    )
+    books = build_ivf_index(emb, str(tmp_path / "idx"), n_shards=2, n_updates=0)
     queries = emb.filter(F.col("vec_id") == 0)
-    base = ivf_topk_indexed_sharded(
+    base = ivf_topk_indexed(
         spark, str(tmp_path / "idx"), queries, books, k=2, n_probe=4
     ).collect()
     order = [r["neighbor_id"] for r in sorted(base, key=lambda r: r["rank"])]
     assert order == [id_hi, id_lo]  # unrounded sims decide, not the ids
     assert base[0]["sim"] == base[1]["sim"]  # …and they ROUND equal
-    chunked = ivf_topk_indexed_sharded_chunked(
-        spark, str(tmp_path / "idx"), queries, books, 1, k=2, n_probe=4
+    chunked = ivf_topk_indexed(
+        spark, str(tmp_path / "idx"), queries, books, k=2, n_probe=4, chunk_shards=1
     ).collect()
     assert sorted(map(tuple, chunked)) == sorted(map(tuple, base))
 
@@ -819,16 +617,15 @@ def test_chunked_serve_reliable_matches_default(spark, tmp_path):
     query semantics: rows must match the default-localCheckpoint serve
     bitwise."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-        ivf_topk_indexed_sharded_chunked,
+        ivf_topk_indexed,
     )
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     queries = emb.limit(5)
-    books = build_ivf_index_sharded(emb, str(tmp_path / "sh"), 4, use_arrow=True)
+    books = build_ivf_index(emb, str(tmp_path / "sh"), n_shards=4)
     base = _served(
-        ivf_topk_indexed_sharded_chunked(
-            spark, str(tmp_path / "sh"), queries, books, 2, k=3, n_probe=4
+        ivf_topk_indexed(
+            spark, str(tmp_path / "sh"), queries, books, k=3, n_probe=4, chunk_shards=2
         )
     )
     assert len(base) == 15
@@ -837,15 +634,15 @@ def test_chunked_serve_reliable_matches_default(spark, tmp_path):
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
         durable = _served(
-            ivf_topk_indexed_sharded_chunked(
+            ivf_topk_indexed(
                 spark,
                 str(tmp_path / "sh"),
                 queries,
                 books,
-                2,
                 k=3,
                 n_probe=4,
                 reliable=True,
+                chunk_shards=2,
             )
         )
     finally:
@@ -854,118 +651,19 @@ def test_chunked_serve_reliable_matches_default(spark, tmp_path):
     assert durable == base
 
 
-def test_verify_parallelism_is_plan_only(spark, tmp_path):
-    """`verify_parallelism` (r14 — the RLE-compressed-hot-list escape
-    hatch) must be PLAN-ONLY: repartitioning the pruned candidate slice
-    before the exact-cosine verify cannot change a single served row,
-    on both the flat and the sharded serve."""
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_auto,
-        build_ivf_index_sharded,
-        ivf_topk_indexed,
-        ivf_topk_indexed_sharded,
-    )
-
-    emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    queries = emb.limit(5)
-    flat_book = build_ivf_index_auto(emb, str(tmp_path / "flat"), use_arrow=True)
-    books = build_ivf_index_sharded(emb, str(tmp_path / "sh"), 2, use_arrow=True)
-
-    flat_a = _served(
-        ivf_topk_indexed(spark, str(tmp_path / "flat"), queries, flat_book, k=3, n_probe=4)
-    )
-    flat_b = _served(
-        ivf_topk_indexed(
-            spark,
-            str(tmp_path / "flat"),
-            queries,
-            flat_book,
-            k=3,
-            n_probe=4,
-            verify_parallelism=8,
-        )
-    )
-    assert flat_a == flat_b and len(flat_a) == 15
-
-    sh_a = _served(
-        ivf_topk_indexed_sharded(spark, str(tmp_path / "sh"), queries, books, k=3, n_probe=4)
-    )
-    sh_b = _served(
-        ivf_topk_indexed_sharded(
-            spark,
-            str(tmp_path / "sh"),
-            queries,
-            books,
-            k=3,
-            n_probe=4,
-            verify_parallelism=8,
-        )
-    )
-    assert sh_a == sh_b and len(sh_a) == 15
-
-
-def test_flat_serve_salted_is_row_identical(spark, tmp_path):
-    """`salted=True` on the FLAT serve (r15 — the degenerate-corpus
-    opt-in documented on `ivf_topk_indexed`) must swap only the task
-    shape of the top-k rank, never a row: selection decomposes over the
-    neighbor-salt partition, so rows, ranks, and rounded sims match the
-    default single-window plan bitwise."""
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_auto,
-        ivf_topk_indexed,
-    )
-
-    emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    queries = emb.limit(5)
-    flat_book = build_ivf_index_auto(emb, str(tmp_path / "flat"), use_arrow=True)
-    base = _served(
-        ivf_topk_indexed(spark, str(tmp_path / "flat"), queries, flat_book, k=3, n_probe=4)
-    )
-    salted = _served(
-        ivf_topk_indexed(
-            spark,
-            str(tmp_path / "flat"),
-            queries,
-            flat_book,
-            k=3,
-            n_probe=4,
-            salted=True,
-        )
-    )
-    assert salted == base and len(base) == 15
-    # and combined with the verify escape hatch (the measured fix pair
-    # for the degenerate corpus: scripts/probe_degenerate_vectors.py)
-    both = _served(
-        ivf_topk_indexed(
-            spark,
-            str(tmp_path / "flat"),
-            queries,
-            flat_book,
-            k=3,
-            n_probe=4,
-            salted=True,
-            verify_parallelism=8,
-        )
-    )
-    assert both == base
-
-
 def test_sharded_serve_is_one_pruned_scan(spark, tmp_path):
-    """The collapsed sharded serve (VERDICT r12 #1) must plan ONE index
+    """The serve of a sharded index (VERDICT r12 #1) must plan ONE index
     scan whose PartitionFilters carry BOTH partition levels (shard and
     cluster_id) — not one scan per shard — so the fixed serve costs are
     paid once regardless of n_shards."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-        ivf_topk_indexed_sharded,
+        ivf_topk_indexed,
     )
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     queries = emb.limit(3)
-    books = build_ivf_index_sharded(
-        emb, str(tmp_path / "sh"), 4, use_arrow=True
-    )
-    df = ivf_topk_indexed_sharded(
+    books = build_ivf_index(emb, str(tmp_path / "sh"), n_shards=4)
+    df = ivf_topk_indexed(
         spark, str(tmp_path / "sh"), queries, books, k=3, n_probe=2
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -976,44 +674,6 @@ def test_sharded_serve_is_one_pruned_scan(spark, tmp_path):
     assert "shard" in pf and "cluster_id" in pf, pf
     # and the result is still fully ranked
     assert df.count() == 9
-
-
-# --- the staging guard's scheme aliasing (ADVICE r15 #1) --------------------
-
-def test_staging_guard_sees_through_scheme_aliases():
-    """ADVICE r15 #1: 'file:///tmp/idx' and '/tmp/idx' are the SAME
-    location, as are s3:// vs s3a:// vs s3n:// on one bucket — a
-    scheme-aliased spelling must not escape the overwrite-then-delete
-    guard."""
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        _check_staging_disjoint,
-        _path_segments,
-    )
-
-    # one location, many spellings -> identical segments
-    assert (
-        _path_segments("file:///tmp/idx")
-        == _path_segments("file:/tmp/idx")
-        == _path_segments("/tmp/idx")
-    )
-    assert (
-        _path_segments("s3a://bkt/idx")
-        == _path_segments("s3n://bkt/idx")
-        == _path_segments("s3://bkt/idx/")
-    )
-    for staging, path in [
-        ("file:///tmp/idx", "/tmp/idx"),  # equal, scheme-aliased
-        ("file:/tmp/idx", "/tmp/idx/shard=0"),  # contains, single-slash URI
-        ("s3a://bkt/idx", "s3://bkt/idx/shard=0"),  # connector-aliased
-        ("s3n://bkt/idx/scratch", "s3://bkt/idx"),  # inside, aliased
-    ]:
-        with pytest.raises(ValueError, match="overlaps the index path"):
-            _check_staging_disjoint(staging, path)
-    # distinct locations still pass whatever the spelling
-    _check_staging_disjoint("file:///a/scratch", "/a/idx")
-    _check_staging_disjoint("s3a://bkt/scratch", "s3://bkt/idx")
-    _check_staging_disjoint("s3://bkt2/idx", "s3://bkt/idx")  # other bucket
-    _check_staging_disjoint("hdfs://nn/idx", "s3://nn/idx")  # other store
 
 
 # --- the codebook-stats sidecar (VERDICT r15 #1) ----------------------------
@@ -1028,17 +688,13 @@ def _sidecar_payload(path):
 
 
 def test_build_persists_codebook_stats_sidecar(spark, tmp_path):
-    """`build_ivf_index_sharded` must persist {shard: n_centroids} +
+    """`build_ivf_index` must persist {shard: n_centroids} +
     dim next to the layout — the stats it already has — and the
     underscore-prefixed sidecar must stay invisible to the index
     scan's file listing."""
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-    )
-
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     idx = str(tmp_path / "idx")
-    books = build_ivf_index_sharded(emb, idx, 3, use_arrow=True)
+    books = build_ivf_index(emb, idx, n_shards=3)
 
     payload = _sidecar_payload(idx)
     assert payload["counts"] == {str(s): books[s].count() for s in books}
@@ -1059,17 +715,19 @@ def test_chunked_serve_self_sizes_from_sidecar_without_a_job(
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     queries = emb.limit(5)
     idx = str(tmp_path / "idx")
-    books = sim.build_ivf_index_sharded(emb, idx, 4, use_arrow=True)
+    books = sim.build_ivf_index(emb, idx, n_shards=4)
     base = _served(
-        sim.ivf_topk_indexed_sharded(spark, idx, queries, books, k=3, n_probe=4)
+        sim.ivf_topk_indexed(
+            spark, idx, queries, books, k=3, n_probe=4, chunk_shards=4
+        )
     )
 
     def _boom(codebooks):
         raise AssertionError("stats job must not run when the sidecar exists")
 
-    monkeypatch.setattr(sim, "_codebook_stats_job", _boom)
+    monkeypatch.setattr(sim, "_codebook_stats", _boom)
     got = _served(
-        sim.ivf_topk_indexed_sharded_chunked(
+        sim.ivf_topk_indexed(
             spark, idx, queries, books, k=3, n_probe=4
         )
     )
@@ -1078,16 +736,16 @@ def test_chunked_serve_self_sizes_from_sidecar_without_a_job(
     # sidecar gone -> the bounded job takes over
     calls = []
     monkeypatch.undo()
-    orig = sim._codebook_stats_job
+    orig = sim._codebook_stats
 
     def _spy(codebooks):
         calls.append(sorted(codebooks))
         return orig(codebooks)
 
-    monkeypatch.setattr(sim, "_codebook_stats_job", _spy)
+    monkeypatch.setattr(sim, "_codebook_stats", _spy)
     (tmp_path / "idx" / "_codebook_stats.json").unlink()
     got_fallback = _served(
-        sim.ivf_topk_indexed_sharded_chunked(
+        sim.ivf_topk_indexed(
             spark, idx, queries, books, k=3, n_probe=4
         )
     )
@@ -1100,20 +758,19 @@ def test_append_backfills_a_missing_sidecar(spark, tmp_path):
     sidecar stays correct; appending to a PRE-sidecar index must
     backfill it with the true counts."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        append_ivf_index_sharded,
-        build_ivf_index_sharded,
+        write_ivf_index,
     )
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     idx = str(tmp_path / "idx")
-    books = build_ivf_index_sharded(emb, idx, 2, use_arrow=True)
+    books = build_ivf_index(emb, idx, n_shards=2)
     before = _sidecar_payload(idx)
 
     batch = emb.limit(10).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
     )
     # sidecar'd index: append leaves it untouched-and-correct
-    append_ivf_index_sharded(batch, books, idx, use_arrow=True)
+    write_ivf_index(batch, books, idx, "append")
     assert _sidecar_payload(idx) == before
 
     # pre-sidecar index: append backfills the same stats
@@ -1121,7 +778,7 @@ def test_append_backfills_a_missing_sidecar(spark, tmp_path):
     batch2 = emb.limit(10).select(
         (F.col("vec_id") + 2_000_000).alias("vec_id"), "embedding"
     )
-    append_ivf_index_sharded(batch2, books, idx, use_arrow=True)
+    write_ivf_index(batch2, books, idx, "append")
     assert _sidecar_payload(idx) == before
 
 
@@ -1130,7 +787,7 @@ def test_stats_job_names_shards_with_null_centroids(spark):
     error naming the bad shard, not let F.size(NULL) drive a confusing
     'dim must be >= 1' out of select_chunk_shards."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        _codebook_stats_job,
+        _codebook_stats,
     )
 
     ok = spark.createDataFrame(
@@ -1139,23 +796,23 @@ def test_stats_job_names_shards_with_null_centroids(spark):
     bad = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, None)], "cluster_id int, cv array<double>"
     )
-    assert _codebook_stats_job({0: ok}) == ({0: 2}, 2)
+    assert _codebook_stats({0: ok}) == ({0: 2}, 2)
     with pytest.raises(ValueError, match=r"shards \[1\] contain NULL"):
-        _codebook_stats_job({0: ok, 1: bad})
+        _codebook_stats({0: ok, 1: bad})
 
 
 def test_explicit_chunking_feeds_actual_bytes_to_the_worker_bound(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r15 #2: with the sidecar present, the fan-out width bound
-    must see ACTUAL worst-chunk bytes on the explicit-chunk_shards path
-    too — not the caller's declared budget."""
+    """ADVICE r15 #2: the fan-out width bound must see ACTUAL
+    worst-chunk bytes on the explicit-chunk_shards path — from the
+    sidecar when present, else measured (`_codebook_stats`)."""
     from redpanda_to_parquet_writer_spark.operators import similarity as sim
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     queries = emb.limit(3)
     idx = str(tmp_path / "idx")
-    books = sim.build_ivf_index_sharded(emb, idx, 4, use_arrow=True)
+    books = sim.build_ivf_index(emb, idx, n_shards=4)
     payload = _sidecar_payload(idx)
     dim = payload["dim"]
     counts = {int(s): n for s, n in payload["counts"].items()}
@@ -1168,47 +825,46 @@ def test_explicit_chunking_feeds_actual_bytes_to_the_worker_bound(
         return orig(worst_chunk_bytes, n_chunks, cap)
 
     monkeypatch.setattr(sim, "_select_chunk_workers", _spy)
-    declared = 123_456_789  # a budget bearing no relation to the chunks
-    sim.ivf_topk_indexed_sharded_chunked(
-        spark, idx, queries, books, 2, k=3, n_probe=4,
-        broadcast_budget_bytes=declared,
+    sim.ivf_topk_indexed(
+        spark, idx, queries, books, k=3, n_probe=4, chunk_shards=2
     ).write.mode("overwrite").format("noop").save()
     # chunks of 2 shards each over 4 shards -> worst chunk = the larger
-    # 2-shard codebook sum, from the SIDECAR's counts, never `declared`
+    # 2-shard codebook sum, from the SIDECAR's counts
     expect = max(
         (counts[0] + counts[1]) * dim * 8, (counts[2] + counts[3]) * dim * 8
     )
     assert seen == [(expect, 2)]
 
-    # sidecar-less explicit serve: the declared budget is all it has
+    # sidecar-less explicit serve: the codebooks are measured instead
     seen.clear()
     (tmp_path / "idx" / "_codebook_stats.json").unlink()
-    sim.ivf_topk_indexed_sharded_chunked(
-        spark, idx, queries, books, 2, k=3, n_probe=4,
-        broadcast_budget_bytes=declared,
+    sim.ivf_topk_indexed(
+        spark, idx, queries, books, k=3, n_probe=4, chunk_shards=2
     ).write.mode("overwrite").format("noop").save()
-    assert seen == [(declared, 2)]
+    assert seen == [(expect, 2)]
 
 
 def test_corrupt_sidecar_falls_back_to_the_stats_job(spark, tmp_path):
     """A corrupt or truncated sidecar must never fail a serve — the
-    reader returns None and the bounded aggregate takes over, rows
+    reader returns None and `_codebook_stats` takes over, rows
     unchanged."""
     from redpanda_to_parquet_writer_spark.operators import similarity as sim
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     queries = emb.limit(3)
     idx = str(tmp_path / "idx")
-    books = sim.build_ivf_index_sharded(emb, idx, 2, use_arrow=True)
+    books = sim.build_ivf_index(emb, idx, n_shards=2)
     base = _served(
-        sim.ivf_topk_indexed_sharded(spark, idx, queries, books, k=3, n_probe=4)
+        sim.ivf_topk_indexed(
+            spark, idx, queries, books, k=3, n_probe=4, chunk_shards=2
+        )
     )
     for garbage in ["not json {", '{"dim": 0, "counts": {"0": 5}}',
                     '{"dim": 4, "counts": {"0": -1}}']:
         (tmp_path / "idx" / "_codebook_stats.json").write_text(garbage)
         assert sim._read_codebook_sidecar(spark, idx) is None
         got = _served(
-            sim.ivf_topk_indexed_sharded_chunked(
+            sim.ivf_topk_indexed(
                 spark, idx, queries, books, k=3, n_probe=4
             )
         )
@@ -1217,32 +873,12 @@ def test_corrupt_sidecar_falls_back_to_the_stats_job(spark, tmp_path):
 
 # --- r16 code-review hardening ----------------------------------------------
 
-def test_guard_resolves_authority_bearing_file_uris_like_hadoop():
-    """'file://tmp/idx' (the two-slash typo) has AUTHORITY 'tmp' and
-    Hadoop path '/idx' — the guard must compare the path Hadoop will
-    actually write to, or the typo slips past and the cleanup deletes
-    the index."""
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        _check_staging_disjoint,
-        _path_segments,
-    )
-
-    assert _path_segments("file://tmp/idx") == ["idx"]
-    assert _path_segments("file://host/tmp/idx") == ["tmp", "idx"]
-    with pytest.raises(ValueError, match="overlaps the index path"):
-        _check_staging_disjoint("file://tmp/idx", "/idx")
-    # and a local directory literally named after a scheme must NOT
-    # collide with the scheme'd URI (they are different locations)
-    _check_staging_disjoint("/s3/bkt/idx", "s3://bkt/idx")
-    _check_staging_disjoint("/hdfs/nn/idx", "hdfs://nn/idx")
-
-
 def test_sidecar_write_failure_does_not_fail_the_build(
     spark, tmp_path, monkeypatch
 ):
     """The sidecar is an optimization: a transient failure of its small
-    driver-side write must not fail an otherwise-complete build (nor
-    skip staging cleanup) — serving just pays the fallback job."""
+    driver-side write must not fail an otherwise-complete build —
+    serving just measures the codebooks itself."""
     from redpanda_to_parquet_writer_spark.operators import similarity as sim
 
     def _boom(spark_, index_path):
@@ -1251,25 +887,19 @@ def test_sidecar_write_failure_does_not_fail_the_build(
     monkeypatch.setattr(sim, "_sidecar_jpath", _boom)
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     idx = str(tmp_path / "idx")
-    staging = str(tmp_path / "staging")
     # the degradation must be OBSERVABLE (VERDICT r16 #3): a persistent
-    # FS failure otherwise silently costs every self-sized serve ~2s
+    # FS failure otherwise silently costs every self-sized serve a job
     # forever with nothing in any log to say why
     with pytest.warns(RuntimeWarning, match="sidecar write failed"):
-        books = sim.build_ivf_index_sharded(
-            emb, idx, 2, use_arrow=True, staging_path=staging
-        )
+        books = sim.build_ivf_index(emb, idx, n_shards=2)
     assert sorted(books) == [0, 1]
     import os
-    assert not os.path.exists(staging), "staging cleanup must still run"
     assert not os.path.exists(f"{idx}/_codebook_stats.json")
-    # the serve works regardless (fallback job path)
+    # the serve works regardless (it measures the codebooks)
     queries = emb.limit(3)
     monkeypatch.undo()
     assert (
-        sim.ivf_topk_indexed_sharded_chunked(
-            spark, idx, queries, books, k=3, n_probe=4
-        ).count()
+        sim.ivf_topk_indexed(spark, idx, queries, books, k=3, n_probe=4).count()
         == 9
     )
 
@@ -1316,38 +946,30 @@ def test_failed_sidecar_overwrite_removes_the_stale_sidecar(spark, tmp_path):
 def test_append_backfill_failure_does_not_fail_the_append(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r16 #1: on a sidecar-less index with caller-reconstructed
-    codebooks, the backfill's stats JOB runs after the per-shard
-    appends have durably completed — a failure there (transient Spark,
-    or the targeted NULL-centroid error) must neither fail the append
-    (a retry would double-append the batch) nor skip staging cleanup."""
-    import os
-
+    """ADVICE r16 #1: on a sidecar-less index, the append's backfill
+    measures the codebooks AFTER the rows have durably landed — a
+    failure there (transient Spark, or the targeted NULL-centroid
+    error) must not fail the append (a retry would double-append the
+    batch)."""
     from redpanda_to_parquet_writer_spark.operators import similarity as sim
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     idx = str(tmp_path / "idx")
-    books = sim.build_ivf_index_sharded(emb, idx, 2, use_arrow=True)
+    books = sim.build_ivf_index(emb, idx, n_shards=2)
     n_built = spark.read.parquet(idx).count()
     (tmp_path / "idx" / "_codebook_stats.json").unlink()  # pre-sidecar index
 
     def _boom(codebooks):
         raise RuntimeError("simulated stats-job failure")
 
-    monkeypatch.setattr(sim, "_codebook_stats_job", _boom)
-    # caller-reconstructed codebooks (e.g. reloaded from a snapshot):
-    # no _codebook_stats attribute, so the backfill needs the job
+    monkeypatch.setattr(sim, "_codebook_stats", _boom)
+    # caller-reconstructed codebooks (e.g. reloaded from a snapshot)
     rebuilt = {s: b.select("cluster_id", "cv") for s, b in books.items()}
-    assert sim._local_codebook_stats(rebuilt) is None
     batch = emb.limit(10).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
     )
-    staging = str(tmp_path / "staging")
     with pytest.warns(RuntimeWarning, match="sidecar backfill failed"):
-        sim.append_ivf_index_sharded(
-            batch, rebuilt, idx, use_arrow=True, staging_path=staging
-        )
-    assert not os.path.exists(staging), "staging cleanup must still run"
+        sim.write_ivf_index(batch, rebuilt, idx, "append")
     assert spark.read.parquet(idx).count() == n_built + 10
     assert sim._read_codebook_sidecar(spark, idx) is None
 
@@ -1362,23 +984,25 @@ def test_chunked_serve_accepts_str_shard_keys(spark, tmp_path):
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     queries = emb.limit(5)
     idx = str(tmp_path / "idx")
-    books = sim.build_ivf_index_sharded(emb, idx, 4, use_arrow=True)
+    books = sim.build_ivf_index(emb, idx, n_shards=4)
     base = _served(
-        sim.ivf_topk_indexed_sharded(spark, idx, queries, books, k=3, n_probe=4)
+        sim.ivf_topk_indexed(
+            spark, idx, queries, books, k=3, n_probe=4, chunk_shards=4
+        )
     )
     str_books = {str(s): df for s, df in books.items()}
     # explicit multi-chunk with the sidecar present (the r16 regression
     # shape), self-sized with sidecar, and self-sized via the fallback job
     for kwargs in ({"chunk_shards": 2}, {}):
         got = _served(
-            sim.ivf_topk_indexed_sharded_chunked(
+            sim.ivf_topk_indexed(
                 spark, idx, queries, str_books, k=3, n_probe=4, **kwargs
             )
         )
         assert got == base, kwargs
     (tmp_path / "idx" / "_codebook_stats.json").unlink()
     got = _served(
-        sim.ivf_topk_indexed_sharded_chunked(
+        sim.ivf_topk_indexed(
             spark, idx, queries, str_books, k=3, n_probe=4
         )
     )
@@ -1386,14 +1010,14 @@ def test_chunked_serve_accepts_str_shard_keys(spark, tmp_path):
 
 
 def test_codebook_stats_dim_is_max_over_rows(spark):
-    """materialize_centroids' stashed dim must be the MAX over rows
-    (matching the fallback job's max(size)) so a short first vector
-    cannot understate the sidecar's bytes."""
+    """The one source of codebook sizes (`_codebook_stats`) must take
+    dim as the MAX over rows so a short first vector cannot understate
+    the sidecar's bytes."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        materialize_centroids,
+        _codebook_stats,
     )
 
     cb = spark.createDataFrame(
         [(0, [1.0]), (1, [0.0, 1.0, 2.0])], "cluster_id int, cv array<double>"
     )
-    assert materialize_centroids(cb)._codebook_stats == (2, 3)
+    assert _codebook_stats({0: cb}) == ({0: 2}, 3)

@@ -1439,36 +1439,50 @@ def test_salted_dedup_rewrites_survive_degenerate_corpus(spark):
     assert len(rows) == 1 and rows[0]["kafka_offset"] == 0
 
 
+DEGENERATE_DIM = 64
+
+
+def degenerate_embeddings(spark, n_hot: int, n_rest: int):
+    """n_hot copies of ONE vector (ids 0..n_hot-1) + n_rest distinct
+    deterministic vectors — all expression-built, no driver rows."""
+    from pyspark.sql import functions as F
+
+    hot_vec = F.array(*[F.lit(float((d * 7) % 13 + 1)) for d in range(DEGENERATE_DIM)])
+    hot = spark.range(n_hot).select(F.col("id").alias("vec_id"), hot_vec.alias("embedding"))
+    d = F.sequence(F.lit(0), F.lit(DEGENERATE_DIM - 1))
+    # component 0 carries the raw id so every tail vector is DISTINCT
+    # (a pure mod-101 pattern cycles after 101 ids); the rest is a
+    # deterministic signed pattern so directions vary
+    rest_vec = F.transform(
+        d,
+        lambda i: F.when(i == 0, F.col("id").cast("double")).otherwise(
+            ((F.col("id") * 31 + i * 17) % 101 - 50).cast("double")
+        ),
+    )
+    rest = spark.range(n_hot, n_hot + n_rest).select(
+        F.col("id").alias("vec_id"), rest_vec.alias("embedding")
+    )
+    return hot.unionByName(rest)
+
+
 def test_vector_operators_survive_degenerate_corpus(spark, tmp_path):
     """The VECTOR-side degenerate gate (VERDICT r13 #4, the text-side
     treatment applied to embeddings): 50k IDENTICAL vectors + 500
     near-parallel tail vectors — one hot LSH bucket in EVERY table, one
     hot IVF list per shard, a SemDeDup "cluster" that is the whole
     corpus. Exact expected outputs; 200k wall-clock evidence lives in
-    SCALING.md (scripts/probe_degenerate_vectors.py)."""
-    import sys
-
+    SCALING.md (scripts/probe_degenerate_vectors.py at rev 269ae41)."""
     from pyspark.sql import functions as F
 
     from redpanda_to_parquet_writer_spark.operators.dedup import (
         content_dedup_keep_first,
     )
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index_sharded,
-        ivf_topk_indexed_sharded,
+        build_ivf_index,
+        ivf_topk_indexed,
         lsh_bucketed_neighbors,
     )
     from redpanda_to_parquet_writer_spark.plans.vector_queries import _lsh_planes
-
-    import os
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"
-        ),
-    )
-    from probe_degenerate_vectors import degenerate_embeddings
 
     n_hot, n_rest = 50_000, 500
     emb = degenerate_embeddings(spark, n_hot, n_rest)
@@ -1514,17 +1528,14 @@ def test_vector_operators_survive_degenerate_corpus(spark, tmp_path):
     # ties to cluster 0 (ivf_assign breaks ties to the lowest cluster
     # id), every centroid is the hot vector; global top-k of query 0
     # must be neighbors 1,2,3 at sim 1.0 (ties break to lowest id)
-    books = build_ivf_index_sharded(
-        emb, str(tmp_path / "idx"), 2, n_updates=0, use_arrow=True
-    )
-    served = ivf_topk_indexed_sharded(
+    books = build_ivf_index(emb, str(tmp_path / "idx"), n_shards=2, n_updates=0)
+    served = ivf_topk_indexed(
         spark,
         str(tmp_path / "idx"),
         emb.filter(F.col("vec_id") == 0),
         books,
         k=3,
         n_probe=2,
-        verify_parallelism=8,
     ).collect()
     assert sorted((r["rank"], r["neighbor_id"], r["sim"]) for r in served) == [
         (1, 1, 1.0),

@@ -84,6 +84,21 @@ def test_deduplicate_table_snapshot(spark, table_base, tmp_path):
     assert spark.read.parquet(topic_dir).count() == 58
 
 
+def test_deduplicate_twice_and_snapshots_are_not_topics(spark, table_base):
+    """Two back-to-back dedup calls on one topic both succeed (their
+    snapshot names never collide), and topic discovery — hence
+    `load_topics_batch` — still returns only the real topics."""
+    import os
+
+    first = R.deduplicate_table(spark, table_base, "spx_index")
+    second = R.deduplicate_table(spark, table_base, "spx_index")
+    assert first == second == {"before": 48, "after": 48, "removed": 0}
+    snapshots = [d for d in os.listdir(table_base) if d.startswith("spx_index__dedup_")]
+    assert len(snapshots) == 2
+    assert R.get_available_topics(table_base) == ["es_futures", "spx_index"]
+    assert set(R.load_topics_batch(spark, table_base)) == {"es_futures", "spx_index"}
+
+
 def test_internal_consistency(spark, table_base):
     root = f"{table_base}/spx_index"
     assert internal_consistency(spark, root, 48).status == PASS

@@ -302,9 +302,9 @@ def test_sampled_training_trains_on_exactly_the_hash_ordered_sample(spark):
 
 def test_arrow_trainer_matches_jvm_on_fixture(spark):
     """`use_arrow=True` (the matmul training assignment) must reproduce
-    the JVM fold's centroids on the fixture, capped and uncapped — the
-    same fixture-equality contract as `ivf_assign_arrow`'s served
-    top-k. Ditto the full `kmeans_lloyd_assign` surface."""
+    the JVM fold's centroids on the fixture, capped and uncapped — a
+    fixture-equality contract (the JVM pass stays the oracle-gated
+    default). Ditto the full `kmeans_lloyd_assign` surface."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
         kmeans_lloyd_centroids,
     )

@@ -380,11 +380,11 @@ def test_ivfadc_recall_audit_and_probe_tradeoff(spark, sf_dir, tmp_path):
     the fixture — more inverted lists probed can only add candidates, so
     recall at full probe bounds recall at partial probe from above."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivfadc_index,
         deterministic_centroids,
-        ivfadc_topk_indexed,
+        ivf_topk_indexed,
         materialize_centroids,
         pq_codebooks,
+        write_ivf_index,
     )
     from redpanda_to_parquet_writer_spark.plans.vector_queries import (
         EMB_DIM,
@@ -409,13 +409,14 @@ def test_ivfadc_recall_audit_and_probe_tradeoff(spark, sf_dir, tmp_path):
     )
     cb = pq_codebooks(emb, PQ_M, PQ_KSUB, EMB_DIM)
     path = str(tmp_path / "ivfadc_idx")
-    build_ivfadc_index(emb, centroids, cb, path, PQ_M, EMB_DIM)
+    write_ivf_index(emb, centroids, path, pq_codebook=cb, m=PQ_M, dim=EMB_DIM)
 
     def hits(n_probe: int) -> set:
         return {
             (r["query_id"], r["neighbor_id"])
-            for r in ivfadc_topk_indexed(
-                spark, path, queries, centroids, cb, PQ_M, EMB_DIM, TOPK_K, n_probe
+            for r in ivf_topk_indexed(
+                spark, path, queries, centroids, k=TOPK_K, n_probe=n_probe,
+                pq_codebook=cb, m=PQ_M, dim=EMB_DIM,
             ).collect()
         }
 
@@ -429,12 +430,14 @@ def test_ivfadc_recall_audit_and_probe_tradeoff(spark, sf_dir, tmp_path):
     # measured knob a pipeline turns when the audit's recall is low
     small_cb = pq_codebooks(emb, PQ_M, 4, EMB_DIM)
     small_path = str(tmp_path / "ivfadc_idx_small")
-    build_ivfadc_index(emb, centroids, small_cb, small_path, PQ_M, EMB_DIM)
+    write_ivf_index(
+        emb, centroids, small_path, pq_codebook=small_cb, m=PQ_M, dim=EMB_DIM
+    )
     small_hits = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivfadc_topk_indexed(
-            spark, small_path, queries, centroids, small_cb,
-            PQ_M, EMB_DIM, TOPK_K, IVF_PROBE,
+        for r in ivf_topk_indexed(
+            spark, small_path, queries, centroids, k=TOPK_K, n_probe=IVF_PROBE,
+            pq_codebook=small_cb, m=PQ_M, dim=EMB_DIM,
         ).collect()
     }
     assert len(partial & exact) >= len(small_hits & exact)
@@ -454,27 +457,29 @@ def test_append_ivf_index_equals_rebuild(spark, sf_dir, tmp_path):
     """Incremental maintenance contract: building on half the corpus
     then appending the other half serves EXACTLY what a full rebuild
     serves (rows compared exactly), appended rows land inside the same
-    cluster_id= directories (no new top-level dirs), and the appended
-    index contains every corpus row exactly once."""
+    shard=0/cluster_id= directories (no new top-level dirs), and the
+    appended index contains every corpus row exactly once."""
     import os
 
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        append_ivf_index,
-        build_ivf_index,
         deterministic_centroids,
         ivf_topk_indexed,
         materialize_centroids,
+        write_ivf_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = materialize_centroids(deterministic_centroids(emb, 8))
     full_path, inc_path = str(tmp_path / "full"), str(tmp_path / "inc")
-    build_ivf_index(emb, centroids, full_path)
-    build_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), centroids, inc_path)
-    dirs_before = {d for d in os.listdir(inc_path) if d.startswith("cluster_id=")}
-    append_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), centroids, inc_path)
-    dirs_after = {d for d in os.listdir(inc_path) if d.startswith("cluster_id=")}
+    write_ivf_index(emb, centroids, full_path)
+    write_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), centroids, inc_path)
+    lists = os.path.join(inc_path, "shard=0")
+    dirs_before = {d for d in os.listdir(lists) if d.startswith("cluster_id=")}
+    write_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), centroids, inc_path, "append")
+    dirs_after = {d for d in os.listdir(lists) if d.startswith("cluster_id=")}
     assert dirs_after <= {f"cluster_id={i}" for i in range(8)}
+    # an unsharded index is shard 0: no other data directory appears
+    assert [d for d in os.listdir(inc_path) if "=" in d] == ["shard=0"]
 
     n = emb.count()
     inc_rows = spark.read.parquet(inc_path)
@@ -496,7 +501,7 @@ def test_append_ivfadc_index_and_compaction(spark, sf_dir, tmp_path):
     """IVFADC incremental maintenance + operational compaction over the
     FULL production cycle append -> compact -> append -> serve: (a)
     build + append under the frozen quantizers; (b) mid-cycle
-    compact_parquet(partition_by=['cluster_id']) collapses the part
+    compact_parquet(partition_by=['shard', 'cluster_id']) collapses the part
     files; (c) a further append lands on the COMPACTED index (VERDICT
     r8 #7 — compaction is an online maintenance step, not the end of
     the lineage); the post-compact-append index, its never-compacted
@@ -504,12 +509,11 @@ def test_append_ivfadc_index_and_compaction(spark, sf_dir, tmp_path):
     import os
 
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        append_ivfadc_index,
-        build_ivfadc_index,
         deterministic_centroids,
-        ivfadc_topk_indexed,
+        ivf_topk_indexed,
         materialize_centroids,
         pq_codebooks,
+        write_ivf_index,
     )
     from redpanda_to_parquet_writer_spark.plans.vector_queries import (
         EMB_DIM,
@@ -522,19 +526,17 @@ def test_append_ivfadc_index_and_compaction(spark, sf_dir, tmp_path):
     centroids = materialize_centroids(deterministic_centroids(emb, 8))
     cb = pq_codebooks(emb, PQ_M, PQ_KSUB, EMB_DIM)
     full_path, inc_path = str(tmp_path / "full"), str(tmp_path / "inc")
-    build_ivfadc_index(emb, centroids, cb, full_path, PQ_M, EMB_DIM)
-    build_ivfadc_index(
-        emb.filter(F.col("vec_id") % 3 == 0), centroids, cb, inc_path, PQ_M, EMB_DIM
-    )
-    append_ivfadc_index(
-        emb.filter(F.col("vec_id") % 3 == 1), centroids, cb, inc_path,
-        PQ_M, EMB_DIM,
+    pq = {"pq_codebook": cb, "m": PQ_M, "dim": EMB_DIM}
+    write_ivf_index(emb, centroids, full_path, **pq)
+    write_ivf_index(emb.filter(F.col("vec_id") % 3 == 0), centroids, inc_path, **pq)
+    write_ivf_index(
+        emb.filter(F.col("vec_id") % 3 == 1), centroids, inc_path, "append", **pq
     )
 
     # mid-cycle compaction: 2/3 of the corpus, two part-file generations
     compact_path = str(tmp_path / "compacted")
     stats = compact_parquet(
-        spark, inc_path, compact_path, partition_by=["cluster_id"]
+        spark, inc_path, compact_path, partition_by=["shard", "cluster_id"]
     )
     assert stats["files_after"] < stats["files_before"]
 
@@ -542,8 +544,8 @@ def test_append_ivfadc_index_and_compaction(spark, sf_dir, tmp_path):
     # its never-compacted twin — compaction must be transparent to
     # subsequent appends
     last = emb.filter(F.col("vec_id") % 3 == 2)
-    append_ivfadc_index(last, centroids, cb, compact_path, PQ_M, EMB_DIM)
-    append_ivfadc_index(last, centroids, cb, inc_path, PQ_M, EMB_DIM)
+    write_ivf_index(last, centroids, compact_path, "append", **pq)
+    write_ivf_index(last, centroids, inc_path, "append", **pq)
 
     n = emb.count()
     for p in (compact_path, inc_path):
@@ -553,8 +555,8 @@ def test_append_ivfadc_index_and_compaction(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 8)
     serve = lambda p: sorted(
         tuple(r)
-        for r in ivfadc_topk_indexed(
-            spark, p, queries, centroids, cb, PQ_M, EMB_DIM, 5, 3
+        for r in ivf_topk_indexed(
+            spark, p, queries, centroids, k=5, n_probe=3, **pq
         ).collect()
     )
     full_rows = serve(full_path)
@@ -570,20 +572,19 @@ def test_append_under_wrong_codebook_is_callers_contract(spark, sf_dir, tmp_path
     the index. This test pins that the failure mode is real, so the
     doc claim stays honest.)"""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        append_ivf_index,
-        build_ivf_index,
         deterministic_centroids,
         ivf_topk_indexed,
         materialize_centroids,
+        write_ivf_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     c8 = materialize_centroids(deterministic_centroids(emb, 8))
     c4 = materialize_centroids(deterministic_centroids(emb, 4))
     full_path, bad_path = str(tmp_path / "full"), str(tmp_path / "bad")
-    build_ivf_index(emb, c8, full_path)
-    build_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), c8, bad_path)
-    append_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), c4, bad_path)
+    write_ivf_index(emb, c8, full_path)
+    write_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), c8, bad_path)
+    write_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), c4, bad_path, "append")
     queries = emb.filter(F.col("vec_id") < 10)
     serve = lambda p: sorted(
         tuple(r)
@@ -603,13 +604,11 @@ def test_reliable_serving_path_bitwise_equals_local(spark, sf_dir, tmp_path):
     import pytest as _pytest
 
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index,
-        build_ivfadc_index,
         deterministic_centroids,
         ivf_topk_indexed,
-        ivfadc_topk_indexed,
         materialize_centroids,
         pq_codebooks,
+        write_ivf_index,
     )
     from redpanda_to_parquet_writer_spark.plans.vector_queries import (
         EMB_DIM,
@@ -621,8 +620,9 @@ def test_reliable_serving_path_bitwise_equals_local(spark, sf_dir, tmp_path):
     centroids = materialize_centroids(deterministic_centroids(emb, 8))
     cb = pq_codebooks(emb, PQ_M, PQ_KSUB, EMB_DIM)
     ivf_path, adc_path = str(tmp_path / "ivf"), str(tmp_path / "adc")
-    build_ivf_index(emb, centroids, ivf_path)
-    build_ivfadc_index(emb, centroids, cb, adc_path, PQ_M, EMB_DIM)
+    pq = {"pq_codebook": cb, "m": PQ_M, "dim": EMB_DIM}
+    write_ivf_index(emb, centroids, ivf_path)
+    write_ivf_index(emb, centroids, adc_path, **pq)
     queries = emb.filter(F.col("vec_id") < 10)
 
     sc = spark.sparkContext
@@ -646,107 +646,17 @@ def test_reliable_serving_path_bitwise_equals_local(spark, sf_dir, tmp_path):
     )
     assert bits(ivf_rel) == bits(ivf_local)
 
-    adc_local = ivfadc_topk_indexed(
-        spark, adc_path, queries, centroids, cb, PQ_M, EMB_DIM, 5, 3
+    adc_local = ivf_topk_indexed(
+        spark, adc_path, queries, centroids, k=5, n_probe=3, **pq
     )
-    adc_rel = ivfadc_topk_indexed(
-        spark, adc_path, queries, centroids, cb, PQ_M, EMB_DIM, 5, 3, reliable=True
+    adc_rel = ivf_topk_indexed(
+        spark, adc_path, queries, centroids, k=5, n_probe=3, reliable=True, **pq
     )
     assert bits(adc_rel) == bits(adc_local)
     # durable blocks actually landed in the configured dir
     import os
 
     assert any(os.scandir(str(tmp_path / "reliable_ckpt")))
-
-
-def test_arrow_assignment_matches_jvm_and_serves_identically(spark, sf_dir, tmp_path):
-    """ivf_assign_arrow (vectorized numpy build path) must produce the
-    same cluster assignments as the JVM formulation on the fixtures, and
-    an index built with use_arrow=True must serve the exact same top-k
-    rows (the serving contract)."""
-    from pyspark.sql import functions as F
-
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        _as_double,
-        build_ivf_index,
-        deterministic_centroids,
-        ivf_assign,
-        ivf_assign_arrow,
-        ivf_topk_indexed,
-        materialize_centroids,
-    )
-    from redpanda_to_parquet_writer_spark.sources.parquet import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = materialize_centroids(
-        deterministic_centroids(emb, 8, "vec_id", "embedding")
-    )
-    c = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    jvm = {
-        r["vec_id"]: r["cluster_id"] for r in ivf_assign(c, cents).collect()
-    }
-    arrow = {
-        r["vec_id"]: r["cluster_id"] for r in ivf_assign_arrow(c, cents).collect()
-    }
-    assert jvm == arrow
-    # zero-norm vector -> the LOWEST cluster id on both paths (the JVM
-    # max_by orders struct(NULL sim, -cluster_id) with NULL smallest)
-    z = spark.createDataFrame(
-        [(999999, [0.0] * 64)], "vec_id long, v array<double>"
-    )
-    assert ivf_assign(z, cents).collect()[0]["cluster_id"] == 0
-    assert ivf_assign_arrow(z, cents).collect()[0]["cluster_id"] == 0
-
-    queries = emb.filter(F.col("vec_id") < 3)
-    build_ivf_index(emb, cents, str(tmp_path / "jvm_idx"))
-    build_ivf_index(emb, cents, str(tmp_path / "arrow_idx"), use_arrow=True)
-    serve = lambda p: sorted(
-        tuple(r)
-        for r in ivf_topk_indexed(
-            spark, p, queries, cents, "vec_id", "embedding", 3, 2
-        ).collect()
-    )
-    assert serve(str(tmp_path / "jvm_idx")) == serve(str(tmp_path / "arrow_idx"))
-
-
-def test_arrow_ivfadc_build_serves_identically(spark, sf_dir, tmp_path):
-    """An IVFADC index built with the one-pass vectorized assign+encode
-    must serve the exact same top-k as the JVM composition (the serving
-    contract), and its rows must match the JVM index row-for-row on the
-    fixtures."""
-    from pyspark.sql import functions as F
-
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivfadc_index,
-        deterministic_centroids,
-        ivfadc_topk_indexed,
-        materialize_centroids,
-        pq_codebooks,
-    )
-    from redpanda_to_parquet_writer_spark.sources.parquet import load_table
-
-    m, dim = 8, 64
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = materialize_centroids(
-        deterministic_centroids(emb, 8, "vec_id", "embedding")
-    )
-    cb = pq_codebooks(emb, m, 16, dim)
-    build_ivfadc_index(emb, cents, cb, str(tmp_path / "jvm"), m, dim)
-    build_ivfadc_index(
-        emb, cents, cb, str(tmp_path / "arrow"), m, dim, use_arrow=True
-    )
-    rows = lambda p: sorted(
-        tuple(r) for r in spark.read.parquet(p).collect()
-    )
-    assert rows(str(tmp_path / "jvm")) == rows(str(tmp_path / "arrow"))
-    queries = emb.filter(F.col("vec_id") < 3)
-    serve = lambda p: sorted(
-        tuple(r)
-        for r in ivfadc_topk_indexed(
-            spark, p, queries, cents, cb, m, dim, 3, 2
-        ).collect()
-    )
-    assert serve(str(tmp_path / "jvm")) == serve(str(tmp_path / "arrow"))
 
 
 def test_rrf_fuse_precondition_unique_nonnull_ids(spark):
