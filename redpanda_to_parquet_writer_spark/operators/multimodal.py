@@ -13,16 +13,20 @@ in plans/multimodal_queries.py:
   - GIF: full codec (variable-width GIF-LZW, grayscale palette)
   - mp4: box-tree structure probe (brand, mvhd, tracks, mdat)
   - JPEG: marker-stream probe (SOF dims/components, table counts, scan
-    accounting), a full baseline gray8 codec (numpy 8x8 DCT, Annex K
-    tables, canonical Huffman — `encode_jpeg_gray8`/`decode_jpeg_gray8`),
-    AND a full baseline COLOR codec (JFIF YCbCr transform, 4:2:0 chroma
-    subsampling, interleaved MCUs, Annex K chroma tables —
-    `encode_jpeg_color`/`decode_jpeg_color`)
+    accounting) and a full codec on one frame-and-scan model (numpy
+    8x8 DCT, Annex K tables, canonical Huffman): one frame writer
+    behind the gray/color x baseline/progressive encoders
+    (`encode_jpeg_gray8[_progressive]`, `encode_jpeg_color[_progressive]`:
+    JFIF YCbCr, 4:2:0/4:2:2/4:4:4 chroma, restart intervals, spectral
+    selection + successive approximation) and one frame reader behind
+    the two decoders, `decode_jpeg_gray8` (1 component) and
+    `decode_jpeg_color` (3 components), each taking SOF0 and SOF2
+  - TIFF, WebP lossless (VP8L) and AVI/MJPEG: codecs, probes and
+    frame samplers on top of the above
 
-Only mp4/avi video-frame decode stays stubbed — compressed video
-(H.264 etc.) genuinely needs a codec library; the stub raises
-NotImplementedError unless a library-backed codec is injected. The
-pipeline shape (what runs where, batch sizes, schema contracts) is
+Compressed video frames (H.264 etc.) genuinely need a codec library
+and are out of scope; `map_media_batches` takes any injected codec.
+The pipeline shape (what runs where, batch sizes, schema contracts) is
 real and tested for every media type.
 
 Scale notes: media blobs make rows huge — the mapInPandas stages are
@@ -34,6 +38,7 @@ is pure column expressions and never leaves the JVM.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -139,34 +144,6 @@ def with_media_metadata(
     )
 
 
-def decode_image_stub(data: bytes) -> tuple[int, int, int]:
-    """Decode (width, height, channels) from image bytes.
-
-    STUB for formats beyond the library-free codecs only (now just
-    lossy WebP/VP8 pixel data): inject a real codec via
-    `map_media_batches(codec=...)`. PNG (gray8/RGB8/paletted/RGBA),
-    GIF, baseline AND progressive (SOF2) JPEG gray+color, TIFF
-    (none/PackBits/LZW strips), and WebP-LOSSLESS (VP8L subset) all
-    decode fully library-free (`decode_png_gray8`/`decode_png_rgb8`/
-    `decode_png_palette`, `decode_gif_gray8`, `decode_jpeg_gray8`/
-    `decode_jpeg_color`/`decode_jpeg_gray8_progressive`/
-    `decode_jpeg_color_progressive`, `decode_tiff`,
-    `decode_webp_lossless`), and JPEG/TIFF/WebP structure probes run
-    without decoding (`probe_jpeg`/`probe_tiff`/`probe_webp`).
-    """
-    raise NotImplementedError(
-        "no library-free codec for this image format (lossy WebP/VP8 "
-        "pixel data needs an imaging library); PNG/GIF, baseline+"
-        "progressive JPEG gray+color, TIFF and lossless WebP (VP8L) "
-        "decode library-free (see decode_png_gray8 / decode_png_rgb8 / "
-        "decode_png_palette / decode_gif_gray8 / decode_jpeg_gray8 / "
-        "decode_jpeg_color / decode_jpeg_gray8_progressive / "
-        "decode_jpeg_color_progressive / decode_tiff / "
-        "decode_webp_lossless / probe_jpeg / probe_tiff / probe_webp); "
-        "inject a codec callable into map_media_batches"
-    )
-
-
 DECODED_IMAGE_SCHEMA = StructType(
     [
         StructField("width", LongType()),
@@ -180,16 +157,17 @@ def map_media_batches(
     df: DataFrame,
     binary_col: str,
     out_schema: StructType,
-    codec: Callable | None = None,
+    codec: Callable,
     passthrough: list[str] | None = None,
     on_error: str = "raise",
 ) -> DataFrame:
     """Arrow-batched media transform: the mapInPandas plumbing.
 
-    `codec(bytes) -> tuple` fills one row of `out_schema`; None uses the
-    stub (raises, documenting the dependency). Batch shape: pandas
-    DataFrames with the binary column as Python bytes; passthrough
-    columns are carried unchanged. Partition-preserving — no shuffle.
+    `codec(bytes) -> tuple` fills one row of `out_schema` (any decoder
+    or probe of this module, or an injected library codec). Batch
+    shape: pandas DataFrames with the binary column as Python bytes;
+    passthrough columns are carried unchanged. Partition-preserving —
+    no shuffle.
 
     `on_error`: "raise" fails the job on the first undecodable blob (the
     default — silent data loss must be opted into); "null" emits NULLs
@@ -199,7 +177,6 @@ def map_media_batches(
     """
     if on_error not in ("raise", "null"):
         raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    codec = codec or decode_image_stub
     passthrough = passthrough or [c for c in df.columns if c != binary_col]
     result_schema = StructType(
         [f for f in df.schema.fields if f.name in passthrough] + list(out_schema.fields)
@@ -224,20 +201,6 @@ def map_media_batches(
             yield out
 
     return df.mapInPandas(run, result_schema)
-
-
-def frame_sample_stub(data: bytes, every_n: int = 30) -> list[bytes]:
-    """Sample COMPRESSED-container video frames (mp4/avi with H.264
-    etc.). STUB: inter-frame codecs require a video library
-    (ffmpeg/cv2) to demux+decode. MJPEG streams split+decode fully
-    library-free (`split_mjpeg`/`sample_mjpeg_gray8`), and raw frame
-    streams go through `frame_sample_gray8_batches` below — both
-    real."""
-    raise NotImplementedError(
-        "compressed video (H.264/H.265) frame sampling requires "
-        "ffmpeg/opencv; MJPEG streams decode library-free via "
-        "split_mjpeg/sample_mjpeg_gray8"
-    )
 
 
 @_malformed_raises_value_error
@@ -1912,9 +1875,10 @@ def sample_mjpeg_gray8(
     data: bytes, every_n: int, decoder=None, on_error: str = "raise"
 ) -> list[tuple[int, int, int, bytes]]:
     """REAL library-free video sampling: split an MJPEG stream, keep
-    every `every_n`-th frame, and fully decode each kept frame with the
-    baseline JPEG codec (`decoder` defaults to the gray8 decoder; pass
-    `decode_jpeg_color` for color camera streams). Returns
+    every `every_n`-th frame, and fully decode each kept frame
+    (`decoder` defaults to `decode_jpeg_gray8`, which reads baseline
+    and progressive frames alike; pass `decode_jpeg_color` for color
+    camera streams). Returns
     [(frame_idx, width, height, pixels), ...] — the temporal-subsample
     + decode stage a video curation pipeline runs before feature
     extraction. See `_sample_decode_frames` for the per-frame
@@ -1929,8 +1893,8 @@ def sample_mjpeg_gray8(
 # plain tagged-chunk format (little-endian, even-padded), so a writer,
 # a structure prober, and a frame demuxer are all stdlib `struct`
 # work — composed with the real JPEG codec this gives a full
-# container-to-pixels video path; only inter-frame codecs (H.264+)
-# keep the demux-and-decode stub.
+# container-to-pixels video path; inter-frame codecs (H.264+) need a
+# codec library and are out of scope.
 
 
 def _riff_chunk(tag: bytes, body: bytes) -> bytes:
@@ -2081,8 +2045,9 @@ def sample_avi_mjpg_gray8(
 ) -> list[tuple[int, int, int, bytes]]:
     """Container-to-pixels video sampling, fully library-free: demux
     the AVI, keep every `every_n`-th frame, decode each kept frame
-    (`decoder` defaults to gray8; pass `decode_jpeg_color` for color
-    MJPG cameras). Same return shape and per-frame `on_error`
+    (`decoder` defaults to `decode_jpeg_gray8`, baseline or progressive
+    frames; pass `decode_jpeg_color` for color MJPG cameras). Same
+    return shape and per-frame `on_error`
     degradation contract as `sample_mjpeg_gray8`."""
     return _sample_decode_frames(
         demux_avi_mjpg(data), every_n, decoder or decode_jpeg_gray8, on_error
@@ -2110,8 +2075,8 @@ def frame_sample_gray8_batches(
 ) -> DataFrame:
     """REAL video frame sampling — keep every `every_n`-th frame of a raw
     gray8 frame stream (row-major w*h bytes per frame, frames
-    concatenated) via numpy strided slicing, no video library. Container
-    formats still need the stubbed demuxer first; this is the
+    concatenated) via numpy strided slicing, no video library. Compressed
+    containers need a library decoder first; this is the
     post-decode sampling stage, Arrow-batched, shuffle-free. Emits exact
     integer features (per-frame pixel sums) so a deterministic generator
     is closed-form verifiable.
@@ -2513,7 +2478,7 @@ PROBED_JPEG_SCHEMA = StructType(
 # reading mvhd gives brand, track count, timescale and duration with no
 # codec work at all — the standard "probe" pass a media pipeline runs
 # over every blob before deciding what to decode. Sample DECODE still
-# requires a codec library and stays stubbed (`frame_sample_stub`).
+# requires a codec library and is out of scope.
 
 _MP4_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
 
@@ -2856,7 +2821,7 @@ def _resize_batches(
 # chunk walk with CRC verification, one zlib inflate, then per-scanline
 # unfiltering (the five standard filters: None/Sub/Up/Average/Paeth,
 # with the bpp-back left neighbor for multi-byte pixels). This replaces
-# the image stub for PNG blobs; baseline JPEG has its own real codecs
+# an imaging library for PNG blobs; JPEG has its own real codec
 # further down.
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -3402,22 +3367,23 @@ def synth_square_wav(seed: int) -> bytes:
     return encode_wav_pcm16(samples, WAV_SAMPLE_RATE)
 
 
-def fake_image_codec(data: bytes) -> tuple[int, int, int]:
-    """Deterministic stand-in codec for tests: derives fake dimensions
-    from the byte content (stable, library-free)."""
-    if data is None or len(data) == 0:
-        return (0, 0, 0)
-    return (1 + data[0] % 64, 1 + data[-1] % 64, 3)
-
-
-# --- Baseline JPEG gray8 codec (pure numpy/stdlib) --------------------------
-# The last image format that was stub-only: baseline sequential JPEG for
-# single-component (grayscale) images, implemented from the public spec
-# (ITU T.81) — 2-D DCT as an 8x8 matrix product, Annex K quantization
-# and Huffman tables, canonical bit-level entropy coding with 0xFF00
-# stuffing. Lossy by design: the round-trip contract is dims exact +
-# bounded reconstruction error (quantization-table-bounded), which the
-# oracle-gated query enforces. Headers interoperate with `probe_jpeg`.
+# --- JPEG codec (ITU T.81, pure numpy/stdlib) --------------------------------
+# One frame-and-scan model for every JPEG this module writes or reads: a
+# frame of 1 (gray) or 3 (YCbCr) components with sampling factors up to
+# 2x2, carried either by one sequential scan (SOF0, optional DRI/RSTn
+# restart intervals) or by a progressive scan script (SOF2: spectral
+# selection, successive approximation, EOBn runs — Annex G). A
+# grayscale frame is simply a 1-component frame, and a 1-component scan
+# is non-interleaved: it covers the component's own block grid (A.2.2).
+# `_write_jpeg` emits any such frame from its components, tables and
+# scan script; `_read_jpeg` decodes any of them with one marker walk.
+# The 2-D DCT is an 8x8 matrix product, quantization and Huffman tables
+# are Annex K's, entropy coding is canonical bit-level Huffman with
+# 0xFF00 stuffing. Lossy by design: the round-trip contract is exact
+# dims + quantization-bounded error. A progressive stream carries the
+# sequential stream's quantized coefficients (only the transmission
+# order differs), so both decode to bitwise-equal pixels. Headers
+# interoperate with `probe_jpeg`.
 
 _JPEG_QTABLE = [
     16, 11, 10, 16, 24, 40, 51, 61,
@@ -3428,6 +3394,17 @@ _JPEG_QTABLE = [
     24, 35, 55, 64, 81, 104, 113, 92,
     49, 64, 78, 87, 103, 121, 120, 101,
     72, 92, 95, 98, 112, 100, 103, 99,
+]
+
+_JPEG_QTABLE_CHROMA = [
+    17, 18, 24, 47, 99, 99, 99, 99,
+    18, 21, 26, 66, 99, 99, 99, 99,
+    24, 26, 56, 99, 99, 99, 99, 99,
+    47, 66, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
 ]
 
 _ZIGZAG = [
@@ -3457,37 +3434,37 @@ _AC_VALUES = [
     0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
 
+_DC_BITS_CHROMA = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
+_DC_VALUES_CHROMA = list(range(12))
+_AC_BITS_CHROMA = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
+_AC_VALUES_CHROMA = [
+    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12, 0x41,
+    0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
+    0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15, 0x62, 0x72, 0xD1,
+    0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
+    0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44,
+    0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
+    0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74,
+    0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
+    0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A,
+    0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
+    0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
+    0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
+    0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2, 0xF3, 0xF4,
+    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
+]
 
-#: r18: every encoder/decoder call rebuilt its Huffman code tables,
-#: decode LUTs and the DCT basis from the same module constants (or, for
-#: MJPEG/AVI, from identical per-frame DHT bytes) — ~10% of the JPEG
-#: family's per-doc CPU in cProfile. The builders are pure functions of
-#: their byte inputs, so the memo returns the identical object with the
-#: identical contents; emitted bits cannot change.
-_HUFF_CODES_CACHE: dict = {}
-_HUFF_LUT_CACHE: dict = {}
+#: AC Huffman table for the progressive scans: the sequential Annex K
+#: table has no codes for the EOBn symbols (0x10..0xE0), so progressive
+#: encoders ship their own. This one covers the ENTIRE symbol alphabet
+#: canonically — 128 symbols at 8 bits + 128 at 9 bits (Kraft sum 0.75,
+#: valid DHT) — trading compression for a table that can express every
+#: run/size, ZRL and EOBn combination.
+_AC_BITS_PROG = [0, 0, 0, 0, 0, 0, 0, 128, 128, 0, 0, 0, 0, 0, 0, 0]
+_AC_VALUES_PROG = list(range(256))
 
-
-def _huff_codes(bits: list[int], values: list[int]) -> dict[int, tuple[int, int]]:
-    """Canonical Huffman: symbol -> (code_length, code). Memoized on the
-    (bits, values) spec — callers treat the table as read-only."""
-    key = (bytes(bits), bytes(values))
-    cached = _HUFF_CODES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[values[k]] = (length, code)
-            code += 1
-            k += 1
-        code <<= 1
-    if len(_HUFF_CODES_CACHE) >= 64:
-        _HUFF_CODES_CACHE.clear()
-    _HUFF_CODES_CACHE[key] = out
-    return out
+#: chroma subsampling modes -> (horizontal, vertical) luma sampling factors
+_JPEG_SUBSAMPLE = {"444": (1, 1), "422": (2, 1), "420": (2, 2)}
 
 
 class _HuffLUT:
@@ -3496,44 +3473,51 @@ class _HuffLUT:
     length <= 8 in one lookup; longer codes fall back to the
     (length, code) bit-walk, which also owns the malformed-stream
     errors. Valid because no Huffman code is a prefix of another.
-
-    r18: LUT entries are packed ints `(sym << 4) | length` with -1 for
-    "no short code" (lengths here are <= 8, symbols <= 255) — the old
-    (sym, length) tuples cost an allocation-free but measurable unpack
-    per symbol in `_read_symbol`, the decode profile's hottest frame."""
+    LUT entries are packed ints `(sym << 4) | length`, -1 for "no short
+    code" — one int per symbol is the cheapest unpack in `_read_symbol`,
+    the decode profile's hottest frame. Read-only: every decode of the
+    same DHT spec shares one instance."""
 
     __slots__ = ("table", "lut")
 
-    def __init__(self, table: dict[tuple[int, int], int]):
-        self.table = table
-        self.lut: list = [-1] * 256
-        for (ln, code), sym in table.items():
-            if ln <= 8:
-                base = code << (8 - ln)
-                entry = (sym << 4) | ln
-                for lo in range(1 << (8 - ln)):
-                    self.lut[base | lo] = entry
+    def __init__(self, table: dict[tuple[int, int], int], lut: list[int]):
+        object.__setattr__(self, "table", MappingProxyType(table))  # (length, code) -> sym
+        object.__setattr__(self, "lut", tuple(lut))
+
+    def __setattr__(self, name, value):
+        raise AttributeError("shared Huffman tables are read-only")
 
 
-def _huff_decode_table(bits: list[int], values: list[int]) -> _HuffLUT:
-    key = (bytes(bits), bytes(values))
-    cached = _HUFF_LUT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    lut = _HuffLUT({lc: sym for sym, lc in _huff_codes(bits, values).items()})
-    if len(_HUFF_LUT_CACHE) >= 64:
-        _HUFF_LUT_CACHE.clear()
-    _HUFF_LUT_CACHE[key] = lut
-    return lut
+@lru_cache(maxsize=64)
+def _huff_tables(bits: bytes, values: bytes) -> tuple[tuple, _HuffLUT]:
+    """Canonical Huffman tables of one DHT spec (T.81 C.2): the
+    encoder's symbol -> (code_length, code) table (a 256-entry tuple,
+    None for symbols without a code) and the decoder's LUT. Memoized on
+    the spec bytes: every call with the Annex K tables (and every
+    MJPEG/AVI frame's identical DHT bytes) shares one build, and LRU
+    eviction drops one cold spec at a time, never the hot ones. The
+    tables are read-only because all callers share them."""
+    codes: list = [None] * 256
+    code = 0
+    k = 0
+    for length in range(1, 17):
+        for _ in range(bits[length - 1]):
+            codes[values[k]] = (length, code)  # a repeated symbol keeps its last code
+            code += 1
+            k += 1
+        code <<= 1
+    coded = [(sym, lc) for sym, lc in enumerate(codes) if lc]
+    lut = [-1] * 256
+    for sym, (ln, code) in coded:
+        if ln <= 8:
+            base = code << (8 - ln)
+            for lo in range(1 << (8 - ln)):
+                lut[base | lo] = (sym << 4) | ln
+    return tuple(codes), _HuffLUT({lc: sym for sym, lc in coded}, lut)
 
 
-_DCT_MATRIX_CACHE = None
-
-
+@lru_cache(maxsize=1)
 def _dct_matrix():
-    global _DCT_MATRIX_CACHE
-    if _DCT_MATRIX_CACHE is not None:
-        return _DCT_MATRIX_CACHE
     import math
 
     import numpy as np
@@ -3544,7 +3528,6 @@ def _dct_matrix():
         for n in range(8):
             d[k, n] = c * math.cos((2 * n + 1) * k * math.pi / 16)
     d.setflags(write=False)  # shared across calls — callers only read it
-    _DCT_MATRIX_CACHE = d
     return d
 
 
@@ -3582,10 +3565,6 @@ class _BitWriter:
         return bytes(self.out)
 
 
-def _category(v: int) -> int:
-    return 0 if v == 0 else v.bit_length() if v > 0 else (-v).bit_length()
-
-
 def _dct_quant_plane(plane, q, d):
     """Vectorized forward-DCT + quantize + zigzag for EVERY 8x8 block of
     a plane (dims multiples of 8) in one einsum — the per-block Python
@@ -3618,19 +3597,51 @@ def _idct_blocks(zzarr, q, d):
     return np.einsum("ji,njk,kl->nil", d, mats, d) + 128.0
 
 
-def _entropy_encode_block(w, zz, dc_codes, ac_codes, prev_dc: int) -> int:
-    """Huffman entropy coding of ONE pre-quantized zigzag block;
-    returns the new DC predictor. Shared by the gray and color
-    encoders so their entropy coding cannot drift apart.
+def _scan_order(comps, width, height, scan):
+    """The blocks of one scan (T.81 A.2) in transmission order, as
+    (component index, block index in that component's MCU-padded raster
+    grid), and the number of blocks per MCU. `comps` holds (id, h, v,
+    ...) per frame component and `scan` the indices of the scan's
+    components. An interleaved scan walks the frame's MCUs, each holding
+    h x v blocks of every scan component in scan order; a 1-component
+    scan walks that component's own block grid, computed from its sample
+    dims (A.2.2) — a subgrid of the padded one — one block per MCU."""
 
-    r17 hot-loop shape (identical emitted bits): the block converts to
-    a plain int list once (numpy scalar indexing was the profile's top
-    cost), the category is computed inline via bit_length, and each
-    (huffman code, magnitude) pair is emitted as ONE concatenated
+    def ceil(a, b):
+        return -(-a // b)
+
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    mcus_x = ceil(width, 8 * hmax)
+    layout = [(ci, comps[ci][1], comps[ci][2]) for ci in scan]
+    if len(layout) == 1:
+        ((ci, h, v),) = layout
+        order = [
+            (ci, y * mcus_x * h + x)
+            for y in range(ceil(ceil(height * v, vmax), 8))
+            for x in range(ceil(ceil(width * h, hmax), 8))
+        ]
+        return order, 1
+    order = [
+        (ci, (my * v + dy) * mcus_x * h + mx * h + dx)
+        for my in range(ceil(height, 8 * vmax))
+        for mx in range(mcus_x)
+        for ci, h, v in layout
+        for dy in range(v)
+        for dx in range(h)
+    ]
+    return order, sum(h * v for _, h, v in layout)
+
+
+def _entropy_encode_block(w, zz, dc_codes, ac_codes, prev_dc: int) -> int:
+    """Huffman entropy coding of ONE quantized zigzag block of a
+    sequential scan; returns the new DC predictor.
+
+    Hot-loop shape: the category is computed inline via bit_length, and
+    each (huffman code, magnitude) pair is emitted as ONE concatenated
     `put` — (code << s) | mag over ln + s bits IS the two back-to-back
     puts, bit for bit."""
-    zzl = zz.tolist() if not isinstance(zz, list) else zz
-    dc = zzl[0]
+    dc = zz[0]
     diff = dc - prev_dc
     s = diff.bit_length() if diff >= 0 else (-diff).bit_length()
     ln, code = dc_codes[s]
@@ -3641,11 +3652,11 @@ def _entropy_encode_block(w, zz, dc_codes, ac_codes, prev_dc: int) -> int:
     run = 0
     last_nz = 0
     for i in range(63, 0, -1):
-        if zzl[i]:
+        if zz[i]:
             last_nz = i
             break
     for i in range(1, last_nz + 1):
-        v = zzl[i]
+        v = zz[i]
         if v == 0:
             run += 1
             continue
@@ -3661,6 +3672,354 @@ def _entropy_encode_block(w, zz, dc_codes, ac_codes, prev_dc: int) -> int:
         ln, code = ac_codes[0x00]  # EOB
         w.put(code, ln)
     return dc
+
+
+def _put_pend(w, pend: list[int]) -> None:
+    """Emit buffered correction bits as ONE put (first bit most
+    significant — identical to the bit-at-a-time sequence)."""
+    if pend:
+        v = 0
+        for b in pend:
+            v = (v << 1) | b
+        w.put(v, len(pend))
+        pend.clear()
+
+
+def _flush_eobrun(w, ac_codes, eobrun: int, pend: list[int]) -> int:
+    """Emit a pending end-of-band run (EOBn symbol + length extension
+    bits) followed by any buffered correction bits; returns 0."""
+    if eobrun:
+        rr = eobrun.bit_length() - 1
+        ln, code = ac_codes[rr << 4]
+        w.put(code, ln)
+        if rr:
+            w.put(eobrun - (1 << rr), rr)
+        _put_pend(w, pend)
+    return 0
+
+
+def _encode_ac_first(w, blocks, ss: int, se: int, al: int, ac_codes) -> None:
+    """AC first scan for band [ss..se] at point transform al (G.1.2.2):
+    sequential-style run/size coding of the point-transformed
+    coefficients, with EOB generalized to EOBn runs across blocks. The
+    whole scan's point transform (divide by 2^al rounding toward zero)
+    runs as ONE vectorized int64 pass."""
+    import numpy as np
+
+    band = np.asarray(blocks)[:, ss : se + 1]
+    t_rows = np.where(band >= 0, band >> al, -((-band) >> al)).tolist()
+    eobrun = 0
+    for t in t_rows:
+        nz = [i for i, v in enumerate(t) if v]
+        if not nz:
+            eobrun += 1
+            if eobrun == 0x7FFF:
+                eobrun = _flush_eobrun(w, ac_codes, eobrun, [])
+            continue
+        eobrun = _flush_eobrun(w, ac_codes, eobrun, [])
+        run = 0
+        for i in range(nz[-1] + 1):
+            v = t[i]
+            if v == 0:
+                run += 1
+                continue
+            while run > 15:
+                ln, code = ac_codes[0xF0]
+                w.put(code, ln)
+                run -= 16
+            s = v.bit_length() if v > 0 else (-v).bit_length()
+            ln, code = ac_codes[(run << 4) | s]
+            w.put(code, ln)
+            w.put(v if v > 0 else v + (1 << s) - 1, s)
+            run = 0
+        if nz[-1] < se - ss:
+            eobrun = 1
+    _flush_eobrun(w, ac_codes, eobrun, [])
+
+
+def _encode_ac_refine(w, blocks, ss: int, se: int, al: int, ac_codes) -> None:
+    """AC refinement scan (G.1.2.3): newly-significant coefficients are
+    coded as run/1 + sign, correction bits for already-nonzero
+    coefficients are buffered and appended after the next emitted
+    symbol (including across EOBn runs)."""
+    import numpy as np
+
+    band = np.asarray(blocks)[:, ss : se + 1]
+    absv_rows = (np.abs(band) >> al).tolist()
+    pos_rows = (band > 0).tolist()  # sign source for newly-significant bits
+    eobrun = 0
+    pend: list[int] = []
+    for bi, absv in enumerate(absv_rows):
+        newly = [i for i, a in enumerate(absv) if a == 1]
+        if not newly:
+            # only correction bits (if any) — the block joins the EOB run
+            pend.extend(a & 1 for a in absv if a > 1)
+            eobrun += 1
+            if eobrun == 0x7FFF:
+                eobrun = _flush_eobrun(w, ac_codes, eobrun, pend)
+            continue
+        eobrun = _flush_eobrun(w, ac_codes, eobrun, pend)
+        run = 0
+        last_new = newly[-1]
+        for i, a in enumerate(absv):
+            if i > last_new:
+                break
+            if a == 0:
+                run += 1
+                continue
+            # ZRL must fire at ANY nonzero position once the
+            # zero-history run exceeds 15 — including already-nonzero
+            # correction positions — or the decoder's ZRL advance
+            # consumes a different set of buffered correction bits
+            # than the encoder attached (jpeglib's `r > 15 && k <= EOB`;
+            # the i <= last_new bound makes the EOB guard implicit,
+            # and runs in the tail fold into the EOB below)
+            while run > 15:
+                ln, code = ac_codes[0xF0]
+                w.put(code, ln)
+                run -= 16
+                _put_pend(w, pend)
+            if a > 1:
+                pend.append(a & 1)
+                continue
+            ln, code = ac_codes[(run << 4) | 1]
+            w.put(code, ln)
+            w.put(1 if pos_rows[bi][i] else 0, 1)
+            _put_pend(w, pend)
+            run = 0
+        # any tail beyond the last newly-significant coefficient —
+        # zero-history runs AND already-nonzero correction bits alike —
+        # must close with an EOB, or the decoder would read the next
+        # block's symbol while still inside this band
+        if last_new < se - ss:
+            pend.extend(a & 1 for a in absv[last_new + 1 :] if a > 1)
+            eobrun = 1
+    _flush_eobrun(w, ac_codes, eobrun, pend)
+
+
+def _write_jpeg(width, height, comps, qtables, htables, scans, restart_interval=0):
+    """The one JPEG frame writer. `comps` holds per frame component
+    (id, h, v, quant table id, DC table id, AC table id, zigzag block
+    grid over the MCU-padded plane); `qtables` the quant tables in
+    natural order, written as DQT ids 0, 1, ...; `htables` the Huffman
+    specs (Tc << 4 | Th, BITS, HUFFVAL) in DHT order; `scans` the scan
+    script, one (component indices, Ss, Se, Ah, Al) per scan. A script
+    of one full-band (0, 63, 0, 0) scan is a baseline SOF0 frame (with
+    DRI and RSTn markers every `restart_interval` MCUs when > 0); any
+    other script is a progressive SOF2 frame. Table selectors a scan
+    does not use are written as 0 (B.2.3)."""
+    import struct as _s
+
+    def seg(marker: int, payload: bytes) -> bytes:
+        return _s.pack(">HH", marker, len(payload) + 2) + payload
+
+    progressive = any(s[1:] != (0, 63, 0, 0) for s in scans)
+    codes = {tcth: _huff_tables(bytes(b), bytes(v))[0] for tcth, b, v in htables}
+    out = bytearray(b"\xff\xd8")
+    out += seg(
+        0xFFDB,
+        b"".join(
+            bytes([tq]) + bytes(q[_ZIGZAG[k]] for k in range(64))
+            for tq, q in enumerate(qtables)
+        ),
+    )
+    out += seg(
+        0xFFC2 if progressive else 0xFFC0,
+        _s.pack(">BHHB", 8, height, width, len(comps))
+        + bytes(x for c in comps for x in (c[0], (c[1] << 4) | c[2], c[3])),
+    )
+    out += seg(
+        0xFFC4, b"".join(bytes([tcth]) + bytes(b) + bytes(v) for tcth, b, v in htables)
+    )
+    if restart_interval:
+        out += seg(0xFFDD, _s.pack(">H", restart_interval))
+    flat = [c[6].reshape(-1, 64) for c in comps]
+    dcs = [f[:, 0].tolist() for f in flat]
+    orders = {}  # scan components -> block order; scripts repeat them
+    for scan, ss, se, ah, al in scans:
+        header = [len(scan)]
+        for ci in scan:
+            td, ta = comps[ci][4:6]
+            header += [comps[ci][0], ((td << 4) if ss == 0 else 0) | (ta if se else 0)]
+        out += seg(0xFFDA, bytes(header + [ss, se, (ah << 4) | al]))
+        w = _BitWriter()
+        if scan not in orders:
+            orders[scan] = _scan_order(comps, width, height, scan)
+        order, per_mcu = orders[scan]
+        if ss == 0 and se == 63:  # sequential: every band of every block
+            blocks = [f.tolist() for f in flat]
+            dc_codes = [codes[c[4]] for c in comps]
+            ac_codes = [codes[0x10 | c[5]] for c in comps]
+            prev = [0] * len(comps)
+            interval = restart_interval * per_mcu  # blocks between RSTn
+            for k, (ci, bi) in enumerate(order):
+                if interval and k and k % interval == 0:
+                    w.raw(bytes([0xFF, 0xD0 + (k // interval - 1) % 8]))
+                    prev = [0] * len(comps)
+                prev[ci] = _entropy_encode_block(
+                    w, blocks[ci][bi], dc_codes[ci], ac_codes[ci], prev[ci]
+                )
+        elif ss == 0 and ah:  # progressive DC refinement: bit Al of each DC
+            for ci, bi in order:
+                w.put((dcs[ci][bi] >> al) & 1, 1)
+        elif ss == 0:  # progressive DC first: Al-shifted differences
+            dc_codes = [codes[c[4]] for c in comps]
+            prev = [0] * len(comps)
+            for ci, bi in order:
+                v = dcs[ci][bi] >> al  # arithmetic shift per G.1.2.1
+                diff = v - prev[ci]
+                prev[ci] = v
+                s = diff.bit_length() if diff >= 0 else (-diff).bit_length()
+                ln, code = dc_codes[ci][s]
+                w.put(code, ln)
+                if s:
+                    w.put(diff if diff > 0 else diff + (1 << s) - 1, s)
+        else:  # progressive AC band of one component
+            ci = scan[0]
+            blocks = flat[ci][[bi for _, bi in order]]
+            encode = _encode_ac_refine if ah else _encode_ac_first
+            encode(w, blocks, ss, se, al, codes[0x10 | comps[ci][5]])
+        out += w.flush()
+    out += b"\xff\xd9"
+    return bytes(out)
+
+
+def _quant_planes(width, height, pixels, subsample=None):
+    """Plane preparation shared by every encoder: one gray plane, or
+    (`subsample` given) JFIF RGB->YCbCr with chroma mean-subsampled per
+    mode; MCU-aligned edge padding; vectorized DCT+quantize per plane.
+    Returns (hs, vs, [zigzag block grid per component]) — every
+    encoding of an image transmits these same coefficients, which is
+    what makes progressive and sequential streams decode to
+    bitwise-equal pixels."""
+    import numpy as np
+
+    if subsample is None:
+        hs, vs, channels = 1, 1, 1
+    elif subsample in _JPEG_SUBSAMPLE:
+        (hs, vs), channels = _JPEG_SUBSAMPLE[subsample], 3
+    else:
+        raise ValueError(f"subsample must be one of {sorted(_JPEG_SUBSAMPLE)}")
+    if len(pixels) != width * height * channels:
+        raise ValueError("pixel buffer does not match dims")
+    img = (
+        np.frombuffer(bytes(pixels), dtype=np.uint8)
+        .reshape(height, width, channels)
+        .astype(np.float64)
+    )
+    mw, mh = 8 * hs, 8 * vs  # MCU pixel dims
+    ph = (height + mh - 1) // mh * mh
+    pw = (width + mw - 1) // mw * mw
+    pad = ((0, ph - height), (0, pw - width))
+    d = _dct_matrix()
+    ql = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
+    if channels == 1:
+        return hs, vs, [_dct_quant_plane(np.pad(img[..., 0], pad, mode="edge"), ql, d)]
+    R, G, B = img[..., 0], img[..., 1], img[..., 2]
+    # JFIF color transform; planes kept in 0..255 space (the shared
+    # block codec level-shifts by 128 itself)
+    Y = 0.299 * R + 0.587 * G + 0.114 * B
+    Cb = 128.0 - 0.168736 * R - 0.331264 * G + 0.5 * B
+    Cr = 128.0 + 0.5 * R - 0.418688 * G - 0.081312 * B
+
+    def _sub(plane):
+        # mean over each (vs x hs) luma patch -> one chroma sample
+        p = np.pad(plane, pad, mode="edge")
+        return p.reshape(ph // vs, vs, pw // hs, hs).mean(axis=(1, 3))
+
+    Cbs, Crs = _sub(Cb), _sub(Cr)
+    qc = np.array(_JPEG_QTABLE_CHROMA, dtype=np.float64).reshape(8, 8)
+    # Cb and Cr share dims and quant table, so one vstacked
+    # _dct_quant_plane call covers both (the DCT einsum is per-8x8-block
+    # independent and the chroma height is a multiple of 8, so every
+    # block's float ops are unchanged)
+    zzCbCr = _dct_quant_plane(np.concatenate([Cbs, Crs], axis=0), qc, d)
+    nrows = Cbs.shape[0] // 8
+    zzY = _dct_quant_plane(np.pad(Y, pad, mode="edge"), ql, d)
+    return hs, vs, [zzY, zzCbCr[:nrows], zzCbCr[nrows:]]
+
+
+_GRAY_HUFF = [(0x00, _DC_BITS, _DC_VALUES), (0x10, _AC_BITS, _AC_VALUES)]
+_COLOR_HUFF = _GRAY_HUFF + [
+    (0x01, _DC_BITS_CHROMA, _DC_VALUES_CHROMA),
+    (0x11, _AC_BITS_CHROMA, _AC_VALUES_CHROMA),
+]
+
+
+def encode_jpeg_gray8(
+    width: int, height: int, pixels: bytes, restart_interval: int = 0
+) -> bytes:
+    """Baseline sequential JPEG, one grayscale component, no
+    subsampling, Annex K tables. Deterministic: same pixels -> same
+    bytes. `restart_interval` > 0 emits a DRI segment and RSTn markers
+    every N MCUs (byte-aligned, DC predictor reset) — the error-
+    resilience feature most camera JPEGs carry."""
+    _, _, (zz,) = _quant_planes(width, height, pixels)
+    return _write_jpeg(
+        width, height, [(1, 1, 1, 0, 0, 0, zz)], [_JPEG_QTABLE], _GRAY_HUFF,
+        [((0,), 0, 63, 0, 0)], restart_interval,
+    )
+
+
+def encode_jpeg_gray8_progressive(width: int, height: int, pixels: bytes) -> bytes:
+    """Progressive (SOF2) gray JPEG: the baseline encoder's coefficients
+    transmitted as six scans exercising the full progressive feature
+    set — DC first (Al=1), AC first for bands 1-5 and 6-63 (Al=1, EOBn
+    runs), DC refinement, and AC refinement for both bands (correction
+    bits). Decodes to pixels BITWISE-IDENTICAL to the baseline encoding
+    of the same image (property-tested)."""
+    _, _, (zz,) = _quant_planes(width, height, pixels)
+    return _write_jpeg(
+        width, height, [(1, 1, 1, 0, 0, 0, zz)], [_JPEG_QTABLE],
+        [(0x00, _DC_BITS, _DC_VALUES), (0x10, _AC_BITS_PROG, _AC_VALUES_PROG)],
+        [((0,), ss, se, ah, al)
+         for ah, al in ((0, 1), (1, 0)) for ss, se in ((0, 0), (1, 5), (6, 63))],
+    )
+
+
+def encode_jpeg_color(
+    width: int,
+    height: int,
+    rgb: bytes,
+    restart_interval: int = 0,
+    subsample: str = "420",
+) -> bytes:
+    """Baseline sequential COLOR JPEG: JFIF YCbCr transform, chroma
+    subsampling per `subsample` ("420" default — 2x2 mean; "422" —
+    horizontal 2:1; "444" — full-resolution chroma; anything else
+    raises ValueError), interleaved MCUs with the luma block(s) then Cb
+    then Cr, Annex K luma+chroma tables. Deterministic: same pixels ->
+    same bytes. `restart_interval` > 0 emits DRI/RSTn every N MCUs with
+    all three DC predictors reset."""
+    hs, vs, (zzY, zzCb, zzCr) = _quant_planes(width, height, rgb, subsample)
+    comps = [(1, hs, vs, 0, 0, 0, zzY), (2, 1, 1, 1, 1, 1, zzCb), (3, 1, 1, 1, 1, 1, zzCr)]
+    return _write_jpeg(
+        width, height, comps, [_JPEG_QTABLE, _JPEG_QTABLE_CHROMA], _COLOR_HUFF,
+        [((0, 1, 2), 0, 63, 0, 0)], restart_interval,
+    )
+
+
+def encode_jpeg_color_progressive(
+    width: int, height: int, rgb: bytes, subsample: str = "420"
+) -> bytes:
+    """Progressive (SOF2) COLOR JPEG: the sequential color encoder's
+    exact coefficient planes transmitted as 8 scans — interleaved DC
+    first (Al=1) + DC refinement over all three components in MCU
+    order, then per-component AC first/refinement pairs for band 1-63
+    with EOBn runs over each component's own block grid. Pixels decode
+    bitwise-equal to the sequential stream's (property-tested)."""
+    hs, vs, (zzY, zzCb, zzCr) = _quant_planes(width, height, rgb, subsample)
+    comps = [(1, hs, vs, 0, 0, 0, zzY), (2, 1, 1, 1, 1, 0, zzCb), (3, 1, 1, 1, 1, 0, zzCr)]
+    return _write_jpeg(
+        width, height, comps, [_JPEG_QTABLE, _JPEG_QTABLE_CHROMA],
+        [
+            (0x00, _DC_BITS, _DC_VALUES),
+            (0x01, _DC_BITS_CHROMA, _DC_VALUES_CHROMA),
+            (0x10, _AC_BITS_PROG, _AC_VALUES_PROG),
+        ],
+        [((0, 1, 2), 0, 0, 0, 1), ((0, 1, 2), 0, 0, 1, 0)]
+        + [((ci,), 1, 63, ah, al) for ci in range(3) for ah, al in ((0, 1), (1, 0))],
+    )
 
 
 def _read_symbol(r, t: _HuffLUT) -> int:
@@ -3691,84 +4050,6 @@ def _read_symbol(r, t: _HuffLUT) -> int:
             return table[(length, code)]
     raise ValueError("invalid Huffman code")
 
-
-def _entropy_decode_block(r, dct, act, prev_dc: int):
-    """Huffman entropy-decode ONE block to its zigzag coefficient list;
-    returns (zz list of 64 ints, new DC predictor). Dequantize + IDCT
-    happen vectorized afterwards (`_idct_blocks`). Shared by the gray
-    and color decoders."""
-    zz = [0] * 64
-    s = _read_symbol(r, dct)
-    diff = _extend(r.bits(s), s) if s else 0
-    prev_dc += diff
-    zz[0] = prev_dc
-    k = 1
-    while k < 64:
-        sym = _read_symbol(r, act)
-        if sym == 0x00:  # EOB
-            break
-        run, size = sym >> 4, sym & 0x0F
-        if sym == 0xF0:  # ZRL
-            k += 16
-            continue
-        k += run
-        if k > 63:
-            raise ValueError("AC run overflows block")
-        zz[k] = _extend(r.bits(size), size)
-        k += 1
-    return zz, prev_dc
-
-
-def encode_jpeg_gray8(
-    width: int, height: int, pixels: bytes, restart_interval: int = 0
-) -> bytes:
-    """Baseline sequential JPEG, one grayscale component, no
-    subsampling, Annex K tables. Deterministic: same pixels -> same
-    bytes. `restart_interval` > 0 emits a DRI segment and RSTn markers
-    every N MCUs (byte-aligned, DC predictor reset) — the error-
-    resilience feature most camera JPEGs carry."""
-    import struct as _s
-
-    import numpy as np
-
-    if len(pixels) != width * height:
-        raise ValueError("pixel buffer does not match dims")
-    img = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(height, width)
-    ph = (height + 7) // 8 * 8
-    pw = (width + 7) // 8 * 8
-    padded = np.pad(img, ((0, ph - height), (0, pw - width)), mode="edge").astype(
-        np.float64
-    )
-    d = _dct_matrix()
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    dc_codes = _huff_codes(_DC_BITS, _DC_VALUES)
-    ac_codes = _huff_codes(_AC_BITS, _AC_VALUES)
-    zzp = _dct_quant_plane(padded, q, d)
-    w = _BitWriter()
-    prev_dc = 0
-    mcu = 0
-    for by in range(ph // 8):
-        for bx in range(pw // 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.raw(bytes([0xFF, 0xD0 + (mcu // restart_interval - 1) % 8]))
-                prev_dc = 0
-            mcu += 1
-            prev_dc = _entropy_encode_block(w, zzp[by, bx], dc_codes, ac_codes, prev_dc)
-    entropy = w.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return _s.pack(">HH", marker, len(payload) + 2) + payload
-
-    dqt = seg(0xFFDB, bytes([0]) + bytes(_JPEG_QTABLE[_ZIGZAG[i]] for i in range(64)))
-    sof = seg(0xFFC0, _s.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    dht = seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALUES)
-        + bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALUES),
-    )
-    sos = seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    dri = seg(0xFFDD, _s.pack(">H", restart_interval)) if restart_interval else b""
-    return b"\xff\xd8" + dqt + sof + dht + dri + sos + entropy + b"\xff\xd9"
 
 
 class _BitReader:
@@ -3892,331 +4173,6 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-@_malformed_raises_value_error
-def decode_jpeg_gray8(data: bytes) -> tuple[int, int, bytes]:
-    """Decode a baseline single-component JPEG back to (width, height,
-    gray8 pixels). Accepts exactly the streams `encode_jpeg_gray8`
-    produces plus any spec-conforming baseline gray JPEG without
-    restart markers. Raises ValueError on anything malformed."""
-    import struct as _s
-
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    i = 2
-    qtab: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    dc_id = ac_id = 0
-    entropy_start = None
-    restart_interval = 0
-    while i < len(data):
-        if i + 2 > len(data):
-            raise ValueError("truncated JPEG (marker cut off)")
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at {i}")
-        m = data[i + 1]
-        if m == 0xD9:
-            break
-        if i + 4 > len(data):
-            raise ValueError("truncated JPEG (segment length cut off)")
-        length = _s.unpack_from(">H", data, i + 2)[0]
-        if i + 2 + length > len(data):
-            raise ValueError("truncated JPEG (segment body cut off)")
-        body = data[i + 4 : i + 2 + length]
-        if m == 0xDB:
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                zz = list(body[j + 1 : j + 65])
-                tab = [0] * 64
-                for k in range(64):
-                    tab[_ZIGZAG[k]] = zz[k]
-                qtab[tq] = tab
-                j += 65
-        elif m == 0xC0:
-            height, width = _s.unpack_from(">HH", body, 1)
-            ncomp = body[5]
-            if ncomp != 1:
-                raise ValueError("only single-component (gray) JPEG supported")
-            qtab_id = body[8]
-        elif m in (0xC1, 0xC2, 0xC3):
-            raise ValueError("only baseline sequential (SOF0) supported")
-        elif m == 0xC4:
-            j = 0
-            while j < len(body):
-                tc, th = body[j] >> 4, body[j] & 0x0F
-                bits = list(body[j + 1 : j + 17])
-                n = sum(bits)
-                values = list(body[j + 17 : j + 17 + n])
-                huff[(tc, th)] = _huff_decode_table(bits, values)
-                j += 17 + n
-        elif m == 0xDA:
-            dc_id, ac_id = body[2] >> 4, body[2] & 0x0F
-            entropy_start = i + 2 + length
-            break
-        elif m == 0xDD:
-            restart_interval = _s.unpack_from(">H", body, 0)[0]
-        i += 2 + length
-    if width is None or entropy_start is None:
-        raise ValueError("missing SOF/SOS")
-    end = data.rfind(b"\xff\xd9")
-    if end < 0:
-        raise ValueError("missing EOI")
-    r = _BitReader(data[entropy_start:end])
-    dct = huff[(0, dc_id)]
-    act = huff[(1, ac_id)]
-    d = _dct_matrix()
-    q = np.array(qtab[qtab_id], dtype=np.float64).reshape(8, 8)
-    ph = (height + 7) // 8 * 8
-    pw = (width + 7) // 8 * 8
-    prev_dc = 0
-    mcu = 0
-    zzs = []
-    for _ in range((ph // 8) * (pw // 8)):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            r.expect_restart()
-            prev_dc = 0
-        mcu += 1
-        zz, prev_dc = _entropy_decode_block(r, dct, act, prev_dc)
-        zzs.append(zz)
-    blocks = _idct_blocks(zzs, q, d)  # (n, 8, 8), row-major block order
-    out = (
-        blocks.reshape(ph // 8, pw // 8, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(ph, pw)
-    )
-    pixels = np.clip(np.rint(out[:height, :width]), 0, 255).astype(np.uint8)
-    return width, height, pixels.tobytes()
-
-
-# --- PROGRESSIVE (SOF2) gray JPEG codec -------------------------------------
-# Spectral selection + successive approximation + EOBRUN (ITU T.81
-# Annex G), pure stdlib/numpy on top of the baseline entropy layer.
-# The quantized coefficients of a progressive stream are IDENTICAL to
-# the sequential encoding of the same image — progressive only changes
-# the transmission order — so the decoder is verified by bitwise
-# equality against the baseline decoder's pixels (no tolerance).
-
-
-#: AC Huffman table for the progressive scans: the sequential Annex K
-#: table has no codes for the EOBn symbols (0x10..0xE0), so progressive
-#: encoders ship their own. This one covers the ENTIRE symbol alphabet
-#: canonically — 128 symbols at 8 bits + 128 at 9 bits (Kraft sum 0.75,
-#: valid DHT) — trading compression for a table that can express every
-#: run/size, ZRL and EOBn combination.
-_AC_BITS_PROG = [0, 0, 0, 0, 0, 0, 0, 128, 128, 0, 0, 0, 0, 0, 0, 0]
-_AC_VALUES_PROG = list(range(256))
-
-
-def _pt_ac(v: int, al: int) -> int:
-    """AC point transform: divide by 2^Al rounding toward zero
-    (T.81 G.1.2.2; DC uses the arithmetic shift instead)."""
-    return v >> al if v >= 0 else -((-v) >> al)
-
-
-def _put_pend(w, pend: list[int]) -> None:
-    """Emit buffered correction bits as ONE put (first bit most
-    significant — identical to the bit-at-a-time sequence)."""
-    if pend:
-        v = 0
-        for b in pend:
-            v = (v << 1) | b
-        w.put(v, len(pend))
-        pend.clear()
-
-
-def _flush_eobrun(w, ac_codes, eobrun: int, pend: list[int]) -> int:
-    """Emit a pending end-of-band run (EOBn symbol + length extension
-    bits) followed by any buffered correction bits; returns 0."""
-    if eobrun:
-        rr = eobrun.bit_length() - 1
-        ln, code = ac_codes[rr << 4]
-        w.put(code, ln)
-        if rr:
-            w.put(eobrun - (1 << rr), rr)
-        _put_pend(w, pend)
-    return 0
-
-
-def _encode_ac_first(w, blocks, ss: int, se: int, al: int, ac_codes) -> None:
-    """AC first scan for band [ss..se] at point transform al (G.1.2.2):
-    sequential-style run/size coding of the point-transformed
-    coefficients, with EOB generalized to EOBn runs across blocks.
-
-    r18: the whole scan's point transform runs as ONE vectorized int64
-    pass (the per-coefficient `_pt_ac(int(blk[k]))` listcomp over numpy
-    scalars was a top-4 profile frame); `v >> al` on int64 is the same
-    arithmetic shift, so the transformed values are exactly `_pt_ac`'s."""
-    import numpy as np
-
-    band = np.asarray(blocks)[:, ss : se + 1]
-    t_rows = np.where(band >= 0, band >> al, -((-band) >> al)).tolist()
-    eobrun = 0
-    for t in t_rows:
-        nz = [i for i, v in enumerate(t) if v]
-        if not nz:
-            eobrun += 1
-            if eobrun == 0x7FFF:
-                eobrun = _flush_eobrun(w, ac_codes, eobrun, [])
-            continue
-        eobrun = _flush_eobrun(w, ac_codes, eobrun, [])
-        run = 0
-        for i in range(nz[-1] + 1):
-            v = t[i]
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                ln, code = ac_codes[0xF0]
-                w.put(code, ln)
-                run -= 16
-            s = v.bit_length() if v > 0 else (-v).bit_length()
-            ln, code = ac_codes[(run << 4) | s]
-            w.put(code, ln)
-            w.put(v if v > 0 else v + (1 << s) - 1, s)
-            run = 0
-        if nz[-1] < se - ss:
-            eobrun = 1
-    _flush_eobrun(w, ac_codes, eobrun, [])
-
-
-def _encode_ac_refine(w, blocks, ss: int, se: int, al: int, ac_codes) -> None:
-    """AC refinement scan (G.1.2.3): newly-significant coefficients are
-    coded as run/1 + sign, correction bits for already-nonzero
-    coefficients are buffered and appended after the next emitted
-    symbol (including across EOBn runs)."""
-    import numpy as np
-
-    band = np.asarray(blocks)[:, ss : se + 1]
-    absv_rows = (np.abs(band) >> al).tolist()
-    pos_rows = (band > 0).tolist()  # sign source for newly-significant bits
-    eobrun = 0
-    pend: list[int] = []
-    for bi, absv in enumerate(absv_rows):
-        newly = [i for i, a in enumerate(absv) if a == 1]
-        if not newly:
-            # only correction bits (if any) — the block joins the EOB run
-            pend.extend(a & 1 for a in absv if a > 1)
-            eobrun += 1
-            if eobrun == 0x7FFF:
-                eobrun = _flush_eobrun(w, ac_codes, eobrun, pend)
-            continue
-        eobrun = _flush_eobrun(w, ac_codes, eobrun, pend)
-        run = 0
-        last_new = newly[-1]
-        for i, a in enumerate(absv):
-            if i > last_new:
-                break
-            if a == 0:
-                run += 1
-                continue
-            # ZRL must fire at ANY nonzero position once the
-            # zero-history run exceeds 15 — including already-nonzero
-            # correction positions — or the decoder's ZRL advance
-            # consumes a different set of buffered correction bits
-            # than the encoder attached (jpeglib's `r > 15 && k <= EOB`;
-            # the i <= last_new bound makes the EOB guard implicit,
-            # and runs in the tail fold into the EOB below)
-            while run > 15:
-                ln, code = ac_codes[0xF0]
-                w.put(code, ln)
-                run -= 16
-                _put_pend(w, pend)
-            if a > 1:
-                pend.append(a & 1)
-                continue
-            ln, code = ac_codes[(run << 4) | 1]
-            w.put(code, ln)
-            w.put(1 if pos_rows[bi][i] else 0, 1)
-            _put_pend(w, pend)
-            run = 0
-        # any tail beyond the last newly-significant coefficient —
-        # zero-history runs AND already-nonzero correction bits alike —
-        # must close with an EOB, or the decoder would read the next
-        # block's symbol while still inside this band
-        if last_new < se - ss:
-            pend.extend(a & 1 for a in absv[last_new + 1 :] if a > 1)
-            eobrun = 1
-    _flush_eobrun(w, ac_codes, eobrun, pend)
-
-
-def encode_jpeg_gray8_progressive(width: int, height: int, pixels: bytes) -> bytes:
-    """REAL progressive (SOF2) gray JPEG encoder: the same DCT +
-    quantization as the baseline encoder, transmitted as six scans
-    exercising the full progressive feature set — DC first (Al=1), AC
-    first for bands 1-5 and 6-63 (Al=1, EOBn runs), DC refinement, and
-    AC refinement for both bands (correction bits). Decodes to pixels
-    BITWISE-IDENTICAL to the baseline encoding of the same image
-    (property-tested), because the coefficients are the same — only
-    the transmission order differs."""
-    import struct as _s
-
-    import numpy as np
-
-    if len(pixels) != width * height:
-        raise ValueError(f"expected {width * height} pixel bytes")
-    img = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(height, width)
-    ph, pw = (height + 7) // 8 * 8, (width + 7) // 8 * 8
-    padded = np.pad(img, ((0, ph - height), (0, pw - width)), mode="edge").astype(
-        np.float64
-    )
-    d = _dct_matrix()
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    blocks = _dct_quant_plane(padded, q, d).reshape(-1, 64)
-    dc_codes = _huff_codes(_DC_BITS, _DC_VALUES)
-    ac_codes = _huff_codes(_AC_BITS_PROG, _AC_VALUES_PROG)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return _s.pack(">HH", marker, len(payload) + 2) + payload
-
-    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
-        return seg(0xFFDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFDB, bytes([0]) + bytes(_JPEG_QTABLE[_ZIGZAG[i]] for i in range(64)))
-    out += seg(0xFFC2, _s.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    out += seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALUES)
-        + bytes([0x10]) + bytes(_AC_BITS_PROG) + bytes(_AC_VALUES_PROG),
-    )
-
-    # scan 1: DC first, Al=1 (arithmetic shift per G.1.2.1; int64 >> is
-    # the same arithmetic shift, vectorized for the whole scan)
-    w = _BitWriter()
-    prev = 0
-    for v in (blocks[:, 0] >> 1).tolist():
-        diff = v - prev
-        prev = v
-        s = _category(diff)
-        ln, code = dc_codes[s]
-        w.put(code, ln)
-        if s:
-            w.put(diff if diff > 0 else diff + (1 << s) - 1, s)
-    out += sos(0, 0, 0, 1) + w.flush()
-    # scans 2-3: AC first per band, Al=1
-    for ss, se in ((1, 5), (6, 63)):
-        w = _BitWriter()
-        _encode_ac_first(w, blocks, ss, se, 1, ac_codes)
-        out += sos(ss, se, 0, 1) + w.flush()
-    # scan 4: DC refinement — one raw bit per block (two's-complement
-    # & 1 matches int64's, so the emitted bit is unchanged)
-    w = _BitWriter()
-    for b in (blocks[:, 0] & 1).tolist():
-        w.put(b, 1)
-    out += sos(0, 0, 1, 0) + w.flush()
-    # scans 5-6: AC refinement per band
-    for ss, se in ((1, 5), (6, 63)):
-        w = _BitWriter()
-        _encode_ac_refine(w, blocks, ss, se, 0, ac_codes)
-        out += sos(ss, se, 1, 0) + w.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
 
 def _decode_ac_first_scan(r, blocks, ss, se, al, act) -> None:
     eobrun = 0
@@ -4305,27 +4261,64 @@ def _decode_ac_refine_scan(r, blocks, ss, se, al, act) -> None:
             eobrun -= 1
 
 
-@_malformed_raises_value_error
-def decode_jpeg_gray8_progressive(data: bytes) -> tuple[int, int, bytes]:
-    """REAL progressive (SOF2) gray JPEG decoder: multi-scan entropy
-    decode with spectral selection, successive approximation (DC and AC
-    first + refinement) and EOBn runs, accumulating the coefficient
-    array across scans, then one vectorized dequantize+IDCT. Restart
-    markers inside progressive scans are not supported (our encoder
-    never emits them); everything malformed raises ValueError."""
+
+def _entropy_decode_block(r, zz, dct, act, prev_dc: int) -> int:
+    """Huffman entropy-decode ONE sequential block into its zeroed
+    zigzag coefficient list `zz`; returns the new DC predictor.
+    Dequantize + IDCT happen vectorized afterwards (`_idct_blocks`)."""
+    s = _read_symbol(r, dct)
+    diff = _extend(r.bits(s), s) if s else 0
+    prev_dc += diff
+    zz[0] = prev_dc
+    k = 1
+    while k < 64:
+        sym = _read_symbol(r, act)
+        if sym == 0x00:  # EOB
+            break
+        run, size = sym >> 4, sym & 0x0F
+        if sym == 0xF0:  # ZRL
+            k += 16
+            continue
+        k += run
+        if k > 63:
+            raise ValueError("AC run overflows block")
+        zz[k] = _extend(r.bits(size), size)
+        k += 1
+    return prev_dc
+
+
+def _read_jpeg(data: bytes, ncomp: int):
+    """The one JPEG frame reader: a single marker walk over SOI, DQT,
+    SOF0/SOF2, DHT, DRI, SOS and EOI that decodes the `ncomp`-component
+    frame (1 or 3, sampling factors up to 2x2) into per-component
+    sample planes at full resolution, cropped to (width, height).
+
+    The first frame marker fixes the frame type. SOF0: the first scan
+    is the interleaved sequential scan over every component (restart
+    intervals supported) and its entropy data runs to the last EOI.
+    SOF2: DC scans (first, then refinements) interleave every
+    component; AC scans (first, then refinements) are 1-component and
+    cover the component's own block grid; restart intervals are
+    rejected. A 1-component frame's sampling factors do not change its
+    geometry and its scans need not name its component id. Scan
+    coefficients accumulate in each component's MCU-padded raster
+    grid; one vectorized dequantize + IDCT per component follows.
+    Everything malformed raises ValueError (via the public decoders'
+    `_malformed_raises_value_error`)."""
     import struct as _s
 
     import numpy as np
 
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
-    i = 2
     qtab: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    qtab_id = 0
-    blocks = None
-    dc_done = False
+    huff: dict[tuple[int, int], _HuffLUT] = {}
+    progressive = None  # fixed by the first frame marker
+    comps = coef = None
+    restart = 0
+    nonzero_dri = False  # progressive frames reject any restart interval
+    dc_done = False  # sequential scan, or first progressive DC scan, decoded
+    i = 2
     while i < len(data):
         if i + 2 > len(data):
             raise ValueError("truncated JPEG (marker cut off)")
@@ -4352,37 +4345,77 @@ def decode_jpeg_gray8_progressive(data: bytes) -> tuple[int, int, bytes]:
                     tab[_ZIGZAG[k]] = zz[k]
                 qtab[tq] = tab
                 j += 65
-        elif m == 0xC2:
-            height, width = _s.unpack_from(">HH", body, 1)
-            if body[5] != 1:
-                raise ValueError("only single-component progressive supported")
-            qtab_id = body[8]
-            nb = ((height + 7) // 8) * ((width + 7) // 8)
-            blocks = [[0] * 64 for _ in range(nb)]
-        elif m in (0xC0, 0xC1, 0xC3):
-            raise ValueError("not a progressive (SOF2) stream")
+        elif 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):  # a SOF marker
+            if progressive is None:
+                progressive = m == 0xC2
+            if m == (0xC2 if progressive else 0xC0):
+                height, width = _s.unpack_from(">HH", body, 1)
+                if body[5] != ncomp:
+                    kind = "single-component (gray)" if ncomp == 1 else "3-component (YCbCr)"
+                    raise ValueError(f"expected a {kind} frame")
+                specs = [body[6 + 3 * c : 9 + 3 * c] for c in range(ncomp)]
+                comps = [(cid, hv >> 4, hv & 0x0F, tq) for cid, hv, tq in specs]
+                if ncomp == 1:
+                    comps = [(comps[0][0], 1, 1, comps[0][3])]
+                if any(not (1 <= h <= 2 and 1 <= v <= 2) for _, h, v, _ in comps):
+                    raise ValueError("sampling factors beyond 2x2 unsupported")
+                cid_to_ci = {c[0]: k for k, c in enumerate(comps)}
+                hmax = max(c[1] for c in comps)
+                vmax = max(c[2] for c in comps)
+                mcus = -(-width // (8 * hmax)) * -(-height // (8 * vmax))
+                sizes = [mcus * h * v for _, h, v, _ in comps]
+                # every block costs at least one entropy bit in some scan,
+                # so a frame larger than that is rejected before allocating
+                if sum(sizes) > 8 * len(data):
+                    raise ValueError("frame dimensions exceed the stream's data")
+                coef = [[[0] * 64 for _ in range(n)] for n in sizes]
+                # every scan of the frame walks one of these block orders
+                every_order, per_mcu = _scan_order(comps, width, height, range(ncomp))
+                own_orders = [None] * ncomp  # 1-component scans, made on first use
+            elif m <= 0xC3:
+                raise ValueError(
+                    "only baseline (SOF0) or progressive (SOF2) frames, not mixed"
+                )
         elif m == 0xC4:
             j = 0
             while j < len(body):
                 tc, th = body[j] >> 4, body[j] & 0x0F
-                bits = list(body[j + 1 : j + 17])
+                bits = bytes(body[j + 1 : j + 17])
                 n = sum(bits)
-                values = list(body[j + 17 : j + 17 + n])
-                huff[(tc, th)] = _huff_decode_table(bits, values)
+                huff[(tc, th)] = _huff_tables(bits, bytes(body[j + 17 : j + 17 + n]))[1]
                 j += 17 + n
         elif m == 0xDD:
-            if _s.unpack_from(">H", body, 0)[0]:
-                raise ValueError("restart markers unsupported in progressive")
+            restart = _s.unpack_from(">H", body, 0)[0]
+            nonzero_dri = nonzero_dri or restart > 0
         elif m == 0xDA:
-            if blocks is None:
-                raise ValueError("SOS before SOF2")
-            if body[0] != 1:
-                raise ValueError("only single-component scans supported")
-            dc_id, ac_id = body[2] >> 4, body[2] & 0x0F
-            ss, se, ahl = body[3], body[4], body[5]
+            if comps is None:
+                raise ValueError("scan before frame header")
+            if not progressive:
+                # the sequential scan: each frame component finds its
+                # tables by id (a 1-component scan by position)
+                if ncomp == 1:
+                    sels = [body[2]]
+                else:
+                    spec = {body[1 + 2 * c]: body[2 + 2 * c] for c in range(body[0])}
+                    sels = [spec[c[0]] for c in comps]
+                end = data.rfind(b"\xff\xd9")
+                if end < 0:
+                    raise ValueError("missing EOI")
+                r = _BitReader(data[i + 2 + length : end])
+                dct = [huff[(0, s >> 4)] for s in sels]
+                act = [huff[(1, s & 0x0F)] for s in sels]
+                prev = [0] * ncomp
+                interval = restart * per_mcu  # blocks between RSTn
+                for k, (ci, bi) in enumerate(every_order):
+                    if interval and k and k % interval == 0:
+                        r.expect_restart()
+                        prev = [0] * ncomp
+                    prev[ci] = _entropy_decode_block(r, coef[ci][bi], dct[ci], act[ci], prev[ci])
+                dc_done = True
+                break
+            ns = body[0]
+            ss, se, ahl = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
             ah, al = ahl >> 4, ahl & 0x0F
-            if se > 63 or ss > se:
-                raise ValueError("bad spectral band")
             # entropy data: up to the next real marker (stuffed 0x00 and
             # RSTn bytes belong to the scan)
             j = i + 2 + length
@@ -4394,40 +4427,49 @@ def decode_jpeg_gray8_progressive(data: bytes) -> tuple[int, int, bytes]:
                 j += 1
             r = _BitReader(data[i + 2 + length : j])
             if ss == 0:
-                if se != 0:
-                    raise ValueError("DC scan must have Se=0")
+                if se != 0 or ns != ncomp:
+                    raise ValueError("a progressive DC scan has Se=0 and every component")
+                order = every_order
                 if ah == 0:
-                    prev = 0
-                    dct = huff.get((0, dc_id))
-                    if dct is None:
-                        raise ValueError("missing DC Huffman table")
-                    for blk in blocks:
-                        s = _read_symbol(r, dct)
-                        prev += _extend(r.bits(s), s) if s else 0
-                        blk[0] = prev << al
+                    dc_tabs = {}
+                    for c in range(ns):
+                        ci = cid_to_ci[body[1 + 2 * c]] if ncomp > 1 else 0
+                        dc_tabs[ci] = huff.get((0, body[2 + 2 * c] >> 4))
+                        if dc_tabs[ci] is None:
+                            raise ValueError("missing DC Huffman table")
+                    prev = [0] * ncomp
+                    for ci, bi in order:
+                        s = _read_symbol(r, dc_tabs[ci])
+                        prev[ci] += _extend(r.bits(s), s) if s else 0
+                        coef[ci][bi][0] = prev[ci] << al
                     dc_done = True
                 else:
                     # DC refinement reads exactly one raw bit per block
                     # regardless of content — batch the reads in chunks
                     # (same bits, same MSB-first order)
                     p1 = 1 << al
-                    nb_total = len(blocks)
-                    i0 = 0
-                    while i0 < nb_total:
-                        cnt = min(32, nb_total - i0)
-                        v = r.bits(cnt)
-                        m = 1 << (cnt - 1)
-                        for blk in blocks[i0 : i0 + cnt]:
-                            if v & m:
-                                blk[0] |= p1
-                            m >>= 1
-                        i0 += cnt
+                    for i0 in range(0, len(order), 32):
+                        chunk = order[i0 : i0 + 32]
+                        v = r.bits(len(chunk))
+                        bit = 1 << (len(chunk) - 1)
+                        for ci, bi in chunk:
+                            if v & bit:
+                                coef[ci][bi][0] |= p1
+                            bit >>= 1
             else:
+                if ns != 1:
+                    raise ValueError("progressive AC scans must be single-component")
                 if not dc_done:
                     raise ValueError("AC scan before first DC scan")
-                act = huff.get((1, ac_id))
+                ci = cid_to_ci[body[1]] if ncomp > 1 else 0
+                act = huff.get((1, body[2] & 0x0F))
                 if act is None:
                     raise ValueError("missing AC Huffman table")
+                if se > 63 or ss > se:
+                    raise ValueError("bad spectral band")
+                if own_orders[ci] is None:
+                    own_orders[ci] = _scan_order(comps, width, height, [ci])[0]
+                blocks = [coef[ci][bi] for _, bi in own_orders[ci]]
                 if ah == 0:
                     _decode_ac_first_scan(r, blocks, ss, se, al, act)
                 else:
@@ -4437,719 +4479,61 @@ def decode_jpeg_gray8_progressive(data: bytes) -> tuple[int, int, bytes]:
             i = j
             continue
         i += 2 + length
-    if width is None or blocks is None or not dc_done:
-        raise ValueError("missing SOF2/DC scan")
+    if comps is None or not dc_done:
+        raise ValueError("missing frame header or DC scan")
+    if progressive and nonzero_dri:
+        raise ValueError("restart markers unsupported in progressive")
     d = _dct_matrix()
-    q = np.array(qtab[qtab_id], dtype=np.float64).reshape(8, 8)
-    ph, pw = (height + 7) // 8 * 8, (width + 7) // 8 * 8
-    out = (
-        _idct_blocks(blocks, q, d)
-        .reshape(ph // 8, pw // 8, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(ph, pw)
-    )
-    pixels = np.clip(np.rint(out[:height, :width]), 0, 255).astype(np.uint8)
-    return width, height, pixels.tobytes()
+    idct = [None] * ncomp
+    # Cb/Cr share a quant table and block count in the streams we emit:
+    # IDCT them as one stacked call (per-block float ops identical; the
+    # einsum is per-block independent)
+    if ncomp == 3 and comps[1][3] == comps[2][3] and len(coef[1]) == len(coef[2]):
+        q = np.array(qtab[comps[1][3]], dtype=np.float64).reshape(8, 8)
+        both = _idct_blocks(coef[1] + coef[2], q, d)
+        idct[1], idct[2] = both[: len(coef[1])], both[len(coef[1]) :]
+    mcus_x = -(-width // (8 * hmax))
+    mcus_y = -(-height // (8 * vmax))
+    planes = []
+    for ci, (_cid, h, v, tq) in enumerate(comps):
+        if idct[ci] is None:
+            q = np.array(qtab[tq], dtype=np.float64).reshape(8, 8)
+            idct[ci] = _idct_blocks(coef[ci], q, d)
+        rows, cols = mcus_y * v, mcus_x * h
+        plane = (
+            idct[ci].reshape(rows, cols, 8, 8).transpose(0, 2, 1, 3).reshape(rows * 8, cols * 8)
+        )
+        if (h, v) != (hmax, vmax):  # upsample by sample replication
+            plane = np.repeat(np.repeat(plane, vmax // v, axis=0), hmax // h, axis=1)
+        planes.append(plane[:height, :width])
+    return width, height, planes
 
 
 @_malformed_raises_value_error
-def decode_jpeg_gray8_any(data: bytes) -> tuple[int, int, bytes]:
-    """Gray JPEG decode dispatching on the frame type: SOF0 baseline
-    streams take the sequential decoder, SOF2 takes the progressive
-    one — the single entry point a curation pass uses when the corpus
-    mixes both. The frame type comes from a real marker walk (a naive
-    byte search would trip on 0xFFC2 inside table segment bodies)."""
-    import struct as _s
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    i = 2
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at {i}")
-        m = data[i + 1]
-        if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):  # a SOF marker
-            return (
-                decode_jpeg_gray8_progressive(data)
-                if m == 0xC2
-                else decode_jpeg_gray8(data)
-            )
-        if m == 0xD9 or m == 0xDA:
-            break
-        i += 2 + _s.unpack_from(">H", data, i + 2)[0]
-    raise ValueError("no frame header before scan/EOI")
-
-
-# --- Baseline COLOR JPEG codec (YCbCr 4:2:0, pure numpy/stdlib) -------------
-# Chroma extension of the gray8 codec above: JFIF RGB<->YCbCr color
-# transform, 2x2 chroma subsampling, interleaved 16x16 MCUs (4 luma +
-# Cb + Cr blocks), Annex K chroma quantization and Huffman tables.
-# Shares _encode_block/_decode_block with the gray path — the entropy
-# layer is identical, only the MCU structure and color planes differ.
-
-_JPEG_QTABLE_CHROMA = [
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-]
-
-_DC_BITS_CHROMA = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
-_DC_VALUES_CHROMA = list(range(12))
-_AC_BITS_CHROMA = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
-_AC_VALUES_CHROMA = [
-    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12, 0x41,
-    0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-    0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15, 0x62, 0x72, 0xD1,
-    0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-    0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44,
-    0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-    0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74,
-    0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-    0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A,
-    0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-    0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-    0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-    0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2, 0xF3, 0xF4,
-    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
-
-
-#: chroma subsampling modes -> (horizontal, vertical) luma sampling factors
-_JPEG_SUBSAMPLE = {"444": (1, 1), "422": (2, 1), "420": (2, 2)}
-
-
-def _color_quant_blocks(width, height, rgb, subsample):
-    """Shared color-plane preparation for the sequential AND progressive
-    color encoders: JFIF RGB->YCbCr, MCU-aligned edge padding, chroma
-    mean-subsampling, vectorized DCT+quantize per plane. Returns
-    (hs, vs, ph, pw, zzY, zzCb, zzCr) with zigzag block grids — both
-    encoders transmitting the SAME coefficients is what makes the
-    progressive round trip bitwise-comparable to the sequential one."""
+def decode_jpeg_gray8(data: bytes) -> tuple[int, int, bytes]:
+    """Decode a 1-component JPEG — baseline (SOF0, with or without
+    restart markers) or progressive (SOF2) — back to (width, height,
+    gray8 pixels). Raises ValueError on anything malformed, including
+    a 3-component stream."""
     import numpy as np
 
-    if subsample is True:
-        subsample = "420"
-    elif subsample is False:
-        subsample = "444"
-    if subsample not in _JPEG_SUBSAMPLE:
-        raise ValueError(f"subsample must be one of {sorted(_JPEG_SUBSAMPLE)}")
-    hs, vs = _JPEG_SUBSAMPLE[subsample]
-    if len(rgb) != width * height * 3:
-        raise ValueError("pixel buffer does not match dims")
-    img = np.frombuffer(bytes(rgb), dtype=np.uint8).reshape(height, width, 3).astype(
-        np.float64
-    )
-    R, G, B = img[..., 0], img[..., 1], img[..., 2]
-    # JFIF color transform; planes kept in 0..255 space (the shared
-    # block codec level-shifts by 128 itself)
-    Y = 0.299 * R + 0.587 * G + 0.114 * B
-    Cb = 128.0 - 0.168736 * R - 0.331264 * G + 0.5 * B
-    Cr = 128.0 + 0.5 * R - 0.418688 * G - 0.081312 * B
-    mw, mh = 8 * hs, 8 * vs  # MCU pixel dims
-    ph = (height + mh - 1) // mh * mh
-    pw = (width + mw - 1) // mw * mw
-    pad = ((0, ph - height), (0, pw - width))
-    Yp = np.pad(Y, pad, mode="edge")
-
-    def _sub(plane):
-        # mean over each (vs x hs) luma patch -> one chroma sample
-        p = np.pad(plane, pad, mode="edge")
-        return p.reshape(ph // vs, vs, pw // hs, hs).mean(axis=(1, 3))
-
-    Cbs, Crs = _sub(Cb), _sub(Cr)
-    d = _dct_matrix()
-    ql = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    qc = np.array(_JPEG_QTABLE_CHROMA, dtype=np.float64).reshape(8, 8)
-    # r18: Cb and Cr share dims and quant table, so one vstacked
-    # _dct_quant_plane call covers both (the DCT einsum is per-8x8-block
-    # independent, so each block's float ops are unchanged; stacking
-    # along rows keeps every block intact because the chroma height is
-    # a multiple of 8). Saves one einsum dispatch per encode.
-    zzCbCr = _dct_quant_plane(np.concatenate([Cbs, Crs], axis=0), qc, d)
-    nrows = Cbs.shape[0] // 8
-    return (
-        hs,
-        vs,
-        ph,
-        pw,
-        _dct_quant_plane(Yp, ql, d),
-        zzCbCr[:nrows],
-        zzCbCr[nrows:],
-    )
-
-
-def encode_jpeg_color(
-    width: int,
-    height: int,
-    rgb: bytes,
-    restart_interval: int = 0,
-    subsample: bool | str = "420",
-) -> bytes:
-    """Baseline sequential COLOR JPEG: JFIF YCbCr transform, chroma
-    subsampling per `subsample` ("420" default — 2x2 mean; "422" —
-    horizontal 2:1; "444" — full-resolution chroma; booleans accepted
-    for compatibility: True="420", False="444"), interleaved MCUs with
-    the luma block(s) then Cb then Cr, Annex K luma+chroma tables.
-    Deterministic: same pixels -> same bytes. `restart_interval` > 0
-    emits DRI/RSTn every N MCUs with all three DC predictors reset."""
-    import struct as _s
-
-    import numpy as np
-
-    hs, vs, ph, pw, zzY, zzCb, zzCr = _color_quant_blocks(
-        width, height, rgb, subsample
-    )
-    mw, mh = 8 * hs, 8 * vs  # MCU pixel dims
-    ldc = _huff_codes(_DC_BITS, _DC_VALUES)
-    lac = _huff_codes(_AC_BITS, _AC_VALUES)
-    cdc = _huff_codes(_DC_BITS_CHROMA, _DC_VALUES_CHROMA)
-    cac = _huff_codes(_AC_BITS_CHROMA, _AC_VALUES_CHROMA)
-    w = _BitWriter()
-    prev = [0, 0, 0]  # Y, Cb, Cr DC predictors
-    mcu = 0
-    luma_offsets = [(dy, dx) for dy in range(vs) for dx in range(hs)]
-    for my in range(0, ph, mh):
-        for mx in range(0, pw, mw):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.raw(bytes([0xFF, 0xD0 + (mcu // restart_interval - 1) % 8]))
-                prev = [0, 0, 0]
-            mcu += 1
-            for dy, dx in luma_offsets:
-                prev[0] = _entropy_encode_block(
-                    w, zzY[my // 8 + dy, mx // 8 + dx], ldc, lac, prev[0]
-                )
-            cy, cx = my // mh, mx // mw  # one chroma block per MCU
-            prev[1] = _entropy_encode_block(w, zzCb[cy, cx], cdc, cac, prev[1])
-            prev[2] = _entropy_encode_block(w, zzCr[cy, cx], cdc, cac, prev[2])
-    entropy = w.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return _s.pack(">HH", marker, len(payload) + 2) + payload
-
-    dqt = seg(
-        0xFFDB,
-        bytes([0]) + bytes(_JPEG_QTABLE[_ZIGZAG[i]] for i in range(64))
-        + bytes([1]) + bytes(_JPEG_QTABLE_CHROMA[_ZIGZAG[i]] for i in range(64)),
-    )
-    # components: Y id1 with the mode's (h, v) sampling, qtab0; Cb/Cr 1x1 qtab1
-    y_sampling = (hs << 4) | vs
-    sof = seg(
-        0xFFC0,
-        _s.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, y_sampling, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    dht = seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALUES)
-        + bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALUES)
-        + bytes([0x01]) + bytes(_DC_BITS_CHROMA) + bytes(_DC_VALUES_CHROMA)
-        + bytes([0x11]) + bytes(_AC_BITS_CHROMA) + bytes(_AC_VALUES_CHROMA),
-    )
-    sos = seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    dri = seg(0xFFDD, _s.pack(">H", restart_interval)) if restart_interval else b""
-    return b"\xff\xd8" + dqt + sof + dht + dri + sos + entropy + b"\xff\xd9"
+    width, height, (plane,) = _read_jpeg(data, 1)
+    return width, height, np.clip(np.rint(plane), 0, 255).astype(np.uint8).tobytes()
 
 
 @_malformed_raises_value_error
 def decode_jpeg_color(data: bytes) -> tuple[int, int, bytes]:
-    """Decode a baseline interleaved 3-component (YCbCr) JPEG back to
-    (width, height, interleaved RGB bytes). Supports per-component
-    sampling factors up to 2x2 (covers 4:2:0, 4:2:2, 4:4:4), multiple
-    DQT/DHT tables, and DRI/RSTn restart markers. Raises ValueError on
-    malformed streams or non-baseline frames."""
-    import struct as _s
-
+    """Decode a 3-component YCbCr JPEG — baseline (SOF0, with or
+    without restart markers) or progressive (SOF2), per-component
+    sampling factors up to 2x2 (4:2:0, 4:2:2, 4:4:4) — back to (width,
+    height, interleaved RGB bytes). Raises ValueError on anything
+    malformed, including a 1-component stream."""
     import numpy as np
 
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    i = 2
-    qtab: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    comps: list[tuple[int, int, int, int]] = []  # (id, h, v, qtab_id)
-    scan_tables: dict[int, tuple[int, int]] = {}  # comp id -> (dc_id, ac_id)
-    entropy_start = None
-    restart_interval = 0
-    while i < len(data):
-        if i + 2 > len(data):
-            raise ValueError("truncated JPEG (marker cut off)")
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at {i}")
-        m = data[i + 1]
-        if m == 0xD9:
-            break
-        if i + 4 > len(data):
-            raise ValueError("truncated JPEG (segment length cut off)")
-        length = _s.unpack_from(">H", data, i + 2)[0]
-        if i + 2 + length > len(data):
-            raise ValueError("truncated JPEG (segment body cut off)")
-        body = data[i + 4 : i + 2 + length]
-        if m == 0xDB:
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                zz = list(body[j + 1 : j + 65])
-                tab = [0] * 64
-                for k in range(64):
-                    tab[_ZIGZAG[k]] = zz[k]
-                qtab[tq] = tab
-                j += 65
-        elif m == 0xC0:
-            height, width = _s.unpack_from(">HH", body, 1)
-            ncomp = body[5]
-            if ncomp != 3:
-                raise ValueError("decode_jpeg_color expects a 3-component frame")
-            for c in range(3):
-                cid = body[6 + 3 * c]
-                hv = body[7 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-        elif m in (0xC1, 0xC2, 0xC3):
-            raise ValueError("only baseline sequential (SOF0) supported")
-        elif m == 0xC4:
-            j = 0
-            while j < len(body):
-                tc, th = body[j] >> 4, body[j] & 0x0F
-                bits = list(body[j + 1 : j + 17])
-                n = sum(bits)
-                values = list(body[j + 17 : j + 17 + n])
-                huff[(tc, th)] = _huff_decode_table(bits, values)
-                j += 17 + n
-        elif m == 0xDA:
-            ns = body[0]
-            for c in range(ns):
-                cid = body[1 + 2 * c]
-                scan_tables[cid] = (body[2 + 2 * c] >> 4, body[2 + 2 * c] & 0x0F)
-            entropy_start = i + 2 + length
-            break
-        elif m == 0xDD:
-            restart_interval = _s.unpack_from(">H", body, 0)[0]
-        i += 2 + length
-    if width is None or entropy_start is None or not comps:
-        raise ValueError("missing SOF/SOS")
-    end = data.rfind(b"\xff\xd9")
-    if end < 0:
-        raise ValueError("missing EOI")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax > 2 or vmax > 2 or any(c[1] < 1 or c[2] < 1 for c in comps):
-        raise ValueError("sampling factors beyond 2x2 unsupported")
-    mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-    d = _dct_matrix()
-    planes = []
-    for cid, ch, cv, tq in comps:
-        planes.append(np.zeros((mcus_y * 8 * cv, mcus_x * 8 * ch), dtype=np.float64))
-    r = _BitReader(data[entropy_start:end])
-    prev = [0, 0, 0]
-    mcu = 0
-    dct_c = [huff[(0, scan_tables[cid][0])] for cid, _h, _v, _t in comps]
-    act_c = [huff[(1, scan_tables[cid][1])] for cid, _h, _v, _t in comps]
-    q_c = [
-        np.array(qtab[tq], dtype=np.float64).reshape(8, 8)
-        for _cid, _h, _v, tq in comps
-    ]
-    zz_c: list[list] = [[] for _ in comps]
-    pos_c: list[list] = [[] for _ in comps]
-    for myi in range(mcus_y):
-        for mxi in range(mcus_x):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                r.expect_restart()
-                prev = [0, 0, 0]
-            mcu += 1
-            for ci, (cid, ch, cv, tq) in enumerate(comps):
-                for by in range(cv):
-                    for bx in range(ch):
-                        zz, prev[ci] = _entropy_decode_block(
-                            r, dct_c[ci], act_c[ci], prev[ci]
-                        )
-                        zz_c[ci].append(zz)
-                        pos_c[ci].append((myi * cv + by, mxi * ch + bx))
-    # batched dequant + IDCT per component, then place blocks. Cb/Cr
-    # share a quant table in the streams we emit — IDCT them as one
-    # stacked call (per-block float ops identical; einsum is per-block
-    # independent), falling back to per-component otherwise.
-    blocks_by_ci: list = [None] * len(comps)
-    if (
-        len(comps) == 3
-        and comps[1][3] == comps[2][3]
-        and len(zz_c[1]) == len(zz_c[2])
-    ):
-        both = _idct_blocks(zz_c[1] + zz_c[2], q_c[1], d)
-        blocks_by_ci[1], blocks_by_ci[2] = both[: len(zz_c[1])], both[len(zz_c[1]) :]
-    for ci in range(len(comps)):
-        blocks = (
-            blocks_by_ci[ci]
-            if blocks_by_ci[ci] is not None
-            else _idct_blocks(zz_c[ci], q_c[ci], d)
-        )
-        for (byi, bxi), block in zip(pos_c[ci], blocks):
-            planes[ci][byi * 8 : byi * 8 + 8, bxi * 8 : bxi * 8 + 8] = block
-    # upsample each component to full resolution (sample replication)
-    full = []
-    for (cid, ch, cv, tq), plane in zip(comps, planes):
-        up = np.repeat(np.repeat(plane, vmax // cv, axis=0), hmax // ch, axis=1)
-        full.append(up[:height, :width])
-    Y, Cb, Cr = full[0], full[1] - 128.0, full[2] - 128.0
+    width, height, (Y, Cb, Cr) = _read_jpeg(data, 3)
+    Cb, Cr = Cb - 128.0, Cr - 128.0
     R = Y + 1.402 * Cr
     G = Y - 0.344136 * Cb - 0.714136 * Cr
     B = Y + 1.772 * Cb
     rgb = np.clip(np.rint(np.stack([R, G, B], axis=-1)), 0, 255).astype(np.uint8)
     return width, height, rgb.tobytes()
-
-
-# --- PROGRESSIVE (SOF2) COLOR JPEG codec ------------------------------------
-# The gray progressive machinery applied to YCbCr: ONE interleaved DC
-# scan pair (MCU order, per-component predictors — required first by
-# the spec) and per-component AC scan pairs (progressive AC scans are
-# always non-interleaved, covering the component's OWN block grid, not
-# the MCU-padded one). Coefficients are byte-for-byte the sequential
-# encoder's, so the round trip is verified by bitwise pixel equality
-# against decode_jpeg_color of the sequential stream.
-
-
-def _comp_spec_grid(width, height, ch, cv, hmax, vmax):
-    """Block rows/cols of a component's NON-interleaved scan per T.81
-    A.2.2: computed from the component's own sample dims, a subgrid of
-    the MCU-padded plane grid."""
-    cw = -(-width * ch // hmax)
-    chh = -(-height * cv // vmax)
-    return -(-chh // 8), -(-cw // 8)
-
-
-def encode_jpeg_color_progressive(
-    width: int, height: int, rgb: bytes, subsample: bool | str = "420"
-) -> bytes:
-    """REAL progressive (SOF2) COLOR JPEG encoder: the sequential color
-    encoder's exact coefficient planes transmitted as 10 scans —
-    interleaved DC first (Al=1) + DC refinement over all three
-    components in MCU order, then per-component AC first/refinement
-    pairs for band 1-63 with EOBn runs. Pixels decode bitwise-equal to
-    the sequential stream's (property-tested)."""
-    import struct as _s
-
-    hs, vs, ph, pw, zzY, zzCb, zzCr = _color_quant_blocks(
-        width, height, rgb, subsample
-    )
-    ldc = _huff_codes(_DC_BITS, _DC_VALUES)
-    cdc = _huff_codes(_DC_BITS_CHROMA, _DC_VALUES_CHROMA)
-    pac = _huff_codes(_AC_BITS_PROG, _AC_VALUES_PROG)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return _s.pack(">HH", marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(
-        0xFFDB,
-        bytes([0]) + bytes(_JPEG_QTABLE[_ZIGZAG[i]] for i in range(64))
-        + bytes([1]) + bytes(_JPEG_QTABLE_CHROMA[_ZIGZAG[i]] for i in range(64)),
-    )
-    y_sampling = (hs << 4) | vs
-    out += seg(
-        0xFFC2,
-        _s.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, y_sampling, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    out += seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALUES)
-        + bytes([0x01]) + bytes(_DC_BITS_CHROMA) + bytes(_DC_VALUES_CHROMA)
-        + bytes([0x10]) + bytes(_AC_BITS_PROG) + bytes(_AC_VALUES_PROG),
-    )
-    dc_tables = (ldc, cdc, cdc)
-    luma_offsets = [(dy, dx) for dy in range(vs) for dx in range(hs)]
-
-    # DC planes as plain int grids once (r18: both DC scans walked the
-    # full MCU traversal reading numpy scalars per block)
-    dcY = zzY[:, :, 0].tolist()
-    dcCb = zzCb[:, :, 0].tolist()
-    dcCr = zzCr[:, :, 0].tolist()
-
-    def mcu_dcs():
-        """Every block's DC coefficient in interleaved MCU order, tagged
-        with its component index (the DC scan traversal)."""
-        for my in range(0, ph, 8 * vs):
-            for mx in range(0, pw, 8 * hs):
-                for dy, dx in luma_offsets:
-                    yield 0, dcY[my // 8 + dy][mx // 8 + dx]
-                cy, cx = my // (8 * vs), mx // (8 * hs)
-                yield 1, dcCb[cy][cx]
-                yield 2, dcCr[cy][cx]
-
-    # scan 1: interleaved DC first, Al=1
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for ci, dc in mcu_dcs():
-        v = dc >> 1
-        diff = v - prev[ci]
-        prev[ci] = v
-        s = _category(diff)
-        ln, code = dc_tables[ci][s]
-        w.put(code, ln)
-        if s:
-            w.put(diff if diff > 0 else diff + (1 << s) - 1, s)
-    out += seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x01])) + w.flush()
-    # scan 2: interleaved DC refinement — one raw bit per block
-    w = _BitWriter()
-    for _ci, dc in mcu_dcs():
-        w.put(dc & 1, 1)
-    out += seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x10])) + w.flush()
-    # per-component AC pairs over the component's spec grid
-    comp_zz = (zzY, zzCb, zzCr)
-    comp_hv = ((hs, vs), (1, 1), (1, 1))
-    for ci, cid in enumerate((1, 2, 3)):
-        ch, cv = comp_hv[ci]
-        by, bx = _comp_spec_grid(width, height, ch, cv, hs, vs)
-        blocks = [comp_zz[ci][y, x] for y in range(by) for x in range(bx)]
-        for ah, al in ((0, 1), (1, 0)):
-            w = _BitWriter()
-            if ah == 0:
-                _encode_ac_first(w, blocks, 1, 63, al, pac)
-            else:
-                _encode_ac_refine(w, blocks, 1, 63, al, pac)
-            out += seg(0xFFDA, bytes([1, cid, 0x00, 1, 63, (ah << 4) | al]))
-            out += w.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-@_malformed_raises_value_error
-def decode_jpeg_color_progressive(data: bytes) -> tuple[int, int, bytes]:
-    """REAL progressive (SOF2) COLOR JPEG decoder: interleaved DC scans
-    (first + refinement, per-component predictors in MCU order) and
-    non-interleaved per-component AC scans with spectral selection,
-    successive approximation and EOBn runs, accumulating each
-    component's coefficient grid across scans; then the same
-    dequantize/IDCT/upsample/YCbCr->RGB tail as the sequential
-    decoder. Restart markers inside scans are unsupported; everything
-    malformed raises ValueError."""
-    import struct as _s
-
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    i = 2
-    qtab: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    comps: list[tuple[int, int, int, int]] = []
-    blocks_c: list[list[list[int]]] = []  # per comp: padded-grid raster blocks
-    grid_c: list[tuple[int, int]] = []  # per comp: padded (rows, cols)
-    hmax = vmax = 1
-    dc_done = False
-    while i < len(data):
-        if i + 2 > len(data):
-            raise ValueError("truncated JPEG (marker cut off)")
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at {i}")
-        m = data[i + 1]
-        if m == 0xD9:
-            break
-        if i + 4 > len(data):
-            raise ValueError("truncated JPEG (segment length cut off)")
-        length = _s.unpack_from(">H", data, i + 2)[0]
-        if i + 2 + length > len(data):
-            raise ValueError("truncated JPEG (segment body cut off)")
-        body = data[i + 4 : i + 2 + length]
-        if m == 0xDB:
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                zz = list(body[j + 1 : j + 65])
-                tab = [0] * 64
-                for k in range(64):
-                    tab[_ZIGZAG[k]] = zz[k]
-                qtab[tq] = tab
-                j += 65
-        elif m == 0xC2:
-            height, width = _s.unpack_from(">HH", body, 1)
-            if body[5] != 3:
-                raise ValueError("decode_jpeg_color_progressive expects 3 components")
-            for c in range(3):
-                hv = body[7 + 3 * c]
-                comps.append((body[6 + 3 * c], hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            if hmax > 2 or vmax > 2 or any(c[1] < 1 or c[2] < 1 for c in comps):
-                raise ValueError("sampling factors beyond 2x2 unsupported")
-            mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-            for _cid, ch, cv, _tq in comps:
-                rows, cols = mcus_y * cv, mcus_x * ch
-                grid_c.append((rows, cols))
-                blocks_c.append([[0] * 64 for _ in range(rows * cols)])
-        elif m in (0xC0, 0xC1, 0xC3):
-            raise ValueError("not a progressive (SOF2) stream")
-        elif m == 0xC4:
-            j = 0
-            while j < len(body):
-                tc, th = body[j] >> 4, body[j] & 0x0F
-                bits = list(body[j + 1 : j + 17])
-                n = sum(bits)
-                huff[(tc, th)] = _huff_decode_table(bits, list(body[j + 17 : j + 17 + n]))
-                j += 17 + n
-        elif m == 0xDD:
-            if _s.unpack_from(">H", body, 0)[0]:
-                raise ValueError("restart markers unsupported in progressive")
-        elif m == 0xDA:
-            if not comps:
-                raise ValueError("SOS before SOF2")
-            ns = body[0]
-            ss, se, ahl = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-            ah, al = ahl >> 4, ahl & 0x0F
-            j = i + 2 + length
-            while j + 1 < len(data) and not (
-                data[j] == 0xFF
-                and data[j + 1] != 0x00
-                and not 0xD0 <= data[j + 1] <= 0xD7
-            ):
-                j += 1
-            r = _BitReader(data[i + 2 + length : j])
-            cid_to_ci = {c[0]: k for k, c in enumerate(comps)}
-            if ss == 0:
-                if se != 0 or ns != 3:
-                    raise ValueError("DC scan must be interleaved with Se=0")
-                order = []  # (ci, block-index) in MCU order
-                mcus_x = grid_c[0][1] // comps[0][1]
-                mcus_y = grid_c[0][0] // comps[0][2]
-                for my in range(mcus_y):
-                    for mx in range(mcus_x):
-                        for ci, (_cid, ch, cv, _tq) in enumerate(comps):
-                            for dy in range(cv):
-                                for dx in range(ch):
-                                    order.append(
-                                        (ci, (my * cv + dy) * grid_c[ci][1] + mx * ch + dx)
-                                    )
-                if ah == 0:
-                    tabs = []
-                    for c in range(ns):
-                        ci = cid_to_ci[body[1 + 2 * c]]
-                        t = huff.get((0, body[2 + 2 * c] >> 4))
-                        if t is None:
-                            raise ValueError("missing DC Huffman table")
-                        tabs.append((ci, t))
-                    tab_by_ci = dict(tabs)
-                    prev = [0] * len(comps)
-                    for ci, bi in order:
-                        s = _read_symbol(r, tab_by_ci[ci])
-                        prev[ci] += _extend(r.bits(s), s) if s else 0
-                        blocks_c[ci][bi][0] = prev[ci] << al
-                    dc_done = True
-                else:
-                    # one raw bit per block regardless of content —
-                    # batch the reads in chunks (same bits, same order)
-                    p1 = 1 << al
-                    i0 = 0
-                    while i0 < len(order):
-                        chunk = order[i0 : i0 + 32]
-                        v = r.bits(len(chunk))
-                        m = 1 << (len(chunk) - 1)
-                        for ci, bi in chunk:
-                            if v & m:
-                                blocks_c[ci][bi][0] |= p1
-                            m >>= 1
-                        i0 += len(chunk)
-            else:
-                if ns != 1:
-                    raise ValueError("progressive AC scans must be single-component")
-                if not dc_done:
-                    raise ValueError("AC scan before first DC scan")
-                ci = cid_to_ci[body[1]]
-                act = huff.get((1, body[2] & 0x0F))
-                if act is None:
-                    raise ValueError("missing AC Huffman table")
-                _cid, ch, cv, _tq = comps[ci]
-                sby, sbx = _comp_spec_grid(width, height, ch, cv, hmax, vmax)
-                cols = grid_c[ci][1]
-                sel = [
-                    blocks_c[ci][y * cols + x]
-                    for y in range(sby)
-                    for x in range(sbx)
-                ]
-                if se > 63 or ss > se:
-                    raise ValueError("bad spectral band")
-                if ah == 0:
-                    _decode_ac_first_scan(r, sel, ss, se, al, act)
-                else:
-                    if al != ah - 1:
-                        raise ValueError("refinement must lower Al by 1")
-                    _decode_ac_refine_scan(r, sel, ss, se, al, act)
-            i = j
-            continue
-        i += 2 + length
-    if width is None or not comps or not dc_done:
-        raise ValueError("missing SOF2/DC scan")
-    d = _dct_matrix()
-    # Cb/Cr share grid and quant table in the streams we emit — IDCT
-    # them as one stacked call when reached in loop order (per-block
-    # float ops identical; lazy so a missing quant table raises the
-    # same KeyError the per-component order raised)
-    can_merge = (
-        len(comps) == 3
-        and grid_c[1] == grid_c[2]
-        and comps[1][3] == comps[2][3]
-    )
-    idct_by_ci: list = [None] * len(comps)
-    planes = []
-    for ci, (cid, ch, cv, tq) in enumerate(comps):
-        rows, cols = grid_c[ci]
-        if idct_by_ci[ci] is None:
-            q = np.array(qtab[tq], dtype=np.float64).reshape(8, 8)
-            if ci == 1 and can_merge:
-                both = _idct_blocks(blocks_c[1] + blocks_c[2], q, d)
-                n1 = len(blocks_c[1])
-                idct_by_ci[1], idct_by_ci[2] = both[:n1], both[n1:]
-            else:
-                idct_by_ci[ci] = _idct_blocks(blocks_c[ci], q, d)
-        out = (
-            idct_by_ci[ci]
-            .reshape(rows, cols, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(rows * 8, cols * 8)
-        )
-        planes.append(
-            np.repeat(np.repeat(out, vmax // cv, axis=0), hmax // ch, axis=1)[
-                :height, :width
-            ]
-        )
-    Y, Cb, Cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-    R = Y + 1.402 * Cr
-    G = Y - 0.344136 * Cb - 0.714136 * Cr
-    B = Y + 1.772 * Cb
-    rgb = np.clip(np.rint(np.stack([R, G, B], axis=-1)), 0, 255).astype(np.uint8)
-    return width, height, rgb.tobytes()
-
-
-@_malformed_raises_value_error
-def decode_jpeg_color_any(data: bytes) -> tuple[int, int, bytes]:
-    """Color JPEG decode dispatching on the frame type via a real
-    marker walk: SOF0 -> sequential decoder, SOF2 -> progressive."""
-    import struct as _s
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    i = 2
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at {i}")
-        m = data[i + 1]
-        if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-            return (
-                decode_jpeg_color_progressive(data)
-                if m == 0xC2
-                else decode_jpeg_color(data)
-            )
-        if m == 0xD9 or m == 0xDA:
-            break
-        i += 2 + _s.unpack_from(">H", data, i + 2)[0]
-    raise ValueError("no frame header before scan/EOI")

@@ -1161,18 +1161,17 @@ def multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> Data
     gray ramp encodes as a six-scan progressive stream (DC first +
     refinement, per-band AC first with EOBn runs + AC refinement,
     `operators/multimodal.py:encode_jpeg_gray8_progressive`), the
-    structure probe flags it progressive, and the multi-scan decoder
-    reconstructs the coefficient array scan by scan. The gated claim is
-    EXACT: a progressive stream carries the same quantized coefficients
-    as the sequential encoding of the same image, so the progressive
-    reconstruction must be BITWISE equal to the baseline decoder's
-    pixels (matches_sequential TRUE — no tolerance), with dims
+    structure probe flags it progressive, and `decode_jpeg_gray8` (the
+    one decoder for SOF0 and SOF2 streams) reconstructs the coefficient
+    array scan by scan. The gated claim is EXACT: a progressive stream
+    carries the same quantized coefficients as the sequential encoding
+    of the same image, so the progressive reconstruction must be
+    BITWISE equal to the sequential stream's decoded pixels (matches_sequential TRUE — no tolerance), with dims
     closed-form. Zero shuffle, one Arrow-batched mapInPandas."""
     import pandas as pd
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         decode_jpeg_gray8,
-        decode_jpeg_gray8_any,
         encode_jpeg_gray8,
         encode_jpeg_gray8_progressive,
         probe_jpeg,
@@ -1188,7 +1187,7 @@ def multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> Data
             w, h, px = synth_gray_image(i)
             blob = encode_jpeg_gray8_progressive(w, h, px)
             pw, ph, _nc, _nq, _nh, progressive, _sb = probe_jpeg(blob)
-            prog = decode_jpeg_gray8_any(blob)
+            prog = decode_jpeg_gray8(blob)
             seq = decode_jpeg_gray8(encode_jpeg_gray8(w, h, px))
             rows.append(
                 (i, pw, ph, int(progressive), bool(prog == seq and (pw, ph) == (w, h)))
@@ -1214,7 +1213,7 @@ def multimodal_jpeg_progressive_color(spark: SparkSession, sf_dir: str) -> DataF
     query's chroma twin: interleaved DC scan pair in MCU order with
     per-component predictors, per-component AC first/refinement scans
     with EOBn runs (`operators/multimodal.py:
-    encode_jpeg_color_progressive/decode_jpeg_color_progressive`). The
+    encode_jpeg_color_progressive`, decoded by `decode_jpeg_color`). The
     gated claim stays exact: the progressive stream carries the
     sequential encoder's coefficient planes, so its RGB reconstruction
     must be BITWISE equal to `decode_jpeg_color` of the sequential
@@ -1224,7 +1223,6 @@ def multimodal_jpeg_progressive_color(spark: SparkSession, sf_dir: str) -> DataF
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         decode_jpeg_color,
-        decode_jpeg_color_any,
         encode_jpeg_color,
         encode_jpeg_color_progressive,
         probe_jpeg,
@@ -1240,7 +1238,7 @@ def multimodal_jpeg_progressive_color(spark: SparkSession, sf_dir: str) -> DataF
             w, h, px = synth_rgb_image(i)
             blob = encode_jpeg_color_progressive(w, h, px)
             pw, ph, ncomp, _nq, _nh, progressive, _sb = probe_jpeg(blob)
-            prog = decode_jpeg_color_any(blob)
+            prog = decode_jpeg_color(blob)
             seq = decode_jpeg_color(encode_jpeg_color(w, h, px))
             rows.append(
                 (

@@ -695,21 +695,10 @@ def test_media_decoders_total_on_magic_prefixed_garbage(buf):
         decode_png_rgba8,
     )
 
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_jpeg_color_any,
-        decode_jpeg_color_progressive,
-        decode_jpeg_gray8_any,
-        decode_jpeg_gray8_progressive,
-    )
-
     cases = (
         (decode_png_gray8, PNG_SIG + buf),
         (decode_png_palette, PNG_SIG + buf),
         (decode_png_rgba8, PNG_SIG + buf),
-        (decode_jpeg_gray8_progressive, b"\xff\xd8" + buf),
-        (decode_jpeg_gray8_any, b"\xff\xd8" + buf),
-        (decode_jpeg_color_progressive, b"\xff\xd8" + buf),
-        (decode_jpeg_color_any, b"\xff\xd8" + buf),
         (decode_gif_gray8, b"GIF89a" + buf),
         (decode_jpeg_gray8, b"\xff\xd8" + buf),
         (decode_jpeg_color, b"\xff\xd8" + buf),
@@ -971,8 +960,6 @@ def test_progressive_jpeg_equals_sequential(w, h, seed):
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         decode_jpeg_gray8,
-        decode_jpeg_gray8_any,
-        decode_jpeg_gray8_progressive,
         encode_jpeg_gray8,
         encode_jpeg_gray8_progressive,
         probe_jpeg,
@@ -982,42 +969,34 @@ def test_progressive_jpeg_equals_sequential(w, h, seed):
     px = bytes(rng.randrange(256) for _ in range(w * h))
     blob = encode_jpeg_gray8_progressive(w, h, px)
     assert probe_jpeg(blob)[5] == 1  # structure probe flags SOF2
-    got = decode_jpeg_gray8_progressive(blob)
+    got = decode_jpeg_gray8(blob)
     assert got == decode_jpeg_gray8(encode_jpeg_gray8(w, h, px))
-    # the dispatcher routes by a real marker walk on both frame types
-    assert decode_jpeg_gray8_any(blob) == got
-    assert decode_jpeg_gray8_any(encode_jpeg_gray8(w, h, px)) == got
+    # one decoder for both frame types: repeated decodes agree
+    assert decode_jpeg_gray8(blob) == got
+    assert decode_jpeg_gray8(encode_jpeg_gray8(w, h, px)) == got
 
 
 def test_progressive_jpeg_crafted_contract_holes():
-    """Structured corruption stays inside ValueError: baseline decoder
-    rejects SOF2, progressive decoder rejects SOF0, AC-before-DC scan
-    order, truncated scans, and restart intervals."""
+    """Structured corruption of a progressive stream stays inside
+    ValueError: AC-before-DC scan order and truncated scans."""
     import pytest
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         decode_jpeg_gray8,
-        decode_jpeg_gray8_progressive,
-        encode_jpeg_gray8,
         encode_jpeg_gray8_progressive,
         synth_gray_image,
     )
 
     w, h, px = synth_gray_image(11)
     prog = encode_jpeg_gray8_progressive(w, h, px)
-    base = encode_jpeg_gray8(w, h, px)
-    with pytest.raises(ValueError, match="SOF0"):
-        decode_jpeg_gray8(prog)
-    with pytest.raises(ValueError, match="SOF2"):
-        decode_jpeg_gray8_progressive(base)
     # drop everything from the first SOS up to the second one: the
     # stream then opens with an AC scan before any DC scan
     first_sos = prog.find(b"\xff\xda")
     second_sos = prog.find(b"\xff\xda", first_sos + 2)
     with pytest.raises(ValueError, match="AC scan before first DC"):
-        decode_jpeg_gray8_progressive(prog[:first_sos] + prog[second_sos:])
+        decode_jpeg_gray8(prog[:first_sos] + prog[second_sos:])
     with pytest.raises(ValueError):
-        decode_jpeg_gray8_progressive(prog[: len(prog) // 2])
+        decode_jpeg_gray8(prog[: len(prog) // 2])
 
 
 @given(
@@ -1037,8 +1016,6 @@ def test_progressive_color_jpeg_equals_sequential(w, h, seed, sub):
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         decode_jpeg_color,
-        decode_jpeg_color_any,
-        decode_jpeg_color_progressive,
         encode_jpeg_color,
         encode_jpeg_color_progressive,
         probe_jpeg,
@@ -1048,10 +1025,10 @@ def test_progressive_color_jpeg_equals_sequential(w, h, seed, sub):
     px = bytes(rng.randrange(256) for _ in range(w * h * 3))
     blob = encode_jpeg_color_progressive(w, h, px, subsample=sub)
     assert probe_jpeg(blob)[2] == 3 and probe_jpeg(blob)[5] == 1
-    got = decode_jpeg_color_progressive(blob)
+    got = decode_jpeg_color(blob)
     assert got == decode_jpeg_color(encode_jpeg_color(w, h, px, subsample=sub))
-    assert decode_jpeg_color_any(blob) == got
-    assert decode_jpeg_color_any(encode_jpeg_color(w, h, px, subsample=sub)) == got
+    assert decode_jpeg_color(blob) == got
+    assert decode_jpeg_color(encode_jpeg_color(w, h, px, subsample=sub)) == got
 
 
 def test_progressive_color_jpeg_crafted_contract_holes():
@@ -1059,28 +1036,21 @@ def test_progressive_color_jpeg_crafted_contract_holes():
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         decode_jpeg_color,
-        decode_jpeg_color_progressive,
-        encode_jpeg_color,
         encode_jpeg_color_progressive,
         synth_rgb_image,
     )
 
     w, h, px = synth_rgb_image(13)
     prog = encode_jpeg_color_progressive(w, h, px)
-    base = encode_jpeg_color(w, h, px)
-    with pytest.raises(ValueError, match="SOF0"):
-        decode_jpeg_color(prog)
-    with pytest.raises(ValueError, match="SOF2"):
-        decode_jpeg_color_progressive(base)
     # strip the DC scans: the stream opens with an AC scan
     first_sos = prog.find(b"\xff\xda")
     third_sos = prog.find(
         b"\xff\xda", prog.find(b"\xff\xda", first_sos + 2) + 2
     )
     with pytest.raises(ValueError, match="AC scan before first DC"):
-        decode_jpeg_color_progressive(prog[:first_sos] + prog[third_sos:])
+        decode_jpeg_color(prog[:first_sos] + prog[third_sos:])
     with pytest.raises(ValueError):
-        decode_jpeg_color_progressive(prog[: len(prog) * 2 // 3])
+        decode_jpeg_color(prog[: len(prog) * 2 // 3])
 
 
 @given(

@@ -9,7 +9,6 @@ from redpanda_to_parquet_writer_spark.config import EngineConfig
 from redpanda_to_parquet_writer_spark.operators.multimodal import (
     MEDIA_META_SCHEMA,
     DECODED_IMAGE_SCHEMA,
-    fake_image_codec,
     map_media_batches,
     with_media_metadata,
 )
@@ -130,17 +129,16 @@ def test_multimodal_metadata_and_codec(spark):
     assert got[1]["n_bytes"] == 12
     assert len(got[1]["content_hash"]) == 32
 
+    def fake_image_codec(data: bytes) -> tuple[int, int, int]:
+        # deterministic stand-in codec: fake dims from the byte content
+        if data is None or len(data) == 0:
+            return (0, 0, 0)
+        return (1 + data[0] % 64, 1 + data[-1] % 64, 3)
+
     decoded = map_media_batches(df, "blob", DECODED_IMAGE_SCHEMA, codec=fake_image_codec)
     out = {r["id"]: r for r in decoded.collect()}
     assert set(decoded.columns) == {"id", "width", "height", "channels"}
     assert out[1]["width"] == 1 + 0xFF % 64 and out[1]["channels"] == 3
-
-
-def test_multimodal_stub_raises_cleanly(spark):
-    df = spark.createDataFrame([(1, b"x")], "id long, blob binary")
-    decoded = map_media_batches(df, "blob", DECODED_IMAGE_SCHEMA)  # stub codec
-    with pytest.raises(Exception, match="imaging library"):
-        decoded.collect()
 
 
 def test_media_decode_corrupt_tolerance(spark):
@@ -543,11 +541,10 @@ def test_jpeg_gray8_error_paths():
     blob = encode_jpeg_gray8(8, 8, bytes(range(64)))
     with pytest.raises(ValueError):
         decode_jpeg_gray8(blob[:40])  # truncated mid-segment
-    # progressive (SOF2) must be rejected loudly, not mis-decoded
-    import struct
-
+    # a sequential scan under a progressive (SOF2) header must be
+    # rejected loudly, not mis-decoded
     prog = blob.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(ValueError, match="baseline"):
+    with pytest.raises(ValueError, match="Se=0"):
         decode_jpeg_gray8(prog)
 
 
@@ -660,9 +657,7 @@ def test_jpeg_progressive_large_image_multichunk_scans():
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         decode_jpeg_color,
-        decode_jpeg_color_any,
         decode_jpeg_gray8,
-        decode_jpeg_gray8_any,
         encode_jpeg_color,
         encode_jpeg_color_progressive,
         encode_jpeg_gray8,
@@ -674,12 +669,12 @@ def test_jpeg_progressive_large_image_multichunk_scans():
     px = bytes(rng.randrange(256) for _ in range(w * h))
     prog = encode_jpeg_gray8_progressive(w, h, px)
     seq = encode_jpeg_gray8(w, h, px)
-    assert decode_jpeg_gray8_any(prog) == decode_jpeg_gray8(seq)
+    assert decode_jpeg_gray8(prog) == decode_jpeg_gray8(seq)
     rgb = bytes(rng.randrange(256) for _ in range(w * h * 3))
     cprog = encode_jpeg_color_progressive(w, h, rgb)
     cseq = encode_jpeg_color(w, h, rgb)
-    assert decode_jpeg_color_any(cprog) == decode_jpeg_color(cseq)
+    assert decode_jpeg_color(cprog) == decode_jpeg_color(cseq)
     # determinism across repeated calls (the r18 table memos must not
     # leak state between encodes/decodes)
     assert encode_jpeg_gray8_progressive(w, h, px) == prog
-    assert decode_jpeg_gray8_any(prog) == decode_jpeg_gray8_any(prog)
+    assert decode_jpeg_gray8(prog) == decode_jpeg_gray8(prog)
