@@ -34,8 +34,9 @@ class MsgpackError(ValueError):
 # fresh dict literal per scalar and re-parsed a format string per struct
 # call — both hoisted to module level, with `struct.Struct` unpackers
 # precompiled once. Driver-side profile of the tiny-event roundtrip
-# (profile_codecs_r17.py msgpack_roundtrip) put the per-call dict
-# allocations and struct format parsing inside `_unpack`/`_pack_int`.
+# (`scripts/profile_codecs_r17.py msgpack_roundtrip`, in git at rev
+# cc4c36c) put the per-call dict allocations and struct format parsing
+# inside `_unpack`/`_pack_int`.
 _P_BB = struct.Struct(">BB").pack
 _P_BH = struct.Struct(">BH").pack
 _P_BI = struct.Struct(">BI").pack

@@ -8,9 +8,10 @@ library-free codecs/probes for every major container, all oracle-gated
 in plans/multimodal_queries.py:
 
   - WAV: full codec (stdlib `wave`, container + 16-bit PCM)
-  - PNG: full codec (`zlib`+`struct`: chunk walk, CRC check, inflate,
-    all five scanline filters) for gray8 AND truecolor RGB8
-  - GIF: full codec (variable-width GIF-LZW, grayscale palette)
+  - PNG: one encoder and one decoder (`zlib`+`struct`: chunk walk, CRC
+    check, inflate, all five scanline filters, Adam7) for gray8,
+    truecolor RGB8, paletted and RGBA8
+  - GIF: gray8 codec (variable-width GIF-LZW, grayscale palette)
   - mp4: box-tree structure probe (brand, mvhd, tracks, mdat)
   - JPEG: marker-stream probe (SOF dims/components, table counts, scan
     accounting) and a full codec on one frame-and-scan model (numpy
@@ -257,32 +258,6 @@ def probe_tiff(data: bytes) -> tuple[int, int, int, int, int, int]:
         int(tags.get(259, 1)),  # Compression default none
         int(n),
     )
-
-
-def encode_tiff_skeleton(
-    w: int, h: int, bits: int = 8, samples: int = 1
-) -> bytes:
-    """Minimal VALID little-endian TIFF header + IFD0 (no pixel data) —
-    the structural twin for probe testing, like `encode_jpeg_skeleton`
-    and `encode_mp4_skeleton`."""
-    import struct as _s
-
-    entries = [
-        (256, 4, 1, w),        # ImageWidth LONG
-        (257, 4, 1, h),        # ImageLength LONG
-        (258, 3, 1, bits),     # BitsPerSample SHORT
-        (259, 3, 1, 1),        # Compression: none
-        (277, 3, 1, samples),  # SamplesPerPixel
-    ]
-    out = bytearray(b"II" + _s.pack("<HI", 42, 8))
-    out += _s.pack("<H", len(entries))
-    for tag, typ, cnt, val in entries:
-        if typ == 3:
-            out += _s.pack("<HHIHH", tag, typ, cnt, val, 0)
-        else:
-            out += _s.pack("<HHII", tag, typ, cnt, val)
-    out += _s.pack("<I", 0)  # no next IFD
-    return bytes(out)
 
 
 # --- REAL WebP-lossless (VP8L) codec subset ---------------------------------
@@ -2169,7 +2144,10 @@ def _gif_lzw_encode(indices: bytes, min_code_size: int = 8) -> bytes:
     return bytes(out)
 
 
-def _gif_lzw_decode(data: bytes, min_code_size: int = 8) -> bytes:
+def _gif_lzw_decode(data: bytes, min_code_size: int, expected: int) -> bytes:
+    """Decode a GIF-LZW stream of `expected` indices; a stream that
+    decodes past that size raises as soon as it does, so a small blob
+    cannot expand to megabytes before its size is checked."""
     clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
     width = min_code_size + 1
     table: list[bytes] = [bytes([i]) for i in range(1 << min_code_size)] + [b"", b""]
@@ -2203,6 +2181,8 @@ def _gif_lzw_decode(data: bytes, min_code_size: int = 8) -> bytes:
         else:
             raise ValueError(f"bad LZW code {code}")
         out += entry
+        if len(out) > expected:
+            raise ValueError("decoded pixel count mismatch")
         if len(table) == (1 << width) and width < 12:
             width += 1
         prev = entry
@@ -2230,11 +2210,15 @@ def encode_gif_gray8(w: int, h: int, pixels: bytes) -> bytes:
     return bytes(out)
 
 
-def _decode_gif(data: bytes) -> tuple[int, int, bytes, list[int]]:
-    """Shared GIF walk: header/LSD parse, palette read, sub-block
-    reassembly, full variable-width LZW decompression. Returns
-    (width, height, palette bytes, pixel index list) — the gray and RGB
-    decoders differ only in how they apply the palette."""
+@_malformed_raises_value_error
+def decode_gif_gray8(data: bytes) -> tuple[int, int, bytes]:
+    """REAL GIF decode for non-interlaced single-frame grayscale GIFs —
+    stdlib only: header/LSD parse, palette read, sub-block reassembly,
+    full variable-width LZW decompression. Returns (width, height,
+    row-major gray8 bytes — palette's red channel applied, so the round
+    trip with `encode_gif_gray8` is the identity). Raises ValueError on
+    malformed input; pair with `map_media_batches(on_error="null")` for
+    per-row corrupt-blob tolerance."""
     import struct
 
     if data[:6] not in (b"GIF87a", b"GIF89a"):
@@ -2277,75 +2261,17 @@ def _decode_gif(data: bytes) -> tuple[int, int, bytes, list[int]]:
                 pos += 1 + n
             if pos >= len(data):
                 raise ValueError("truncated image data")
-            pos += 1  # block terminator
-            indices = _gif_lzw_decode(bytes(lzw), min_code)
+            indices = _gif_lzw_decode(bytes(lzw), min_code, iw * ih)
             if len(indices) != iw * ih:
                 raise ValueError("decoded pixel count mismatch")
             if max(indices, default=0) * 3 + 3 > len(palette):
                 raise ValueError("pixel index outside color table")
-            return (int(iw), int(ih), bytes(palette), list(indices))
+            return (int(iw), int(ih), bytes(palette[3 * i] for i in indices))
         elif marker == 0x3B:
             break
         else:
             raise ValueError(f"unknown block marker {marker:#x}")
     raise ValueError("no image descriptor found")
-
-
-@_malformed_raises_value_error
-def decode_gif_gray8(data: bytes) -> tuple[int, int, bytes]:
-    """REAL GIF decode for non-interlaced single-frame grayscale GIFs —
-    stdlib only (see `_decode_gif`). Returns (width, height, row-major
-    gray8 bytes — palette's red channel applied, so the round trip with
-    `encode_gif_gray8` is the identity). Raises ValueError on malformed
-    input; pair with `map_media_batches(on_error="null")` for per-row
-    corrupt-blob tolerance."""
-    w, h, palette, indices = _decode_gif(data)
-    return (w, h, bytes(palette[3 * i] for i in indices))
-
-
-@_malformed_raises_value_error
-def decode_gif_rgb(data: bytes) -> tuple[int, int, bytes]:
-    """Color GIF decode: full palette lookup to interleaved RGB bytes
-    (GIF is inherently palette-indexed, so ANY single-frame
-    non-interlaced GIF decodes through this — grayscale ones just have
-    a gray palette)."""
-    w, h, palette, indices = _decode_gif(data)
-    return (w, h, b"".join(palette[3 * i : 3 * i + 3] for i in indices))
-
-
-def encode_gif_rgb(w: int, h: int, rgb: bytes) -> bytes:
-    """Encode interleaved RGB8 as a valid color GIF89a: the palette is
-    the image's distinct colors in sorted order (deterministic). GIF is
-    a palette format — sources with more than 256 distinct colors need
-    a quantization pass first (median-cut etc.), which is a LOSSY design
-    choice this codec refuses to make silently: such inputs raise
-    ValueError instead."""
-    import struct
-
-    import numpy as np
-
-    if len(rgb) != w * h * 3:
-        raise ValueError(f"expected {w * h * 3} pixel bytes, got {len(rgb)}")
-    arr = np.frombuffer(bytes(rgb), dtype=np.uint8).reshape(-1, 3)
-    colors, inverse = np.unique(arr, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        raise ValueError(
-            f"{len(colors)} distinct colors exceed GIF's 256-entry palette; "
-            "quantize first"
-        )
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # global table, 256 colors
-    out += colors.astype(np.uint8).tobytes()
-    out += bytes(3 * (256 - len(colors)))  # pad the table to 256 entries
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)  # image descriptor
-    out.append(8)  # LZW min code size
-    lzw = _gif_lzw_encode(bytes(inverse.astype(np.uint8)))
-    for i in range(0, len(lzw), 255):
-        block = lzw[i : i + 255]
-        out.append(len(block))
-        out += block
-    out += b"\x00\x3b"  # block terminator + trailer
-    return bytes(out)
 
 
 def decode_gif_features(data: bytes) -> tuple[int, int, int, int, int, int, int]:
@@ -2743,59 +2669,11 @@ def resize_gray8_batches(
         + list(RESIZED_IMAGE_SCHEMA.fields)
     )
 
-    return _resize_batches(
-        df, binary_col, w_col, h_col, 1, out_w, out_h, passthrough
-    )
-
-
-def resize_rgb8_batches(
-    df: DataFrame,
-    binary_col: str,
-    w_col: str,
-    h_col: str,
-    out_w: int = 8,
-    out_h: int = 8,
-    passthrough: list[str] | None = None,
-) -> DataFrame:
-    """Nearest-neighbor resize of interleaved RGB8 bitmaps — the same
-    floor-mapping as `resize_gray8_batches` applied to the spatial axes
-    with the channel axis preserved (p00/p_last are the first/last
-    channel BYTES; pixel_sum runs over all interleaved bytes, matching
-    `decode_png_any_features`). The post-decode stage for the color
-    PNG/JPEG/GIF codecs in this module."""
-    return _resize_batches(
-        df, binary_col, w_col, h_col, 3, out_w, out_h, passthrough
-    )
-
-
-def _resize_batches(
-    df: DataFrame,
-    binary_col: str,
-    w_col: str,
-    h_col: str,
-    channels: int,
-    out_w: int,
-    out_h: int,
-    passthrough: list[str] | None,
-) -> DataFrame:
-    """Shared resize core for the gray and RGB stages: one floor-mapping
-    implementation so the two cannot drift apart."""
-    import numpy as np
-
-    passthrough = passthrough or [
-        c for c in df.columns if c not in (binary_col, w_col, h_col)
-    ]
-    result_schema = StructType(
-        [f for f in df.schema.fields if f.name in passthrough]
-        + list(RESIZED_IMAGE_SCHEMA.fields)
-    )
-
     def run(batches: Iterator) -> Iterator:
         for pdf in batches:
             thumbs, p00s, plasts, sums = [], [], [], []
             for data, w, h in zip(pdf[binary_col], pdf[w_col], pdf[h_col]):
-                shape = (int(h), int(w)) if channels == 1 else (int(h), int(w), channels)
-                img = np.frombuffer(data, dtype=np.uint8).reshape(shape)
+                img = np.frombuffer(data, dtype=np.uint8).reshape(int(h), int(w))
                 ys = (np.arange(out_h) * int(h)) // out_h
                 xs = (np.arange(out_w) * int(w)) // out_w
                 thumb = img[np.ix_(ys, xs)]
@@ -2817,25 +2695,15 @@ def _resize_batches(
 
 # --- image: REAL PNG codec (stdlib zlib + struct, no external library) -----
 #
-# PNG (gray8 and truecolor RGB8) is fully decodable with the stdlib:
-# chunk walk with CRC verification, one zlib inflate, then per-scanline
-# unfiltering (the five standard filters: None/Sub/Up/Average/Paeth,
-# with the bpp-back left neighbor for multi-byte pixels). This replaces
-# an imaging library for PNG blobs; JPEG has its own real codec
-# further down.
+# PNG is one format whose color type is a field of IHDR, so it has one
+# encoder (`encode_png`, color type derived from its inputs) and one
+# decoder (`decode_png`: gray8, truecolor, paletted and truecolor+alpha,
+# plain or Adam7): chunk walk with CRC verification, one size-capped
+# zlib inflate, then per-scanline unfiltering (the five standard
+# filters: None/Sub/Up/Average/Paeth, with the bpp-back left neighbor
+# for multi-byte pixels). JPEG has its own real codec further down.
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    """PNG Paeth predictor (RFC 2083 section 6.6)."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
 
 
 #: Adam7 interlace pass geometry: (x0, y0, dx, dy) per pass, in stream
@@ -2894,19 +2762,22 @@ def _filter_scanlines(img, bpp: int, filter_cycle: bool) -> bytearray:
     return raw
 
 
-def _encode_png(
+def encode_png(
     w: int,
     h: int,
     pixels: bytes,
-    channels: int,
+    palette: bytes | None = None,
+    trns: bytes | None = None,
     filter_cycle: bool = True,
-    color_type: int | None = None,
-    extra_chunks: list[tuple[bytes, bytes]] = (),
     interlace: bool = False,
 ) -> bytes:
-    """Encode a raw gray8 (channels=1), RGB8 (3) or RGBA8 (4) bitmap —
-    or 1-byte palette indices with an explicit `color_type=3` and a
-    PLTE in `extra_chunks` — as a valid PNG (stdlib + numpy).
+    """Encode a raw bitmap as a valid 8-bit PNG (stdlib + numpy). The
+    color type follows from the inputs: with a `palette` (interleaved
+    RGB, len % 3 == 0, <= 256 entries; optional per-entry alpha in
+    `trns`) `pixels` are 1-byte indices and the image is color type 3;
+    otherwise 1, 3 or 4 bytes per pixel give gray (0), truecolor (2) or
+    truecolor+alpha (6). Palette rows filter their INDEX bytes, as the
+    spec says.
 
     `filter_cycle=True` applies filter type y % 5 to row y, so a single
     encoded image exercises every scanline filter the decoder must
@@ -2923,7 +2794,23 @@ def _encode_png(
 
     import numpy as np
 
-    bpp = channels
+    extra = []
+    if palette is not None:
+        if len(palette) % 3 or not 3 <= len(palette) <= 256 * 3:
+            raise ValueError(f"ragged palette (length {len(palette)})")
+        if max(pixels, default=0) >= len(palette) // 3:
+            raise ValueError("palette index out of range")
+        if trns is not None and len(trns) > len(palette) // 3:
+            raise ValueError("tRNS longer than palette")
+        extra = [(b"PLTE", palette)] + ([(b"tRNS", trns)] if trns is not None else [])
+        bpp, color_type = 1, 3
+    elif trns is not None:
+        raise ValueError("tRNS needs a palette")
+    else:
+        bpp = len(pixels) // (w * h) if w * h else 1
+        if bpp not in _PNG_COLOR_TYPES:
+            raise ValueError(f"{len(pixels)} pixel bytes is not 1, 3 or 4 per pixel")
+        color_type = _PNG_COLOR_TYPES[bpp]
     if len(pixels) != w * h * bpp:
         raise ValueError(f"expected {w * h * bpp} pixel bytes, got {len(pixels)}")
     arr = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, bpp)
@@ -2950,76 +2837,18 @@ def _encode_png(
             + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
         )
 
-    if color_type is None:
-        color_type = {1: 0, 3: 2, 4: 6}[channels]  # gray8 / RGB8 / RGBA8
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, int(interlace))
     return (
         PNG_SIG
         + chunk(b"IHDR", ihdr)
-        + b"".join(chunk(t, b) for t, b in extra_chunks)
+        + b"".join(chunk(t, b) for t, b in extra)
         + chunk(b"IDAT", zlib.compress(bytes(raw), 6))
         + chunk(b"IEND", b"")
     )
 
 
-def encode_png_gray8(
-    w: int, h: int, pixels: bytes, filter_cycle: bool = True,
-    interlace: bool = False,
-) -> bytes:
-    """Encode a raw gray8 bitmap as a valid PNG (see `_encode_png`);
-    `interlace=True` writes Adam7 pass-ordered scanlines."""
-    return _encode_png(
-        w, h, pixels, channels=1, filter_cycle=filter_cycle, interlace=interlace
-    )
-
-
-def encode_png_rgb8(
-    w: int, h: int, pixels: bytes, filter_cycle: bool = True,
-    interlace: bool = False,
-) -> bytes:
-    """Encode raw interleaved RGB8 (3 bytes/pixel, row-major) as a valid
-    truecolor PNG (see `_encode_png`)."""
-    return _encode_png(
-        w, h, pixels, channels=3, filter_cycle=filter_cycle, interlace=interlace
-    )
-
-
-def encode_png_rgba8(
-    w: int, h: int, pixels: bytes, filter_cycle: bool = True,
-    interlace: bool = False,
-) -> bytes:
-    """Encode raw interleaved RGBA8 (4 bytes/pixel, row-major) as a
-    valid truecolor+alpha PNG (color type 6; see `_encode_png`)."""
-    return _encode_png(
-        w, h, pixels, channels=4, filter_cycle=filter_cycle, interlace=interlace
-    )
-
-
-def encode_png_palette8(
-    w: int,
-    h: int,
-    indices: bytes,
-    palette: bytes,
-    trns: bytes | None = None,
-    filter_cycle: bool = True,
-) -> bytes:
-    """Encode 1-byte palette indices as a valid color-type-3 PNG: PLTE
-    carries the interleaved RGB palette (len % 3 == 0, <= 256 entries),
-    optional tRNS carries per-entry alpha. Scanline filtering is the
-    same 1-byte-pixel machinery as gray8 (the spec filters INDEX bytes,
-    not expanded colors)."""
-    if len(palette) % 3 or not 3 <= len(palette) <= 256 * 3:
-        raise ValueError(f"ragged palette (length {len(palette)})")
-    if max(indices, default=0) >= len(palette) // 3:
-        raise ValueError("palette index out of range")
-    if trns is not None and len(trns) > len(palette) // 3:
-        raise ValueError("tRNS longer than palette")
-    extra = [(b"PLTE", palette)] + ([(b"tRNS", trns)] if trns is not None else [])
-    return _encode_png(
-        w, h, indices, channels=1, filter_cycle=filter_cycle,
-        color_type=3, extra_chunks=extra,
-    )
-
+#: bytes per pixel of a non-paletted bitmap -> PNG color type
+_PNG_COLOR_TYPES = {1: 0, 3: 2, 4: 6}
 
 #: PNG color type -> bytes per pixel IN THE FILTERED SCANLINES
 #: (palette rows carry 1-byte indices; expansion to RGB happens after
@@ -3101,7 +2930,8 @@ def _unfilter_scanlines(raw: bytes, h: int, rw: int, bpp: int):
     return out.astype(np.uint8)
 
 
-def _decode_png(data: bytes, allowed_color_types: frozenset) -> tuple[int, int, int, bytes]:
+@_malformed_raises_value_error
+def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     """REAL PNG decode for 8-bit gray (color type 0), truecolor RGB
     (2), paletted (3, PLTE lookup + optional tRNS validation) and
     truecolor+alpha (6), both non-interlaced and Adam7-interlaced —
@@ -3112,14 +2942,20 @@ def _decode_png(data: bytes, allowed_color_types: frozenset) -> tuple[int, int, 
     an independent sub-image and scatter it to its pixel grid. Paletted
     indices expand to interleaved RGB AFTER unfiltering.
 
+    The inflate stops one byte past the size IHDR implies, so a stream
+    that decompresses to more than its header claims is rejected
+    without being inflated in full.
+
     Returns (width, height, channels, row-major interleaved pixel
-    bytes). Raises ValueError on anything malformed (bad signature, CRC
+    bytes); channels is 1, 3 (truecolor or expanded palette) or 4.
+    Raises ValueError on anything malformed (bad signature, CRC
     mismatch, truncated stream, unsupported color type or interlace
     method, missing/ragged PLTE, palette index or tRNS out of range) —
     pair with `map_media_batches(on_error="null")` for per-row
     corrupt-blob tolerance at corpus scale.
     """
     import struct
+    import sys
     import zlib
 
     if data[:8] != PNG_SIG:
@@ -3141,7 +2977,7 @@ def _decode_png(data: bytes, allowed_color_types: frozenset) -> tuple[int, int, 
             )
             # interlace 0 (none) and 1 (Adam7) both decode; anything
             # else is spec-invalid
-            if bit_depth != 8 or color_type not in allowed_color_types or interlaced > 1:
+            if bit_depth != 8 or color_type not in _PNG_CHANNELS or interlaced > 1:
                 raise ValueError(
                     f"unsupported PNG (bit_depth={bit_depth}, "
                     f"color_type={color_type}, interlace={interlaced})"
@@ -3165,76 +3001,39 @@ def _decode_png(data: bytes, allowed_color_types: frozenset) -> tuple[int, int, 
             raise ValueError("paletted PNG missing PLTE")
         if trns is not None and len(trns) > len(plte) // 3:
             raise ValueError("tRNS longer than palette")
-    raw = zlib.decompress(bytes(idat))
+    # Adam7: the stream concatenates each non-empty pass's own filtered
+    # scanlines; without interlacing the one pass is the whole image
+    if interlaced:
+        passes = [
+            (x0, y0, dx, dy, (w - x0 + dx - 1) // dx, (h - y0 + dy - 1) // dy)
+            for x0, y0, dx, dy in _ADAM7
+        ]
+        passes = [p for p in passes if p[4] > 0 and p[5] > 0]
+    else:
+        passes = [(0, 0, 1, 1, w, h)]
+    size = sum(hp * (wp * bpp + 1) for *_g, wp, hp in passes)
+    inflate = zlib.decompressobj()
+    raw = inflate.decompress(bytes(idat), min(size + 1, sys.maxsize))
+    if len(raw) != size:
+        raise ValueError("decompressed size mismatch")
+    if not inflate.eof:
+        raise ValueError("truncated IDAT stream")
     import numpy as np
 
-    if interlaced:
-        # Adam7: the stream concatenates each non-empty pass's own
-        # filtered scanlines; each pass unfilters as an independent
-        # sub-image, then scatters to its (x0 + j*dx, y0 + i*dy) grid
-        full = np.zeros((h, w, bpp), dtype=np.uint8)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            wp = (w - x0 + dx - 1) // dx
-            hp = (h - y0 + dy - 1) // dy
-            if wp <= 0 or hp <= 0:
-                continue
-            need = hp * (wp * bpp + 1)
-            block = raw[off : off + need]
-            if len(block) != need:
-                raise ValueError("decompressed size mismatch")
-            off += need
-            rec = _unfilter_scanlines(block, hp, wp * bpp, bpp)
-            full[y0::dy, x0::dx] = rec.reshape(hp, wp, bpp)
-        if off != len(raw):
-            raise ValueError("decompressed size mismatch")
-        px = full.reshape(h, w * bpp)
-    else:
-        rw = w * bpp  # row width in bytes
-        if len(raw) != h * (rw + 1):
-            raise ValueError("decompressed size mismatch")
-        px = _unfilter_scanlines(raw, h, rw, bpp)
+    full = np.zeros((h, w, bpp), dtype=np.uint8)
+    off = 0
+    for x0, y0, dx, dy, wp, hp in passes:
+        need = hp * (wp * bpp + 1)
+        rec = _unfilter_scanlines(raw[off : off + need], hp, wp * bpp, bpp)
+        full[y0::dy, x0::dx] = rec.reshape(hp, wp, bpp)
+        off += need
+    px = full.reshape(h, w * bpp)
     if color_type == 3:
         pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
         if int(px.max(initial=0)) >= len(pal):
             raise ValueError("palette index out of range")
         return (int(w), int(h), 3, pal[px.reshape(-1)].tobytes())
     return (int(w), int(h), bpp, px.tobytes())
-
-
-@_malformed_raises_value_error
-def decode_png_gray8(data: bytes) -> tuple[int, int, bytes]:
-    """Grayscale-only PNG decode (see `_decode_png`); returns
-    (width, height, pixel bytes). RGB blobs raise ValueError — callers
-    that expect gray bitmaps keep their strict contract."""
-    w, h, _c, px = _decode_png(data, frozenset({0}))
-    return (w, h, px)
-
-
-@_malformed_raises_value_error
-def decode_png_rgb8(data: bytes) -> tuple[int, int, bytes]:
-    """Truecolor-only PNG decode (see `_decode_png`); returns
-    (width, height, interleaved RGB bytes)."""
-    w, h, _c, px = _decode_png(data, frozenset({2}))
-    return (w, h, px)
-
-
-@_malformed_raises_value_error
-def decode_png_palette(data: bytes) -> tuple[int, int, bytes]:
-    """Paletted-only PNG decode (color type 3): unfilters the index
-    scanlines, validates every index against PLTE (and tRNS length if
-    present), and returns the EXPANDED (width, height, interleaved RGB
-    bytes) — same output contract as `decode_png_rgb8`."""
-    w, h, _c, px = _decode_png(data, frozenset({3}))
-    return (w, h, px)
-
-
-@_malformed_raises_value_error
-def decode_png_rgba8(data: bytes) -> tuple[int, int, bytes]:
-    """Truecolor+alpha-only PNG decode (color type 6); returns
-    (width, height, interleaved RGBA bytes)."""
-    w, h, _c, px = _decode_png(data, frozenset({6}))
-    return (w, h, px)
 
 
 DECODED_PNG_SCHEMA = StructType(
@@ -3250,35 +3049,16 @@ DECODED_PNG_SCHEMA = StructType(
 )
 
 
+@_malformed_raises_value_error
 def decode_png_features(data: bytes) -> tuple[int, int, int, int, int, int, int]:
-    """PNG decode to exact integer features (for `map_media_batches`):
-    dimensions + corner pixels + full pixel sum — closed-form verifiable
-    when the source bitmap is deterministic."""
-    w, h, px = decode_png_gray8(data)
-    return (w, h, 8, 1, px[0], px[-1], sum(px))
-
-
-@_malformed_raises_value_error
-def decode_png_any_features(data: bytes) -> tuple[int, int, int, int, int, int, int]:
-    """Color-type-agnostic PNG feature probe: decodes gray8, truecolor
-    RGB8, paletted (expanded to RGB) or RGBA8 and reports the ACTUAL
-    post-expansion channel count alongside dimensions, first/last byte
-    and the exact sum over all interleaved channel bytes — the per-blob
-    stats row a media-curation pass keys on."""
-    w, h, c, px = _decode_png(data, frozenset({0, 2, 3, 6}))
+    """PNG feature probe for any supported color type (for
+    `map_media_batches`): dimensions, the ACTUAL post-expansion channel
+    count, first/last byte and the exact sum over all interleaved
+    channel bytes — closed-form verifiable when the source bitmap is
+    deterministic, and the per-blob stats row a media-curation pass
+    keys on."""
+    w, h, c, px = decode_png(data)
     return (w, h, 8, c, px[0], px[-1], sum(px))
-
-
-@_malformed_raises_value_error
-def decode_png_palette_features(
-    data: bytes,
-) -> tuple[int, int, int, int, int, int, int]:
-    """Paletted-PNG feature probe (strict color-type-3 contract of
-    `decode_png_palette`): dimensions + corner bytes + exact byte sum of
-    the palette-EXPANDED RGB — closed-form verifiable when index grid
-    and palette are deterministic."""
-    w, h, px = decode_png_palette(data)
-    return (w, h, 8, 3, px[0], px[-1], sum(px))
 
 
 #: deterministic gray8 test-image parameters (shared with the analytic

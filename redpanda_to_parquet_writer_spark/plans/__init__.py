@@ -41,8 +41,8 @@ r8 consolidation (the OTHER half of r7 #8 — "consolidate near-duplicate
 gated rows"): eight rows that shared a codec path or were one SURVEY
 capability split in two are merged into six, bringing the registry to
 150 and the driver cycle back to 3 rounds. Each merged query unions (or
-chains) the UNCHANGED per-variant plan builders, so no codec path lost
-its oracle branch:
+chains) one branch per former row, so no codec path lost its oracle
+branch:
 
   multimodal_png_roundtrip           <- png_decode + png_rgb_decode +
                                         png_palette_decode + png_interlaced_decode
@@ -59,6 +59,16 @@ immediately (this also covers the r7-verdict-named driver-debt rows
 `multimodal_png_interlaced_decode` / `multimodal_jpeg_progressive_decode`
 / `multimodal_jpeg_progressive_color`, whose codec paths now ride in
 their merged successors).
+
+The multimodal branches are built by one builder per image family
+(`plans/multimodal_queries.py`): `_image_roundtrip` (the four PNG
+branches, the GIF row and the blob stage of `streaming_media_ingest`,
+each with its own blob maker), `_jpeg_baseline_branch`,
+`_jpeg_progressive_branch` and `_avi_branch`, each driven by a
+gray8/ycbcr420 variant table. Every branch keeps its own
+`_doc_ids_spread` call and the union stays `unionByName`, so the
+executed plans and job counts are those of the former per-variant
+builders.
 """
 
 from __future__ import annotations

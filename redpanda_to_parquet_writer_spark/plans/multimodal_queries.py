@@ -62,6 +62,17 @@ def _doc_ids_spread(
     return docs.repartition(parts) if parts > 1 else docs
 
 
+def _tagged_union(branches) -> DataFrame:
+    """unionByName of (variant, frame) branches, each tagged with a
+    literal `variant` column (union is plan-level concatenation — no
+    exchange added)."""
+    out = None
+    for variant, frame in branches:
+        frame = frame.withColumn("variant", F.lit(variant))
+        out = frame if out is None else out.unionByName(frame)
+    return out
+
+
 def _byte_stats_codec(data: bytes):
     return (int(data[0]), int(data[-1])) if data else (None, None)
 
@@ -160,33 +171,29 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image container codec end-to-end: synthesize a deterministic
-    raw gray8 bitmap per doc, ENCODE it as a real PNG (stdlib zlib +
-    struct; filter type cycles per scanline so all five PNG filters are
-    exercised), sniff the PNG magic JVM-side, then DECODE the container
-    back (chunk walk + CRC verify + inflate + unfilter,
-    `operators/multimodal.py:decode_png_gray8`) and verify dimensions,
-    corner pixels and the exact pixel sum against a closed-form oracle.
+def _image_roundtrip(
+    spark: SparkSession, sf_dir: str, make_blob, codec, spool=None
+) -> DataFrame:
+    """The one image-blob round trip: `make_blob(doc_id)` encodes a
+    deterministic per-doc image (Arrow-batched pandas UDF over the
+    spread doc ids), the container magic is sniffed JVM-side, and
+    `codec` decodes every blob back to the DECODED_PNG_SCHEMA feature
+    row (dimensions, channels, corner bytes, exact byte sum) — verified
+    against a closed-form oracle. `spool(blobs)`, when given, returns
+    the DataFrame the decode stage reads instead of the blobs (the
+    streaming ingest lands them in a spool and streams them back).
 
-    Same 100-TB shape as the WAV round trip: blobs live in a binary
-    column, both codec stages are narrow Arrow-batched mapInPandas, only
-    small typed features leave the blob row.
-    """
+    The 100-TB shape: blobs live in a binary column, both codec stages
+    are narrow Arrow-batched mapInPandas, and only small typed features
+    leave the blob row."""
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         DECODED_PNG_SCHEMA,
-        decode_png_features,
-        encode_png_gray8,
-        synth_gray_image,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-
-    def _png(i: int) -> bytes:
-        return encode_png_gray8(*synth_gray_image(int(i)))
-
-    synth = F.pandas_udf(lambda ids: ids.map(_png), "binary")
-    blobs = docs.withColumn("blob", synth("doc_id"))
+    synth = F.pandas_udf(lambda ids: ids.map(make_blob), "binary")
+    blobs = _doc_ids_spread(spark, sf_dir).withColumn("blob", synth("doc_id"))
+    if spool is not None:
+        blobs = spool(blobs)
     with_meta = with_media_metadata(blobs, "blob", media_type="image").select(
         "doc_id", "blob", F.col("media_meta.format").alias("format")
     )
@@ -194,118 +201,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_meta,
         "blob",
         DECODED_PNG_SCHEMA,
-        codec=decode_png_features,
-        passthrough=["doc_id", "format"],
-    )
-
-
-def multimodal_png_rgb_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truecolor PNG round trip (VERDICT r5 #6): a deterministic
-    interleaved-RGB8 bitmap per doc is encoded as a real color-type-2
-    PNG (same stdlib chunk/filter machinery as gray8 with 3-byte
-    pixels), magic-sniffed JVM-side, then decoded by the
-    color-type-AGNOSTIC probe (`decode_png_any_features`) which reports
-    the actual channel count — verified against a closed-form oracle
-    over (doc_id, x, y, channel). Same 100-TB shape as the gray query:
-    blobs in a binary column, narrow Arrow-batched mapInPandas, only
-    typed features leave the blob row.
-    """
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        DECODED_PNG_SCHEMA,
-        decode_png_any_features,
-        encode_png_rgb8,
-        synth_rgb_image,
-    )
-
-    docs = _doc_ids_spread(spark, sf_dir)
-
-    def _png(i: int) -> bytes:
-        return encode_png_rgb8(*synth_rgb_image(int(i)))
-
-    synth = F.pandas_udf(lambda ids: ids.map(_png), "binary")
-    blobs = docs.withColumn("blob", synth("doc_id"))
-    with_meta = with_media_metadata(blobs, "blob", media_type="image").select(
-        "doc_id", "blob", F.col("media_meta.format").alias("format")
-    )
-    return map_media_batches(
-        with_meta,
-        "blob",
-        DECODED_PNG_SCHEMA,
-        codec=decode_png_any_features,
-        passthrough=["doc_id", "format"],
-    )
-
-
-def multimodal_png_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paletted PNG round trip (VERDICT r6 #7): a deterministic 16-color
-    index grid + per-doc palette + tRNS alpha encode as a real
-    color-type-3 PNG (PLTE/tRNS chunks, index-byte scanline filtering —
-    cycling all five filters), magic-sniffed JVM-side, then decoded by
-    the strict paletted probe (`decode_png_palette_features`): unfilter,
-    PLTE bounds-check every index, tRNS length validation, palette
-    expansion to interleaved RGB — verified against a closed-form
-    oracle over (doc_id, x, y, channel). Same 100-TB shape as the other
-    image queries: blobs in a binary column, narrow Arrow-batched
-    mapInPandas, only typed features leave the blob row.
-    """
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        DECODED_PNG_SCHEMA,
-        decode_png_palette_features,
-        encode_png_palette8,
-        synth_palette_image,
-    )
-
-    docs = _doc_ids_spread(spark, sf_dir)
-
-    def _png(i: int) -> bytes:
-        w, h, idx, pal, trns = synth_palette_image(int(i))
-        return encode_png_palette8(w, h, idx, pal, trns)
-
-    synth = F.pandas_udf(lambda ids: ids.map(_png), "binary")
-    blobs = docs.withColumn("blob", synth("doc_id"))
-    with_meta = with_media_metadata(blobs, "blob", media_type="image").select(
-        "doc_id", "blob", F.col("media_meta.format").alias("format")
-    )
-    return map_media_batches(
-        with_meta,
-        "blob",
-        DECODED_PNG_SCHEMA,
-        codec=decode_png_palette_features,
-        passthrough=["doc_id", "format"],
-    )
-
-
-def multimodal_png_interlaced_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adam7-interlaced PNG round trip: the SAME deterministic gray8
-    bitmap as `multimodal_png_decode`, but encoded with Adam7 pass
-    ordering (`encode_png_gray8(interlace=True)`) and decoded through
-    the interlaced reconstruction path (per-pass unfilter + scatter,
-    `operators/multimodal.py:_decode_png`). The oracle is the identical
-    closed form — p00/p_last/pixel_sum only match if all seven pass
-    geometries reassemble exactly."""
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        DECODED_PNG_SCHEMA,
-        decode_png_features,
-        encode_png_gray8,
-        synth_gray_image,
-    )
-
-    docs = _doc_ids_spread(spark, sf_dir)
-
-    def _png(i: int) -> bytes:
-        w, h, px = synth_gray_image(int(i))
-        return encode_png_gray8(w, h, px, interlace=True)
-
-    synth = F.pandas_udf(lambda ids: ids.map(_png), "binary")
-    blobs = docs.withColumn("blob", synth("doc_id"))
-    with_meta = with_media_metadata(blobs, "blob", media_type="image").select(
-        "doc_id", "blob", F.col("media_meta.format").alias("format")
-    )
-    return map_media_batches(
-        with_meta,
-        "blob",
-        DECODED_PNG_SCHEMA,
-        codec=decode_png_features,
+        codec=codec,
         passthrough=["doc_id", "format"],
     )
 
@@ -319,28 +215,16 @@ def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical oracle shape as PNG with format='gif'.
     """
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        DECODED_PNG_SCHEMA,
         decode_gif_features,
         encode_gif_gray8,
         synth_gray_image,
     )
 
-    docs = _doc_ids_spread(spark, sf_dir)
-
-    def _gif(i: int) -> bytes:
-        return encode_gif_gray8(*synth_gray_image(int(i)))
-
-    synth = F.pandas_udf(lambda ids: ids.map(_gif), "binary")
-    blobs = docs.withColumn("blob", synth("doc_id"))
-    with_meta = with_media_metadata(blobs, "blob", media_type="image").select(
-        "doc_id", "blob", F.col("media_meta.format").alias("format")
-    )
-    return map_media_batches(
-        with_meta,
-        "blob",
-        DECODED_PNG_SCHEMA,
-        codec=decode_gif_features,
-        passthrough=["doc_id", "format"],
+    return _image_roundtrip(
+        spark,
+        sf_dir,
+        lambda i: encode_gif_gray8(*synth_gray_image(int(i))),
+        decode_gif_features,
     )
 
 
@@ -460,31 +344,44 @@ def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     consolidation, VERDICT r7 #8 — replaces the former
     `multimodal_png_decode` / `multimodal_png_rgb_decode` /
     `multimodal_png_palette_decode` / `multimodal_png_interlaced_decode`
-    registry rows; the per-variant plan builders above/below are
-    unchanged and this query unions them, so each codec path keeps its
-    own oracle-checked branch):
+    registry rows). Each variant is one `_image_roundtrip` branch with
+    its own blob maker over `encode_png`, decoded by the one feature
+    probe `decode_png_features`, so each codec path keeps its own
+    oracle-checked branch:
 
       gray    — color-type-0, all five scanline filters cycled
       adam7   — the same gray bitmap through Adam7 interlaced encode +
                 per-pass reconstruction
-      rgb     — color-type-2 truecolor via the color-type-agnostic probe
-      palette — color-type-3 PLTE/tRNS with strict index bounds checks
+      rgb     — color-type-2 truecolor, three channels reported
+      palette — color-type-3 PLTE/tRNS with index bounds checks and
+                expansion to interleaved RGB
 
     Union of four narrow zero-shuffle mapInPandas branches (union is
     plan-level concatenation — no exchange added); one row per
     (doc, variant), verified against the UNION ALL of the per-variant
     closed-form oracles."""
+    from redpanda_to_parquet_writer_spark.operators.multimodal import (
+        decode_png_features,
+        encode_png,
+        synth_gray_image,
+        synth_palette_image,
+        synth_rgb_image,
+    )
+
+    def palette(i) -> bytes:
+        w, h, idx, pal, trns = synth_palette_image(int(i))
+        return encode_png(w, h, idx, palette=pal, trns=trns)
+
     branches = [
-        ("gray", multimodal_png_decode),
-        ("adam7", multimodal_png_interlaced_decode),
-        ("rgb", multimodal_png_rgb_decode),
-        ("palette", multimodal_png_palette_decode),
+        ("gray", lambda i: encode_png(*synth_gray_image(int(i)))),
+        ("adam7", lambda i: encode_png(*synth_gray_image(int(i)), interlace=True)),
+        ("rgb", lambda i: encode_png(*synth_rgb_image(int(i)))),
+        ("palette", palette),
     ]
-    out = None
-    for variant, build in branches:
-        b = build(spark, sf_dir).withColumn("variant", F.lit(variant))
-        out = b if out is None else out.unionByName(b)
-    return out
+    return _tagged_union(
+        (variant, _image_roundtrip(spark, sf_dir, make_blob, decode_png_features))
+        for variant, make_blob in branches
+    )
 
 
 QUERIES = {
@@ -753,50 +650,48 @@ ORACLES["multimodal_png_roundtrip"] = "\nUNION ALL\n".join(
 )
 
 
+#: smooth per-doc ramp planes of the lossy-codec queries, one per
+#: channel: (base, mult, mod, cx, cy) gives pixel(x, y) of frame f =
+#: base + (mult * doc_id) % mod + 2*f + cx*x + cy*y — no value wraps,
+#: and linear ramps are what DCT quantization preserves
+_COLOR_RAMP = ((30, 1, 40, 2, 1), (50, 3, 30, 1, 2), (70, 7, 20, 1, 1))
 
-def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL lossy-codec round trip: a smooth per-doc gradient (no value
-    wraps — linear ramps are what DCT quantization preserves) encodes as
-    a real baseline JPEG (pure numpy/stdlib: 8x8 DCT, Annex K tables,
-    canonical Huffman with byte stuffing) and decodes back
-    (`operators/multimodal.py:encode_jpeg_gray8/decode_jpeg_gray8`).
-    JPEG is lossy by design, so the gated contract is the honest one:
-    exact dimensions (closed-form oracle) plus a quantization-bounded
-    reconstruction error (within_tol literal TRUE — an encoder or
-    decoder bug blows the bound and flips the hash).
-    """
+
+def _jpeg_baseline_branch(
+    spark: SparkSession, sf_dir: str, planes, encode, decode, tol: int
+) -> DataFrame:
+    """One baseline JPEG round trip: the per-doc ramp `planes` (gray: one
+    plane, color: three) encode with `encode` and decode back with
+    `decode`; the gated contract is exact dimensions plus a
+    quantization-bounded max reconstruction error (`within_tol` is TRUE
+    when every byte is within `tol`)."""
     import pandas as pd
-
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_jpeg_gray8,
-        encode_jpeg_gray8,
-    )
 
     docs = _doc_ids_spread(spark, sf_dir)
 
-    def _roundtrip(ids: pd.Series) -> pd.DataFrame:
+    def _batches(it):
         import numpy as np
 
-        rows = []
-        for i in ids:
-            i = int(i)
-            w = 16 + i % 17
-            h = 16 + (3 * i) % 23
-            yg, xg = np.mgrid[0:h, 0:w]
-            img = (30 + (i % 50) + 2 * xg + 3 * yg).astype(np.uint8).tobytes()
-            w2, h2, px = decode_jpeg_gray8(encode_jpeg_gray8(w, h, img))
-            err = int(
-                np.abs(
-                    np.frombuffer(px, np.uint8).astype(np.int16)
-                    - np.frombuffer(img, np.uint8).astype(np.int16)
-                ).max()
-            )
-            rows.append((i, w2, h2, bool(err <= 8)))
-        return pd.DataFrame(rows, columns=["doc_id", "width", "height", "within_tol"])
-
-    def _batches(it):
         for pdf in it:
-            yield _roundtrip(pdf["doc_id"])
+            rows = []
+            for i in pdf["doc_id"]:
+                i = int(i)
+                w = 16 + i % 17
+                h = 16 + (3 * i) % 23
+                yg, xg = np.mgrid[0:h, 0:w]
+                img = np.stack(
+                    [b + (m * i) % md + cx * xg + cy * yg for b, m, md, cx, cy in planes],
+                    axis=-1,
+                ).astype(np.uint8).tobytes()
+                w2, h2, px = decode(encode(w, h, img))
+                err = int(
+                    np.abs(
+                        np.frombuffer(px, np.uint8).astype(np.int16)
+                        - np.frombuffer(img, np.uint8).astype(np.int16)
+                    ).max()
+                )
+                rows.append((i, w2, h2, bool(err <= tol)))
+            yield pd.DataFrame(rows, columns=["doc_id", "width", "height", "within_tol"])
 
     return docs.mapInPandas(
         _batches, "doc_id long, width int, height int, within_tol boolean"
@@ -813,82 +708,34 @@ _JPEG_BASELINE_ORACLE = """
 """
 
 
-def multimodal_jpeg_color_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL color JPEG round trip — the chroma pipeline that was the
-    last honest stub: per-doc smooth RGB ramps encode as a real
-    baseline YCbCr 4:2:0 JPEG (JFIF color transform, 2x2 chroma
-    subsampling, interleaved 16x16 MCUs, Annex K luma+chroma tables —
-    `operators/multimodal.py:encode_jpeg_color/decode_jpeg_color`) and
-    decode back. Lossy contract like the gray query: exact dimensions
-    (closed-form oracle) + a subsampling/quantization-bounded max
-    channel error (within_tol literal TRUE — a codec bug blows the
-    bound and flips the hash).
-    """
-    import pandas as pd
-
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_jpeg_color,
-        encode_jpeg_color,
-    )
-
-    docs = _doc_ids_spread(spark, sf_dir)
-
-    def _roundtrip(ids: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        rows = []
-        for i in ids:
-            i = int(i)
-            w = 16 + i % 17
-            h = 16 + (3 * i) % 23
-            yg, xg = np.mgrid[0:h, 0:w]
-            img = (
-                np.stack(
-                    [
-                        30 + (i % 40) + 2 * xg + yg,
-                        50 + ((3 * i) % 30) + xg + 2 * yg,
-                        70 + ((7 * i) % 20) + xg + yg,
-                    ],
-                    axis=-1,
-                )
-                .astype(np.uint8)
-                .tobytes()
-            )
-            w2, h2, px = decode_jpeg_color(encode_jpeg_color(w, h, img))
-            err = int(
-                np.abs(
-                    np.frombuffer(px, np.uint8).astype(np.int16)
-                    - np.frombuffer(img, np.uint8).astype(np.int16)
-                ).max()
-            )
-            rows.append((i, w2, h2, bool(err <= 10)))
-        return pd.DataFrame(rows, columns=["doc_id", "width", "height", "within_tol"])
-
-    def _batches(it):
-        for pdf in it:
-            yield _roundtrip(pdf["doc_id"])
-
-    return docs.mapInPandas(
-        _batches, "doc_id long, width int, height int, within_tol boolean"
-    )
-
-
 def multimodal_jpeg_baseline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline JPEG round trip, gray8 AND YCbCr-4:2:0 color, in one
     gated row (r8 consolidation, VERDICT r7 #8 — replaces the former
     `multimodal_jpeg_roundtrip` + `multimodal_jpeg_color_roundtrip`
-    registry rows; both per-codec plan builders above are unchanged and
-    this query unions them tagged by variant). Union of two narrow
-    zero-shuffle mapInPandas branches; the lossy contract is unchanged —
-    exact dims (closed form) + quantization/subsampling-bounded max
-    reconstruction error per variant."""
-    gray = multimodal_jpeg_roundtrip(spark, sf_dir).withColumn(
-        "variant", F.lit("gray8")
+    registry rows). Each variant is one `_jpeg_baseline_branch`: a
+    smooth per-doc ramp encodes as a real baseline JPEG (pure
+    numpy/stdlib: 8x8 DCT, Annex K tables, canonical Huffman with byte
+    stuffing; the color one through the JFIF transform, 2x2 chroma
+    subsampling and interleaved 16x16 MCUs) and decodes back. JPEG is
+    lossy, so the gated contract is the honest one: exact dims (closed
+    form) + a quantization/subsampling-bounded max reconstruction error
+    per variant (within_tol literal TRUE — an encoder or decoder bug
+    blows the bound and flips the hash)."""
+    from redpanda_to_parquet_writer_spark.operators.multimodal import (
+        decode_jpeg_color,
+        decode_jpeg_gray8,
+        encode_jpeg_color,
+        encode_jpeg_gray8,
     )
-    color = multimodal_jpeg_color_roundtrip(spark, sf_dir).withColumn(
-        "variant", F.lit("ycbcr420")
+
+    variants = [  # variant, ramp planes, encoder, decoder, tolerance
+        ("gray8", ((30, 1, 50, 2, 3),), encode_jpeg_gray8, decode_jpeg_gray8, 8),
+        ("ycbcr420", _COLOR_RAMP, encode_jpeg_color, decode_jpeg_color, 10),
+    ]
+    return _tagged_union(
+        (name, _jpeg_baseline_branch(spark, sf_dir, planes, enc, dec, tol))
+        for name, planes, enc, dec, tol in variants
     )
-    return gray.unionByName(color)
 
 
 QUERIES["multimodal_jpeg_baseline_roundtrip"] = multimodal_jpeg_baseline_roundtrip
@@ -968,305 +815,182 @@ def multimodal_mjpeg_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame
 QUERIES["multimodal_mjpeg_frame_decode"] = multimodal_mjpeg_frame_decode
 
 
-def multimodal_avi_mjpg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL container-to-pixels VIDEO pipeline: per doc, JPEG frames
+def _avi_branch(
+    spark: SparkSession, sf_dir: str, planes, encode, decode, tol: int, on_error: str,
+    n_decoded,
+) -> DataFrame:
+    """One container-to-pixels video pipeline: per doc, the ramp
+    `planes` of each frame encode as real baseline JPEGs (`encode`),
     wrap into a real AVI-MJPG file (RIFF writer), the structure probe
     reads dims/frame-count/frame-rate without decoding, then the
     demuxer extracts the '00dc' payloads and every 3rd frame fully
-    decodes through the baseline JPEG codec
-    (`operators/multimodal.py:encode_avi_mjpg/probe_avi/
-    sample_avi_mjpg_gray8`). Counts, dims and timing are closed-form;
-    per-frame reconstruction is the lossy JPEG contract."""
+    decodes through `decode` (`sample_avi_mjpg_gray8(on_error=...)`: a
+    corrupt frame either fails the blob or degrades to a null slot).
+    Counts, dims and timing are closed-form; per-frame reconstruction is
+    the lossy JPEG contract (max error within `tol`). `n_decoded` is
+    the column added after the stage, or None when the stage counts the
+    decoded frames itself. Zero shuffle: one Arrow-batched mapInPandas
+    over the doc ids, only typed features leave the row."""
     import pandas as pd
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         encode_avi_mjpg,
-        encode_jpeg_gray8,
         probe_avi,
         sample_avi_mjpg_gray8,
     )
 
     docs = _doc_ids_spread(spark, sf_dir, _SPREAD_ROWS_PER_TASK_HEAVY)
-
-    def _run(ids: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        rows = []
-        for i in ids:
-            i = int(i)
-            w = 10 + i % 7
-            h = 10 + (3 * i) % 9
-            nf = 3 + i % 5
-            yg, xg = np.mgrid[0:h, 0:w]
-            srcs = [
-                (20 + (i % 30) + 2 * f + 2 * xg + yg).astype(np.uint8).tobytes()
-                for f in range(nf)
-            ]
-            avi = encode_avi_mjpg(
-                w, h, [encode_jpeg_gray8(w, h, s) for s in srcs], fps=25
-            )
-            pw, ph, pnf, usec, nchunks, _vb = probe_avi(avi)
-            sampled = sample_avi_mjpg_gray8(avi, every_n=3)
-            ok = (
-                (pw, ph, pnf, nchunks) == (w, h, nf, nf)
-                and all(
-                    (fw, fh) == (w, h)
-                    and int(
-                        np.abs(
-                            np.frombuffer(px, np.uint8).astype(np.int16)
-                            - np.frombuffer(srcs[idx], np.uint8).astype(np.int16)
-                        ).max()
-                    )
-                    <= 8
-                    for idx, fw, fh, px in sampled
-                )
-            )
-            rows.append((i, pw, ph, pnf, usec, len(sampled), bool(ok)))
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "n_frames", "usec_per_frame",
-                "n_sampled", "within_tol",
-            ],
-        )
+    counted = ["n_decoded"] if n_decoded is None else []
 
     def _batches(it):
-        for pdf in it:
-            yield _run(pdf["doc_id"])
-
-    return docs.mapInPandas(
-        _batches,
-        "doc_id long, width int, height int, n_frames int, usec_per_frame int, "
-        "n_sampled long, within_tol boolean",
-    )
-
-
-def multimodal_avi_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLOR container-to-pixels video (VERDICT r6 #8): per doc, smooth
-    RGB ramp frames encode as real YCbCr 4:2:0 baseline JPEGs, wrap
-    into a real AVI-MJPG file, then probe → demux → every-3rd-frame
-    FULL COLOR decode (`sample_avi_mjpg_gray8(decoder=
-    decode_jpeg_color, on_error='null')` — a corrupt frame degrades to
-    a null slot instead of failing the blob; this stream has none, so
-    n_decoded == n_sampled). Counts/dims/timing are closed-form;
-    per-frame RGB reconstruction is the lossy color-JPEG contract
-    (subsampling+quantization bound, fuzz-established budget 16 for
-    MCU-padded small frames). Zero shuffle: one Arrow-batched
-    mapInPandas over the doc ids, only typed features leave the row."""
-    import pandas as pd
-
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_jpeg_color,
-        encode_avi_mjpg,
-        encode_jpeg_color,
-        probe_avi,
-        sample_avi_mjpg_gray8,
-    )
-
-    docs = _doc_ids_spread(spark, sf_dir, _SPREAD_ROWS_PER_TASK_HEAVY)
-
-    def _run(ids: pd.Series) -> pd.DataFrame:
         import numpy as np
 
-        rows = []
-        for i in ids:
-            i = int(i)
-            w = 10 + i % 7
-            h = 10 + (3 * i) % 9
-            nf = 3 + i % 5
-            yg, xg = np.mgrid[0:h, 0:w]
-            srcs = [
-                np.stack(
-                    [
-                        30 + (i % 40) + 2 * f + 2 * xg + yg,
-                        50 + ((3 * i) % 30) + 2 * f + xg + 2 * yg,
-                        70 + ((7 * i) % 20) + 2 * f + xg + yg,
-                    ],
-                    axis=-1,
-                )
-                .astype(np.uint8)
-                .tobytes()
-                for f in range(nf)
-            ]
-            avi = encode_avi_mjpg(
-                w, h, [encode_jpeg_color(w, h, s) for s in srcs], fps=25
-            )
-            pw, ph, pnf, usec, nchunks, _vb = probe_avi(avi)
-            sampled = sample_avi_mjpg_gray8(
-                avi, every_n=3, decoder=decode_jpeg_color, on_error="null"
-            )
-            n_decoded = sum(1 for _idx, _fw, _fh, px in sampled if px is not None)
-            ok = (
-                (pw, ph, pnf, nchunks) == (w, h, nf, nf)
-                and n_decoded == len(sampled)
-                and all(
-                    (fw, fh) == (w, h)
-                    and int(
-                        np.abs(
-                            np.frombuffer(px, np.uint8).astype(np.int16)
-                            - np.frombuffer(srcs[idx], np.uint8).astype(np.int16)
-                        ).max()
-                    )
-                    <= 16
-                    for idx, fw, fh, px in sampled
-                )
-            )
-            rows.append((i, pw, ph, pnf, usec, len(sampled), n_decoded, bool(ok)))
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "n_frames", "usec_per_frame",
-                "n_sampled", "n_decoded", "within_tol",
-            ],
-        )
-
-    def _batches(it):
         for pdf in it:
-            yield _run(pdf["doc_id"])
+            rows = []
+            for i in pdf["doc_id"]:
+                i = int(i)
+                w = 10 + i % 7
+                h = 10 + (3 * i) % 9
+                nf = 3 + i % 5
+                yg, xg = np.mgrid[0:h, 0:w]
+                srcs = [
+                    np.stack(
+                        [
+                            b + (m * i) % md + 2 * f + cx * xg + cy * yg
+                            for b, m, md, cx, cy in planes
+                        ],
+                        axis=-1,
+                    ).astype(np.uint8).tobytes()
+                    for f in range(nf)
+                ]
+                avi = encode_avi_mjpg(w, h, [encode(w, h, s) for s in srcs], fps=25)
+                pw, ph, pnf, usec, nchunks, _vb = probe_avi(avi)
+                sampled = sample_avi_mjpg_gray8(
+                    avi, every_n=3, decoder=decode, on_error=on_error
+                )
+                n_dec = sum(1 for _idx, _fw, _fh, px in sampled if px is not None)
+                ok = (
+                    (pw, ph, pnf, nchunks) == (w, h, nf, nf)
+                    and n_dec == len(sampled)
+                    and all(
+                        (fw, fh) == (w, h)
+                        and int(
+                            np.abs(
+                                np.frombuffer(px, np.uint8).astype(np.int16)
+                                - np.frombuffer(srcs[idx], np.uint8).astype(np.int16)
+                            ).max()
+                        )
+                        <= tol
+                        for idx, fw, fh, px in sampled
+                    )
+                )
+                rows.append(
+                    (i, pw, ph, pnf, usec, len(sampled))
+                    + ((n_dec,) if counted else ())
+                    + (bool(ok),)
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id", "width", "height", "n_frames", "usec_per_frame",
+                    "n_sampled", *counted, "within_tol",
+                ],
+            )
 
-    return docs.mapInPandas(
+    out = docs.mapInPandas(
         _batches,
         "doc_id long, width int, height int, n_frames int, usec_per_frame int, "
-        "n_sampled long, n_decoded long, within_tol boolean",
+        "n_sampled long, " + "".join(f"{c} long, " for c in counted)
+        + "within_tol boolean",
     )
+    return out if counted else out.withColumn("n_decoded", n_decoded)
 
 
 def multimodal_avi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AVI-MJPG container-to-pixels, gray8 AND YCbCr-4:2:0 color frames,
     in one gated row (r8 consolidation, VERDICT r7 #8 — replaces the
     former `multimodal_avi_mjpg_decode` + `multimodal_avi_color_decode`
-    registry rows; both per-codec pipeline builders above are unchanged
-    and this query unions them tagged by variant). The gray branch's
+    registry rows). Each variant is one `_avi_branch`. The gray branch's
     decoder raises on any undecodable frame (on_error='raise'), so its
     n_decoded == n_sampled by construction — made explicit as a column
     so both branches share the schema; the color branch's per-frame
-    on_error='null' degradation stays measured."""
-    gray = (
-        multimodal_avi_mjpg_decode(spark, sf_dir)
-        .withColumn("n_decoded", F.col("n_sampled"))
-        .withColumn("variant", F.lit("gray8"))
+    on_error='null' degradation stays measured (fuzz-established error
+    budget 16 for MCU-padded small color frames)."""
+    from redpanda_to_parquet_writer_spark.operators.multimodal import (
+        decode_jpeg_color,
+        decode_jpeg_gray8,
+        encode_jpeg_color,
+        encode_jpeg_gray8,
     )
-    color = multimodal_avi_color_decode(spark, sf_dir).withColumn(
-        "variant", F.lit("ycbcr420")
+
+    variants = [  # variant, ramp planes, encoder, decoder, tolerance, on_error, n_decoded
+        ("gray8", ((20, 1, 30, 2, 1),), encode_jpeg_gray8, decode_jpeg_gray8, 8,
+         "raise", F.col("n_sampled")),
+        ("ycbcr420", _COLOR_RAMP, encode_jpeg_color, decode_jpeg_color, 16,
+         "null", None),
+    ]
+    return _tagged_union(
+        (name, _avi_branch(spark, sf_dir, *spec)) for name, *spec in variants
     )
-    return gray.unionByName(color)
 
 
 QUERIES["multimodal_avi_decode"] = multimodal_avi_decode
 
 
-def multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL progressive (SOF2) JPEG round trip — the format the r6
-    verdict still listed as library-bound: per doc, the deterministic
-    gray ramp encodes as a six-scan progressive stream (DC first +
-    refinement, per-band AC first with EOBn runs + AC refinement,
-    `operators/multimodal.py:encode_jpeg_gray8_progressive`), the
-    structure probe flags it progressive, and `decode_jpeg_gray8` (the
-    one decoder for SOF0 and SOF2 streams) reconstructs the coefficient
-    array scan by scan. The gated claim is EXACT: a progressive stream
-    carries the same quantized coefficients as the sequential encoding
-    of the same image, so the progressive reconstruction must be
-    BITWISE equal to the sequential stream's decoded pixels (matches_sequential TRUE — no tolerance), with dims
-    closed-form. Zero shuffle, one Arrow-batched mapInPandas."""
+def _jpeg_progressive_branch(
+    spark: SparkSession, sf_dir: str, synth, encode_progressive, encode, decode,
+    n_components,
+) -> DataFrame:
+    """One progressive (SOF2) JPEG round trip: per doc, the
+    deterministic `synth` bitmap encodes as a progressive stream
+    (`encode_progressive`: DC first + refinement, per-band AC first with
+    EOBn runs + AC refinement), the structure probe flags it
+    progressive, and `decode` (one decoder for SOF0 and SOF2 streams)
+    reconstructs the coefficient array scan by scan. The gated claim is
+    EXACT: a progressive stream carries the same quantized coefficients
+    as the sequential encoding (`encode`) of the same image, so its
+    reconstruction must be BITWISE equal to the sequential stream's
+    decoded pixels (matches_sequential TRUE — no tolerance), with dims
+    closed-form. `n_components` is the column added after the stage, or
+    None when the probe reports it. Zero shuffle, one Arrow-batched
+    mapInPandas."""
     import pandas as pd
 
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_jpeg_gray8,
-        encode_jpeg_gray8,
-        encode_jpeg_gray8_progressive,
-        probe_jpeg,
-        synth_gray_image,
-    )
+    from redpanda_to_parquet_writer_spark.operators.multimodal import probe_jpeg
 
     docs = _doc_ids_spread(spark, sf_dir)
-
-    def _run(ids: pd.Series) -> pd.DataFrame:
-        rows = []
-        for i in ids:
-            i = int(i)
-            w, h, px = synth_gray_image(i)
-            blob = encode_jpeg_gray8_progressive(w, h, px)
-            pw, ph, _nc, _nq, _nh, progressive, _sb = probe_jpeg(blob)
-            prog = decode_jpeg_gray8(blob)
-            seq = decode_jpeg_gray8(encode_jpeg_gray8(w, h, px))
-            rows.append(
-                (i, pw, ph, int(progressive), bool(prog == seq and (pw, ph) == (w, h)))
-            )
-        return pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "progressive", "matches_sequential"],
-        )
+    probed = ["n_components"] if n_components is None else []
 
     def _batches(it):
         for pdf in it:
-            yield _run(pdf["doc_id"])
-
-    return docs.mapInPandas(
-        _batches,
-        "doc_id long, width int, height int, progressive int, "
-        "matches_sequential boolean",
-    )
-
-
-def multimodal_jpeg_progressive_color(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Progressive COLOR (SOF2 YCbCr 4:2:0) round trip — the gray
-    query's chroma twin: interleaved DC scan pair in MCU order with
-    per-component predictors, per-component AC first/refinement scans
-    with EOBn runs (`operators/multimodal.py:
-    encode_jpeg_color_progressive`, decoded by `decode_jpeg_color`). The
-    gated claim stays exact: the progressive stream carries the
-    sequential encoder's coefficient planes, so its RGB reconstruction
-    must be BITWISE equal to `decode_jpeg_color` of the sequential
-    stream (matches_sequential TRUE, no tolerance), dims closed-form.
-    """
-    import pandas as pd
-
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_jpeg_color,
-        encode_jpeg_color,
-        encode_jpeg_color_progressive,
-        probe_jpeg,
-        synth_rgb_image,
-    )
-
-    docs = _doc_ids_spread(spark, sf_dir)
-
-    def _run(ids: pd.Series) -> pd.DataFrame:
-        rows = []
-        for i in ids:
-            i = int(i)
-            w, h, px = synth_rgb_image(i)
-            blob = encode_jpeg_color_progressive(w, h, px)
-            pw, ph, ncomp, _nq, _nh, progressive, _sb = probe_jpeg(blob)
-            prog = decode_jpeg_color(blob)
-            seq = decode_jpeg_color(encode_jpeg_color(w, h, px))
-            rows.append(
-                (
-                    i,
-                    pw,
-                    ph,
-                    int(ncomp),
-                    int(progressive),
-                    bool(prog == seq and (pw, ph) == (w, h)),
+            rows = []
+            for i in pdf["doc_id"]:
+                i = int(i)
+                w, h, px = synth(i)
+                blob = encode_progressive(w, h, px)
+                pw, ph, ncomp, _nq, _nh, progressive, _sb = probe_jpeg(blob)
+                prog = decode(blob)
+                seq = decode(encode(w, h, px))
+                rows.append(
+                    (i, pw, ph)
+                    + ((int(ncomp),) if probed else ())
+                    + (int(progressive), bool(prog == seq and (pw, ph) == (w, h)))
                 )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id", "width", "height", *probed, "progressive",
+                    "matches_sequential",
+                ],
             )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "n_components", "progressive",
-                "matches_sequential",
-            ],
-        )
 
-    def _batches(it):
-        for pdf in it:
-            yield _run(pdf["doc_id"])
-
-    return docs.mapInPandas(
+    out = docs.mapInPandas(
         _batches,
-        "doc_id long, width int, height int, n_components int, progressive int, "
-        "matches_sequential boolean",
+        "doc_id long, width int, height int, "
+        + "".join(f"{c} int, " for c in probed)
+        + "progressive int, matches_sequential boolean",
     )
+    return out if probed else out.withColumn("n_components", n_components)
 
 
 def multimodal_jpeg_progressive_roundtrip(
@@ -1275,23 +999,33 @@ def multimodal_jpeg_progressive_roundtrip(
     """Progressive (SOF2) JPEG round trip, gray8 AND YCbCr-4:2:0 color,
     in one gated row (r8 consolidation, VERDICT r7 #8 — replaces the
     former `multimodal_jpeg_progressive_decode` +
-    `multimodal_jpeg_progressive_color` registry rows; both per-codec
-    harness builders above are unchanged and this query unions them
-    tagged by variant). The gated claim stays EXACT for both variants:
-    the progressive stream carries the sequential encoder's quantized
-    coefficients, so the progressive reconstruction is BITWISE equal to
-    the sequential decode (matches_sequential TRUE, no tolerance). The
-    gray branch's single luma component is made explicit
+    `multimodal_jpeg_progressive_color` registry rows). Each variant is
+    one `_jpeg_progressive_branch`; the color one has an interleaved DC
+    scan pair in MCU order with per-component predictors and
+    per-component AC first/refinement scans. The gated claim stays
+    EXACT for both variants (matches_sequential TRUE, no tolerance).
+    The gray branch's single luma component is made explicit
     (n_components=1) so both branches share the schema."""
-    gray = (
-        multimodal_jpeg_progressive_decode(spark, sf_dir)
-        .withColumn("n_components", F.lit(1).cast("int"))
-        .withColumn("variant", F.lit("gray8"))
+    from redpanda_to_parquet_writer_spark.operators.multimodal import (
+        decode_jpeg_color,
+        decode_jpeg_gray8,
+        encode_jpeg_color,
+        encode_jpeg_color_progressive,
+        encode_jpeg_gray8,
+        encode_jpeg_gray8_progressive,
+        synth_gray_image,
+        synth_rgb_image,
     )
-    color = multimodal_jpeg_progressive_color(spark, sf_dir).withColumn(
-        "variant", F.lit("ycbcr420")
+
+    variants = [  # variant, synthesizer, progressive/sequential encoders, decoder, n_components
+        ("gray8", synth_gray_image, encode_jpeg_gray8_progressive, encode_jpeg_gray8,
+         decode_jpeg_gray8, F.lit(1).cast("int")),
+        ("ycbcr420", synth_rgb_image, encode_jpeg_color_progressive, encode_jpeg_color,
+         decode_jpeg_color, None),
+    ]
+    return _tagged_union(
+        (name, _jpeg_progressive_branch(spark, sf_dir, *spec)) for name, *spec in variants
     )
-    return gray.unionByName(color)
 
 
 QUERIES["multimodal_jpeg_progressive_roundtrip"] = multimodal_jpeg_progressive_roundtrip

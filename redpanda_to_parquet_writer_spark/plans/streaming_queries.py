@@ -371,35 +371,27 @@ def streaming_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     TemporaryDirectories, removed at interpreter exit (ADVICE r7, see
     _retained_workdir)."""
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        DECODED_PNG_SCHEMA,
         decode_png_features,
-        encode_png_gray8,
-        map_media_batches,
+        encode_png,
         synth_gray_image,
-        with_media_metadata,
     )
     from redpanda_to_parquet_writer_spark.plans.multimodal_queries import (
-        _doc_ids_spread,
+        _image_roundtrip,
     )
 
-    def _png(i: int) -> bytes:
-        return encode_png_gray8(*synth_gray_image(int(i)))
-
-    synth = F.pandas_udf(lambda ids: ids.map(_png), "binary")
-    blobs = _doc_ids_spread(spark, sf_dir).withColumn("blob", synth("doc_id"))
     work = _retained_workdir("media_ingest_")
-    src = f"{work}/src"
-    blobs.write.parquet(src)
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    with_meta = with_media_metadata(stream, "blob", media_type="image").select(
-        "doc_id", "blob", F.col("media_meta.format").alias("format")
-    )
-    decoded = map_media_batches(
-        with_meta,
-        "blob",
-        DECODED_PNG_SCHEMA,
-        codec=decode_png_features,
-        passthrough=["doc_id", "format"],
+
+    def spool(blobs: DataFrame) -> DataFrame:
+        src = f"{work}/src"
+        blobs.write.parquet(src)
+        return spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+
+    decoded = _image_roundtrip(
+        spark,
+        sf_dir,
+        lambda i: encode_png(*synth_gray_image(int(i))),
+        decode_png_features,
+        spool=spool,
     )
     (
         decoded.writeStream.format("parquet")

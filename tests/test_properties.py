@@ -224,17 +224,13 @@ def test_png_roundtrip_arbitrary_images(w, h, seed, cycle):
     import random as _random
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_png_gray8,
-        encode_png_gray8,
+        decode_png,
+        encode_png,
     )
 
     rng = _random.Random(seed)
     px = bytes(rng.randrange(256) for _ in range(w * h))
-    assert decode_png_gray8(encode_png_gray8(w, h, px, filter_cycle=cycle)) == (
-        w,
-        h,
-        px,
-    )
+    assert decode_png(encode_png(w, h, px, filter_cycle=cycle)) == (w, h, 1, px)
 
 
 @given(
@@ -247,26 +243,20 @@ def test_png_roundtrip_arbitrary_images(w, h, seed, cycle):
 def test_png_rgb_roundtrip_arbitrary_images(w, h, seed, cycle):
     """Truecolor PNG encode->decode is the identity on arbitrary RGB8
     bitmaps (multi-byte-pixel filters use the bpp-back left neighbor),
-    and the color-agnostic probe reports 3 channels."""
+    and the feature probe reports 3 channels."""
     import random as _random
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_png_any_features,
-        decode_png_gray8,
-        decode_png_rgb8,
-        encode_png_rgb8,
+        decode_png,
+        decode_png_features,
+        encode_png,
     )
 
     rng = _random.Random(seed)
     px = bytes(rng.randrange(256) for _ in range(w * h * 3))
-    blob = encode_png_rgb8(w, h, px, filter_cycle=cycle)
-    assert decode_png_rgb8(blob) == (w, h, px)
-    assert decode_png_any_features(blob) == (w, h, 8, 3, px[0], px[-1], sum(px))
-    try:
-        decode_png_gray8(blob)
-        raise AssertionError("gray-only decoder accepted a truecolor PNG")
-    except ValueError:
-        pass
+    blob = encode_png(w, h, px, filter_cycle=cycle)
+    assert decode_png(blob) == (w, h, 3, px)
+    assert decode_png_features(blob) == (w, h, 8, 3, px[0], px[-1], sum(px))
 
 
 @given(
@@ -373,56 +363,6 @@ def test_jpeg_color_rejects_malformed_and_cross_decodes():
             decode_jpeg_color(bad)
 
 
-@given(
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=0, max_value=2**32 - 1),
-    st.integers(min_value=1, max_value=256),
-)
-@settings(max_examples=40, deadline=None)
-def test_gif_rgb_roundtrip_arbitrary_palettes(w, h, seed, n_colors):
-    """Color GIF encode->decode is the identity for any image within
-    the 256-color palette budget; the gray decoder coexists (same walk,
-    different palette application) and >256-color inputs refuse loudly
-    instead of quantizing silently."""
-    import random as _random
-
-    import numpy as np
-
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_gif_rgb,
-        encode_gif_rgb,
-    )
-
-    rng = np.random.RandomState(seed % 2**31)
-    pal = rng.randint(0, 256, (n_colors, 3)).astype(np.uint8)
-    raw = pal[rng.randint(0, n_colors, (h, w))].tobytes()
-    assert decode_gif_rgb(encode_gif_rgb(w, h, raw)) == (w, h, raw)
-
-
-def test_gif_rgb_refuses_oversized_palettes():
-    import numpy as np
-    import pytest
-
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_gif_gray8,
-        decode_gif_rgb,
-        encode_gif_gray8,
-        encode_gif_rgb,
-    )
-
-    v = np.arange(600, dtype=np.int32)
-    big = np.stack([v % 256, v // 256, np.zeros_like(v)], axis=-1).astype(np.uint8)
-    with pytest.raises(ValueError, match="palette"):
-        encode_gif_rgb(600, 1, big.tobytes())
-    # a gray GIF decodes through the RGB reader as replicated channels
-    gp = bytes(range(64))
-    gw, gh, grgb = decode_gif_rgb(encode_gif_gray8(8, 8, gp))
-    assert (gw, gh) == (8, 8)
-    assert grgb == b"".join(bytes((x, x, x)) for x in gp)
-    assert decode_gif_gray8(encode_gif_gray8(8, 8, gp)) == (8, 8, gp)
-
-
 def test_mjpeg_split_sample_decode():
     """MJPEG stream: EOI-scan split recovers exactly the encoded frames,
     every-Nth sampling keeps the right indices, each sampled frame
@@ -462,7 +402,7 @@ def test_mjpeg_split_sample_decode():
 
 
 def test_tiff_probe_both_byte_orders():
-    """TIFF structure probe: skeleton round trip, a hand-built
+    """TIFF structure probe: an `encode_tiff` stream, a hand-built
     big-endian IFD, and malformed inputs inside the ValueError
     contract."""
     import struct
@@ -470,12 +410,12 @@ def test_tiff_probe_both_byte_orders():
     import pytest
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        encode_tiff_skeleton,
+        encode_tiff,
         probe_tiff,
     )
 
-    assert probe_tiff(encode_tiff_skeleton(640, 480, bits=8, samples=3)) == (
-        640, 480, 8, 3, 1, 5,
+    assert probe_tiff(encode_tiff(640, 480, bytes(640 * 480 * 3), samples=3)) == (
+        640, 480, 8, 3, 1, 9,
     )
     be = bytearray(b"MM" + struct.pack(">HI", 42, 8))
     be += struct.pack(">H", 2)
@@ -487,7 +427,7 @@ def test_tiff_probe_both_byte_orders():
         b"",
         b"II*",  # truncated header
         b"XX\x2a\x00aaaa",  # bad byte-order mark
-        encode_tiff_skeleton(1, 1)[:-10],  # truncated IFD
+        encode_tiff(1, 1, b"\x00")[:-10],  # truncated IFD
         b"II" + struct.pack("<HI", 42, 9999),  # IFD offset past end
     ):
         with pytest.raises(ValueError):
@@ -626,7 +566,7 @@ def test_avi_mjpg_container_roundtrip():
         demux_avi_mjpg(b"RIFF\x04\x00\x00\x00AVI ")
 
 
-@given(st.binary(max_size=200), st.integers(min_value=0, max_value=9))
+@given(st.binary(max_size=200), st.integers(min_value=0, max_value=8))
 @settings(max_examples=250, deadline=None)
 def test_media_decoders_are_total_on_arbitrary_bytes(buf, which):
     """Fuzz every media decoder: arbitrary bytes either decode or raise
@@ -636,11 +576,10 @@ def test_media_decoders_are_total_on_arbitrary_bytes(buf, which):
     this is the pure-garbage path."""
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         decode_gif_gray8,
-        decode_gif_rgb,
         decode_jpeg_color,
         decode_jpeg_gray8,
-        decode_png_gray8,
-        decode_png_rgb8,
+        decode_png,
+        decode_png_features,
         decode_wav,
         probe_avi,
         probe_mp4,
@@ -648,10 +587,9 @@ def test_media_decoders_are_total_on_arbitrary_bytes(buf, which):
     )
 
     fn = (
-        decode_png_gray8,
-        decode_png_rgb8,
+        decode_png,
+        decode_png_features,
         decode_gif_gray8,
-        decode_gif_rgb,
         decode_jpeg_gray8,
         decode_jpeg_color,
         decode_wav,
@@ -676,7 +614,8 @@ def test_media_decoders_total_on_magic_prefixed_garbage(buf):
         decode_gif_gray8,
         decode_jpeg_color,
         decode_jpeg_gray8,
-        decode_png_gray8,
+        decode_png,
+        decode_png_features,
         decode_wav,
         probe_avi,
         probe_jpeg,
@@ -690,15 +629,9 @@ def test_media_decoders_total_on_magic_prefixed_garbage(buf):
         probe_webp,
     )
 
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_png_palette,
-        decode_png_rgba8,
-    )
-
     cases = (
-        (decode_png_gray8, PNG_SIG + buf),
-        (decode_png_palette, PNG_SIG + buf),
-        (decode_png_rgba8, PNG_SIG + buf),
+        (decode_png, PNG_SIG + buf),
+        (decode_png_features, PNG_SIG + buf),
         (decode_gif_gray8, b"GIF89a" + buf),
         (decode_jpeg_gray8, b"\xff\xd8" + buf),
         (decode_jpeg_color, b"\xff\xd8" + buf),
@@ -725,8 +658,8 @@ def test_png_rgb_corrupt_blobs_raise_value_error():
     import pytest
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_png_rgb8,
-        encode_png_rgb8,
+        decode_png,
+        encode_png,
         synth_rgb_image,
     )
 
@@ -734,7 +667,7 @@ def test_png_rgb_corrupt_blobs_raise_value_error():
     import zlib
 
     w, h, px = synth_rgb_image(9)
-    good = encode_png_rgb8(w, h, px)
+    good = encode_png(w, h, px)
 
     def chunk(tag, body):
         return (
@@ -758,7 +691,7 @@ def test_png_rgb_corrupt_blobs_raise_value_error():
         bad_deflate,
     ):
         with pytest.raises(ValueError):
-            decode_png_rgb8(bad)
+            decode_png(bad)
 
 
 def test_png_palette_crafted_contract_holes():
@@ -774,15 +707,13 @@ def test_png_palette_crafted_contract_holes():
     import pytest
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_png_palette,
-        decode_png_rgba8,
-        encode_png_palette8,
-        encode_png_rgba8,
+        decode_png,
+        encode_png,
         synth_palette_image,
     )
 
     w, h, idx, pal, trns = synth_palette_image(7)
-    good = encode_png_palette8(w, h, idx, pal, trns)
+    good = encode_png(w, h, idx, palette=pal, trns=trns)
 
     def chunk(tag, body):
         return (
@@ -804,30 +735,24 @@ def test_png_palette_crafted_contract_holes():
         return out + good[idat_at:]
 
     with pytest.raises(ValueError, match="missing PLTE"):
-        decode_png_palette(rebuild(drop_plte=True))
+        decode_png(rebuild(drop_plte=True))
     with pytest.raises(ValueError, match="ragged PLTE"):
-        decode_png_palette(rebuild(palette=pal[:-1]))
+        decode_png(rebuild(palette=pal[:-1]))
     # shrink the palette below the max index used by the grid
     with pytest.raises(ValueError, match="index out of range"):
-        decode_png_palette(rebuild(palette=pal[: 3 * 3]))
+        decode_png(rebuild(palette=pal[: 3 * 3]))
     with pytest.raises(ValueError, match="tRNS longer"):
-        decode_png_palette(rebuild(trns_body=bytes(len(pal) // 3 + 1)))
+        decode_png(rebuild(trns_body=bytes(len(pal) // 3 + 1)))
     # flipping the interlace flag WITHOUT re-laying-out the stream makes
     # the Adam7 pass slicing disagree with the actual payload — the
     # decoder (which now supports real Adam7) must reject, not garble:
     # either a mis-sliced scanline's filter byte is invalid or the pass
     # lengths don't add up
     with pytest.raises(ValueError, match="bad filter type|size mismatch"):
-        decode_png_palette(rebuild(interlace=1))
+        decode_png(rebuild(interlace=1))
     # interlace methods beyond Adam7 are spec-invalid
     with pytest.raises(ValueError, match="interlace=2"):
-        decode_png_palette(rebuild(interlace=2))
-    # strict single-type contracts reject the other color types
-    with pytest.raises(ValueError, match="color_type=3"):
-        decode_png_rgba8(good)
-    rgba = encode_png_rgba8(2, 2, bytes(range(16)))
-    with pytest.raises(ValueError, match="color_type=6"):
-        decode_png_palette(rgba)
+        decode_png(rebuild(interlace=2))
 
 
 @given(
@@ -920,28 +845,22 @@ def test_png_palette_rgba_roundtrip_arbitrary_images(w, h, seed, ncol, cycle):
     import random as _random
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_png_palette,
-        decode_png_rgba8,
-        encode_png_palette8,
-        encode_png_rgba8,
+        decode_png,
+        encode_png,
     )
 
     rng = _random.Random(seed)
     pal = bytes(rng.randrange(256) for _ in range(3 * ncol))
     idx = bytes(rng.randrange(ncol) for _ in range(w * h))
     trns = bytes(rng.randrange(256) for _ in range(rng.randrange(ncol + 1)))
-    got = decode_png_palette(
-        encode_png_palette8(w, h, idx, pal, trns, filter_cycle=cycle)
+    got = decode_png(
+        encode_png(w, h, idx, palette=pal, trns=trns, filter_cycle=cycle)
     )
     expected = b"".join(pal[3 * i : 3 * i + 3] for i in idx)
-    assert got == (w, h, expected)
+    assert got == (w, h, 3, expected)
 
     rgba = bytes(rng.randrange(256) for _ in range(w * h * 4))
-    assert decode_png_rgba8(encode_png_rgba8(w, h, rgba, filter_cycle=cycle)) == (
-        w,
-        h,
-        rgba,
-    )
+    assert decode_png(encode_png(w, h, rgba, filter_cycle=cycle)) == (w, h, 4, rgba)
 
 
 @given(
@@ -1278,22 +1197,16 @@ def test_png_adam7_roundtrip_arbitrary_images(w, h, seed, cycle, channels):
     import random as _random
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_png_gray8,
-        decode_png_rgb8,
-        decode_png_rgba8,
-        encode_png_gray8,
-        encode_png_rgb8,
-        encode_png_rgba8,
+        decode_png,
+        encode_png,
     )
 
-    enc = {1: encode_png_gray8, 3: encode_png_rgb8, 4: encode_png_rgba8}[channels]
-    dec = {1: decode_png_gray8, 3: decode_png_rgb8, 4: decode_png_rgba8}[channels]
     rng = _random.Random(seed)
     px = bytes(rng.randrange(256) for _ in range(w * h * channels))
-    blob = enc(w, h, px, filter_cycle=cycle, interlace=True)
-    assert dec(blob) == (w, h, px)
+    blob = encode_png(w, h, px, filter_cycle=cycle, interlace=True)
+    assert decode_png(blob) == (w, h, channels, px)
     # interlaced and plain encodings of the same bitmap decode equal
-    assert dec(enc(w, h, px, filter_cycle=cycle)) == (w, h, px)
+    assert decode_png(encode_png(w, h, px, filter_cycle=cycle)) == (w, h, channels, px)
 
 
 def test_png_adam7_truncated_pass_raises():
@@ -1305,11 +1218,11 @@ def test_png_adam7_truncated_pass_raises():
     import pytest
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_png_gray8,
-        encode_png_gray8,
+        decode_png,
+        encode_png,
     )
 
-    good = encode_png_gray8(16, 16, bytes(range(256)), interlace=True)
+    good = encode_png(16, 16, bytes(range(256)), interlace=True)
     # rebuild with the IDAT payload truncated by one scanline
     idat_at = good.find(b"IDAT") - 4
     (ln,) = struct.unpack(">I", good[idat_at : idat_at + 4])
@@ -1323,7 +1236,7 @@ def test_png_adam7_truncated_pass_raises():
     )
     bad = good[:idat_at] + chunk + good[idat_at + 12 + ln :]
     with pytest.raises(ValueError, match="size mismatch"):
-        decode_png_gray8(bad)
+        decode_png(bad)
 
 
 # --- r8 merged tokenizer: single-scan operator vs the two standalone ones

@@ -164,31 +164,6 @@ def test_media_decode_corrupt_tolerance(spark):
     assert out[1]["n_frames"] == 201 and out[3]["n_frames"] == 203
 
 
-def test_rgb8_resize_through_spark(spark):
-    """RGB nearest-neighbor resize: the same floor-mapping as gray8 on
-    the spatial axes with channels preserved — verified against a
-    hand-computed numpy model."""
-    import numpy as np
-
-    from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        resize_rgb8_batches,
-        synth_rgb_image,
-    )
-
-    w, h, px = synth_rgb_image(5)
-    df = spark.createDataFrame([(1, px, w, h)], "id long, blob binary, w int, h int")
-    row = resize_rgb8_batches(df, "blob", "w", "h", out_w=4, out_h=4).collect()[0]
-    img = np.frombuffer(px, np.uint8).reshape(h, w, 3)
-    ys = (np.arange(4) * h) // 4
-    xs = (np.arange(4) * w) // 4
-    model = img[np.ix_(ys, xs)]
-    assert row["thumb"] == model.tobytes()
-    assert row["p00"] == int(model[0, 0, 0])
-    assert row["p_last"] == int(model[-1, -1, -1])
-    assert row["pixel_sum"] == int(model.astype(np.int64).sum())
-    assert (row["thumb_w"], row["thumb_h"]) == (4, 4)
-
-
 def test_gray8_resize_through_spark(spark):
     """REAL nearest-neighbor resize on raw gray8 bitmaps (numpy, no
     imaging lib): floor index mapping verified against a hand model."""
@@ -349,42 +324,42 @@ def test_png_codec_roundtrip_local():
     """Stdlib PNG encode->decode recovers the exact bitmap across all
     five scanline filter types (the encoder cycles them per row)."""
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
+        decode_png,
         decode_png_features,
-        decode_png_gray8,
-        encode_png_gray8,
+        encode_png,
         synth_gray_image,
     )
 
     for seed in (0, 1, 2, 5, 17, 123, 999):
         w, h, px = synth_gray_image(seed)
-        blob = encode_png_gray8(w, h, px)
+        blob = encode_png(w, h, px)
         assert blob[:8] == b"\x89PNG\r\n\x1a\n"
-        assert decode_png_gray8(blob) == (w, h, px)
+        assert decode_png(blob) == (w, h, 1, px)
         assert decode_png_features(blob) == (w, h, 8, 1, px[0], px[-1], sum(px))
     # single-filter path too
     w, h, px = synth_gray_image(7)
-    assert decode_png_gray8(encode_png_gray8(w, h, px, filter_cycle=False))[2] == px
+    assert decode_png(encode_png(w, h, px, filter_cycle=False))[3] == px
 
 
 def test_png_decode_rejects_corrupt_blobs():
     import pytest
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
-        decode_png_gray8,
-        encode_png_gray8,
+        decode_png,
+        encode_png,
         synth_gray_image,
     )
 
     w, h, px = synth_gray_image(7)
-    blob = encode_png_gray8(w, h, px)
+    blob = encode_png(w, h, px)
     with pytest.raises(ValueError, match="signature"):
-        decode_png_gray8(b"not a png at all")
+        decode_png(b"not a png at all")
     bad = bytearray(blob)
     bad[40] ^= 0xFF  # flip a tag byte -> CRC mismatch
     with pytest.raises(ValueError, match="CRC"):
-        decode_png_gray8(bytes(bad))
+        decode_png(bytes(bad))
     with pytest.raises(ValueError, match="truncated"):
-        decode_png_gray8(blob[:30])
+        decode_png(blob[:30])
 
 
 def test_png_decode_corrupt_tolerance_through_spark(spark):
@@ -393,7 +368,7 @@ def test_png_decode_corrupt_tolerance_through_spark(spark):
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
         DECODED_PNG_SCHEMA,
         decode_png_features,
-        encode_png_gray8,
+        encode_png,
         map_media_batches,
         synth_gray_image,
     )
@@ -401,7 +376,7 @@ def test_png_decode_corrupt_tolerance_through_spark(spark):
     rows = []
     for seed in range(4):
         w, h, px = synth_gray_image(seed)
-        rows.append((seed, bytearray(encode_png_gray8(w, h, px))))
+        rows.append((seed, bytearray(encode_png(w, h, px))))
     rows[2] = (2, bytearray(b"\x89PNG\r\n\x1a\nGARBAGE"))
     df = spark.createDataFrame(
         [(i, bytes(b)) for i, b in rows], "doc_id long, blob binary"
