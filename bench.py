@@ -550,7 +550,7 @@ HEADLINE = [
     # session-2 baseline (64.4s). bench_diff flagged
     # multimodal_container_probe (3.10x), multimodal_gif_roundtrip
     # (2.26x), multimodal_webp_roundtrip (1.87x). A fresh same-host
-    # interleaved A/B (scripts/ab_media_r17.py, orderings
+    # interleaved A/B (scripts/ab_media_r17.py at rev f23f2ab, orderings
     # post/pre/pre/post, warm + min-of-2 each) read all three at
     # PARITY: probe pre {0.631, 0.666} vs post {0.683, 0.658}; gif pre
     # {0.738, 0.670} vs post {0.684, 0.620} (post faster); webp pre

@@ -38,7 +38,7 @@ from redpanda_to_parquet_writer_spark.operators.validate import (
     internal_consistency,
 )
 from redpanda_to_parquet_writer_spark.streaming.ingest import ingest_available_now
-from redpanda_to_parquet_writer_spark.streaming.sink import existing_max_offsets
+from redpanda_to_parquet_writer_spark.streaming.sink import _sink_exists, existing_max_offsets
 
 
 @dataclass
@@ -120,10 +120,9 @@ class Collector:
             listener.wait_quiesce(query_name=query_name)
         finally:
             listener.detach(self.spark)
-        try:
-            rows = self.spark.read.parquet(root).count()
-        except Exception:
-            rows = 0
+        # an empty topic commits no file: nothing to count, while any
+        # other read error propagates
+        rows = self.spark.read.parquet(root).count() if _sink_exists(self.spark, root) else 0
         # filter by query name: concurrent per-topic drains (ThreadPool
         # over run_topic) share the session listener bus, so this topic
         # must roll up ONLY its own query's batches

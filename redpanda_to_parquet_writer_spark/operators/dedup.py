@@ -245,7 +245,7 @@ def _cc_alternating_stars(
     collapse pattern, not the initial hop count) and paid an extra
     materialization + a transiently ~2x edge set: interleaved mins
     prod 5.29s vs seeded 5.60s, prod faster in every adjacent pair.
-    Harness kept: scripts/ab_cc_seed_r18.py.
+    Harness: scripts/ab_cc_seed_r18.py at rev f23f2ab.
 
     Materialization cadence (r17 session 3): TWO contraction rounds run
     as one lineage per persist/flag/checkpoint when the cap allows (the

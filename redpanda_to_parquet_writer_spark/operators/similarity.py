@@ -7,7 +7,7 @@ Training-data-pipeline operators over an `array<float>` embedding column:
   - IVF and IVFADC top-k, inline (`ivf_topk`, `ivfadc_topk`) and over
     ONE persisted index type: `write_ivf_index` writes it,
     `build_ivf_index` trains and sizes it, `ivf_topk_indexed` serves it
-  - embedding-cosine near-duplicate pairs, PQ, int8 and k-means
+  - embedding-cosine near-duplicate pairs, PQ and k-means
   - per-group vector norm statistics
 
 All dot products / norms are built-in higher-order functions
@@ -265,7 +265,7 @@ def ivf_assign(
     rewrite (no groupBy exchange) was priced and REJECTED — Spark never
     codegens higher-order functions, and the interpreted per-centroid
     struct fold measured +36-62% on every ANN bench row containing the
-    assignment (scripts/ab_ann_r17.py; same finding as jaccard_pairs'
+    assignment (scripts/ab_ann_r17.py at rev f23f2ab; same finding as jaccard_pairs'
     posting-list note). The codegen'd join fan-out + max_by collapse
     stays.
     """
@@ -443,8 +443,8 @@ def ivf_topk(
     so the whole query plans exactly 2 table scans: corpus + queries.
 
     `centroids` must be (cluster_id int, cv array<double>). Use
-    `deterministic_centroids` for reproducible plans or seeded
-    `pyspark.ml.clustering.KMeans` for production recall.
+    `deterministic_centroids` for reproducible plans or
+    `kmeans_lloyd_centroids` for production recall.
     """
     centroids = materialize_centroids(centroids)
     c = df.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v"))
@@ -462,7 +462,7 @@ def deterministic_centroids(
     """Reproducible coarse quantizer: the `n_centroids` lowest-id vectors.
 
     Good enough to exercise/verify the IVF plan shape end-to-end (and
-    oracle-expressible in SQL); swap in seeded KMeans centroids for
+    oracle-expressible in SQL); swap in `kmeans_lloyd_centroids` for
     recall-optimal lists — the IVF plan is identical either way.
     """
     # orderBy+limit plans as TakeOrderedAndProject (no global sort); the
@@ -474,27 +474,6 @@ def deterministic_centroids(
     return head.withColumn("__rn", F.row_number().over(w)).select(
         (F.col("__rn") - 1).alias("cluster_id"), "cv"
     )
-
-
-def kmeans_centroids(
-    df: DataFrame,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 10,
-) -> DataFrame:
-    """Seeded KMeans centroids via pyspark.ml (production IVF quantizer)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = df.sparkSession
-    train = df.select(array_to_vector(_as_double(F.col(vec_col))).alias("features"))
-    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(train)
-    rows = [
-        (i, [float(x) for x in center])
-        for i, center in enumerate(model.clusterCenters())
-    ]
-    return spark.createDataFrame(rows, "cluster_id int, cv array<double>")
 
 
 def cosine_neardup_pairs(
@@ -616,41 +595,6 @@ def random_projection(
     return df.select(F.col(id_col), F.array(*comps).alias(out_col))
 
 
-def quantize_int8(
-    df: DataFrame, vec_col: str = "embedding", out_col: str = "q_embedding"
-) -> DataFrame:
-    """Symmetric per-vector int8 quantization: 4x memory cut for ANN at
-    corpus scale (float32 -> int8 + one float scale per vector).
-
-    q[i] = round(v[i] / scale), scale = max(|v|) / 127. Zero vectors get
-    scale NULL / all-zero codes. Pure array expressions.
-    """
-    v = _as_double(F.col(vec_col))
-    amax = F.aggregate(
-        v, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x))
-    )
-    # NULL scale marks degenerate (zero/empty) vectors, per the contract
-    scale = F.when(amax > 0, amax / F.lit(127.0))
-    codes = F.transform(
-        v,
-        lambda x: F.coalesce(
-            F.round(F.try_divide(x, scale)).cast("tinyint"), F.lit(0).cast("tinyint")
-        ),
-    )
-    return df.withColumn(out_col, codes).withColumn(f"{out_col}_scale", scale)
-
-
-def dequantize_int8(
-    df: DataFrame, q_col: str = "q_embedding", out_col: str = "embedding_deq"
-) -> DataFrame:
-    """Inverse of `quantize_int8`: v[i] ~= q[i] * scale."""
-    scale = F.col(f"{q_col}_scale")
-    return df.withColumn(
-        out_col,
-        F.transform(F.col(q_col), lambda q: q.cast("double") * scale),
-    )
-
-
 # --- Product quantization (PQ) ---------------------------------------------
 # The memory-bounded ANN scale path: each vector compresses to m one-byte
 # codes (64 dims x 4B float -> 8B), and query-time scoring is a table
@@ -746,7 +690,7 @@ def pq_encode(
     `array_min(transform(...))` argmin (zero shuffle) was priced and
     REJECTED — interpreted HOF evaluation of ksub struct folds per row
     measured +27% on `ann_pq_adc_topk` vs this codegen'd join+aggregate
-    (scripts/ab_ann_r17.py).
+    (scripts/ab_ann_r17.py at rev f23f2ab).
     """
     _pq_check(m, dim)
     width = dim // m
@@ -841,7 +785,7 @@ def ivfadc_topk(
     argmin — removing this SortMergeJoin, its re-sort Exchanges and the
     second corpus scan) was priced and REJECTED: min-of-6 interleaved
     A/B read 1.56-1.90s fused vs 1.37-1.54s composed
-    (scripts/ab_one_r17.py). The composition wins because BOTH groupBys
+    (scripts/ab_one_r17.py at rev f23f2ab). The composition wins because BOTH groupBys
     shuffle only narrow pre-aggregated state (the optimizer prunes the
     unused first(v) from the assignment aggregate) and the SMJ
     re-attaches small (id, cluster_id) rows — while the fused lineage
@@ -1646,7 +1590,8 @@ def _lloyd_assign_once(v: DataFrame, cents: DataFrame, id_col: str) -> DataFrame
     r17 note: the one-row-broadcast-array + `array_min(transform(...))`
     rewrite (no per-update groupBy exchange) was priced and REJECTED
     with the `ivf_assign`/`pq_encode` HOF rewrites — flat at k=8 and
-    +60% on `ann_kmeans_recall_audit` (scripts/ab_ann_r17.py)."""
+    +60% on `ann_kmeans_recall_audit` (scripts/ab_ann_r17.py
+    at rev f23f2ab)."""
     scored = v.join(F.broadcast(cents)).withColumn(
         "dist", F.round(sq_dist(F.col("v"), F.col("cv")), 6)
     )

@@ -453,8 +453,8 @@ def jaccard_pairs(
     only ~5-11% on containment — not enough to trade away the
     documented EXACT string-keyed semantics, which 64-bit collisions
     would silently bend at corpus scale (~10^11 distinct shingles ->
-    ~3e5 expected colliding bucket merges). Harness kept:
-    scripts/ab_hash_g_r18.py.
+    ~3e5 expected colliding bucket merges). Harness:
+    scripts/ab_hash_g_r18.py at rev f23f2ab.
 
     `max_doc_freq` caps posting-list length: shingles appearing in more
     docs are dropped BEFORE their posting list is collected, bounding

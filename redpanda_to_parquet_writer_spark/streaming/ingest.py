@@ -39,6 +39,7 @@ from redpanda_to_parquet_writer_spark.operators.flatten import (
     project_kafka_envelope,
 )
 from redpanda_to_parquet_writer_spark.streaming.sink import (
+    _sink_exists,
     merge_dedup_append,
     with_event_date,
     write_date_partitioned,
@@ -96,7 +97,6 @@ def make_merge_batch_writer(
     spark: SparkSession,
     output_root: str,
     cfg: EngineConfig,
-    payload_schema: StructType | None = None,
     fmt: str = "json",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body: prepare + schema-version routing + dedup merge.
@@ -110,33 +110,28 @@ def make_merge_batch_writer(
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # dynamic-schema path runs TWO actions over the batch (schema
+        # the dynamic-schema path runs TWO actions over the batch (schema
         # sample, then the write) — persist so the source is scanned
         # once per micro-batch, not once per action
-        cached = payload_schema is None
-        if cached:
-            batch_df.persist()
+        batch_df.persist()
         try:
-            prepared = prepare_envelope_batch(
-                spark, batch_df, payload_schema, fmt=fmt
-            )
+            prepared = prepare_envelope_batch(spark, batch_df, fmt=fmt)
             if not prepared.columns:
                 return
             target = output_root
-            try:
+            # a missing base is a first write; a base that exists but
+            # cannot be read must fail the batch, never skip the check
+            if _sink_exists(spark, output_root):
                 base_schema = spark.read.parquet(output_root).drop("date").schema
                 ours = prepared.drop("date").schema
                 if schema_fingerprint(base_schema) != schema_fingerprint(ours):
                     target = f"{output_root}_v{schema_fingerprint(ours)}"
-            except Exception:
-                pass  # base doesn't exist yet
             if cfg.skip_dedup:
                 write_date_partitioned(prepared, target, cfg, mode="append")
             else:
                 merge_dedup_append(spark, prepared, target, cfg=cfg)
         finally:
-            if cached:
-                batch_df.unpersist()
+            batch_df.unpersist()
 
     return write_batch
 
@@ -147,7 +142,6 @@ def ingest_available_now(
     output_root: str,
     checkpoint_dir: str,
     cfg: EngineConfig | None = None,
-    payload_schema: StructType | None = None,
     query_name: str | None = None,
     fmt: str = "json",
 ) -> None:
@@ -161,7 +155,7 @@ def ingest_available_now(
     name so per-topic metrics don't cross-contaminate.
     """
     cfg = cfg or EngineConfig()
-    writer = make_merge_batch_writer(spark, output_root, cfg, payload_schema, fmt=fmt)
+    writer = make_merge_batch_writer(spark, output_root, cfg, fmt=fmt)
     stream = source.writeStream.foreachBatch(writer)
     if query_name:
         stream = stream.queryName(query_name)

@@ -23,15 +23,10 @@ Usage: python scripts/bitcheck.py <query> [<query> ...] [--sf <dir>]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb
-
-from redpanda_to_parquet_writer_spark.config import EngineConfig
-from redpanda_to_parquet_writer_spark.plans import ORACLES, QUERIES
-from redpanda_to_parquet_writer_spark.session import get_spark
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings"
 
@@ -72,6 +67,13 @@ def duck_arrow_types(con, sql: str) -> dict[str, str]:
 
 
 def main() -> int:
+    sys.path.insert(0, ROOT)
+    import duckdb
+
+    from redpanda_to_parquet_writer_spark.config import EngineConfig
+    from redpanda_to_parquet_writer_spark.plans import ORACLES, QUERIES
+    from redpanda_to_parquet_writer_spark.session import get_spark
+
     args = sys.argv[1:]
     sf = "/root/testdata/sf0.01"
     if "--sf" in args:

@@ -1,7 +1,7 @@
 # Drive the driver contract exactly as the harness would: vanilla session,
 # import __spark_entry__, smoke entry(), then oracle-compare 3 queries.
-import sys, math
-sys.path.insert(0, "/root/repo")
+import os, sys, math
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.shuffle.partitions","8")

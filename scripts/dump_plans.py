@@ -10,14 +10,11 @@ Usage: python scripts/dump_plans.py [sf_dir]   (writes PLANS.md at repo root)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-from redpanda_to_parquet_writer_spark.config import EngineConfig
-from redpanda_to_parquet_writer_spark.plans import QUERIES
-from redpanda_to_parquet_writer_spark.session import get_spark
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 FLAGSHIPS = [
     "pricing_summary",
@@ -100,6 +97,11 @@ def summarize(plan: str) -> dict[str, object]:
 
 
 def main() -> None:
+    sys.path.insert(0, ROOT)
+    from redpanda_to_parquet_writer_spark.config import EngineConfig
+    from redpanda_to_parquet_writer_spark.plans import QUERIES
+    from redpanda_to_parquet_writer_spark.session import get_spark
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(
         EngineConfig(shuffle_partitions=8, master="local[8]"), "dump-plans"
@@ -151,7 +153,7 @@ def main() -> None:
     for name, p in full.items():
         out.append(f"\n### {name}\n\n```\n{p.strip()}\n```")
     out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(rows)} queries)")
 

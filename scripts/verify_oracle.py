@@ -1,5 +1,5 @@
-import sys, math, time
-sys.path.insert(0, "/root/repo")
+import os, sys, math, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from redpanda_to_parquet_writer_spark.config import EngineConfig
 from redpanda_to_parquet_writer_spark.session import get_spark

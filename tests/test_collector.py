@@ -6,7 +6,7 @@ import pytest
 
 from redpanda_to_parquet_writer_spark.collector import Collector
 from redpanda_to_parquet_writer_spark.config import EngineConfig
-from redpanda_to_parquet_writer_spark.operators.validate import PASS
+from redpanda_to_parquet_writer_spark.operators.validate import ERROR, PASS, internal_consistency
 
 from tests.test_streaming_ingest import ENVELOPE_COLS, _envelope_df
 
@@ -257,6 +257,35 @@ def test_run_with_high_watermarks(spark, tmp_path, collector):
     assert rows[0]["status"] == PASS and rows[0]["missing"] == 0
     assert rows[1]["status"] == "ERROR" and rows[1]["missing"] == 2
     assert rows[2]["status"] == PASS and rows[3]["status"] == PASS
+
+
+def test_empty_topic_validates_as_zero_rows(spark, tmp_path, collector):
+    """A topic with nothing to drain commits no file, so its sink root
+    never appears. That counts as 0 rows: V1 passes with 0 on each side,
+    and V2 reports every partition the watermarks name as missing. A
+    root that exists but cannot be read still raises."""
+    src = tmp_path / "src_empty"
+    src.mkdir()
+    collector._test_sources["topic_empty"] = str(src)
+
+    run = collector.run(["topic_empty"], high_watermarks={"topic_empty": {0: 5, 1: 3}})
+    (report,) = run.reports
+    assert report.rows_written == 0
+    assert (report.validation.status, report.validation.expected, report.validation.actual) == (
+        PASS,
+        0,
+        0,
+    )
+    rows = sorted(
+        (r["kafka_partition"], r["status"], r["missing"]) for r in run.completeness["topic_empty"]
+    )
+    assert rows == [(0, ERROR, 5), (1, ERROR, 3)]
+
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-00000.parquet").write_text("this is not parquet")
+    with pytest.raises(Exception):
+        internal_consistency(spark, str(corrupt), 0)
 
 
 def test_trim_with_fake_admin(monkeypatch):

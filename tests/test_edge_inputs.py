@@ -102,19 +102,6 @@ def test_flatten_native_arrays_mode(spark):
     assert native.collect()[0]["ys"] == [4]  # data.* still hoists
 
 
-def test_quantize_zero_vector_null_scale(spark):
-    from redpanda_to_parquet_writer_spark.operators.similarity import quantize_int8
-
-    df = spark.createDataFrame(
-        [(0, [1.0, -2.0]), (1, [0.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    rows = {r["vec_id"]: r for r in quantize_int8(df).collect()}
-    assert rows[1]["q_embedding_scale"] is None  # degenerate marker
-    assert rows[1]["q_embedding"] == [0, 0]
-    assert rows[0]["q_embedding_scale"] is not None
-    assert rows[0]["q_embedding"] == [64, -127]
-
-
 def test_interval_join_survives_corrupt_interval(spark):
     from redpanda_to_parquet_writer_spark.operators.asof import interval_join
 

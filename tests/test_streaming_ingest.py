@@ -405,3 +405,28 @@ def test_merge_dedup_raises_on_corrupt_sink(spark, tmp_path, cfg):
     )
     with pytest.raises(Exception):
         merge_dedup_append(spark, df, out, cfg=cfg)
+
+
+def test_schema_probe_raises_on_corrupt_base(spark, tmp_path, cfg):
+    """The base-schema read that routes schema versions must propagate a
+    read error: a base whose only data file is not Parquet fails the
+    drain, and the batch lands nowhere (neither the base nor a version
+    table), even on the direct path that skips the anti-join."""
+    src = str(tmp_path / "src")
+    _envelope_df(spark, n=20).write.parquet(src)
+    out = tmp_path / "table"
+    out.mkdir()
+    (out / "part-00000.parquet").write_text("this is not parquet")
+    direct_cfg = EngineConfig(
+        output_dir=cfg.output_dir, checkpoint_dir=cfg.checkpoint_dir, skip_dedup=True
+    )
+
+    def data_files():
+        return sorted(
+            p for p in tmp_path.glob("table*/**/*") if p.is_file() and not p.name.startswith((".", "_"))
+        )
+
+    before = data_files()
+    with pytest.raises(Exception):
+        _run_stream(spark, tmp_path, direct_cfg, src, str(out), cfg.checkpoint_dir)
+    assert data_files() == before
