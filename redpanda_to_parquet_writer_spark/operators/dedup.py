@@ -95,33 +95,35 @@ def content_dedup_keep_first(
     return hashed.groupBy("_content_hash").agg(first).select("__first.*")
 
 
-def _ckpt_fresh_stats(df: DataFrame) -> DataFrame:
-    """Materialize one iteration of a checkpoint loop with RESET stats.
+def _materialize_flagged(df: DataFrame, flag_col: str) -> tuple[DataFrame, bool]:
+    """Materialize one loop iteration with RESET stats and read a
+    boolean convergence flag in the same full-scan job that fills the
+    cache: persist -> agg(max) -> localCheckpoint -> unpersist.
 
-    A bare per-round `localCheckpoint` truncates lineage but PRESERVES
-    the child plan's Catalyst statistics in the resulting LogicalRDD —
-    and a join's size estimate is the BigInt PRODUCT of its children's
-    sizeInBytes. In an iterative loop that joins the checkpointed frame
-    (worst: a self-join, which squares it), the stat's bit-length
-    doubles every round, and round r's planning multiplies
-    (2^r)-bit BigIntegers: profiled on the sf~1 fixture, the driver
-    burned 50s of a 51s round inside BigInteger.multiplyToomCook3 by
-    round 21, with every executor thread idle — exponential driver CPU
-    on constant-size data (123s total; 18s after this fix; the gap is
-    unbounded in round count, so at 100 TB depth it is a hang).
+    Why the stats reset: a bare per-round `localCheckpoint` truncates
+    lineage but PRESERVES the child plan's Catalyst statistics in the
+    resulting LogicalRDD — and a join's size estimate is the BigInt
+    PRODUCT of its children's sizeInBytes. In an iterative loop that
+    joins the checkpointed frame (worst: a self-join, which squares
+    it), the stat's bit-length doubles every round, and round r's
+    planning multiplies (2^r)-bit BigIntegers: profiled on the sf~1
+    fixture, the driver burned 50s of a 51s round inside
+    BigInteger.multiplyToomCook3 by round 21, with every executor
+    thread idle — exponential driver CPU on constant-size data (123s
+    total; 18s after this fix; the gap is unbounded in round count, so
+    at 100 TB depth it is a hang). The aggregate materializes the
+    cache, so the checkpoint's stats come from the cached relation's
+    REAL byte size instead of the compounded estimate; the checkpoint
+    then owns the data and the cache slot is released immediately.
 
-    Fix: persist -> count -> localCheckpoint -> unpersist. The count
-    materializes the cache, so the checkpoint's stats come from the
-    cached relation's REAL byte size instead of the compounded
-    estimate; the checkpoint then owns the data and the cache slot is
-    released immediately. Costs one extra in-memory copy of a
-    vertex-sized frame per round.
-    """
+    The flag read replaces the separate changed-check JOIN job the
+    pre-r17 loop ran every round (~20% of round wall at sf0.1). Empty
+    frames read as unchanged (max over zero rows is NULL)."""
     cached = df.persist()
-    cached.count()
+    flag = cached.agg(F.max(F.col(flag_col))).collect()[0][0]
     out = cached.localCheckpoint(eager=True)
     cached.unpersist()
-    return out
+    return out, bool(flag)
 
 
 def connected_components(
@@ -131,67 +133,22 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iterations: int = 25,
-    algorithm: str = "star",
-    jumps_per_round: int = 1,
 ) -> DataFrame:
     """Resolve near-dup candidate PAIRS into clusters (connected
     components): one row per vertex, labeled with its component's
     minimum id; singletons keep themselves.
 
-    Two interchangeable engines — both converge to the identical
-    min-label fixpoint (equality fuzzed per round on random graphs plus
-    the path/star/tiny pathologies; the oracle gates the composed
-    query), so `algorithm` only selects HOW the fixpoint is reached:
-
-    - ``"star"`` (default): alternating large-star/small-star edge
-      contraction (Kiveris et al., "Connected Components in MapReduce
-      and Beyond") — see `_cc_alternating_stars`. Edges REWRITE toward
-      component minima, so convergence is not bound by graph diameter:
-      r17 measured the sf0.1 LSH candidate graph at 6 rounds / 2 jobs
-      each vs label-prop's 16 rounds — and each star round shuffles
-      only the (small) candidate edge set, where every label-prop round
-      also shuffles the full vertex label table twice. At 100-TB corpus
-      scale that is ~2.6x fewer rounds AND strictly smaller frames per
-      round.
-    - ``"labelprop"``: the r16-shaped min-label propagation loop (kept
-      callable for A/B baselines and for its simple partial-result
-      semantics at an iteration cap) — see `_cc_label_propagation`.
-    """
-    if algorithm == "star":
-        return _cc_alternating_stars(
-            vertices, pairs, id_col, src_col, dst_col, max_iterations
-        )
-    if algorithm == "labelprop":
-        return _cc_label_propagation(
-            vertices, pairs, id_col, src_col, dst_col, max_iterations,
-            jumps_per_round,
-        )
-    raise ValueError(f"unknown algorithm {algorithm!r} (star | labelprop)")
-
-
-def _materialize_flagged(df: DataFrame, flag_col: str) -> tuple[DataFrame, bool]:
-    """Materialize one loop iteration with reset stats (the
-    `_ckpt_fresh_stats` contract) AND read a boolean convergence flag in
-    the same full-scan job that fills the cache: persist -> agg(max) ->
-    localCheckpoint -> unpersist. Replaces the separate changed-check
-    JOIN job the pre-r17 loop ran every round (~20% of round wall at
-    sf0.1). Empty frames read as unchanged (max over zero rows is NULL)."""
-    cached = df.persist()
-    flag = cached.agg(F.max(F.col(flag_col))).collect()[0][0]
-    out = cached.localCheckpoint(eager=True)
-    cached.unpersist()
-    return out, bool(flag)
-
-
-def _cc_alternating_stars(
-    vertices: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    src_col: str,
-    dst_col: str,
-    max_iterations: int,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components.
+    LSH/Jaccard stages emit candidate *pairs*; a dedup pipeline must
+    then group pairs transitively (a~b, b~c => {a,b,c} is one cluster).
+    That is not expressible as one SQL query, so it runs as a
+    driver-controlled loop of alternating large-star/small-star edge
+    contraction (Kiveris et al., "Connected Components in MapReduce and
+    Beyond"). Edges REWRITE toward component minima, so convergence is
+    not bound by graph diameter: r17 measured the sf0.1 LSH candidate
+    graph at 6 rounds / 2 jobs each vs r16 label propagation's 16
+    rounds — and each star round shuffles only the (small) candidate
+    edge set, where every label-propagation round also shuffled the
+    full vertex label table twice.
 
     Edges live canonically as (u, v) with u > v. Each round:
 
@@ -339,149 +296,6 @@ def _cc_alternating_stars(
             F.coalesce("cluster_id", F.col("id")).alias("cluster_id"),
         )
     )
-
-
-def _cc_label_propagation(
-    vertices: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 25,
-    jumps_per_round: int = 1,
-) -> DataFrame:
-    """Min-label propagation with pointer jumping (pre-r17 production
-    engine, kept as the A/B reference).
-
-    LSH/Jaccard stages emit candidate *pairs*; an actual dedup pipeline
-    must then group pairs transitively (a~b, b~c => {a,b,c} is one
-    cluster) and keep one canonical doc per cluster. This is connected
-    components — not expressible as one SQL query, so it runs as a
-    driver-controlled iteration of Spark joins:
-
-      label(v) starts as v; each round, label(v) := min(label(v),
-      min over neighbors u of label(u)), then POINTER-JUMPS
-      `jumps_per_round` times: label(v) := min(label(v),
-      label(label(v))); stop when a full round changes nothing.
-
-    The neighbor step alone needs diameter-many rounds — measured
-    insufficient on sf0.1's chained near-dup graph (22 vertices still
-    mislabeled after 25 rounds). Each pointer-jump halves the remaining
-    label-chain depth, so k jumps per round divide it by 2^k and
-    chain-depth-bound convergence takes ~log2(depth)/k rounds. Every
-    propagate/jump step is monotone (labels only decrease, only to ids
-    inside the same component) and the stop condition is stability of a
-    FULL round, so the fixpoint — every vertex labeled with its
-    component's min id — is identical for any k; k only changes how
-    many rounds reach it. r17 measured WHICH bound binds where: a pure
-    path graph is chain-depth-bound (100 vertices: 7 rounds at k=1 vs
-    4 at k=3), but the sf0.1 LSH candidate graph is EDGE-DIAMETER-bound
-    — labels collapse to near-root chains inside each round, so extra
-    jumps find nothing to shortcut (16 rounds at k=1 AND k=3) while
-    paying an extra self-join job each; hence the default k=1. The min
-    still has to cross ~16 edge hops, one per round — that bound
-    belongs to the propagate step, not the jumps.
-
-    Scale notes:
-      - Each round is 1 + jumps_per_round shuffle joins keyed on vertex
-        id; the edge list (candidate pairs) is orders of magnitude
-        smaller than the corpus. Per round, the driver runs one job per
-        materialization (propagate + each non-final jump) plus the
-        final flagged aggregate and its checkpoint — the r17 fold
-        removed the separate changed-check JOIN job that previously ran
-        every round (~20% of round wall at sf0.1).
-      - Each round truncates lineage and resets Catalyst size stats
-        through ONE localCheckpoint of the round's final frame (see
-        `_ckpt_fresh_stats` for the exponential-driver-CPU failure a
-        bare localCheckpoint loop has); the intermediate frames are
-        persist+count'ed only (real cached stats, no extra checkpoint
-        copies — the r11 fold, extended to the jump chain).
-      - Convergence detection rides the materializing aggregate: the
-        round's final frame carries a `__changed` flag (its label is
-        below the round-start label — labels are monotone, so this IS
-        "anything changed"), and max(__changed) is read in the same
-        full-scan job that fills the cache before the checkpoint. No
-        extra job, no join.
-
-    Returns (id_col, cluster_id) with one row per vertex; singletons keep
-    cluster_id == their own id.
-    """
-    if jumps_per_round < 1:
-        raise ValueError(f"jumps_per_round must be >= 1, got {jumps_per_round}")
-    edges = pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    edges = edges.localCheckpoint(eager=True)
-
-    # round 0 joins read the vertex scan directly (real scan stats); no
-    # checkpoint needed — every later round reads the previous round's
-    # checkpoint (r17: saves the one-off materialization job)
-    labels = vertices.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("cluster_id")
-    )
-
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["src"] == labels["id"])
-            .groupBy("dst")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        # cur is persist+count'ed, NOT checkpointed (r11 fold, VERDICT
-        # r10 #6): each jump's self-join only needs the frame cached
-        # with REAL stats — the count materializes the cache so both
-        # join sides read it and Catalyst sees the cached relation's
-        # byte size (no estimate compounding); lineage truncation for
-        # the next round comes from the end-of-round checkpoint, so
-        # plans stay one round deep. `__start` (the round-entry label)
-        # rides along to drive the fold's `__changed` flag.
-        cur = (
-            labels.join(
-                neighbor_min, labels["id"] == neighbor_min["dst"], "left"
-            )
-            .select(
-                "id",
-                F.col("cluster_id").alias("__start"),
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nbr_min", "cluster_id")
-                ).alias("cluster_id"),
-            )
-            .persist()
-        )
-        cur.count()
-        to_release = [cur]
-        for j in range(jumps_per_round):
-            parent = cur.select(
-                F.col("id").alias("p_id"), F.col("cluster_id").alias("p_cluster")
-            )
-            nxt = cur.join(
-                parent, cur["cluster_id"] == parent["p_id"], "left"
-            ).select(
-                "id",
-                "__start",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("p_cluster", "cluster_id")
-                ).alias("cluster_id"),
-            )
-            if j < jumps_per_round - 1:
-                nxt = nxt.persist()
-                nxt.count()
-                to_release.append(nxt)
-            cur = nxt
-        # materialize + convergence check + checkpoint in two jobs: the
-        # max(__changed) aggregate full-scans (and therefore fills) the
-        # cache, the eager checkpoint then reads it back with real stats
-        cached = cur.withColumn(
-            "__changed", F.col("cluster_id") < F.col("__start")
-        ).persist()
-        changed = cached.agg(F.max("__changed")).collect()[0][0]
-        labels = cached.localCheckpoint(eager=True).select("id", "cluster_id")
-        cached.unpersist()
-        for f in to_release:
-            f.unpersist()
-        if not changed:
-            break
-    return labels.select(F.col("id").alias(id_col), "cluster_id")
 
 
 def exact_dedup_min_key(

@@ -269,8 +269,9 @@ def probe_tiff(data: bytes) -> tuple[int, int, int, int, int, int]:
 # LZ77 backward references with linear distance codes, subtract-green
 # transform, color-indexing (palette) transform including sub-byte
 # pixel bundling, RIFF container wrap, VP8/VP8L/VP8X structure probe.
-# All FOUR pixel transforms (subtract-green, color-indexing with
-# bundling, 14-mode predictor, cross-color) are implemented. Out of
+# The decoder implements all FOUR pixel transforms (subtract-green,
+# color-indexing with bundling, 14-mode predictor, cross-color); the
+# encoder emits only the first two. Out of
 # scope and raising documented ValueErrors: meta-prefix (entropy
 # image) groups and the 2D short-distance code neighborhood — the
 # subset a library-free reimplementation can keep honest without a
@@ -964,75 +965,11 @@ def _vp8l_neighbors(
     return l, t, tl, tr
 
 
-def _vp8l_sub_px(c: int, p: int) -> int:
-    out = 0
-    for sh in (24, 16, 8, 0):
-        out |= (((c >> sh) - (p >> sh)) & 0xFF) << sh
-    return out
-
-
 def _vp8l_add_px(r: int, p: int) -> int:
     out = 0
     for sh in (24, 16, 8, 0):
         out |= (((r >> sh) + (p >> sh)) & 0xFF) << sh
     return out
-
-
-def _vp8l_predictor_residuals(
-    pixels: list[int], width: int, height: int, size_bits: int
-) -> tuple[list[int], list[int], int, int]:
-    """Forward predictor transform: per tile, pick the mode (searched
-    over 0/1/2/7/11/12) with the smallest absolute-residual cost, then
-    emit residual = pixel - pred (mod 256 per channel). Predictions use
-    RECONSTRUCTED (= original, lossless) neighbors, matching the
-    decoder's inverse pass. Edge rule: (0,0) -> opaque black, top row
-    -> L, first column -> T, right-edge TR clamps to T. Returns
-    (residuals, tile mode image, tiles_x, tiles_y)."""
-    tiles_x = (width + (1 << size_bits) - 1) >> size_bits
-    tiles_y = (height + (1 << size_bits) - 1) >> size_bits
-    modes: list[int] = []
-    residuals = [0] * (width * height)
-    for ty in range(tiles_y):
-        for tx in range(tiles_x):
-            x0, y0 = tx << size_bits, ty << size_bits
-            x1 = min(x0 + (1 << size_bits), width)
-            y1 = min(y0 + (1 << size_bits), height)
-            best_mode, best_cost = 2, None
-            for mode in (0, 1, 2, 7, 11, 12):
-                cost = 0
-                for y in range(y0, y1):
-                    for x in range(x0, x1):
-                        l, t, tl, tr = _vp8l_neighbors(pixels, x, y, width)
-                        if x == 0 and y == 0:
-                            pred = 0xFF000000
-                        elif y == 0:
-                            pred = l
-                        elif x == 0:
-                            pred = t
-                        else:
-                            pred = _vp8l_predict(mode, l, t, tl, tr)
-                        r = _vp8l_sub_px(pixels[y * width + x], pred)
-                        for sh in (24, 16, 8, 0):
-                            c = (r >> sh) & 0xFF
-                            cost += min(c, 256 - c)
-                if best_cost is None or cost < best_cost:
-                    best_cost, best_mode = cost, mode
-            modes.append(0xFF000000 | (best_mode << 8))  # mode in green
-            for y in range(y0, y1):
-                for x in range(x0, x1):
-                    l, t, tl, tr = _vp8l_neighbors(pixels, x, y, width)
-                    if x == 0 and y == 0:
-                        pred = 0xFF000000
-                    elif y == 0:
-                        pred = l
-                    elif x == 0:
-                        pred = t
-                    else:
-                        pred = _vp8l_predict(best_mode, l, t, tl, tr)
-                    residuals[y * width + x] = _vp8l_sub_px(
-                        pixels[y * width + x], pred
-                    )
-    return residuals, modes, tiles_x, tiles_y
 
 
 def _vp8l_predictor_inverse(
@@ -1073,18 +1010,17 @@ def _ct_delta(t: int, c: int) -> int:
     return (t8 * c8) >> 5
 
 
-def _cross_color_apply(
+def _cross_color_inverse(
     pixels: list[int],
     mults: list[int],
     width: int,
     height: int,
     size_bits: int,
     tiles_x: int,
-    inverse: bool,
 ) -> list[int]:
-    """(Inverse-)apply the cross-color transform: per tile, red moves
-    by delta(green_to_red, green) and blue by delta(green_to_blue,
-    green) + delta(red_to_blue, FINAL red). Multiplier tile pixels
+    """Invert the cross-color transform: per tile, red moves by
+    delta(green_to_red, green) and blue by delta(green_to_blue, green)
+    + delta(red_to_blue, FINAL red). Multiplier tile pixels
     carry green_to_red in blue, green_to_blue in green, red_to_blue in
     red (the libwebp ColorCodeToMultipliers layout)."""
     out = [0] * len(pixels)
@@ -1097,48 +1033,10 @@ def _cross_color_apply(
             r = (p >> 16) & 0xFF
             g = (p >> 8) & 0xFF
             b = p & 0xFF
-            if inverse:
-                r = (r + _ct_delta(g2r, g)) & 0xFF
-                b = (b + _ct_delta(g2b, g) + _ct_delta(r2b, r)) & 0xFF
-            else:
-                b = (b - _ct_delta(g2b, g) - _ct_delta(r2b, r)) & 0xFF
-                r = (r - _ct_delta(g2r, g)) & 0xFF
+            r = (r + _ct_delta(g2r, g)) & 0xFF
+            b = (b + _ct_delta(g2b, g) + _ct_delta(r2b, r)) & 0xFF
             out[y * width + x] = (a << 24) | (r << 16) | (g << 8) | b
     return out
-
-
-def _cross_color_pick(
-    pixels: list[int], width: int, height: int, size_bits: int
-) -> tuple[list[int], int, int]:
-    """Choose per-tile multipliers by residual cost over a small
-    candidate set (including identity) — enough to exercise the
-    transform for real on correlated channels."""
-    tiles_x = (width + (1 << size_bits) - 1) >> size_bits
-    tiles_y = (height + (1 << size_bits) - 1) >> size_bits
-    candidates = [0x000000, 0x000020, 0x002000, 0x200000, 0x002020]
-    mults = []
-    for ty in range(tiles_y):
-        for tx in range(tiles_x):
-            x0, y0 = tx << size_bits, ty << size_bits
-            x1 = min(x0 + (1 << size_bits), width)
-            y1 = min(y0 + (1 << size_bits), height)
-            best_m, best_cost = 0, None
-            for m in candidates:
-                g2r, g2b, r2b = m & 0xFF, (m >> 8) & 0xFF, (m >> 16) & 0xFF
-                cost = 0
-                for y in range(y0, y1):
-                    for x in range(x0, x1):
-                        p = pixels[y * width + x]
-                        r = (p >> 16) & 0xFF
-                        g = (p >> 8) & 0xFF
-                        b = p & 0xFF
-                        nr = (r - _ct_delta(g2r, g)) & 0xFF
-                        nb = (b - _ct_delta(g2b, g) - _ct_delta(r2b, r)) & 0xFF
-                        cost += min(nr, 256 - nr) + min(nb, 256 - nb)
-                if best_cost is None or cost < best_cost:
-                    best_cost, best_m = cost, m
-            mults.append(0xFF000000 | best_m)
-    return mults, tiles_x, tiles_y
 
 
 def encode_webp_lossless(
@@ -1148,19 +1046,16 @@ def encode_webp_lossless(
     use_palette: bool | None = None,
     cache_bits: int = 8,
     subtract_green: bool = True,
-    use_predictor: bool = False,
-    predictor_size_bits: int = 4,
-    use_cross_color: bool = False,
 ) -> bytes:
     """REAL WebP-lossless (VP8L) encoder for RGBA8: optional
     color-indexing transform (auto when <= 256 distinct colors, with
     sub-byte pixel bundling for tiny palettes), else optional
-    subtract-green, the tile-based PREDICTOR transform (per-tile mode
-    search over 6 of the 14 spatial predictors) and/or the CROSS-COLOR
-    transform (per-tile multiplier search); greedy LZ77 +
-    color cache + per-channel Kraft-complete canonical prefix codes;
-    wrapped in a valid RIFF/WEBP container. Lossless —
-    `decode_webp_lossless` round-trips the exact bytes."""
+    subtract-green; greedy LZ77 + color cache + per-channel
+    Kraft-complete canonical prefix codes; wrapped in a valid RIFF/WEBP
+    container. Lossless — `decode_webp_lossless` round-trips the exact
+    bytes. The spatial transforms (predictor, cross-color) are
+    decode-only: `decode_webp_lossless` inverts them in external
+    streams, the encoder never emits them."""
     import struct as _s
 
     if len(rgba) != width * height * 4:
@@ -1218,8 +1113,6 @@ def encode_webp_lossless(
             body, bw = packed, pw
         else:
             body, bw = [idx_of[p] << 8 for p in pixels], width
-        w.put(0, 1)  # no more transforms
-        _vp8l_write_pixels(w, body, bw, cache_bits=cache_bits, level0=True)
     else:
         if subtract_green:
             w.put(1, 1)
@@ -1231,32 +1124,9 @@ def encode_webp_lossless(
                 | (((p & 0xFF) - ((p >> 8) & 0xFF)) & 0xFF)
                 for p in pixels
             ]
-        if use_cross_color:
-            if not 2 <= predictor_size_bits <= 9:
-                raise ValueError("predictor_size_bits must be 2..9")
-            w.put(1, 1)
-            w.put(1, 2)  # CROSS_COLOR
-            w.put(predictor_size_bits - 2, 3)
-            mults, tiles_x, tiles_y = _cross_color_pick(
-                pixels, width, height, predictor_size_bits
-            )
-            _vp8l_write_pixels(w, mults, tiles_x, cache_bits=0, use_lz77=False)
-            pixels = _cross_color_apply(
-                pixels, mults, width, height, predictor_size_bits,
-                tiles_x, inverse=False,
-            )
-        if use_predictor:
-            if not 2 <= predictor_size_bits <= 9:
-                raise ValueError("predictor_size_bits must be 2..9")
-            w.put(1, 1)
-            w.put(0, 2)  # PREDICTOR
-            w.put(predictor_size_bits - 2, 3)
-            pixels, modes, tiles_x, tiles_y = _vp8l_predictor_residuals(
-                pixels, width, height, predictor_size_bits
-            )
-            _vp8l_write_pixels(w, modes, tiles_x, cache_bits=0, use_lz77=False)
-        w.put(0, 1)  # no more transforms
-        _vp8l_write_pixels(w, pixels, width, cache_bits=cache_bits, level0=True)
+        body, bw = pixels, width
+    w.put(0, 1)  # no more transforms
+    _vp8l_write_pixels(w, body, bw, cache_bits=cache_bits, level0=True)
     payload = w.flush()
     chunk = b"VP8L" + _s.pack("<I", len(payload)) + payload
     if len(payload) % 2:
@@ -1353,8 +1223,8 @@ def decode_webp_lossless(data: bytes) -> tuple[int, int, bytes]:
             )
         elif t[0] == "cross_color":
             _tag, mults, size_bits, tiles_x = t
-            pixels = _cross_color_apply(
-                pixels, mults, width, height, size_bits, tiles_x, inverse=True
+            pixels = _cross_color_inverse(
+                pixels, mults, width, height, size_bits, tiles_x
             )
         elif t[0] == "subtract_green":
             pixels = [

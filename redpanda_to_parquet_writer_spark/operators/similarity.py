@@ -1384,7 +1384,7 @@ def _materialize_probes(probes: DataFrame, reliable: bool) -> DataFrame:
     # reliable RDD checkpoint runs a SECOND job to write the checkpoint
     # files, which would recompute the probe sub-plan from scratch;
     # caching first lets that write read cached blocks instead (the
-    # same discipline as dedup.py's _ckpt_fresh_stats)
+    # same discipline as dedup.py's _materialize_flagged)
     probes = probes.persist()
     try:
         return probes.checkpoint(eager=True)
@@ -1537,40 +1537,6 @@ def ivf_topk_indexed(
     return _rank_topk(reduce(DataFrame.unionByName, tops), k)
 
 
-def _batch_matrix(pdf, vec_col: str, dim: int):
-    """Build one Arrow batch's (n x dim) float64 matrix, flagging dirty
-    rows instead of letting numpy densify a NULL/ragged column into a
-    0-d or object array (whose matmul error names neither the row nor
-    the cause — ADVICE r8). Returns (mat, bad): bad rows (NULL vector,
-    wrong length, or non-1-d) are zero-filled in mat and True in the
-    mask, and `_lloyd_assign_arrow` routes them to the lowest cluster
-    like the JVM NULL-dist ordering."""
-    import numpy as np
-
-    n = len(pdf)
-    mat = np.zeros((n, dim), dtype=np.float64)
-    bad = np.zeros(n, dtype=bool)
-    for i, x in enumerate(pdf[vec_col]):
-        if x is None:
-            bad[i] = True
-            continue
-        arr = np.asarray(x, dtype=np.float64)
-        if arr.ndim != 1 or arr.shape[0] != dim:
-            bad[i] = True
-        else:
-            mat[i] = arr
-    return mat, bad
-
-
-def _centroid_rows(centroids: DataFrame) -> list[tuple[int, list[float]]]:
-    """Collect the (tiny by contract) codebook as rows sorted by
-    centroid id — the closure feed for the vectorized assignment path."""
-    return sorted(
-        (int(r["cluster_id"]), [float(x) for x in r["cv"]])
-        for r in centroids.collect()
-    )
-
-
 def sq_dist(a: Column, b: Column) -> Column:
     """Squared Euclidean distance between two array<double> columns,
     folded left-to-right (same order as the DuckDB oracle's list_sum)."""
@@ -1668,77 +1634,6 @@ def _train_sample(v: DataFrame, id_col: str, cap: int) -> DataFrame:
     ).limit(cap)
 
 
-def _lloyd_assign_arrow(v: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """`_lloyd_assign_once`'s Arrow-batched numpy twin — the TRAINING
-    accelerator that makes bounded-sample codebook training minutes
-    instead of hours at real k (the JVM broadcast-join + fold evaluates
-    ~100k joined rows/s; one (batch x dim) @ (dim x k) matmul covers
-    the same pairs per batch vectorized).
-
-    Semantics mirror the JVM pass: squared-Euclidean distance rounded
-    to 6 decimals BEFORE the argmin, ties to the lowest cluster_id
-    (argmin scans the id-sorted centroid matrix and returns the first
-    minimum), NULL / wrong-length vectors land in the LOWEST cluster id
-    (the JVM's NULL dist sorts first in the min-struct; `_batch_matrix`
-    flags those rows instead of crashing numpy). Exact equality with
-    the JVM pass is NOT guaranteed on adversarial near-ties (numpy
-    computes ||x||^2 - 2x.c + ||c||^2 with pairwise sums and half-even
-    rounding; the JVM folds (x-y)^2 left-to-right and half-up rounds
-    the decimal repr — both land on the same 1e-6 grid except at exact
-    grid-boundary / tie values): fixture equality of the TRAINED
-    CENTROIDS is pinned in tests. The oracle-gated default path stays
-    the JVM pass."""
-    import numpy as np
-    import pandas as pd
-
-    out_schema = f"{id_col} long, cluster_id int, dist double, v array<double>"
-    rows = _centroid_rows(cents)
-    if not rows:
-        # every cluster died (degenerate corpus): the JVM pass's join
-        # against an empty codebook yields no assignments — match it
-        return (
-            v.select(id_col, "v")
-            .limit(0)
-            .select(
-                F.col(id_col),
-                F.lit(None).cast("int").alias("cluster_id"),
-                F.lit(None).cast("double").alias("dist"),
-                "v",
-            )
-        )
-    ids = np.array([cid for cid, _ in rows], dtype=np.int64)
-    cmat = np.array([cv for _, cv in rows], dtype=np.float64)  # k x dim
-    c2 = (cmat * cmat).sum(axis=1)  # k
-
-    def batches(it):
-        for pdf in it:
-            vecs, bad = _batch_matrix(pdf, "v", cmat.shape[1])  # n x dim
-            dist = (
-                (vecs * vecs).sum(axis=1)[:, None]
-                - 2.0 * (vecs @ cmat.T)
-                + c2[None, :]
-            )
-            dist = np.round(dist, 6)
-            best = np.argmin(dist, axis=1)
-            best[bad] = 0
-            mind = dist[np.arange(len(vecs)), best]
-            if bad.any():
-                # JVM parity: a NULL/ragged vector's dist is NULL (the
-                # fold over a padded pair), not NaN
-                mind = mind.astype(object)
-                mind[bad] = None
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "cluster_id": ids[best].astype("int32"),
-                    "dist": mind,
-                    "v": pdf["v"].values,
-                }
-            )
-
-    return v.select(id_col, "v").mapInPandas(batches, out_schema)
-
-
 def kmeans_lloyd_centroids(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -1746,7 +1641,6 @@ def kmeans_lloyd_centroids(
     k: int = 8,
     n_updates: int = 1,
     max_train_rows: int | None = None,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Centroids after `n_updates` deterministic Lloyd updates from the
     lowest-id-vector init — the oracle-replayable PRODUCTION quantizer
@@ -1765,14 +1659,6 @@ def kmeans_lloyd_centroids(
     (the top-N passes every row through and the trainer is
     order-independent) — bitwise-gated in tests, so the frozen registry
     queries are unchanged at every test scale.
-
-    `use_arrow=True` swaps each update's assignment pass for the
-    vectorized numpy twin (`_lloyd_assign_arrow` — one matmul per Arrow
-    batch instead of ~100k joined rows/s through the JVM fold); with
-    the default cap that makes trained codebooks at real per-shard k
-    (2000+) a minutes-scale build step. The JVM pass stays the default:
-    it is the oracle-gated path, and the twins can differ on exact
-    1e-6-grid-boundary ties (see `_lloyd_assign_arrow`).
 
     Returns a LOCAL (cluster_id, cv) relation (`materialize_centroids`),
     ready to broadcast into `ivf_topk`/`write_ivf_index`; per-update
@@ -1796,10 +1682,9 @@ def kmeans_lloyd_centroids(
         cents = materialize_centroids(
             deterministic_centroids(train, k, id_col, "v")
         )
-        assign = _lloyd_assign_arrow if use_arrow else _lloyd_assign_once
         for _ in range(n_updates):
             cents = materialize_centroids(
-                _lloyd_update(assign(train, cents, id_col))
+                _lloyd_update(_lloyd_assign_once(train, cents, id_col))
             )
     finally:
         if cached is not None:
@@ -1814,7 +1699,6 @@ def kmeans_lloyd_assign(
     k: int = 8,
     n_iter: int = 2,
     max_train_rows: int | None = None,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Distributed Lloyd k-means over an embedding column — the semantic
     clustering step of cluster-based data curation (balance / prune a
@@ -1835,8 +1719,7 @@ def kmeans_lloyd_assign(
         groupBy exchanges one (id, vec) row per vector per iteration
         (the honest cost of the join+max_by formulation — see the
         SCALING.md r8 note for why the zero-shuffle expression rewrite
-        loses, and `_lloyd_assign_arrow` for the vectorized shape a
-        Lloyd-at-true-scale run would use);
+        loses);
       - the update step posexplodes to (cluster, dim, x) and
         partial-aggregates map-side, so the per-iteration shuffle
         carries one (sum, count) per (cluster, dim) per input partition
@@ -1847,9 +1730,6 @@ def kmeans_lloyd_assign(
         `kmeans_lloyd_centroids` cap contract); only the one FINAL
         assignment pass touches the full corpus, so the per-row cost at
         100 TB is one broadcast argmin, not n_iter of them.
-        `use_arrow=True` runs both the training and the final
-        assignment through the vectorized numpy twin (fixture-gated
-        against the JVM pass; the oracle-gated default stays JVM).
     Returns (id_col, cluster_id, dist) after `n_iter` assignment passes
     (i.e. n_iter - 1 centroid updates then one final assignment).
     """
@@ -1857,11 +1737,11 @@ def kmeans_lloyd_assign(
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     v = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
     cents = kmeans_lloyd_centroids(
-        df, id_col, vec_col, k, n_iter - 1, max_train_rows, use_arrow
+        df, id_col, vec_col, k, n_iter - 1, max_train_rows
     )
-    assign = _lloyd_assign_arrow if use_arrow else _lloyd_assign_once
-    assigned = assign(v, cents, id_col)
-    return assigned.select(id_col, "cluster_id", "dist")
+    return _lloyd_assign_once(v, cents, id_col).select(
+        id_col, "cluster_id", "dist"
+    )
 
 
 def rrf_fuse(

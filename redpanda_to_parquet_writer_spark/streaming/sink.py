@@ -42,7 +42,6 @@ def write_date_partitioned(
     root: str,
     cfg: EngineConfig | None = None,
     mode: str = "append",
-    files_per_date: int = 1,
 ) -> None:
     """Write a prepared (date-columned) frame as hive-partitioned Parquet.
 
@@ -53,16 +52,11 @@ def write_date_partitioned(
     Rows are repartitioned on the date key first: without this, every
     task holds every date and the job writes tasks x dates files (e.g.
     32 x 30 = 960 tiny files at sf0.1 — measured; with clustering, 30).
-    Raise `files_per_date` when single dates are too big for one writer
-    (the salt spreads a date over that many tasks).
     """
     cfg = cfg or EngineConfig()
     sort_cols = [c for c in ("kafka_topic", "kafka_partition", "kafka_offset") if c in df.columns]
     if "date" in df.columns:
-        keys = [F.col("date")]
-        if files_per_date > 1 and "kafka_offset" in df.columns:
-            keys.append(F.pmod(F.col("kafka_offset"), F.lit(files_per_date)))
-        df = df.repartition(*keys)
+        df = df.repartition(F.col("date"))
     out = df.sortWithinPartitions(*sort_cols) if sort_cols else df
     (
         out.write.partitionBy("date")

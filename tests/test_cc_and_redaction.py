@@ -30,15 +30,9 @@ def test_cc_long_chain_needs_multiple_rounds(spark):
 def test_cc_iteration_cap_partial_result(spark):
     # capped at 1 round, the star contraction has rewritten the chain's
     # edges {21,32,43} to {21,31,42}: nodes 2,3 reach root 1 but node 4
-    # only reached 2 (labelprop's 1-round partial coincides — one
-    # neighbor-min hop + one pointer jump also leaves 4 at 2)
+    # only reached 2
     got = _clusters(spark, 4, [(1, 2), (2, 3), (3, 4)], max_iterations=1)
     assert got == {1: 1, 2: 1, 3: 1, 4: 2}
-    got_lp = _clusters(
-        spark, 4, [(1, 2), (2, 3), (3, 4)], max_iterations=1,
-        algorithm="labelprop",
-    )
-    assert got_lp == {1: 1, 2: 1, 3: 1, 4: 2}
 
 
 def _star_rounds_reference(pairs, k):
@@ -83,22 +77,35 @@ def test_cc_fused_pair_cap_exactness(spark):
 
 def test_cc_deep_chain_converges_logarithmically(spark):
     # 100-node path graph: plain min-propagation needs ~100 rounds (the
-    # sf0.1 regression class — hit the 25-round cap); both the star
-    # contraction (default) and pointer jumping must converge inside 10
+    # sf0.1 regression class — hit the 25-round cap); the star
+    # contraction must converge inside 10
     got = _clusters(spark, 100, [(i, i + 1) for i in range(1, 100)], max_iterations=10)
     assert got == {i: 1 for i in range(1, 101)}
-    got_lp = _clusters(
-        spark, 100, [(i, i + 1) for i in range(1, 100)], max_iterations=10,
-        algorithm="labelprop",
-    )
-    assert got_lp == {i: 1 for i in range(1, 101)}
 
 
-def test_cc_star_equals_labelprop_on_random_graphs(spark):
-    # r17: the star contraction replaced label propagation as the
-    # production engine — pin the two engines (and labelprop's
-    # multi-jump variant) to the identical min-label fixpoint on random
-    # graphs, including self-loops, duplicate and reversed pairs
+def _union_find_min_labels(n_vertices, pairs):
+    """Driver-side reference: union-find over vertices 1..n, each
+    vertex labeled with its component's minimum id."""
+    parent = {v: v for v in range(1, n_vertices + 1)}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # the smaller root wins, so every root is its component's min
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def test_cc_star_equals_union_find_on_random_graphs(spark):
+    # the star contraction must reach the min-label fixpoint a plain
+    # union-find computes, on random graphs including self-loops,
+    # duplicate and reversed pairs
     import random
 
     for seed in (7, 23):
@@ -108,32 +115,13 @@ def test_cc_star_equals_labelprop_on_random_graphs(spark):
             (rnd.randrange(1, n + 1), rnd.randrange(1, n + 1))
             for _ in range(250)
         ]
-        star = _clusters(spark, n, pairs)
-        lp = _clusters(spark, n, pairs, algorithm="labelprop")
-        lp3 = _clusters(
-            spark, n, pairs, algorithm="labelprop", jumps_per_round=3
-        )
-        assert star == lp == lp3
+        assert _clusters(spark, n, pairs) == _union_find_min_labels(n, pairs)
 
 
 def test_cc_star_empty_and_selfloop_only(spark):
     # no pairs / only self-loops: every vertex is its own singleton
     got = _clusters(spark, 5, [(2, 2), (4, 4)])
     assert got == {i: i for i in range(1, 6)}
-
-
-def test_cc_unknown_algorithm_raises(spark):
-    import pytest
-
-    from pyspark.sql import functions as F
-    from redpanda_to_parquet_writer_spark.operators.dedup import (
-        connected_components,
-    )
-
-    vertices = spark.range(1, 3).select(F.col("id").alias("doc_id"))
-    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(vertices, pairs, algorithm="bogus")
 
 
 def test_redact_text_masks_and_counts(spark):
@@ -339,13 +327,13 @@ def test_dup_ngram_fraction_fully_duplicated_doc(spark):
 
 def test_cc_stats_stay_flat_across_rounds(spark):
     """The r10 sf1 finding, pinned at the mechanism level: a bare
-    per-round localCheckpoint PRESERVES Catalyst stats, and the loop's
+    per-round localCheckpoint PRESERVES Catalyst stats, and a loop's
     self-join SQUARES sizeInBytes each round — by round ~20 the driver
     multiplies 100M-bit BigIntegers (50s/round on constant data).
-    `_ckpt_fresh_stats` resets stats from the cached relation, so the
-    returned labels frame's sizeInBytes must stay a sane, DATA-sized
-    number after many rounds — not an astronomically compounded
-    estimate. 2^63 is far above any real 100-node frame and far below
+    `_materialize_flagged` resets stats from the cached relation each
+    round, so the returned labels frame's sizeInBytes must stay a sane,
+    DATA-sized number after many rounds — not an astronomically
+    compounded estimate. 2^63 is far above any real 100-node frame and far below
     the compounded values (which exceed 2^1000 within 20 rounds)."""
     vertices = spark.range(1, 101).select(F.col("id").alias("doc_id"))
     pairs = spark.createDataFrame(

@@ -1079,13 +1079,107 @@ def test_webp_lossless_roundtrip_arbitrary_images(w, h, seed, cache_bits, sg):
         )
         assert decode_webp_lossless(blob) == (w, h, rgba)
         assert probe_webp(blob)[:3] == (w, h, "VP8L")
-    # the predictor transform (per-tile mode search) on the noise image
-    pred = encode_webp_lossless(
-        w, h, images[0], use_palette=False, cache_bits=cache_bits,
-        subtract_green=sg, use_predictor=True, use_cross_color=True,
-        predictor_size_bits=3,
+
+
+# VP8L streams that exercise the decoder's spatial transforms, which the
+# encoder does not emit: a 9x7 noise image and a 9x7 gradient, each coded
+# with the predictor transform alone, the cross-color transform alone, and
+# both after subtract-green, at predictor_size_bits 2 and 3 (tile modes
+# 0, 1 and 12; non-identity cross-color multipliers). Each entry holds the
+# stream and the sha256 of the RGBA it decodes to.
+_VP8L_SPATIAL_STREAMS = {
+    "noise_pred_sb2": (
+        "5249464696010000574542505650384c8a0100002f08800110012141a29dffdb"
+        "23fa1f6422b609000419a3259a221a82a031a235245a5a1b3aa03dfac02188a0"
+        "bd0382a0a125ea80a8a196a0264188666ba80b92f0ffff37b6090004196ae982"
+        "680ba2ada1a225688ea6a6a41b0c9a232268ee81c65a8a200937c13968a8b9a1"
+        "b1a1c5b5a120846d020041a096dcfaa0a2b52508973e88a0a5d1d6b68696965e"
+        "0822688cda7aa0256a121ac2c003ea80a0a0889a2a816d02004168a82d5a6a68"
+        "0a09820aaab12568680922da5a2a68706b688c88888696a0b5439a8296e80117"
+        "1f080a3aa0510cbf2732a92e9604e1294227f98521e8fc99c237869f0d269d29"
+        "1815d55b9df92751394fcb89cc26d40e6f9d5b4590fa916e0f571d9cb4e06ef7"
+        "c37448072ea694b7dd7bdb67d09c2e81bce1854471d469e9e09a45f1f3844d99"
+        "ff1aa3b90138d899a7ee4847ca6c30a716ac718da329ecf6307db991d49e1389"
+        "998ad04d17ceceadfe77e101d1215d6038059efdad066e0bc6c9b8d2a7e19e22"
+        "34702a66b8a9acc6e213b544c28ec125f9a5fcb90f16915baf406ff4a506",
+        "634e37ebb141af7cfa94cee2913cc5f7af7daf666ed53f3ff1f73a6341e663dd",
+    ),
+    "noise_cc_sb3": (
+        "5249464694010000574542505650384c880100002f088001108b018982f43f14"
+        "b14d0020c8d650d0d2d6604393d810d466635bb4343635373636b5341734b539"
+        "35d7012d4d457b5304410e6e218110feffffc83601d03050e78e19da2ebda19d"
+        "dab91fa443e8018566284d0f689796d2a550e8d0b98542972ed9d20f3a05da6e"
+        "7da007a463619b00409068698896b6dada5b6b6809da1da2b620885a8286f686"
+        "3e08a29686686869aaa168b0a53104e7b6a6c608da0a42d8260010a4076a6a68"
+        "a9206888a0081c1a9ba3688a163b206849a2b129686b0b3a22088a4ea8a5351c"
+        "9d5b72086a4b22264872d5221b914c6c9e5860d7d11e0a45789638d06b985dae"
+        "03b49011ffbe7a3b8510573f3d0afd88ede9c7bb489a7e6148b3f928a98fc837"
+        "6db9566cfd4af718f50ac4a019ee4e9a9d8b9ac254824a616fda7eb43f1badc7"
+        "9cedd840f9accdd3eed672cd41e43c13f2b9588349c207c347c5df983e1ada64"
+        "66b328e5867a55e322e850f9e252d25968caa719f939c33e066f158c82512faa"
+        "f9fdcb1de214e8469399e82ea09c8c91ea31e04afcbceaa27eb80f0c",
+        "634e37ebb141af7cfa94cee2913cc5f7af7daf666ed53f3ff1f73a6341e663dd",
+    ),
+    "noise_both_sg_sb3": (
+        "524946469e010000574542505650384c920100002f088001105d1424a2ff9198"
+        "8088fe4722b709c086cdd88e1943208180214312c812922564cc9435e484bce0"
+        "5590c553201f64f0947ce0c94be680976c0165c9982c89c990ffff5fd8260010"
+        "646d68b568ad2468884007e9842ea8031a1ba3311a5c832082a0a08686ea8aa6"
+        "86a686a6206869ca295a72619b0040901e085c1cda1ada846a8aa0039aabb5b9"
+        "29a213ac4d8ab6241aea808812da9a1b6b696a6a8af6868620649b0068185ae8"
+        "dcadd0b15b4b4bdbb14be9520a5d4aa776e9d00e0e2d1d4be9dca1437b40a04b"
+        "e992a55774ea05a57ba12d140a9d3a1512a5a7f3d82006836e367ccd7f85cd9e"
+        "2a4c6842e071a4862cc7ba8cff0924b9f5dd161dfa4611a7e2599f2d6116709c"
+        "0d0770745502e15273ec3de21b45635acf348e0d77b2c312ee7f77e4f7780df1"
+        "c3b1f32e46df27d4ec2f50d66edb7ab99ab0228f88b30a815add19256d651552"
+        "881942bfe0aa99c934723279d72bd0da8105b919c3bf8734a457df0358ba98a9"
+        "f4acebf90daa1f2b5c9fde0b58439e8a9cfd7492616ea01d3689792987b22763"
+        "808bc4777303",
+        "634e37ebb141af7cfa94cee2913cc5f7af7daf666ed53f3ff1f73a6341e663dd",
+    ),
+    "gradient_pred_sb3": (
+        "524946465c000000574542505650384c500000002f08800100893244f43f4468"
+        "d3b08dd65ed0ff7fb52127e4ff87b39a4dd066b04bd72e85d213b267c9ff7799"
+        "4dc2462814ba174a21ffdf196f70d8bf57f0eb85820701af028e4c060c6e2402"
+        "0a15fe00",
+        "fd8de67762bd4c6155eed5f69297576c08017d9d9d185ba1a94501181d7490ba",
+    ),
+    "gradient_cc_sb2": (
+        "5249464606010000574542505650384cf90000002f088001008301199001e97f"
+        "b4a9206212004010abd562b0182c060d060d16830683068b41834183c5a0c1a0"
+        "c162d060d06031683068b018341834580c1683c56ae5ffff156c13860d230804"
+        "02815043212590c95369d67429f48a8e7da53775ec03bda053fb42f70e9dd826"
+        "601b466341bba62eda3d74f3eedb3b772c5dba75e890217392a1ff010114d040"
+        "022608400e3ab01e80216ec859aa8e8e671c5809c796c74d04915682972ef2a2"
+        "d2ac4635f7ba7e61987196c55672a82e8afbea6df6934c10bc0f2d86ab91ecab"
+        "befaf47d67f77cd34691624823a75f323b67fbb6a579eff1fad79da514295b2b"
+        "aa553e6330ff3edcef7282ed0000",
+        "fd8de67762bd4c6155eed5f69297576c08017d9d9d185ba1a94501181d7490ba",
+    ),
+    "gradient_both_sg_sb2": (
+        "5249464666000000574542505650384c5a0000002f088001001d0cc8800c48ff"
+        "4342c4401922fa1f22b401d286d50bfaffabb5e90d793e0fe61957b2499b80c7"
+        "f4fff73a994dd02674edecffe7756ef726f106873ea9c0aaf12f0c1c406a0076"
+        "400d16377b61862a287180f30900",
+        "fd8de67762bd4c6155eed5f69297576c08017d9d9d185ba1a94501181d7490ba",
+    ),
+}
+
+
+def test_webp_lossless_decodes_pinned_spatial_transform_streams():
+    """The predictor and cross-color inverse transforms reproduce the
+    exact pixels of committed streams, so external VP8L files that use
+    them keep decoding although the encoder never writes them."""
+    import hashlib
+
+    from redpanda_to_parquet_writer_spark.operators.multimodal import (
+        decode_webp_lossless,
     )
-    assert decode_webp_lossless(pred) == (w, h, images[0])
+
+    for name, (stream, rgba_sha256) in _VP8L_SPATIAL_STREAMS.items():
+        w, h, rgba = decode_webp_lossless(bytes.fromhex(stream))
+        assert (w, h) == (9, 7), name
+        assert hashlib.sha256(rgba).hexdigest() == rgba_sha256, name
 
 
 def test_webp_crafted_contract_holes():

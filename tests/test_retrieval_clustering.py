@@ -300,41 +300,6 @@ def test_sampled_training_trains_on_exactly_the_hash_ordered_sample(spark):
     assert capped == on_subset
 
 
-def test_arrow_trainer_matches_jvm_on_fixture(spark):
-    """`use_arrow=True` (the matmul training assignment) must reproduce
-    the JVM fold's centroids on the fixture, capped and uncapped — a
-    fixture-equality contract (the JVM pass stays the oracle-gated
-    default). Ditto the full `kmeans_lloyd_assign` surface."""
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        kmeans_lloyd_centroids,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    for cap in (0, 100):
-        jvm = sorted(
-            tuple(r)
-            for r in kmeans_lloyd_centroids(
-                emb, k=8, n_updates=2, max_train_rows=cap
-            ).collect()
-        )
-        arrow = sorted(
-            tuple(r)
-            for r in kmeans_lloyd_centroids(
-                emb, k=8, n_updates=2, max_train_rows=cap, use_arrow=True
-            ).collect()
-        )
-        assert arrow == jvm, f"cap={cap}"
-    j = sorted(
-        tuple(r)
-        for r in kmeans_lloyd_assign(emb, k=8, n_iter=2).collect()
-    )
-    a = sorted(
-        tuple(r)
-        for r in kmeans_lloyd_assign(emb, k=8, n_iter=2, use_arrow=True).collect()
-    )
-    assert a == j
-
-
 def test_sampled_trained_lists_hit_the_deterministic_recall_floor(spark):
     """Property over a blob-corpus family (three seeds): inverted lists
     from a SAMPLE-trained codebook (cap < corpus) must still reach at
@@ -387,13 +352,11 @@ def test_sampled_trained_lists_hit_the_deterministic_recall_floor(spark):
         assert hits["kmeans"] >= int(0.9 * len(exact)), (seed, hits)
 
 
-def test_arrow_lloyd_assign_edge_rows_match_jvm(spark):
-    """NULL, ragged, and zero vectors must land where the JVM pass puts
-    them (lowest cluster id, NULL dist for NULL/ragged), and an empty
-    codebook (every cluster died) must yield zero assignments on both
-    paths."""
+def test_lloyd_assign_edge_rows(spark):
+    """NULL and ragged vectors land in the lowest cluster id with a
+    NULL dist, an exact centroid hit gets dist 0, and an empty codebook
+    (every cluster died) yields zero assignments."""
     from redpanda_to_parquet_writer_spark.operators.similarity import (
-        _lloyd_assign_arrow,
         _lloyd_assign_once,
     )
 
@@ -410,17 +373,11 @@ def test_arrow_lloyd_assign_edge_rows_match_jvm(spark):
         ],
         "vec_id long, v array<double>",
     )
-    jvm = {
+    got = {
         r["vec_id"]: (r["cluster_id"], r["dist"])
         for r in _lloyd_assign_once(v, cents, "vec_id").collect()
     }
-    arrow = {
-        r["vec_id"]: (r["cluster_id"], r["dist"])
-        for r in _lloyd_assign_arrow(v, cents, "vec_id").collect()
-    }
-    assert arrow == jvm
-    assert jvm[3] == (0, None) and jvm[4] == (0, None)
+    assert got == {1: (0, 0.5), 2: (1, 2.0), 3: (0, None), 4: (0, None), 5: (0, 0.0)}
 
     empty = cents.limit(0)
-    assert _lloyd_assign_arrow(v, empty, "vec_id").count() == 0
     assert _lloyd_assign_once(v, empty, "vec_id").count() == 0
