@@ -9,10 +9,9 @@ Spark realization:
   - JSON: `from_json` with a schema inferred from a driver-side sample
     (per micro-batch or per topic) — JVM-side, codegen'd, no Python.
   - MessagePack: no builtin, so an Arrow-vectorized pandas_udf
-    bytes -> JSON string, then the same `from_json`. The C msgpack
-    library is used when installed; otherwise the pure-stdlib codec
-    (`functions/msgpack_codec.py`) decodes the same spec — the path is
-    REAL and tested in every environment, not import-gated
+    bytes -> JSON string, then the same `from_json`. The pure-stdlib
+    codec (`functions/msgpack_codec.py`) is the one decoder — the path
+    is REAL and tested in every environment, not import-gated
     (SURVEY 2.11).
   - Fallback: rows whose decode returned null keep `raw_value`
     (collector:241,256,402).
@@ -27,22 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
 from redpanda_to_parquet_writer_spark.functions import msgpack_codec
-
-try:  # C extension when deployed; the stdlib codec otherwise
-    import msgpack  # type: ignore
-
-    HAS_MSGPACK = True
-except ImportError:
-    msgpack = None
-    HAS_MSGPACK = False
-
-
-def _msgpack_unpackb(b: bytes):
-    """Decode one MessagePack object — C library if present, else the
-    pure-stdlib codec (same spec, same rejection of ext types)."""
-    if HAS_MSGPACK:
-        return msgpack.unpackb(b, raw=False)
-    return msgpack_codec.unpackb(b)
 
 
 def _merge_types(a, b):
@@ -192,7 +175,7 @@ def msgpack_to_json_udf():
             if b is None:
                 return None
             try:
-                return json.dumps(_msgpack_unpackb(bytes(b)), separators=(",", ":"))
+                return json.dumps(msgpack_codec.unpackb(bytes(b)), separators=(",", ":"))
             except Exception:
                 return None
 
@@ -219,7 +202,7 @@ def detect_format(sample_values: list[bytes], threshold: float = 0.9) -> str:
             # maps/arrays only: JSON text never decodes as one, while a
             # 1-byte JSON scalar like "7" IS a valid msgpack fixint —
             # container-vote keeps the sampler from misrouting JSON
-            if isinstance(_msgpack_unpackb(bytes(b)), (dict, list)):
+            if isinstance(msgpack_codec.unpackb(bytes(b)), (dict, list)):
                 ok += 1
         except Exception:
             pass

@@ -18,8 +18,6 @@ reproducible across engines.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -251,15 +249,12 @@ def ivf_assign(
     vec_col: str = "v",
     centroid_id_col: str = "cluster_id",
     centroid_vec_col: str = "cv",
-    on: str | None = None,
 ) -> DataFrame:
     """Coarse quantizer: assign each vector to its max-cosine centroid.
 
     Centroids broadcast (they're tiny by construction), so assignment is
     a map-side cross product + per-vector argmax — zero shuffle. Returns
-    (id, v, cluster_id). `on` names a column both sides carry (the
-    persisted index's `shard`): each vector then ranks only the
-    centroids of its own shard, and the column rides into the output.
+    (id, v, cluster_id).
 
     r17 note: a one-row-broadcast-array + `array_max(transform(...))`
     rewrite (no groupBy exchange) was priced and REJECTED — Spark never
@@ -269,13 +264,13 @@ def ivf_assign(
     posting-list note). The codegen'd join fan-out + max_by collapse
     stays.
     """
-    scored = df.join(F.broadcast(centroids), on).withColumn(
+    scored = df.join(F.broadcast(centroids)).withColumn(
         "__sim", cosine(F.col(vec_col), F.col(centroid_vec_col))
     )
     # per-vector argmax via max_by on a (sim, -cluster_id) struct: ties
     # break to the LOWEST cluster id, deterministically
     return (
-        scored.groupBy(id_col, *([on] if on else []))
+        scored.groupBy(id_col)
         .agg(
             F.first(vec_col).alias(vec_col),
             F.max_by(
@@ -311,15 +306,11 @@ def _rank_probes(
 ) -> DataFrame:
     """Rank the (broadcast) codebook per query and keep the `n_probe`
     nearest lists — shared by the inline and persisted-index IVF paths
-    so their probe semantics cannot drift apart. A codebook carrying a
-    `shard` column (the persisted index's, `_combined_books`) ranks per
-    (query, shard): shards partition the corpus, so a neighbor can live
-    in any of them and every query probes `n_probe` lists in each."""
-    shard = ["shard"] if "shard" in centroids.columns else []
+    so their probe semantics cannot drift apart."""
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
-    qw = Window.partitionBy("query_id", *shard).orderBy(
+    qw = Window.partitionBy("query_id").orderBy(
         F.col("__sim").desc(), F.col("cluster_id").asc()
     )
     return (
@@ -327,16 +318,15 @@ def _rank_probes(
         .withColumn("__sim", cosine(F.col("qv"), F.col("cv")))
         .withColumn("__pr", F.row_number().over(qw))
         .filter(F.col("__pr") <= n_probe)
-        .select("query_id", "qv", *shard, "cluster_id")
+        .select("query_id", "qv", "cluster_id")
     )
 
 
 def _score_probed(
-    candidates: DataFrame, probes: DataFrame, on, lut: DataFrame | None = None
+    candidates: DataFrame, probes: DataFrame, lut: DataFrame | None = None
 ) -> DataFrame:
     """Verify the candidates of the probed lists — joined to their probe
-    rows on `on` (`cluster_id` inline, `shard` + `cluster_id` on the
-    persisted index) — into the UNROUNDED frame every IVF tail ranks.
+    rows on `cluster_id` — into the UNROUNDED frame every IVF tail ranks.
 
     Without `lut`, exact cosine against the query vector: (query_id,
     neighbor_id, sim). With the ADC lookup table (`_pq_query_lut`), the
@@ -350,7 +340,7 @@ def _score_probed(
     sub-plan overshoot the auto-broadcast threshold and the join falls
     back to SortMerge, shuffling the whole assigned corpus on
     cluster_id (the r5 bench drift's cause)."""
-    joined = candidates.join(F.broadcast(probes), on=on).filter(
+    joined = candidates.join(F.broadcast(probes), on="cluster_id").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
     if lut is None:
@@ -364,39 +354,13 @@ def _score_probed(
     )
 
 
-#: salt fan-out for the two-level top-k (same role as the dedup salts):
-#: bounds any one window task at candidates/64 per query
-TOPK_SALTS = 64
-
-
-def _rank_topk(
-    scored: DataFrame, k: int, salted: bool = False, final: bool = True
-) -> DataFrame:
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-k over an UNROUNDED `_score_probed` frame: cosine
     `sim` descending, or ADC `adc_dec` ascending, ties to the lowest
     neighbor id. Rounding (cosine) and the double cast (ADC) happen
     AFTER ranking, so every IVF path ranks on exactly the same values.
-
-    `salted=True` runs a two-level selection: a per-(query,
-    salt-of-neighbor) partial top-k (any one window task bounded at
-    candidates/64) feeds the global rank, whose input is <= 64 x k rows
-    per query. Top-k is selection — it decomposes over ANY partition of
-    the candidates — so the rows are IDENTICAL to the flat window's for
-    any input, tie-breaks included (gated by the serve-equality tests
-    and the salted_topk fuzz family). The persisted serve salts when
-    the index has more than one shard: its per-query candidate volume
-    is n_shards x n_probe x list_len, which grows with the shard count
-    and becomes the corpus on a degenerate hot list (measured 6.96 s vs
-    2.38 s for an 8-query batch over 200k identical vectors at 4
-    shards). A single shard ranks in one window: its candidates are
-    bounded at n_probe x target_list_len by the codebook-scaling
-    contract, and the extra exchange + window stage measured a fixed
-    0.1-0.2 s per serve on the sf0.1 bench.
-
-    `final=False` keeps the unrounded score and drops the rank — the
-    per-chunk selection of the chunked serve, whose global re-rank must
-    order by the values the unchunked plan ranks on (rounding first
-    could reorder sub-1e-6 near-ties across chunks).
+    One window per query: a codebook sized by `select_n_centroids`
+    bounds each query's candidates at n_probe x target_list_len.
     """
     adc = "adc_dec" in scored.columns
     score = "adc_dec" if adc else "sim"
@@ -404,17 +368,9 @@ def _rank_topk(
         F.col(score).asc() if adc else F.col(score).desc(),
         F.col("neighbor_id").asc(),
     ]
-    if salted:
-        salt = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(TOPK_SALTS))
-        pre = Window.partitionBy("query_id", salt).orderBy(*order)
-        scored = scored.withColumn("__pr", F.row_number().over(pre)).filter(
-            F.col("__pr") <= k
-        ).drop("__pr")
     ranked = scored.withColumn(
         "rank", F.row_number().over(Window.partitionBy("query_id").orderBy(*order))
     ).filter(F.col("rank") <= k)
-    if not final:
-        return ranked.select("query_id", "neighbor_id", score)
     out = (
         F.col(score).cast("double").alias("adc_dist")
         if adc
@@ -450,7 +406,7 @@ def ivf_topk(
     c = df.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v"))
     assigned = ivf_assign(c, centroids, "neighbor_id", "v")
     probes = _rank_probes(queries, centroids, id_col, vec_col, n_probe)
-    return _rank_topk(_score_probed(assigned, probes, "cluster_id"), k)
+    return _rank_topk(_score_probed(assigned, probes), k)
 
 
 def deterministic_centroids(
@@ -812,7 +768,7 @@ def ivfadc_topk(
         "query_id", "cluster_id"
     )
     lut = _pq_query_lut(queries, codebooks, m, dim, id_col, vec_col)
-    return _rank_topk(_score_probed(index, probes, "cluster_id", lut), k)
+    return _rank_topk(_score_probed(index, probes, lut), k)
 
 
 def _pq_query_lut(
@@ -831,16 +787,16 @@ def _pq_query_lut(
 
 
 # --- The persisted IVF index -------------------------------------------------
-# ONE index type: parquet laid out as `shard=<s>/cluster_id=<c>/`, where an
-# unsharded index is shard 0. Posting rows hold either the vector
-# (neighbor_id, v) or its PQ codes (neighbor_id, subspace, code), so IVFADC
-# is an encoding on the same layout, not a second index. `write_ivf_index`
-# writes it (build with mode="overwrite", maintain with mode="append"),
-# `build_ivf_index` trains and sizes the codebooks, and `ivf_topk_indexed`
-# serves any shard count, either encoding. The registry rows
-# ann_ivf_indexed_topk, ann_ivf_append_topk, ann_ivfadc_indexed_topk,
-# ann_ivfadc_recall_audit and ann_ivfadc_compact_topk gate it against the
-# inline `ivf_topk`/`ivfadc_topk` oracles.
+# ONE index type: parquet laid out as `cluster_id=<c>/` under one codebook.
+# Posting rows hold either the vector (neighbor_id, v) or its PQ codes
+# (neighbor_id, subspace, code), so IVFADC is an encoding on the same layout,
+# not a second index. `write_ivf_index` writes it (build with
+# mode="overwrite", maintain with mode="append"), `build_ivf_index` trains
+# and sizes the codebook, and `ivf_topk_indexed` serves either encoding. The
+# registry rows ann_ivf_indexed_topk, ann_ivf_append_topk,
+# ann_ivfadc_indexed_topk, ann_ivfadc_recall_audit and
+# ann_ivfadc_compact_topk gate it against the inline
+# `ivf_topk`/`ivfadc_topk` oracles.
 
 
 #: Inverted-list length the serving-flatness measurement was taken at:
@@ -873,8 +829,8 @@ def select_n_centroids(
     Bounds: k_min keeps tiny corpora from degenerating to one list
     (probe selectivity needs > n_probe lists to mean anything); k_max
     caps quantizer cost — past k_max * target_list_len rows (~82M at
-    the defaults) lists grow again and the scale path is sharding the
-    index (one codebook per shard), not a single ever-larger codebook.
+    the defaults) the one codebook still serves every corpus, its
+    lists simply grow longer than the target.
     Build cost grows with k (assignment is k-wide): the deterministic
     JVM join measured 31 -> 319s for 16 -> 160 at sf10.
     """
@@ -888,302 +844,18 @@ def select_n_centroids(
     return max(k_min, min(k_max, k))
 
 
-def select_n_shards(
-    n_rows: int,
-    target_list_len: int = IVF_TARGET_LIST_LEN,
-    k_max: int = 65536,
-) -> int:
-    """The sharding contract (VERDICT r12 #5) — the escalation twin of
-    `select_n_centroids`: past k_max * target_list_len rows (~82M at
-    the defaults) a single codebook's inverted lists grow again no
-    matter what (`select_n_centroids` clamps k at k_max), so the index
-    must split into shards, each holding at most one clamped codebook's
-    capacity:
-
-        n_shards = ceil(n_rows / (k_max * target_list_len))
-
-    By construction every shard's expected row count is
-    n_rows / n_shards <= k_max * target_list_len, so each per-shard
-    `select_n_centroids` stays UNDER its clamp and every list at target
-    length — the property `build_ivf_index` relies on,
-    property-tested across the boundary in tests."""
-    if n_rows < 0:
-        raise ValueError(f"n_rows must be >= 0, got {n_rows}")
-    if target_list_len < 1:
-        raise ValueError(f"target_list_len must be >= 1, got {target_list_len}")
-    if k_max < 1:
-        raise ValueError(f"k_max must be >= 1, got {k_max}")
-    cap = k_max * target_list_len
-    return max(1, -(-n_rows // cap))  # ceil, never 0
-
-
-#: Spark's hard per-relation broadcast-table ceiling (8 GiB). The
-#: chunk-sizing default budgets HALF of it: the raw-vector estimate
-#: (n_centroids x dim x 8 bytes) undercounts the broadcast relation's
-#: real JVM footprint (UnsafeRow + array headers per codebook row, plus
-#: the driver holding the built relation while executors fetch it), so
-#: self-sized chunks leave the other half as headroom.
-BROADCAST_TABLE_CEILING_BYTES = 8 * 1024**3
-
-
-def select_chunk_shards(
-    shard_centroids: dict[int, int],
-    dim: int,
-    budget_bytes: int = BROADCAST_TABLE_CEILING_BYTES // 2,
-) -> int:
-    """The chunk-sizing contract (VERDICT r14 #4) — the serving twin of
-    `select_n_shards`: pick the LARGEST `chunk_shards` whose combined
-    per-chunk codebook broadcast stays inside `budget_bytes`, from the
-    ACTUAL per-shard codebook sizes (counts of the relations the caller
-    is about to serve), not the k_max worst case — real codebooks sit
-    at n_shard/target_list_len << k_max, so the worst-case formula in
-    `ivf_topk_indexed`'s contract would chunk ~20x too eagerly.
-
-    Sizing is against the LARGEST shard codebook (chunk_shards x
-    max_shard_bytes <= budget), so EVERY chunk of that many shards fits
-    the budget no matter how the sorted-shard order composes them.
-    Floor is 1 (one shard per chunk): a single shard's codebook is
-    bounded by the build clamp at k_max x dim x 8 bytes (~400 MB at
-    dim=768), far inside any sane budget — if even that exceeds
-    `budget_bytes` the caller asked for an impossible budget and gets a
-    ValueError rather than a silently over-budget broadcast. Capped at
-    n_shards (more than all shards is just the one-shot serve).
-    `ivf_topk_indexed` self-sizes with this when `chunk_shards=None`,
-    from the codebook sizes the index writer persisted."""
-    if not shard_centroids:
-        raise ValueError("shard_centroids must map shard -> n_centroids")
-    if dim < 1:
-        raise ValueError(f"dim must be >= 1, got {dim}")
-    if budget_bytes < 1:
-        raise ValueError(f"budget_bytes must be >= 1, got {budget_bytes}")
-    if any(n < 0 for n in shard_centroids.values()):
-        raise ValueError(f"centroid counts must be >= 0, got {shard_centroids}")
-    n_shards = len(shard_centroids)
-    max_bytes = max(shard_centroids.values()) * dim * 8
-    if max_bytes == 0:  # all-empty codebooks: any chunking fits
-        return n_shards
-    if max_bytes > budget_bytes:
-        raise ValueError(
-            f"largest shard codebook is {max_bytes} bytes, over the "
-            f"{budget_bytes}-byte budget — even one-shard chunks cannot "
-            "serve within it; rebuild with a larger target_list_len or "
-            "raise the budget"
-        )
-    return min(n_shards, budget_bytes // max_bytes)
-
-
-def _select_chunk_workers(worst_chunk_bytes: int, n_chunks: int, cap: int = 8) -> int:
-    """Bound the chunked serve's CONCURRENT chunk preparations so the
-    fan-out's transient broadcast footprint stays inside the same
-    envelope the one-shot serve occupies (r15 — the scale reflection on
-    the thread fan-out itself): each chunk's prep runs its probe job
-    eagerly, and that job BROADCASTS the chunk's combined codebook, so
-    `workers × worst_chunk_bytes` of broadcast tables are live at once
-    until the ContextCleaner frees them. Tiny codebooks (every healthy
-    corpus) keep the full `cap`-way overlap; chunks sized near the
-    budget serialize down to however many fit the 8 GiB ceiling
-    together — never below 1, which is the serial loop the fan-out
-    replaced."""
-    if n_chunks < 1:
-        raise ValueError(f"n_chunks must be >= 1, got {n_chunks}")
-    if worst_chunk_bytes <= 0:  # empty codebooks broadcast nothing
-        return min(cap, n_chunks)
-    return max(
-        1, min(cap, n_chunks, BROADCAST_TABLE_CEILING_BYTES // worst_chunk_bytes)
+def _as_codebook(centroids: DataFrame) -> DataFrame:
+    """The coarse quantizer in the index's column types: (cluster_id
+    int, cv array<double>)."""
+    return centroids.select(
+        F.col("cluster_id").cast("int").alias("cluster_id"),
+        _as_double(F.col("cv")).alias("cv"),
     )
-
-
-def _shard_router(id_col: str, n_shards: int):
-    """Deterministic shard assignment: pmod(xxhash64(id), n_shards) —
-    id-type-agnostic, stable across runs/partitionings, and the SAME
-    expression routes build, append, and (if a caller ever needs it)
-    per-shard lookup, so a vector can never change shards."""
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
-
-
-def _shard_books(centroids) -> dict[int, DataFrame]:
-    """Normalize the coarse quantizer to {shard: codebook}: one relation
-    is a single-shard index (shard 0); a dict must map every shard
-    0..n-1 to its own codebook. Int-like str keys (a codebook snapshot
-    round-tripped through JSON metadata) are accepted."""
-    books = centroids if isinstance(centroids, dict) else {0: centroids}
-    books = {int(s): b for s, b in books.items()}
-    if not books or sorted(books) != list(range(len(books))):
-        raise ValueError(
-            f"codebooks must cover shards 0..n-1, got {sorted(books)}"
-        )
-    return books
-
-
-def _combined_books(books: dict[int, DataFrame]) -> DataFrame:
-    """The per-shard codebooks as ONE (shard, cluster_id, cv) relation,
-    unioned JVM-side with a literal shard tag — no collect and no
-    driver round-trip (VERDICT r13 #2), so the writer and the serve
-    broadcast one codebook whatever the shard count."""
-    return reduce(
-        DataFrame.unionByName,
-        [
-            books[s].select(
-                F.lit(s).cast("int").alias("shard"),
-                F.col("cluster_id").cast("int").alias("cluster_id"),
-                _as_double(F.col("cv")).alias("cv"),
-            )
-            for s in sorted(books)
-        ],
-    )
-
-
-#: Codebook-stats sidecar filename (VERDICT r15 #1). Underscore-prefixed
-#: so Spark's file index treats it as hidden — `spark.read.parquet` on
-#: the index never sees it (the `_SUCCESS` convention).
-_CODEBOOK_STATS_SIDECAR = "_codebook_stats.json"
-
-
-def _sidecar_jpath(spark, index_path: str):
-    jvm = spark._jvm
-    return jvm.org.apache.hadoop.fs.Path(
-        f"{index_path.rstrip('/')}/{_CODEBOOK_STATS_SIDECAR}"
-    )
-
-
-def _codebook_stats(codebooks: dict[int, DataFrame]):
-    """The ONE source of codebook sizes: ({shard: n_centroids}, dim)
-    measured by one bounded aggregate over the (tiny-by-contract)
-    codebook relations — n_shards rows reach the driver, nothing else.
-    dim is the MAX vector length over rows, so a malformed short first
-    vector cannot understate the broadcast bytes. The writer persists
-    the result as the index's sidecar; the serve re-measures only when
-    the sidecar is absent or unreadable. A NULL centroid vector raises
-    a targeted error naming the bad shards (ADVICE r15 #3) instead of
-    letting F.size(NULL) drive a confusing 'dim must be >= 1'
-    downstream."""
-    stats = (
-        reduce(
-            DataFrame.unionByName,
-            [
-                codebooks[s].select(
-                    F.lit(int(s)).alias("shard"),
-                    F.size("cv").alias("d"),
-                    F.col("cv").isNull().cast("int").alias("bad"),
-                )
-                for s in sorted(codebooks)
-            ],
-        )
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("d").alias("dim"),
-            F.sum("bad").alias("n_null"),
-        )
-        .collect()
-    )
-    null_shards = sorted(
-        int(r["shard"]) for r in stats if int(r["n_null"] or 0) > 0
-    )
-    if null_shards:
-        raise ValueError(
-            f"codebook shards {null_shards} contain NULL centroid vectors "
-            "(cv) — rebuild those shards' codebooks before serving"
-        )
-    measured = {int(r["shard"]): int(r["n"]) for r in stats}
-    # empty codebooks count as 0
-    counts = {s: measured.get(int(s), 0) for s in codebooks}
-    dim = max(
-        (int(r["dim"]) for r in stats if r["dim"] is not None), default=1
-    )
-    return counts, max(dim, 1)
-
-
-def _write_codebook_sidecar(
-    spark, index_path: str, counts: dict[int, int], dim: int
-) -> None:
-    """Persist `_codebook_stats` ({shard: n_centroids} + dim) next to
-    the index, so a self-sized serve reads its chunking from one
-    FileSystem metadata lookup instead of a Spark job (a fixed ~2 s of
-    scheduling even on 20-row local relations). Storage-agnostic
-    (Hadoop FileSystem API).
-
-    BEST-EFFORT: a failure of this small driver-side PUT must not fail
-    an otherwise-complete index write (the serve then measures the
-    codebooks itself); it warns with the path and cause (VERDICT r16
-    #3). ATOMIC (ADVICE r16 #3): the payload lands under a dot-prefixed
-    temp name and is renamed over the final path, so a crash mid-write
-    never leaves a truncated sidecar; and the previous sidecar is
-    deleted first (HDFS rename does not overwrite), with the failure
-    path deleting whatever remains, so a failed overwrite can never
-    leave an OLD sidecar describing a rebuilt index (ADVICE r16 #2)."""
-    import json
-    import warnings
-
-    jpath = tmp = fs = None
-    try:
-        jpath = _sidecar_jpath(spark, index_path)
-        tmp = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{index_path.rstrip('/')}/.{_CODEBOOK_STATS_SIDECAR}.tmp"
-        )
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        out = fs.create(tmp, True)
-        try:
-            payload = {
-                "dim": int(dim),
-                "counts": {
-                    str(int(s)): int(n) for s, n in sorted(counts.items())
-                },
-            }
-            out.write(bytearray(json.dumps(payload).encode("utf-8")))
-        finally:
-            out.close()
-        fs.delete(jpath, False)
-        if not fs.rename(tmp, jpath):
-            raise IOError(f"rename {tmp} -> {jpath} returned false")
-    except Exception as e:
-        warnings.warn(
-            f"codebook-stats sidecar write failed for {index_path!r} "
-            f"({e!r}); index is complete and correct, but self-sized "
-            "serves measure the codebooks (one small job) until a later "
-            "write rewrites the sidecar",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        for leftover in (tmp, jpath):
-            if leftover is not None and fs is not None:
-                try:
-                    fs.delete(leftover, False)
-                except Exception:
-                    pass
-
-
-def _read_codebook_sidecar(spark, index_path: str):
-    """Read the sidecar; returns (counts, dim) or None when absent or
-    unreadable — the serve then measures the codebooks, so a missing
-    or corrupt sidecar can never fail a query."""
-    import json
-
-    try:
-        jpath = _sidecar_jpath(spark, index_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return None
-        stream = fs.open(jpath)
-        try:
-            text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        payload = json.loads(text)
-        counts = {int(s): int(n) for s, n in payload["counts"].items()}
-        dim = int(payload["dim"])
-        if dim < 1 or any(n < 0 for n in counts.values()):
-            return None
-        return counts, dim
-    except Exception:
-        return None
 
 
 def write_ivf_index(
     df: DataFrame,
-    centroids,
+    centroids: DataFrame,
     path: str,
     mode: str = "overwrite",
     id_col: str = "vec_id",
@@ -1193,44 +865,32 @@ def write_ivf_index(
     dim: int | None = None,
 ) -> None:
     """THE index writer: assign every vector to its coarse list and
-    persist the posting rows as `shard=<s>/cluster_id=<c>/` parquet —
-    assignment runs ONCE, at write time, and every later serve reads
-    only its probed directories. At 100 TB that is the difference
-    between re-assigning the corpus per query batch and a
-    directory-pruned read of n_probe/n_centroids of the index.
+    persist the posting rows as `cluster_id=<c>/` parquet — assignment
+    runs ONCE, at write time, and every later serve reads only its
+    probed directories. At 100 TB that is the difference between
+    re-assigning the corpus per query batch and a directory-pruned read
+    of n_probe/n_centroids of the index. `centroids` is the one
+    (cluster_id, cv) codebook relation: one scan, one broadcast, one
+    write job.
 
-    `centroids` is one codebook relation (cluster_id, cv) — a
-    single-shard index — or {shard: codebook} for shards 0..n-1 (the
-    `build_ivf_index` result). Rows route to shards with the
-    deterministic `_shard_router`, so a vector can never change shard,
-    and each assigns only against its own shard's codebook
-    (`ivf_assign(on="shard")`): one scan, one broadcast, one write job
-    whatever the shard count.
-
-    `mode="overwrite"` builds (replacing whatever was at `path`);
-    `mode="append"` is INCREMENTAL maintenance: only the new vectors
-    assign against the (frozen) codebooks and land in the existing
-    directories — existing lists are never read or rewritten, and the
-    serve reads the union transparently. The codebooks must be the
-    ones the index was built with — appending under a different
+    `mode="overwrite"` builds (replacing whatever was at `path`) and
+    first rejects a codebook holding a NULL centroid vector, before any
+    row lands. `mode="append"` is INCREMENTAL maintenance: only the new
+    vectors assign against the (frozen) codebook and land in the
+    existing directories — existing lists are never read or rewritten,
+    and the serve reads the union transparently. The codebook must be
+    the one the index was built with — appending under a different
     quantizer silently corrupts list membership (pinned by a test), so
-    callers snapshot them beside the index. Append-equals-rebuild is
+    callers snapshot it beside the index. Append-equals-rebuild is
     oracle-gated (`ann_ivf_append_topk`) and property-tested; after
     many small appends `sources.parquet.compact_parquet(...,
-    partition_by=["shard", "cluster_id"])` rewrites the lists at target
-    file size with serving results unchanged (`ann_ivfadc_compact_topk`).
+    partition_by=["cluster_id"])` rewrites the lists at target file
+    size with serving results unchanged (`ann_ivfadc_compact_topk`).
 
     Passing `pq_codebook` (`pq_codebooks`, with its `m` and `dim`)
     writes PQ codes instead of vectors: (neighbor_id, subspace, code)
     rows, ~32x smaller than the embeddings, served by the ADC tail. The
     PQ codebook is frozen with the index exactly like the coarse one.
-
-    The write also persists the codebook sizes (`_codebook_stats`) as a
-    sidecar for the serve's chunk sizing: an overwrite measures them
-    before writing (a NULL centroid fails fast, before any row lands);
-    an append backfills a missing sidecar, best-effort, AFTER its rows
-    are durable (ADVICE r16 #1: a caller retrying a 'failed' append
-    would double-append the batch).
 
     r17 note: fusing the PQ encode into the assignment lineage was
     priced and REJECTED with the inline composition (see `ivfadc_topk`):
@@ -1239,47 +899,29 @@ def write_ivf_index(
     """
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
-    books = _shard_books(centroids)
     if pq_codebook is not None:
         _pq_check(m, dim)
-    spark = df.sparkSession
-    n_shards = len(books)
-    stats = _codebook_stats(books) if mode == "overwrite" else None
-    shard = _shard_router(id_col, n_shards) if n_shards > 1 else F.lit(0)
+    book = _as_codebook(centroids)
+    if mode == "overwrite" and book.filter(F.col("cv").isNull()).limit(1).collect():
+        raise ValueError(
+            "codebook contains NULL centroid vectors (cv) — rebuild the "
+            "codebook before writing the index"
+        )
     c = df.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("v"),
-        shard.cast("int").alias("shard"),
+        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v")
     )
-    rows = ivf_assign(c, _combined_books(books), "neighbor_id", "v", on="shard")
+    rows = ivf_assign(c, book, "neighbor_id", "v")
     if pq_codebook is not None:
         codes = pq_encode(df, pq_codebook, m, dim, id_col, vec_col)
-        rows = rows.select("neighbor_id", "shard", "cluster_id").join(
+        rows = rows.select("neighbor_id", "cluster_id").join(
             codes.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id"
         )
     (
-        rows.repartition("shard", "cluster_id")
-        .write.partitionBy("shard", "cluster_id")
+        rows.repartition("cluster_id")
+        .write.partitionBy("cluster_id")
         .mode(mode)
         .parquet(path)
     )
-    if stats is not None:
-        _write_codebook_sidecar(spark, path, *stats)
-        return
-    try:
-        if _read_codebook_sidecar(spark, path) is None:
-            _write_codebook_sidecar(spark, path, *_codebook_stats(books))
-    except Exception as e:
-        import warnings
-
-        warnings.warn(
-            f"codebook-stats sidecar backfill failed for {path!r} "
-            f"({e!r}); the append itself completed — self-sized serves "
-            "measure the codebooks (one small job) until a later write "
-            "backfills the sidecar",
-            RuntimeWarning,
-            stacklevel=2,
-        )
 
 
 def build_ivf_index(
@@ -1287,169 +929,83 @@ def build_ivf_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_shards: int | None = None,
     target_list_len: int = IVF_TARGET_LIST_LEN,
     n_updates: int = 1,
     max_train_rows: int | None = None,
-) -> dict[int, DataFrame]:
+) -> DataFrame:
     """The production build: size, train and write the index in one
-    call. Returns {shard: local codebook relation} — the snapshot the
-    caller keeps beside the index for `write_ivf_index(mode="append")`
-    and `ivf_topk_indexed`.
+    call. Returns the local codebook relation — the snapshot the caller
+    keeps beside the index for `write_ivf_index(mode="append")` and
+    `ivf_topk_indexed`.
 
-    Sizing. `n_shards=None` counts the corpus once and picks the shard
-    count from the sharding contract (`select_n_shards` — 1 below
-    k_max x target_list_len rows, ~82M at the defaults, more above),
-    so sharding engages by itself instead of lists silently growing
-    past target length under the k_max clamp. Rows route to shards by
-    `_shard_router`; each shard's codebook sizes by ITS row count
-    (`select_n_centroids`), so every list stays at target length and
-    serving cost per shard stays flat.
-
-    Training. Each codebook is the deterministic Lloyd quantizer
+    Sizing: one corpus count picks k by the codebook-scaling contract
+    (`select_n_centroids`), so lists stay at target length up to the
+    k_max clamp. Training: the deterministic Lloyd quantizer
     (`kmeans_lloyd_centroids`, `n_updates` updates) on a bounded sample
     (VERDICT r16 #4 — at most `max_train_rows` vectors, None -> 256 x
-    that shard's k), so training cost stays flat as the corpus grows;
-    with the count in hand, a shard that fits the cap trains unbounded,
-    keeping plan and centroids byte-identical to the pre-cap build.
-    Shards train concurrently on a thread pool — Spark's scheduler runs
-    jobs from several submitter threads, so one shard's Lloyd driver
-    round-trips overlap another's stages. Input-scan cost (ADVICE r12):
-    each shard's passes filter the full input by the router; the write
-    itself is one pass (`write_ivf_index`); a PQ-code index over the same
-    codebooks is one more `write_ivf_index(df, books, path,
+    k), so training cost stays flat as the corpus grows; with the count
+    in hand, a corpus that fits the cap trains unbounded, keeping plan
+    and centroids byte-identical to the pre-cap build. The write itself
+    is one pass (`write_ivf_index`); a PQ-code index over the same
+    codebook is one more `write_ivf_index(df, book, path,
     pq_codebook=...)`.
     """
-    if n_shards is not None and n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    n_rows = df.count() if n_shards is None else None
-    if n_shards is None:
-        n_shards = select_n_shards(n_rows, target_list_len)
-
-    def _train(s: int):
-        if n_shards == 1:
-            part = df
-            n = df.count() if n_rows is None else n_rows
-        else:
-            part = df.filter(_shard_router(id_col, n_shards) == s)
-            n = part.count()
-        k = select_n_centroids(n, target_list_len)
-        cap = _resolve_train_cap(k, max_train_rows)
-        return s, kmeans_lloyd_centroids(
-            part,
-            id_col,
-            vec_col,
-            k=k,
-            n_updates=n_updates,
-            # count in hand: a shard inside the cap trains unbounded (0)
-            max_train_rows=0 if (cap is None or n <= cap) else cap,
-        )
-
-    if n_shards == 1:
-        books = dict([_train(0)])
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(8, n_shards)) as ex:
-            books = dict(ex.map(_train, range(n_shards)))
-    write_ivf_index(df, books, path, "overwrite", id_col, vec_col)
-    return books
-
-
-def _materialize_probes(probes: DataFrame, reliable: bool) -> DataFrame:
-    """Materialize the bounded probe sub-plan once for its two consumers.
-
-    reliable=False (default, serving hot path): `localCheckpoint` —
-    executor-memory blocks, freed by the ContextCleaner with the result;
-    an executor loss before the caller consumes the result fails that
-    query (caller retries).
-
-    reliable=True (VERDICT r8 #6): `checkpoint()` against the
-    context's configured checkpoint directory — blocks live on shared
-    storage, so the returned plan survives executor churn without a
-    retry. Requires `spark.sparkContext.setCheckpointDir(...)` pointing
-    at storage every executor can read (HDFS/S3 on a cluster); raises
-    immediately when unset rather than letting Spark fail mid-query.
-    Same rows either way — the materialization strategy is not part of
-    the query semantics (bitwise equality is pinned in tests)."""
-    if not reliable:
-        return probes.localCheckpoint(eager=True)
-    sc = probes.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        raise ValueError(
-            "reliable=True needs a checkpoint directory: call "
-            "spark.sparkContext.setCheckpointDir(<shared path>) first"
-        )
-    # persist-bracket the reliable checkpoint (ADVICE r10 #2): Spark's
-    # reliable RDD checkpoint runs a SECOND job to write the checkpoint
-    # files, which would recompute the probe sub-plan from scratch;
-    # caching first lets that write read cached blocks instead (the
-    # same discipline as dedup.py's _materialize_flagged)
-    probes = probes.persist()
-    try:
-        return probes.checkpoint(eager=True)
-    finally:
-        probes.unpersist()
+    n_rows = df.count()
+    k = select_n_centroids(n_rows, target_list_len)
+    cap = _resolve_train_cap(k, max_train_rows)
+    book = kmeans_lloyd_centroids(
+        df,
+        id_col,
+        vec_col,
+        k=k,
+        n_updates=n_updates,
+        # count in hand: a corpus inside the cap trains unbounded (0)
+        max_train_rows=0 if (cap is None or n_rows <= cap) else cap,
+    )
+    write_ivf_index(df, book, path, "overwrite", id_col, vec_col)
+    return book
 
 
 def ivf_topk_indexed(
     spark,
     index_path: str,
     queries: DataFrame,
-    centroids,
+    centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
     n_probe: int = 4,
-    reliable: bool = False,
-    chunk_shards: int | None = None,
     pq_codebook: DataFrame | None = None,
     m: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """THE index serve, for any shard count and either encoding: probe
-    every shard's codebook, prune the index scan to the probed
-    directories, verify, and rank once. Same rows as the inline
-    `ivf_topk` (or, with `pq_codebook`, `ivfadc_topk`) whenever the
-    quantizers are the same — but the corpus is never
-    re-assigned and never fully read. `centroids` is the codebook
-    relation or {shard: codebook} dict the index was written with.
+    """THE index serve, for either encoding: probe the codebook, prune
+    the index scan to the probed directories, verify, and rank. Same
+    rows as the inline `ivf_topk` (or, with `pq_codebook`,
+    `ivfadc_topk`) whenever the quantizers are the same — but the
+    corpus is never re-assigned and never fully read. `centroids` is
+    the codebook relation the index was written with.
 
     Scoring tail. Without `pq_codebook`, exact cosine on the stored
     vectors: (query_id, neighbor_id, sim, rank). With it (and its `m`,
     `dim`), the ADC lookup table is built once per query batch and the
     (subspace, code) rows score as exact-decimal lookup sums:
-    (query_id, neighbor_id, adc_dist, rank). Over more than one shard
-    the rank is the salted two-level one (`_rank_topk`).
+    (query_id, neighbor_id, adc_dist, rank).
 
-    Chunking. Every query probes every shard's codebook, so the probe
-    join broadcasts sum over shards of n_centroids x dim doubles — up
-    to ~400 MB per k_max-clamped shard at dim=768, past Spark's 8 GB
-    broadcast-table ceiling at ~20 clamped shards. Shards then serve in
-    chunks of `chunk_shards`: each chunk is one probe/prune/verify with
-    its own top-k (a row bound, not a semantic one — selection
-    decomposes over any partition of the shards), and the global rank
-    re-ranks the union on unrounded scores, so rows are IDENTICAL to a
-    one-chunk serve (gated in tests and the chunked_serve fuzz family).
-    `chunk_shards=None` sizes itself (`select_chunk_shards`, half the
-    ceiling) from the codebook sizes — the sidecar the writer persisted,
-    else `_codebook_stats` — which is one chunk for every index below
-    ~20 clamped shards. A single shard needs no sizing at all. Chunk
-    preparations (each runs two blocking driver actions) overlap on a
-    thread pool whose width keeps workers x worst-chunk bytes inside the
-    ceiling (`_select_chunk_workers`); the query batch materializes once
-    and one index relation is resolved for all chunks, so neither the
-    queries' lineage nor the index's directory listing repeats per chunk
-    (measured at 2M vectors / 8 shards: 4 chunks dropped from 2.1-2.25x
-    the one-shot serve to 1.02x; SCALING.md).
+    Plan: ONE probe-ranking job (the n_probe nearest lists per query);
+    ONE materialization of that bounded probe frame (`localCheckpoint`)
+    shared by its two consumers; ONE bounded collect of the distinct
+    probed cluster ids — O(n_centroids) ints, never O(n_queries): the
+    probe frame itself (query vectors included) stays distributed
+    (VERDICT r5 #4); ONE index scan with a LITERAL partition predicate,
+    so Catalyst prunes to exactly the probed directories
+    (PartitionFilters in the plan — asserted in tests); ONE verify join
+    on cluster_id.
 
-    Failure mode (ADVICE r7): the probe sub-plan is materialized with
-    `localCheckpoint`, which truncates lineage, so an executor loss
-    between the checkpoint and the caller's evaluation of the result
-    fails THAT query (the caller retries; the index is durable parquet).
-    `reliable=True` checkpoints to the context's checkpoint dir instead
-    (`_materialize_probes`, VERDICT r8 #6) — identical rows, durable
-    blocks.
+    Failure mode (ADVICE r7): `localCheckpoint` truncates lineage, so an
+    executor loss between the checkpoint and the caller's evaluation of
+    the result fails THAT query (the caller retries; the index is
+    durable parquet).
 
     Degenerate corpus (r15, measured): 200k identical vectors tie into
     ONE list, so the pruned scan is one corpus-sized directory whose
@@ -1459,82 +1015,19 @@ def ivf_topk_indexed(
     (SCALING.md): collapse bitwise-equal vectors first, then no list is
     hot anywhere.
     """
-    books = _shard_books(centroids)
-    if chunk_shards is not None and chunk_shards < 1:
-        raise ValueError(f"chunk_shards must be >= 1, got {chunk_shards}")
     if pq_codebook is not None:
         _pq_check(m, dim)
-    n_shards = len(books)
-    stats = None
-    if n_shards > 1 and (chunk_shards is None or chunk_shards < n_shards):
-        stats = _read_codebook_sidecar(spark, index_path)
-        if stats is None or not set(books) <= set(stats[0]):
-            stats = _codebook_stats(books)
-        if chunk_shards is None:
-            chunk_shards = select_chunk_shards(*stats)
-    size = chunk_shards or n_shards
-    chunks = [
-        {s: books[s] for s in range(i, min(i + size, n_shards))}
-        for i in range(0, n_shards, size)
-    ]
-    if len(chunks) > 1:
-        queries = _materialize_probes(
-            queries.select(F.col(id_col), F.col(vec_col)), reliable
-        )
-    index = spark.read.parquet(index_path)
-    lut = (
-        None
-        if pq_codebook is None
-        else _pq_query_lut(queries, pq_codebook, m, dim, id_col, vec_col)
+    probes = _rank_probes(queries, _as_codebook(centroids), id_col, vec_col, n_probe)
+    lut = None
+    if pq_codebook is not None:
+        probes = probes.drop("qv")  # ADC never touches a float vector
+        lut = _pq_query_lut(queries, pq_codebook, m, dim, id_col, vec_col)
+    probes = probes.localCheckpoint(eager=True)
+    probed = sorted(
+        int(r["cluster_id"]) for r in probes.select("cluster_id").distinct().collect()
     )
-
-    def scored(chunk: dict[int, DataFrame]) -> DataFrame:
-        """Probe, prune and verify one chunk of shards into the
-        UNROUNDED `_score_probed` frame. The fixed costs are paid once
-        per chunk, never per shard (VERDICT r12 #2):
-
-          1. ONE combined codebook relation (`_combined_books`).
-          2. ONE probe-ranking job: the n_probe nearest lists per
-             (query, shard).
-          3. ONE probe materialization (`_materialize_probes`) shared
-             by its two consumers.
-          4. ONE bounded collect of the distinct probed (shard,
-             cluster_id) pairs — O(sum of n_centroids) ints, never
-             O(n_queries): the probe frame itself (query vectors
-             included) stays distributed (VERDICT r5 #4).
-          5. ONE index scan with a LITERAL OR-of-conjunctions partition
-             predicate, so Catalyst prunes to exactly the probed
-             directories (PartitionFilters in the plan — asserted in
-             tests).
-          6. ONE verify join on (shard, cluster_id): a probe of shard s
-             may only match shard s's lists."""
-        probes = _rank_probes(
-            queries, _combined_books(chunk), id_col, vec_col, n_probe
-        )
-        if lut is not None:
-            probes = probes.drop("qv")  # ADC never touches a float vector
-        probes = _materialize_probes(probes, reliable)
-        probed: dict[int, list[int]] = {}
-        for r in probes.select("shard", "cluster_id").distinct().collect():
-            probed.setdefault(int(r["shard"]), []).append(int(r["cluster_id"]))
-        cond = F.lit(False)
-        for s in sorted(probed):
-            cond = cond | (
-                (F.col("shard") == s) & F.col("cluster_id").isin(sorted(probed[s]))
-            )
-        return _score_probed(index.filter(cond), probes, ["shard", "cluster_id"], lut)
-
-    if len(chunks) == 1:
-        return _rank_topk(scored(books), k, salted=n_shards > 1)
-    from concurrent.futures import ThreadPoolExecutor
-
-    counts, stats_dim = stats
-    worst = max(sum(counts[s] for s in c) * stats_dim * 8 for c in chunks)
-    with ThreadPoolExecutor(_select_chunk_workers(worst, len(chunks))) as ex:
-        tops = list(
-            ex.map(lambda c: _rank_topk(scored(c), k, True, final=False), chunks)
-        )
-    return _rank_topk(reduce(DataFrame.unionByName, tops), k)
+    index = spark.read.parquet(index_path).filter(F.col("cluster_id").isin(probed))
+    return _rank_topk(_score_probed(index, probes, lut), k)
 
 
 def sq_dist(a: Column, b: Column) -> Column:
@@ -1613,8 +1106,7 @@ def _resolve_train_cap(k: int, max_train_rows: int | None) -> int | None:
 def _train_sample(v: DataFrame, id_col: str, cap: int) -> DataFrame:
     """Deterministic bounded training sample: the `cap` lowest rows by
     (xxhash64(id), id) — a uniform-ish, seedless, ORACLE-REPLAYABLE
-    draw (the same hash family as `_shard_router`, expressible in SQL
-    as ORDER BY hash LIMIT n). The id tiebreak pins the boundary row
+    draw (expressible in SQL as ORDER BY hash LIMIT n). The id tiebreak pins the boundary row
     when two ids collide on the hash.
 
     Identity by construction when cap >= corpus: a top-N over <= N rows
@@ -1653,7 +1145,7 @@ def kmeans_lloyd_centroids(
     assignment join at O(k * max_train_rows) per update REGARDLESS of
     corpus size — without it each update joins EVERY corpus row against
     the codebook (~40 BILLION joined rows per pass at 20M vectors x
-    per-shard k=2000, the build path's scale wall), which is why a
+    k=2000, the build path's scale wall), which is why a
     100-TB build could never afford a trained codebook. A cap at or
     above the corpus size reproduces the unbounded centroids exactly
     (the top-N passes every row through and the trainer is

@@ -106,7 +106,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k over a PERSISTED cluster-partitioned index — the
     production ANN serving shape: `write_ivf_index` writes the inverted
-    lists once (partitionBy shard, cluster_id), then the probe reads ONLY
+    lists once (partitionBy cluster_id), then the probe reads ONLY
     the probed clusters via literal partition pruning (PartitionFilters in
     the plan, asserted in tests/test_plan_quality.py). Same semantics as
     `ann_ivf_topk`, gated by the identical oracle — at corpus scale the
@@ -1082,7 +1082,7 @@ def ann_ivfadc_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`write_ivf_index(mode="append")` — frozen quantizers, existing
     lists never read), COMPACT the accumulated small files
     (`sources.parquet.compact_parquet` with
-    partition_by=['shard', 'cluster_id'], snapshot-write, never
+    partition_by=['cluster_id'], snapshot-write, never
     in-place), then serve from the compacted copy with
     `ivf_topk_indexed`. Shares `ann_ivfadc_topk`'s oracle, so
     append-then-compact-equals-rebuild is the gated property: a row any
@@ -1116,7 +1116,7 @@ def ann_ivfadc_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 m=PQ_M,
                 dim=EMB_DIM,
             )
-        compact_parquet(spark, stage, p, partition_by=["shard", "cluster_id"])
+        compact_parquet(spark, stage, p, partition_by=["cluster_id"])
         shutil.rmtree(stage, ignore_errors=True)  # staging copy served its purpose
 
     path = _cached_index(

@@ -21,7 +21,7 @@ the other 364 days.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -91,6 +91,23 @@ def read_versioned_union(spark: SparkSession, root: str) -> DataFrame:
     return out
 
 
+def data_file_sizes(spark: SparkSession, root: str) -> Iterator[int]:
+    """Byte sizes of the data files under `root`, recursively, through
+    the Hadoop FileSystem API — so `file:` URIs and remote stores list
+    like local paths, with zero Spark jobs. Hidden names (`.`-prefixed
+    checksums and staging files, `_`-prefixed markers like `_SUCCESS`)
+    are not data. A missing root yields nothing."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(root)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        return
+    it = fs.listFiles(hpath, True)  # recursive, files only
+    while it.hasNext():
+        f = it.next()
+        if not f.getPath().getName().startswith((".", "_")):
+            yield f.getLen()
+
+
 def compact_parquet(
     spark: SparkSession,
     src_root: str,
@@ -103,33 +120,23 @@ def compact_parquet(
     Streaming sinks accrete one file per micro-batch per partition; at
     100 TB that means millions of tiny files and a scan bound by file
     open/footer costs, not bytes. Compaction = size the file count from
-    on-disk bytes, repartition, snapshot-write (never in-place, matching
-    the engine's backup convention, S17).
+    on-disk bytes (`data_file_sizes`), repartition, snapshot-write
+    (never in-place, matching the engine's backup convention, S17).
 
     Returns {files_before, files_after, bytes}.
     """
     import math
-    import os
 
-    total = 0
-    files_before = 0
-    for dirpath, _dirnames, filenames in os.walk(src_root):
-        for fn in filenames:
-            if fn.endswith(".parquet") and not fn.startswith("."):
-                total += os.path.getsize(os.path.join(dirpath, fn))
-                files_before += 1
+    sizes = list(data_file_sizes(spark, src_root))
+    total = sum(sizes)
     n_files = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(src_root)
     writer = df.repartition(n_files).write.mode("error")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(dst_root)
-    files_after = 0
-    for dirpath, _dirnames, filenames in os.walk(dst_root):
-        files_after += sum(
-            1 for fn in filenames if fn.endswith(".parquet") and not fn.startswith(".")
-        )
-    return {"files_before": files_before, "files_after": files_after, "bytes": total}
+    files_after = sum(1 for _ in data_file_sizes(spark, dst_root))
+    return {"files_before": len(sizes), "files_after": files_after, "bytes": total}
 
 
 def read_reference_layout(

@@ -61,8 +61,8 @@ def prepare_envelope_batch(
     When `payload_schema` is None it is inferred from a bounded sample of
     this batch (the per-micro-batch dynamic schema path). `fmt` is the
     topic's sampled verdict (S5): MessagePack payloads convert to JSON
-    strings through the Arrow-batched UDF first (C msgpack when
-    installed, the pure-stdlib codec otherwise), then share the JSON
+    strings through the Arrow-batched UDF first (the pure-stdlib
+    codec), then share the JSON
     inference/decode path — one decoder per topic, never a per-row
     format cascade (collector:223-256).
     """

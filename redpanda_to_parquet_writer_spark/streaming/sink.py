@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from redpanda_to_parquet_writer_spark.config import EngineConfig
 from redpanda_to_parquet_writer_spark.functions.dates import event_date
 from redpanda_to_parquet_writer_spark.operators.dedup import anti_join_dedup
+from redpanda_to_parquet_writer_spark.sources.parquet import data_file_sizes
 
 
 def with_event_date(df: DataFrame, ts_col: str = "kafka_timestamp") -> DataFrame:
@@ -79,17 +80,7 @@ def _sink_exists(spark: SparkSession, root: str) -> bool:
     before the first batch) is also a first write — reading it would
     fail schema inference, not signal duplicates.
     """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return False
-    it = fs.listFiles(hpath, True)  # recursive, files only
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not name.startswith((".", "_")):
-            return True
-    return False
+    return next(data_file_sizes(spark, root), None) is not None
 
 
 def existing_max_offsets(spark: SparkSession, root: str) -> dict[int, int]:
@@ -116,20 +107,7 @@ def _pruned_partition_bytes(spark: SparkSession, root: str, dates: list[str]) ->
     dirs — a driver-side FS listing, zero Spark jobs. Used to size-gate
     the merge-dedup broadcast.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    total = 0
-    for d in dates:
-        hpath = jvm.org.apache.hadoop.fs.Path(f"{root}/date={d}")
-        fs = hpath.getFileSystem(conf)
-        if not fs.exists(hpath):
-            continue
-        it = fs.listFiles(hpath, True)
-        while it.hasNext():
-            f = it.next()
-            if not f.getPath().getName().startswith((".", "_")):
-                total += f.getLen()
-    return total
+    return sum(sum(data_file_sizes(spark, f"{root}/date={d}")) for d in dates)
 
 
 def dedup_frame_for_merge(

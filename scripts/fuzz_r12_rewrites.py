@@ -508,110 +508,6 @@ def fuzz_lsh_salted_bucket_cap(rng, spark) -> bool:
     return got == sorted(pairs)
 
 
-def fuzz_salted_topk(rng, spark) -> bool:
-    """The r14 two-level salted top-k (`_rank_topk(salted=True)`, the
-    rank of a sharded index's serve) vs the flat single-window form, on random
-    scored frames with engineered near-ties: duplicate sims (the
-    tie-break path), sims differing by less than the 1e-6 rounding
-    grain (the order-by-unrounded path), hot queries with many
-    candidates, and queries with fewer than k candidates. Selection
-    must decompose over the salt partition EXACTLY — identical rows,
-    ranks, and rounded sims."""
-    from redpanda_to_parquet_writer_spark.operators.similarity import _rank_topk
-
-    n_queries = rng.randint(1, 6)
-    rows = []
-    for qid in range(n_queries):
-        n_cand = rng.randint(1, 80)
-        base = rng.random()
-        for c in range(n_cand):
-            r = rng.random()
-            if r < 0.3:
-                sim = base  # exact ties
-            elif r < 0.5:
-                sim = base + rng.choice([1e-9, -1e-9, 3e-7, -3e-7]) * c  # near-ties
-            else:
-                sim = rng.random()
-            rows.append((qid, rng.randint(0, 10_000), float(sim)))
-    df = spark.createDataFrame(rows, "query_id long, neighbor_id long, sim double")
-    # neighbor ids can repeat across rows for one query (distinct rows
-    # still rank deterministically: sim desc, id asc is a total order
-    # only up to duplicates — drop exact duplicate (q, n, sim) rows)
-    df = df.dropDuplicates(["query_id", "neighbor_id"])
-    k = rng.randint(1, 5)
-    got = _rows_sorted(_rank_topk(df, k, salted=True))
-    ref = _rows_sorted(_rank_topk(df, k, salted=False))
-    return got == ref
-
-
-def fuzz_chunked_serve(rng, spark) -> bool:
-    """r15 family #13 (VERDICT r14 #5): the chunked serve of a sharded
-    index (`ivf_topk_indexed` with `chunk_shards`) vs the one-chunk
-    serve on random corpora — random dims, shard counts, chunk sizes
-    (including >= n_shards, the degenerate one-chunk case, and None,
-    the self-sizing contract), duplicate vectors (tie-break path), and
-    near-parallel vectors whose sims differ below the 1e-6 rounding
-    grain (the order-by-unrounded path the near-tie fixture pins once;
-    this generalizes it). Selection decomposes over any partition of
-    the shards, so rows, ranks, and rounded sims must match EXACTLY."""
-    import tempfile
-
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk_indexed,
-    )
-
-    dim = rng.choice([4, 8, 16])
-    base = [1.0] + [0.0] * (dim - 1)
-    n = rng.randint(60, 120)
-    rows = []
-    for i in range(n):
-        r = rng.random()
-        if r < 0.2 and rows:
-            vec = list(rng.choice(rows)[1])  # duplicate vector, new id
-        elif r < 0.55:
-            # near-parallel to a shared axis: sims differ at the 1e-7
-            # scale, so a rounded-per-chunk re-rank would reorder them
-            vec = [
-                b + rng.choice([1e-7, -1e-7, 3e-8, -3e-8]) * (c + 1)
-                for c, b in enumerate(base)
-            ]
-        else:
-            vec = [rng.uniform(-1.0, 1.0) for _ in range(dim)]
-        rows.append((i, vec))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = df.filter(F.col("vec_id") < rng.randint(1, 5))
-    n_shards = rng.randint(2, 4)
-    k = rng.randint(1, 4)
-    n_probe = rng.randint(1, 4)
-    with tempfile.TemporaryDirectory(prefix="fuzz_chunked_") as tmp:
-        books = build_ivf_index(df, f"{tmp}/idx", n_shards=n_shards, n_updates=0)
-        ref = _rows_sorted(
-            ivf_topk_indexed(
-                spark, f"{tmp}/idx", queries, books, k=k, n_probe=n_probe,
-                chunk_shards=n_shards,
-            )
-        )
-        # one explicit chunking (1..n_shards+1 covers forced chunks and
-        # the degenerate >= n_shards one-chunk case) plus the
-        # self-sizing default (chunk_shards=None)
-        for chunk_shards in (rng.randint(1, n_shards + 1), None):
-            got = _rows_sorted(
-                ivf_topk_indexed(
-                    spark,
-                    f"{tmp}/idx",
-                    queries,
-                    books,
-                    k=k,
-                    n_probe=n_probe,
-                    chunk_shards=chunk_shards,
-                )
-            )
-            if got != ref:
-                return False
-    return True
-
-
 def fuzz_sampled_lloyd_trainer(rng, spark) -> bool:
     """r17 family #14 (VERDICT r16 #4): the bounded-sample Lloyd
     trainer on random corpora — random dims, k, update counts, and
@@ -647,8 +543,6 @@ def fuzz_sampled_lloyd_trainer(rng, spark) -> bool:
 
 FUZZERS = {
     "line_dedup": fuzz_line_dedup,
-    "salted_topk": fuzz_salted_topk,
-    "chunked_serve": fuzz_chunked_serve,
     "sampled_lloyd_trainer": fuzz_sampled_lloyd_trainer,
     "normalized_fingerprint": fuzz_normalized_fingerprint,
     "keep_first": fuzz_keep_first,

@@ -9,6 +9,11 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 # optional arg 2: comma-separated query names (exact) to run a subset,
 # e.g. re-verifying the tail after an interrupted sweep
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
+# one result line per query: Spark's console progress bar would
+# otherwise share the output stream with the OK/FAIL lines
+os.environ["PYSPARK_SUBMIT_ARGS"] = "--conf spark.ui.showConsoleProgress=false " + (
+    os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+)
 spark = get_spark(EngineConfig(shuffle_partitions=16, master="local[8]"), "verify")
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():

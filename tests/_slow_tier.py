@@ -26,47 +26,32 @@ SLOW_TIER = {
     "test_cc_and_redaction.py::test_cc_star_equals_union_find_on_random_graphs",  # 6.4s (star engine only)
     "test_streaming_sf1.py::test_streaming_row_matches_batch_oracle_at_sf1[streaming_session_stats]",  # 42.4s
     "test_properties.py::test_vector_operators_survive_degenerate_corpus",  # 20.7s
-    "test_fuzz_smoke.py::test_fuzz_family_smoke[chunked_serve]",  # 17.1s
-    "test_codebook_scaling.py::test_index_serves_inline_rows_at_any_shard_count[1-vectors]",  # 4.8s (r19 run)
-    "test_codebook_scaling.py::test_index_serves_inline_rows_at_any_shard_count[1-pq]",  # 8.2s (r19 run)
-    "test_codebook_scaling.py::test_index_serves_inline_rows_at_any_shard_count[2-vectors]",  # 6.5s (r19 run)
-    "test_codebook_scaling.py::test_index_serves_inline_rows_at_any_shard_count[2-pq]",  # 10.7s (r19 run)
-    "test_codebook_scaling.py::test_index_serves_inline_rows_at_any_shard_count[3-vectors]",  # 7.8s (r19 run)
-    "test_codebook_scaling.py::test_index_serves_inline_rows_at_any_shard_count[3-pq]",  # 11.0s (r19 run)
+    "test_codebook_scaling.py::test_index_serves_inline_rows[vectors]",  # 4.8s (r19 run, as [1-vectors])
+    "test_codebook_scaling.py::test_index_serves_inline_rows[pq]",  # 8.2s (r19 run, as [1-pq])
     "test_approx_profile.py::test_approx_distinct_within_rsd",  # 16.2s
     "test_properties.py::test_simhash_banding_recall_guarantee",  # 13.8s
     "test_streaming_sf1.py::test_streaming_row_matches_batch_oracle_at_sf1[streaming_msgpack_ingest]",  # 13.7s
     "test_retrieval_clustering.py::test_sampled_trained_lists_hit_the_deterministic_recall_floor",  # 13.4s
     "test_properties.py::test_flatten_matches_model",  # 13.2s
     "test_properties.py::test_content_dedup_idempotent_and_exact",  # 13.0s
-    "test_codebook_scaling.py::test_auto_sharded_escalates_across_the_boundary",  # 12.9s
-    "test_codebook_scaling.py::test_chunked_serve_self_sizes_within_budget",  # 12.3s
     "test_properties.py::test_line_dedup_invariants",  # 11.6s
     "test_streaming_sf1.py::test_streaming_row_matches_batch_oracle_at_sf1[streaming_interval_join]",  # 11.6s
-    "test_codebook_scaling.py::test_chunked_serve_equals_unchunked",  # 11.2s
     "test_similarity.py::test_append_ivfadc_index_and_compaction",  # 10.6s
-    "test_codebook_scaling.py::test_chunked_serve_accepts_str_shard_keys",  # 10.1s
     "test_similarity.py::test_ivfadc_recall_audit_and_probe_tradeoff",  # 10.0s
     "test_codebook_scaling.py::test_candidate_volume_bounded_across_decades",  # 9.9s
-    "test_codebook_scaling.py::test_chunked_serve_self_sizes_from_sidecar_without_a_job",  # 9.5s
     "test_streaming_sf1.py::test_streaming_row_matches_batch_oracle_at_sf1[streaming_media_ingest]",  # 9.5s
     "test_properties.py::test_tokenizer_stats_fuzz_matches_standalone_ops",  # 9.1s
-    "test_codebook_scaling.py::test_sharded_append_equals_rebuild",  # 8.8s
     "test_partition_invariance.py::test_result_invariant_under_shuffle_partitioning[docs_incremental_neardup_filter]",  # 8.3s
-    "test_codebook_scaling.py::test_corrupt_sidecar_falls_back_to_the_stats_job",  # 8.1s
-    "test_similarity.py::test_reliable_serving_path_bitwise_equals_local",  # 8.0s
     "test_cc_and_redaction.py::test_cc_deep_chain_converges_logarithmically",  # 4.3s (star engine only)
     "test_properties.py::test_anti_join_removes_exactly_existing_keys",  # 7.4s
     "test_stream_joins.py::test_stream_join_matches_batch",  # 7.1s
     "test_stateful_streaming.py::test_streaming_gaps_within_and_across_batches",  # 7.1s
     "test_cc_and_redaction.py::test_cc_fused_pair_cap_exactness",  # 6.9s
-    "test_codebook_scaling.py::test_explicit_chunking_feeds_actual_bytes_to_the_worker_bound",  # 6.8s
     "test_streaming_sf1.py::test_streaming_row_matches_batch_oracle_at_sf1[streaming_dedup_keys]",  # 6.6s
     "test_queries_oracle.py::test_query_matches_oracle[streaming_interval_join]",  # 6.5s
     "test_properties.py::test_bucket_pair_candidates_model",  # 6.1s
     "test_retrieval_clustering.py::test_train_cap_at_or_above_corpus_is_bitwise_identity",  # 6.1s
     "test_cli.py::test_reader_cli_analyze",  # 5.9s
-    "test_codebook_scaling.py::test_chunked_serve_reliable_matches_default",  # 5.6s
     "test_cli.py::test_collector_cli_writes_topics",  # 5.5s
     "test_cli.py::test_reader_cli_deduplicate",  # 5.4s
     "test_similarity.py::test_append_ivf_index_equals_rebuild",  # 5.3s
@@ -76,31 +61,24 @@ SLOW_TIER = {
     "test_similarity.py::test_append_under_wrong_codebook_is_callers_contract",  # 5.0s
     "test_plan_quality.py::test_pair_queries_have_no_join_and_one_scan",  # 5.0s
     "test_plan_quality.py::test_incremental_neardup_no_corpus_self_join",  # 4.9s
-    "test_codebook_scaling.py::test_chunked_rerank_orders_sub_rounding_near_ties",  # 4.8s
     "test_collector.py::test_collector_partition_replay_with_gaps_and_trim_cycle",  # 4.7s
     "test_streaming_ingest.py::test_merge_dedup_prunes_dates_and_gates_broadcast",  # 4.6s
     "test_scaling_fixture.py::test_sf_fixture_cardinalities_honest",  # 4.6s
     "test_cc_and_redaction.py::test_cc_stats_stay_flat_across_rounds",  # 4.5s
     "test_fuzz_smoke.py::test_fuzz_family_smoke[sampled_lloyd_trainer]",  # 4.5s
     "test_partition_invariance.py::test_result_invariant_under_shuffle_partitioning[docs_simhash_neardup_pairs]",  # 4.5s
-    "test_codebook_scaling.py::test_sharded_codebooks_sized_by_their_own_shard",  # 4.4s
     "test_similarity.py::test_ivf_recall_vs_brute_force",  # 4.4s
-    "test_codebook_scaling.py::test_append_backfills_a_missing_sidecar",  # 4.3s
     "test_windows_streaming.py::test_session_stats_streaming_runs",  # 4.3s
     "test_cli.py::test_reader_cli_date_filter",  # 4.3s
     "test_collector.py::test_multi_topic_run",  # 4.2s
-    "test_codebook_scaling.py::test_sidecar_write_failure_does_not_fail_the_build",  # 4.2s
-    "test_codebook_scaling.py::test_sharded_serve_is_one_pruned_scan",  # 4.1s
     "test_partition_invariance.py::test_result_invariant_under_shuffle_partitioning[embeddings_lsh_neardup_pairs]",  # 4.0s
     "test_streaming_sf1.py::test_streaming_row_matches_batch_oracle_at_sf1[streaming_sliding_event_stats]",  # 3.9s
     "test_retrieval_clustering.py::test_sampled_training_trains_on_exactly_the_hash_ordered_sample",  # 3.8s
-    "test_codebook_scaling.py::test_build_persists_codebook_stats_sidecar",  # 3.5s
     "test_retrieval_clustering.py::test_kmeans_quantizer_recall_not_worse_aggregate",  # 3.5s
     "test_streaming_ingest.py::test_crash_mid_write_merge_path_recovers_exactly_once",  # 3.5s
     "test_retrieval_clustering.py::test_kmeans_centroids_match_assign_trajectory",  # 3.5s
     "test_queries_oracle.py::test_query_matches_oracle[docs_incremental_neardup_filter]",  # 3.3s
     "test_fuzz_smoke.py::test_fuzz_family_smoke[bm25_topk]",  # 3.3s
-    "test_codebook_scaling.py::test_append_backfill_failure_does_not_fail_the_append",  # 3.2s
     "test_compaction.py::test_export_reference_layout",  # 3.1s
     "test_queries_oracle.py::test_query_matches_oracle[ann_kmeans_recall_audit]",  # 3.1s
     "test_queries_oracle.py::test_query_matches_oracle[parts_triangle_cap_audit]",  # 3.1s

@@ -23,6 +23,34 @@ def test_compact_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_compact_sizes_a_file_uri_root(spark, sf_dir, tmp_path):
+    """A `file://` root must size and count like the plain path: the
+    report carries the true file counts and bytes, so the rewrite is
+    sized by them instead of collapsing into one file."""
+    import os
+
+    src = tmp_path / "fragmented"
+    load_table(spark, sf_dir, "events").repartition(6).write.parquet(str(src))
+    data = [f for f in os.listdir(src) if not f.startswith((".", "_"))]
+    total = sum(os.path.getsize(src / f) for f in data)
+    assert len(data) == 6
+
+    # a target just under the smallest file: every source file's bytes
+    # need their own output file, so the sizing shows in files_after
+    target = min(os.path.getsize(src / f) for f in data) - 1
+    report = compact_parquet(
+        spark, src.as_uri(), (tmp_path / "compacted").as_uri(), target_file_bytes=target
+    )
+    assert report == {
+        "files_before": 6,
+        "bytes": total,
+        "files_after": -(-total // target),
+    }
+    assert spark.read.parquet(str(tmp_path / "compacted")).count() == (
+        spark.read.parquet(str(src)).count()
+    )
+
+
 def test_export_reference_layout(spark, sf_dir, tmp_path):
     """Hive table -> the reference's exact YYYY/MM/DD/<topic>.parquet
     layout, one file per date, content preserved."""

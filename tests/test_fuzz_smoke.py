@@ -10,9 +10,9 @@ the suite (2 comparisons per family on the session-warm SparkSession),
 so `pytest tests/` now exercises all the differential gates:
 window-form vs aggregate/join rewrites, the one-pass vs two-pass
 normalization regex on punctuation/digit/whitespace-run text, the
-null-doc_id key contract, the salted LSH bucket cap, the salted
-two-level top-k, and the chunked-vs-one-shot sharded serve. The full
-randomized soak stays script-side.
+null-doc_id key contract, the salted LSH bucket cap, and the
+sampled-vs-unbounded Lloyd trainer. The full randomized soak stays
+script-side.
 """
 
 from __future__ import annotations

@@ -1446,7 +1446,7 @@ def test_vector_operators_survive_degenerate_corpus(spark, tmp_path):
     """The VECTOR-side degenerate gate (VERDICT r13 #4, the text-side
     treatment applied to embeddings): 50k IDENTICAL vectors + 500
     near-parallel tail vectors — one hot LSH bucket in EVERY table, one
-    hot IVF list per shard, a SemDeDup "cluster" that is the whole
+    hot IVF list, a SemDeDup "cluster" that is the whole
     corpus. Exact expected outputs; 200k wall-clock evidence lives in
     SCALING.md (scripts/probe_degenerate_vectors.py at rev 269ae41)."""
     from pyspark.sql import functions as F
@@ -1501,16 +1501,16 @@ def test_vector_operators_survive_degenerate_corpus(spark, tmp_path):
     )
     assert keep == [0, n_hot]
 
-    # 4. sharded build + serve with ONE hot list per shard: every vector
-    # ties to cluster 0 (ivf_assign breaks ties to the lowest cluster
-    # id), every centroid is the hot vector; global top-k of query 0
-    # must be neighbors 1,2,3 at sim 1.0 (ties break to lowest id)
-    books = build_ivf_index(emb, str(tmp_path / "idx"), n_shards=2, n_updates=0)
+    # 4. build + serve with ONE hot list: every vector ties to cluster 0
+    # (ivf_assign breaks ties to the lowest cluster id), every centroid
+    # is the hot vector; top-k of query 0 must be neighbors 1,2,3 at
+    # sim 1.0 (ties break to lowest id)
+    book = build_ivf_index(emb, str(tmp_path / "idx"), n_updates=0)
     served = ivf_topk_indexed(
         spark,
         str(tmp_path / "idx"),
         emb.filter(F.col("vec_id") == 0),
-        books,
+        book,
         k=3,
         n_probe=2,
     ).collect()

@@ -413,7 +413,7 @@ def test_append_ivf_index_equals_rebuild(spark, sf_dir, tmp_path):
     """Incremental maintenance contract: building on half the corpus
     then appending the other half serves EXACTLY what a full rebuild
     serves (rows compared exactly), appended rows land inside the same
-    shard=0/cluster_id= directories (no new top-level dirs), and the
+    top-level cluster_id= directories (no other partition dirs), and the
     appended index contains every corpus row exactly once."""
     import os
 
@@ -429,13 +429,12 @@ def test_append_ivf_index_equals_rebuild(spark, sf_dir, tmp_path):
     full_path, inc_path = str(tmp_path / "full"), str(tmp_path / "inc")
     write_ivf_index(emb, centroids, full_path)
     write_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), centroids, inc_path)
-    lists = os.path.join(inc_path, "shard=0")
-    dirs_before = {d for d in os.listdir(lists) if d.startswith("cluster_id=")}
+    dirs_before = {d for d in os.listdir(inc_path) if d.startswith("cluster_id=")}
     write_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), centroids, inc_path, "append")
-    dirs_after = {d for d in os.listdir(lists) if d.startswith("cluster_id=")}
+    dirs_after = {d for d in os.listdir(inc_path) if d.startswith("cluster_id=")}
     assert dirs_after <= {f"cluster_id={i}" for i in range(8)}
-    # an unsharded index is shard 0: no other data directory appears
-    assert [d for d in os.listdir(inc_path) if "=" in d] == ["shard=0"]
+    # the lists are the only partition level: no other data directory appears
+    assert {d for d in os.listdir(inc_path) if "=" in d} == dirs_after
 
     n = emb.count()
     inc_rows = spark.read.parquet(inc_path)
@@ -457,7 +456,7 @@ def test_append_ivfadc_index_and_compaction(spark, sf_dir, tmp_path):
     """IVFADC incremental maintenance + operational compaction over the
     FULL production cycle append -> compact -> append -> serve: (a)
     build + append under the frozen quantizers; (b) mid-cycle
-    compact_parquet(partition_by=['shard', 'cluster_id']) collapses the part
+    compact_parquet(partition_by=['cluster_id']) collapses the part
     files; (c) a further append lands on the COMPACTED index (VERDICT
     r8 #7 — compaction is an online maintenance step, not the end of
     the lineage); the post-compact-append index, its never-compacted
@@ -492,7 +491,7 @@ def test_append_ivfadc_index_and_compaction(spark, sf_dir, tmp_path):
     # mid-cycle compaction: 2/3 of the corpus, two part-file generations
     compact_path = str(tmp_path / "compacted")
     stats = compact_parquet(
-        spark, inc_path, compact_path, partition_by=["shard", "cluster_id"]
+        spark, inc_path, compact_path, partition_by=["cluster_id"]
     )
     assert stats["files_after"] < stats["files_before"]
 
@@ -547,72 +546,6 @@ def test_append_under_wrong_codebook_is_callers_contract(spark, sf_dir, tmp_path
         for r in ivf_topk_indexed(spark, p, queries, c8, k=5, n_probe=3).collect()
     )
     assert serve(bad_path) != serve(full_path)
-
-
-def test_reliable_serving_path_bitwise_equals_local(spark, sf_dir, tmp_path):
-    """VERDICT r8 #6: the resilient serving variant (reliable=True →
-    durable `checkpoint()` of the probe sub-plan against the configured
-    checkpoint dir) must return BITWISE the same top-k as the default
-    localCheckpoint path for both IVF and IVFADC serving — the
-    materialization strategy is operational, never semantic. Also pins
-    the fail-fast: reliable=True without a configured checkpoint dir
-    raises immediately with the fix in the message."""
-    import pytest as _pytest
-
-    from redpanda_to_parquet_writer_spark.operators.similarity import (
-        deterministic_centroids,
-        ivf_topk_indexed,
-        materialize_centroids,
-        pq_codebooks,
-        write_ivf_index,
-    )
-    from redpanda_to_parquet_writer_spark.plans.vector_queries import (
-        EMB_DIM,
-        PQ_KSUB,
-        PQ_M,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = materialize_centroids(deterministic_centroids(emb, 8))
-    cb = pq_codebooks(emb, PQ_M, PQ_KSUB, EMB_DIM)
-    ivf_path, adc_path = str(tmp_path / "ivf"), str(tmp_path / "adc")
-    pq = {"pq_codebook": cb, "m": PQ_M, "dim": EMB_DIM}
-    write_ivf_index(emb, centroids, ivf_path)
-    write_ivf_index(emb, centroids, adc_path, **pq)
-    queries = emb.filter(F.col("vec_id") < 10)
-
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        with _pytest.raises(ValueError, match="checkpoint directory"):
-            ivf_topk_indexed(
-                spark, ivf_path, queries, centroids, k=5, n_probe=3, reliable=True
-            ).count()
-    sc.setCheckpointDir(str(tmp_path / "reliable_ckpt"))
-
-    def bits(df):
-        # float.hex: bitwise, not 9-sig-digit, equality on the scores
-        return sorted(
-            tuple(float(v).hex() if isinstance(v, float) else v for v in r)
-            for r in df.collect()
-        )
-
-    ivf_local = ivf_topk_indexed(spark, ivf_path, queries, centroids, k=5, n_probe=3)
-    ivf_rel = ivf_topk_indexed(
-        spark, ivf_path, queries, centroids, k=5, n_probe=3, reliable=True
-    )
-    assert bits(ivf_rel) == bits(ivf_local)
-
-    adc_local = ivf_topk_indexed(
-        spark, adc_path, queries, centroids, k=5, n_probe=3, **pq
-    )
-    adc_rel = ivf_topk_indexed(
-        spark, adc_path, queries, centroids, k=5, n_probe=3, reliable=True, **pq
-    )
-    assert bits(adc_rel) == bits(adc_local)
-    # durable blocks actually landed in the configured dir
-    import os
-
-    assert any(os.scandir(str(tmp_path / "reliable_ckpt")))
 
 
 def test_rrf_fuse_precondition_unique_nonnull_ids(spark):
