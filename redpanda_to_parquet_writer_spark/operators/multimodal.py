@@ -25,6 +25,16 @@ in plans/multimodal_queries.py:
   - TIFF, WebP lossless (VP8L) and AVI/MJPEG: codecs, probes and
     frame samplers on top of the above
 
+Each codec decision has one implementation. JPEG and VP8L build their
+prefix codes with one canonical-code builder (`_canonical_codes`) and
+decode them through one read-only table type (`_PrefixTable`, its bit
+order fixed when it is built); their bit readers, writers and symbol
+loops stay per format, because JPEG reads MSB-first with 0xFF00 stuffing
+and markers and VP8L LSB-first with neither. WebP and AVI walk RIFF
+chunks with `_walk_riff`, TIFF's probe and decoder share one IFD walk
+(`_tiff_ifd0`), and every Arrow stage is a row function over
+`_map_rows`.
+
 Compressed video frames (H.264 etc.) genuinely need a codec library
 and are out of scope; `map_media_batches` takes any injected codec.
 The pipeline shape (what runs where, batch sizes, schema contracts) is
@@ -38,7 +48,7 @@ is pure column expressions and never leaves the JVM.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from types import MappingProxyType
 
 from pyspark.sql import DataFrame
@@ -154,6 +164,36 @@ DECODED_IMAGE_SCHEMA = StructType(
 )
 
 
+def _map_rows(
+    df: DataFrame,
+    in_cols: list[str],
+    out_schema: StructType,
+    row: Callable,
+    passthrough: list[str] | None,
+) -> DataFrame:
+    """The Arrow-batched row stage behind every media transform:
+    `row(*values of in_cols) -> tuple` fills one row of `out_schema`;
+    passthrough columns (default: every column not in `in_cols`) are
+    carried unchanged. One `mapInPandas` over pandas DataFrames whose
+    binary columns hold Python bytes; partition-preserving, no
+    shuffle."""
+    passthrough = passthrough or [c for c in df.columns if c not in in_cols]
+    result_schema = StructType(
+        [f for f in df.schema.fields if f.name in passthrough] + list(out_schema.fields)
+    )
+    out_names = [f.name for f in out_schema.fields]
+
+    def run(batches: Iterator) -> Iterator:
+        for pdf in batches:
+            rows = [row(*values) for values in zip(*(pdf[c] for c in in_cols))]
+            out = pdf[passthrough].copy()
+            for i, name in enumerate(out_names):
+                out[name] = [r[i] for r in rows]
+            yield out
+
+    return df.mapInPandas(run, result_schema)
+
+
 def map_media_batches(
     df: DataFrame,
     binary_col: str,
@@ -178,12 +218,7 @@ def map_media_batches(
     """
     if on_error not in ("raise", "null"):
         raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    passthrough = passthrough or [c for c in df.columns if c != binary_col]
-    result_schema = StructType(
-        [f for f in df.schema.fields if f.name in passthrough] + list(out_schema.fields)
-    )
-    out_names = [f.name for f in out_schema.fields]
-    nulls = (None,) * len(out_names)
+    nulls = (None,) * len(out_schema.fields)
 
     def decode_one(b):
         if on_error == "raise":
@@ -193,27 +228,15 @@ def map_media_batches(
         except Exception:  # noqa: BLE001 — opt-in per-row degradation
             return nulls
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            decoded = [decode_one(b) for b in pdf[binary_col]]
-            out = pdf[passthrough].copy()
-            for i, name in enumerate(out_names):
-                out[name] = [row[i] for row in decoded]
-            yield out
-
-    return df.mapInPandas(run, result_schema)
+    return _map_rows(df, [binary_col], out_schema, decode_one, passthrough)
 
 
-@_malformed_raises_value_error
-def probe_tiff(data: bytes) -> tuple[int, int, int, int, int, int]:
-    """REAL TIFF structure probe (stdlib struct): parse the byte-order
-    header and walk IFD0's entries, returning (width, height,
-    bits_per_sample, samples_per_pixel, compression, n_ifd_entries) —
-    the corpus-filtering first pass for TIFF blobs (full decode for
-    the baseline 8-bit subset lives in `decode_tiff`). Handles both
-    byte orders and both inline and OFFSET-valued SHORT/LONG tags
-    (reporting the first element of array tags like a 3-sample
-    BitsPerSample). Raises ValueError on malformed input."""
+def _tiff_ifd0(data: bytes) -> tuple[str, int, list[tuple[int, int, int, int]]]:
+    """Parse the byte-order header and walk IFD0: returns the struct
+    byte-order prefix, the entry count, and (tag, type, count, value
+    offset) for each SHORT (3) or LONG (4) entry in IFD order. Values
+    wider than 4 bytes live at the offset the entry holds, so that is the
+    value offset; callers bound-check the values they read."""
     import struct as _s
 
     if len(data) < 8:
@@ -232,17 +255,35 @@ def probe_tiff(data: bytes) -> tuple[int, int, int, int, int, int]:
     (n,) = _s.unpack_from(f"{end}H", data, ifd_off)
     if ifd_off + 2 + 12 * n > len(data):
         raise ValueError("truncated IFD")
-    tags = {}
+    entries = []
     for i in range(n):
-        tag, typ, cnt, _raw = _s.unpack_from(
-            f"{end}HHII", data, ifd_off + 2 + 12 * i
-        )
-        if typ not in (3, 4) or cnt < 1:
-            continue
-        size = (2 if typ == 3 else 4) * cnt
+        tag, typ, cnt = _s.unpack_from(f"{end}HHI", data, ifd_off + 2 + 12 * i)
+        if typ not in (3, 4):
+            continue  # rational/ascii metadata tags: irrelevant here
         at = ifd_off + 2 + 12 * i + 8
-        if size > 4:  # offset-valued: first element lives at the offset
+        if (2 if typ == 3 else 4) * cnt > 4:
             (at,) = _s.unpack_from(f"{end}I", data, at)
+        entries.append((tag, typ, cnt, at))
+    return end, n, entries
+
+
+@_malformed_raises_value_error
+def probe_tiff(data: bytes) -> tuple[int, int, int, int, int, int]:
+    """REAL TIFF structure probe (stdlib struct): parse the byte-order
+    header and walk IFD0's entries, returning (width, height,
+    bits_per_sample, samples_per_pixel, compression, n_ifd_entries) —
+    the corpus-filtering first pass for TIFF blobs (full decode for
+    the baseline 8-bit subset lives in `decode_tiff`). Handles both
+    byte orders and both inline and OFFSET-valued SHORT/LONG tags
+    (reporting the first element of array tags like a 3-sample
+    BitsPerSample). Raises ValueError on malformed input."""
+    import struct as _s
+
+    end, n, entries = _tiff_ifd0(data)
+    tags = {}
+    for tag, typ, cnt, at in entries:
+        if cnt < 1:
+            continue
         if at + (2 if typ == 3 else 4) > len(data):
             raise ValueError(f"tag {tag} value past end of data")
         (tags[tag],) = _s.unpack_from(f"{end}{'H' if typ == 3 else 'I'}", data, at)
@@ -281,6 +322,14 @@ def probe_tiff(data: bytes) -> tuple[int, int, int, int, int, int]:
 
 from functools import lru_cache
 
+#: Largest VP8L canvas the decoder accepts. A prefix code with one used
+#: symbol reads zero bits, so a stream of a few dozen bytes can declare
+#: the format's full 16384 x 16384 canvas of literal pixels: unlike
+#: zlib, LZW and PackBits, VP8L has no output-to-input ratio to bound
+#: the decode by, so the header's pixel count is capped before any pixel
+#: is decoded.
+_VP8L_MAX_PIXELS = 1 << 24
+
 
 @lru_cache(maxsize=4096)
 def _rev_bits(code: int, length: int) -> int:
@@ -311,13 +360,6 @@ class _LsbBitWriter:
             self.acc >>= 8 * k
             nbits -= 8 * k
         self.nbits = nbits
-
-    def put_code(self, code: int, length: int) -> None:
-        """Prefix codes are written MSB-of-code first (DEFLATE rule):
-        bit-reverse once and emit with a SINGLE put — the per-bit loop
-        was the encoder's hottest call site (~45% of encode time in the
-        r8 profile, gone)."""
-        self.put(_rev_bits(code, length), length)
 
     def flush(self) -> bytes:
         if self.nbits:
@@ -355,25 +397,43 @@ class _LsbBitReader:
         self.nbits -= n
         return v
 
-    def peek8(self) -> tuple[int, int]:
-        """Next (up to) 8 bits WITHOUT consuming, plus how many bits are
-        actually available — the fast-path feed for the prefix-code LUT.
-        Never raises at end of stream: the caller checks availability
-        and falls back to the bit-walk, which owns the truncation error."""
+    def read_symbol(self, t: "_PrefixTable") -> int:
+        """One prefix-coded symbol (codes are packed MSB-of-code first):
+        one LUT lookup on the next 8 bits resolves a code the stream
+        holds in full; this is the decode profile's hottest frame. The
+        fill never raises at end of stream, the bit-walk does."""
         if self.nbits < 8:
             self._fill()
-        return self.acc & 0xFF, self.nbits
+        entry = t.lut[self.acc & 0xFF]
+        if entry >= 0 and entry & 15 <= self.nbits:
+            self.acc >>= entry & 15
+            self.nbits -= entry & 15
+            return entry >> 4
+        # >8-bit code, or too few bits left for the LUT to be trusted:
+        # bit-walk (which raises the truncation error when the stream
+        # genuinely ends mid-code)
+        length, code = 0, 0
+        while length < 16:
+            code = (code << 1) | self.bits(1)
+            length += 1
+            sym = t.table.get((length, code))
+            if sym is not None:
+                return sym
+        raise ValueError("invalid VP8L prefix code")
 
-    def drop(self, n: int) -> None:
-        """Consume n bits previously peeked (n <= self.nbits)."""
-        self.acc >>= n
-        self.nbits -= n
 
-
-def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (length, code) per the DEFLATE canonical rule (codes
-    of equal length assigned in symbol order, shorter lengths first)."""
+def _canonical_codes(
+    symbols: Iterable[int], lengths: list[int]
+) -> dict[int, tuple[int, int]]:
+    """symbol -> (length, code) of a canonical prefix code, the one rule
+    of T.81 Annex C.2 and RFC 1951 section 3.2.2: shorter lengths take
+    smaller codes, and the codes of one length go to `symbols` in the
+    order given (JPEG passes its DHT's HUFFVAL order, VP8L symbol order).
+    A zero length assigns no code; a symbol listed twice keeps its last
+    code. Raises on an over-subscribed code (Kraft sum above 1)."""
     max_len = max(lengths, default=0)
+    if sum(1 << (max_len - ln) for ln in lengths if ln) > (1 << max_len):
+        raise ValueError("over-subscribed prefix code")
     bl_count = [0] * (max_len + 1)
     for ln in lengths:
         if ln:
@@ -384,71 +444,71 @@ def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
         code = (code + bl_count[ln - 1]) << 1
         next_code[ln] = code
     out = {}
-    for sym, ln in enumerate(lengths):
+    for sym, ln in zip(symbols, lengths):
         if ln:
             out[sym] = (ln, next_code[ln])
             next_code[ln] += 1
-    if sum(1 << (max_len - ln) for ln in lengths if ln) > (1 << max_len):
-        raise ValueError("over-subscribed prefix code")
     return out
 
 
-class _PrefixCode:
-    """Decode side: walk bits MSB-of-code-first through a (length,
-    code) -> symbol map. A code with exactly ONE used symbol reads
-    zero bits per occurrence — libwebp's table builder special-cases
-    single-symbol codes this way for BOTH the simple and the normal
-    (code-length-coded) serializations, and the writer mirrors it."""
+def _complete_lengths(symbols: list[int], size: int) -> list[int]:
+    """Code lengths of a COMPLETE code (Kraft sum exactly 1) over the n >= 2
+    ascending `symbols` of a `size`-symbol alphabet: with
+    L = ceil(log2 n), the first 2^L - n symbols take L-1 bits and the rest
+    L. libwebp's table builder rejects incomplete multi-symbol codes, so
+    completeness is what makes the emitted file consumable outside this
+    module."""
+    L = (len(symbols) - 1).bit_length()
+    n_short = (1 << L) - len(symbols)
+    lengths = [0] * size
+    for j, s in enumerate(symbols):
+        lengths[s] = L - 1 if j < n_short else L
+    return lengths
 
-    def __init__(self, lengths: list[int]):
-        nz = [s for s, ln in enumerate(lengths) if ln]
-        if len(nz) == 1:
-            self.single = nz[0]
-            self.table = {}
-            self.lut = None
-            return
-        self.single = None
-        codes = _canonical_codes(lengths)
-        self.table = {(ln, code): sym for sym, (ln, code) in codes.items()}
-        # zlib-style fast path: a 256-entry LUT keyed by the next 8
-        # stream bits (LSB-first) resolves every code of length <= 8 in
-        # one dict-free lookup — the bit-walk (r8 profile: ~40% of decode
-        # time) remains only for >8-bit codes and truncated tails. Valid
-        # because no reversed code is an LSB-prefix of another (the
-        # canonical prefix property, mirrored).
-        self.lut: list = [None] * 256
+
+class _PrefixTable:
+    """Read-only decode table of one canonical prefix code, for JPEG and
+    VP8L alike. `lut` maps the next 8 stream bits to a packed
+    `(sym << 4) | length` for every code of length <= 8, -1 where no such
+    code matches, so one lookup resolves the common case (one int per
+    entry is the cheapest unpack in the decoders' hottest frames);
+    `table` maps (length, code) -> symbol for the bit-walk that longer
+    codes and stream tails fall back to. The bit order is fixed when the
+    table is built: JPEG reads codes MSB-first, VP8L packs them LSB-first
+    (`lsb_first`). Valid because no code is a prefix of another. A
+    zero-length code (VP8L's single-symbol code) fills the whole LUT and
+    reads no bits. Read-only: every decode of the same JPEG DHT spec
+    shares one instance."""
+
+    __slots__ = ("table", "lut")
+
+    def __init__(self, codes: dict[int, tuple[int, int]], lsb_first: bool):
+        lut = [-1] * 256
         for sym, (ln, code) in codes.items():
             if ln <= 8:
-                rev = _rev_bits(code, ln)
-                entry = (sym, ln)
-                for hi in range(1 << (8 - ln)):
-                    self.lut[rev | (hi << ln)] = entry
+                fill = [(sym << 4) | ln] * (1 << (8 - ln))
+                if lsb_first:  # the code in the low bits, anything above it
+                    lut[_rev_bits(code, ln) :: 1 << ln] = fill
+                else:  # the code in the high bits, anything below it
+                    lut[code << (8 - ln) : (code + 1) << (8 - ln)] = fill
+        table = {lc: sym for sym, lc in codes.items()}
+        object.__setattr__(self, "table", MappingProxyType(table))
+        object.__setattr__(self, "lut", tuple(lut))
 
-    @classmethod
-    def single_symbol(cls, sym: int) -> "_PrefixCode":
-        pc = cls([])
-        pc.single = sym
-        return pc
+    def __setattr__(self, name, value):
+        raise AttributeError("shared prefix tables are read-only")
 
-    def read(self, br: _LsbBitReader) -> int:
-        if self.single is not None:
-            return self.single
-        peeked, avail = br.peek8()
-        entry = self.lut[peeked]
-        if entry is not None and entry[1] <= avail:
-            br.drop(entry[1])
-            return entry[0]
-        # >8-bit code, or too few bits left for the LUT to be trusted:
-        # bit-walk (which raises the truncation error when the stream
-        # genuinely ends mid-code)
-        length, code = 0, 0
-        while length < 16:
-            code = (code << 1) | br.bits(1)
-            length += 1
-            sym = self.table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid VP8L prefix code")
+
+def _vp8l_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
+    """symbol -> (length, code) of one VP8L prefix code. A code with
+    exactly ONE used symbol reads zero bits per occurrence: libwebp's
+    table builder special-cases single-symbol codes this way for BOTH the
+    simple and the normal (code-length-coded) serializations, and the
+    writer mirrors it."""
+    nz = [s for s, ln in enumerate(lengths) if ln]
+    if len(nz) == 1:
+        return {nz[0]: (0, 0)}
+    return _canonical_codes(range(len(lengths)), lengths)
 
 
 #: code-length-code symbol transmission order (VP8L spec)
@@ -463,12 +523,10 @@ def _write_prefix_code(
     1-symbol form costs ZERO bits per occurrence, the simple 2-symbol
     form one bit, the normal (code-length-coded) form its canonical
     codes."""
-    nz = [s for s, ln in enumerate(lengths) if ln]
-    if not nz:
-        # a channel never coded (e.g. distances in a literal-only
-        # image): declare a 1-symbol simple code for symbol 0
-        nz = [0]
-    if 1 <= len(nz) <= 2 and max(nz) < 256:
+    # a channel never coded (e.g. distances in a literal-only image)
+    # declares a 1-symbol simple code for symbol 0
+    nz = [s for s, ln in enumerate(lengths) if ln] or [0]
+    if len(nz) <= 2 and max(nz) < 256:
         w.put(1, 1)  # simple
         w.put(len(nz) - 1, 1)
         first = nz[0]
@@ -480,8 +538,7 @@ def _write_prefix_code(
             w.put(first, 8)
         if len(nz) == 2:
             w.put(nz[1], 8)
-            return {nz[0]: (1, 0), nz[1]: (1, 1)}
-        return {nz[0]: (0, 0)}
+        return {s: (len(nz) - 1, i) for i, s in enumerate(nz)}
     w.put(0, 1)  # normal form
     # tokenize the symbol lengths with the spec's zero-run repeat codes
     # (17: 3-10 zeros, 18: 11-138 zeros) — the decoder-side support for
@@ -506,23 +563,12 @@ def _write_prefix_code(
             cl_tokens.append((17, 3, run - 3))
         else:
             cl_tokens.extend((0, 0, 0) for _ in range(run))
-    # build a COMPLETE (Kraft sum exactly 1) code over the used CL
-    # symbols: with n symbols and L = ceil(log2 n), exactly 2^L - n of
-    # them take length L-1 and the rest L — libwebp's table builder
-    # rejects incomplete multi-symbol codes, so completeness is what
-    # makes the emitted file consumable outside this module
     used = sorted({t[0] for t in cl_tokens})
-    n_cl = len(used)
-    cl_lengths = [0] * 19
-    if n_cl == 1:
+    if len(used) == 1:
+        cl_lengths = [0] * 19
         cl_lengths[used[0]] = 1  # single-symbol CL code: 0 bits on read
     else:
-        L = (n_cl - 1).bit_length()
-        if L > 7:
-            raise ValueError("too many distinct code lengths")
-        n_short = (1 << L) - n_cl
-        for j, s in enumerate(used):
-            cl_lengths[s] = (L - 1) if j < n_short and L > 1 else L
+        cl_lengths = _complete_lengths(used, 19)
     order_pos = {s: i for i, s in enumerate(_VP8L_CL_ORDER)}
     last = max(order_pos[s] for s in used)
     w.put(last + 1 - 4 if last + 1 >= 4 else 0, 4)  # num_code_lengths - 4
@@ -530,24 +576,18 @@ def _write_prefix_code(
     for i in range(n_transmit):
         s = _VP8L_CL_ORDER[i]
         w.put(cl_lengths[s], 3)
-    cl_code = _canonical_codes(cl_lengths)
+    cl_code = _vp8l_codes(cl_lengths)
     w.put(0, 1)  # no explicit max-symbol field
     for sym, ebits, extra in cl_tokens:
-        if n_cl > 1:
-            cln, code = cl_code[sym]
-            w.put_code(code, cln)
+        cln, code = cl_code[sym]
+        w.put(_rev_bits(code, cln), cln)  # prefix codes go MSB-of-code first
         if ebits:
             w.put(extra, ebits)
-    enc = _canonical_codes(lengths)
-    if len(nz) == 1:
-        # single-symbol normal-form code: 0 bits per occurrence (the
-        # libwebp table builder's special case; _read_prefix_code
-        # mirrors it)
-        return {nz[0]: (0, 0)}
-    return enc
+    return _vp8l_codes(lengths)
 
 
-def _read_prefix_code(br: _LsbBitReader, alphabet_size: int) -> _PrefixCode:
+def _read_prefix_code(br: _LsbBitReader, alphabet_size: int) -> _PrefixTable:
+    lengths = [0] * alphabet_size
     if br.bits(1):  # simple
         num = br.bits(1) + 1
         if br.bits(1):
@@ -556,23 +596,20 @@ def _read_prefix_code(br: _LsbBitReader, alphabet_size: int) -> _PrefixCode:
             s1 = br.bits(1)
         if s1 >= alphabet_size:
             raise ValueError("simple-code symbol out of range")
+        lengths[s1] = 1
         if num == 2:
             s2 = br.bits(8)
             if s2 >= alphabet_size:
                 raise ValueError("simple-code symbol out of range")
-            lengths = [0] * alphabet_size
-            lengths[s1] = 1
             lengths[s2] = 1
-            return _PrefixCode(lengths)
-        return _PrefixCode.single_symbol(s1)
+        return _PrefixTable(_vp8l_codes(lengths), lsb_first=True)
     num_cl = br.bits(4) + 4
     if num_cl > 19:
         raise ValueError("invalid code-length count")
     cl_lengths = [0] * 19
     for i in range(num_cl):
         cl_lengths[_VP8L_CL_ORDER[i]] = br.bits(3)
-    cl_code = _PrefixCode(cl_lengths)
-    lengths = [0] * alphabet_size
+    cl_code = _PrefixTable(_vp8l_codes(cl_lengths), lsb_first=True)
     if br.bits(1):  # explicit max-symbol
         length_nbits = 2 + 2 * br.bits(3)
         max_symbol = 2 + br.bits(length_nbits)
@@ -584,7 +621,7 @@ def _read_prefix_code(br: _LsbBitReader, alphabet_size: int) -> _PrefixCode:
         if max_symbol == 0:
             break
         max_symbol -= 1
-        s = cl_code.read(br)
+        s = br.read_symbol(cl_code)
         if s < 16:
             lengths[sym] = s
             sym += 1
@@ -605,15 +642,14 @@ def _read_prefix_code(br: _LsbBitReader, alphabet_size: int) -> _PrefixCode:
             raise ValueError("bad code-length symbol")
     if sym > alphabet_size:
         raise ValueError("code lengths overrun alphabet")
-    return _PrefixCode(lengths)
+    return _PrefixTable(_vp8l_codes(lengths), lsb_first=True)
 
 
-def _huffman_lengths(freqs: dict[int, int], size: int, max_len: int = 15) -> list[int]:
+def _huffman_lengths(freqs: dict[int, int], size: int) -> list[int]:
     """Canonical-code bit lengths from symbol frequencies (heap
-    Huffman); falls back to flat ceil(log2 n) lengths if any code would
-    exceed `max_len` (rare, and always valid)."""
+    Huffman); falls back to a flat complete code if any code would
+    exceed VP8L's 15 bits (rare, and always valid)."""
     import heapq
-    import math
 
     lengths = [0] * size
     nz = [s for s in freqs if freqs[s]]
@@ -630,14 +666,8 @@ def _huffman_lengths(freqs: dict[int, int], size: int, max_len: int = 15) -> lis
         for s in g1 + g2:
             lengths[s] += 1
         heapq.heappush(heap, (f1 + f2, min(_t1, _t2), g1 + g2))
-    if max(lengths) > max_len:
-        # COMPLETE fallback (Kraft sum exactly 1): with n symbols and
-        # L = ceil(log2 n), 2^L - n symbols take L-1 bits, the rest L
-        L = max(1, math.ceil(math.log2(len(nz))))
-        n_short = (1 << L) - len(nz)
-        lengths = [0] * size
-        for j, s in enumerate(sorted(nz)):
-            lengths[s] = (L - 1) if j < n_short and L > 1 else L
+    if max(lengths) > 15:
+        lengths = _complete_lengths(sorted(nz), size)
     return lengths
 
 
@@ -667,17 +697,14 @@ def _vp8l_cache_hash(argb: int, cache_bits: int) -> int:
 
 
 def _vp8l_write_pixels(
-    w: _LsbBitWriter,
-    pixels: list[int],
-    width: int,
-    cache_bits: int = 0,
-    use_lz77: bool = True,
-    level0: bool = False,
+    w: _LsbBitWriter, pixels: list[int], width: int, level0: bool
 ) -> None:
-    """Entropy-code one ARGB pixel stream: greedy LZ77 against the two
-    cheap distances (1 = horizontal run, `width` = vertical copy, both
-    emitted as linear plane codes dist+120), optional color cache,
-    Huffman codes per channel built from the token histogram.
+    """Entropy-code one ARGB pixel stream with Huffman codes per channel
+    built from the token histogram. The main (`level0`) image also gets
+    greedy LZ77 against the two cheap distances (1 = horizontal run,
+    `width` = vertical copy, both emitted as linear plane codes
+    dist+120) and an 8-bit color cache; the palette sub-image is coded
+    as plain literals.
 
     Tokenizer shape (r17 session 3, guide §4.2): the greedy match
     lengths for both distances are precomputed as numpy run-length
@@ -691,6 +718,8 @@ def _vp8l_write_pixels(
     so the emitted bytes are identical — gated by a 4,320-case
     byte-identity snapshot across cache_bits/subtract-green/predictor
     and the property fuzz suite."""
+    cache_bits = 8 if level0 else 0
+    use_lz77 = level0
     cache = [0] * (1 << cache_bits) if cache_bits else None
     tokens = []
     n = len(pixels)
@@ -781,20 +810,17 @@ def _vp8l_write_pixels(
             df[dc] = df.get(dc, 0) + 1
         else:
             gf[280 + t[1]] = gf.get(280 + t[1], 0) + 1
-    genc = _write_prefix_code(w, _huffman_lengths(gf, green_size))
-    renc = _write_prefix_code(w, _huffman_lengths(rf, 256))
-    benc = _write_prefix_code(w, _huffman_lengths(bf, 256))
-    aenc = _write_prefix_code(w, _huffman_lengths(af, 256))
-    denc = _write_prefix_code(w, _huffman_lengths(df, 40))
     # r17 hot-loop shape (identical emitted bits): codes bit-reverse
-    # ONCE per table instead of per token (`put_code` was the encode
-    # profile's top call), and each token's consecutive LSB-first puts
+    # ONCE per table instead of per token (a per-token reversal was the
+    # encode profile's top call), and each token's consecutive LSB-first puts
     # merge into one — v1 then v2 IS put(v1 | v2 << l1, l1 + l2).
-    grev = {s: (ln, _rev_bits(c, ln)) for s, (ln, c) in genc.items()}
-    rrev = {s: (ln, _rev_bits(c, ln)) for s, (ln, c) in renc.items()}
-    brev = {s: (ln, _rev_bits(c, ln)) for s, (ln, c) in benc.items()}
-    arev = {s: (ln, _rev_bits(c, ln)) for s, (ln, c) in aenc.items()}
-    drev = {s: (ln, _rev_bits(c, ln)) for s, (ln, c) in denc.items()}
+    grev, rrev, brev, arev, drev = (
+        {
+            s: (ln, _rev_bits(c, ln))
+            for s, (ln, c) in _write_prefix_code(w, _huffman_lengths(f, size)).items()
+        }
+        for f, size in ((gf, green_size), (rf, 256), (bf, 256), (af, 256), (df, 40))
+    )
     put = w.put
     for t in tokens:
         if t[0] == "lit":
@@ -833,14 +859,13 @@ def _vp8l_read_pixels(
     if level0 and br.bits(1):
         raise ValueError("meta-prefix (entropy image) groups unsupported")
     green_size = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
-    green = _read_prefix_code(br, green_size)
-    red = _read_prefix_code(br, 256)
-    blue = _read_prefix_code(br, 256)
-    alpha = _read_prefix_code(br, 256)
-    dist = _read_prefix_code(br, 40)
+    green, red, blue, alpha, dist = (
+        _read_prefix_code(br, size) for size in (green_size, 256, 256, 256, 40)
+    )
     cache = [0] * (1 << cache_bits) if cache_bits else None
     n = width * height
     out: list[int] = []
+    read = br.read_symbol
 
     def emit(px: int) -> None:
         out.append(px)
@@ -848,16 +873,16 @@ def _vp8l_read_pixels(
             cache[_vp8l_cache_hash(px, cache_bits)] = px
 
     while len(out) < n:
-        sym = green.read(br)
+        sym = read(green)
         if sym < 256:
             g = sym
-            r = red.read(br)
-            b = blue.read(br)
-            a = alpha.read(br)
+            r = read(red)
+            b = read(blue)
+            a = read(alpha)
             emit((a << 24) | (r << 16) | (g << 8) | b)
         elif sym < 280:
             length = _lz77_code_to_value(sym - 256, br)
-            plane = _lz77_code_to_value(dist.read(br), br)
+            plane = _lz77_code_to_value(read(dist), br)
             if plane <= 120:
                 raise ValueError("2D short-distance codes unsupported")
             d = plane - 120
@@ -1039,40 +1064,25 @@ def _cross_color_inverse(
     return out
 
 
-def encode_webp_lossless(
-    width: int,
-    height: int,
-    rgba: bytes,
-    use_palette: bool | None = None,
-    cache_bits: int = 8,
-    subtract_green: bool = True,
-) -> bytes:
-    """REAL WebP-lossless (VP8L) encoder for RGBA8: optional
-    color-indexing transform (auto when <= 256 distinct colors, with
-    sub-byte pixel bundling for tiny palettes), else optional
-    subtract-green; greedy LZ77 + color cache + per-channel
-    Kraft-complete canonical prefix codes; wrapped in a valid RIFF/WEBP
-    container. Lossless — `decode_webp_lossless` round-trips the exact
-    bytes. The spatial transforms (predictor, cross-color) are
-    decode-only: `decode_webp_lossless` inverts them in external
-    streams, the encoder never emits them."""
-    import struct as _s
-
+def encode_webp_lossless(width: int, height: int, rgba: bytes) -> bytes:
+    """REAL WebP-lossless (VP8L) encoder for RGBA8: the color-indexing
+    transform when the image has <= 256 distinct colors (with sub-byte
+    pixel bundling for tiny palettes), else subtract-green; greedy LZ77
+    + an 8-bit color cache + per-channel Kraft-complete canonical prefix
+    codes; wrapped in a valid RIFF/WEBP container. Lossless —
+    `decode_webp_lossless` round-trips the exact bytes. The spatial
+    transforms (predictor, cross-color) are decode-only:
+    `decode_webp_lossless` inverts them in external streams, the encoder
+    never emits them."""
     if len(rgba) != width * height * 4:
         raise ValueError("pixel buffer does not match dims")
     if not (1 <= width <= 1 << 14 and 1 <= height <= 1 << 14):
         raise ValueError("dims out of VP8L range")
-    if cache_bits and not 1 <= cache_bits <= 11:
-        raise ValueError("cache_bits must be 0 or 1..11")
     pixels = [
         (rgba[i + 3] << 24) | (rgba[i] << 16) | (rgba[i + 1] << 8) | rgba[i + 2]
         for i in range(0, len(rgba), 4)
     ]
     palette = sorted(set(pixels))
-    if use_palette is None:
-        use_palette = len(palette) <= 256
-    if use_palette and len(palette) > 256:
-        raise ValueError("palette transform needs <= 256 distinct colors")
 
     w = _LsbBitWriter()
     w.put(0x2F, 8)  # VP8L signature
@@ -1080,7 +1090,7 @@ def encode_webp_lossless(
     w.put(height - 1, 14)
     w.put(1 if any(p >> 24 != 0xFF for p in pixels) else 0, 1)  # alpha hint
     w.put(0, 3)  # version
-    if use_palette:
+    if len(palette) <= 256:
         w.put(1, 1)
         w.put(3, 2)  # COLOR_INDEXING
         w.put(len(palette) - 1, 8)
@@ -1094,7 +1104,7 @@ def encode_webp_lossless(
                 d |= (((p >> sh) - (prev >> sh)) & 0xFF) << sh
             deltas.append(d)
             prev = p
-        _vp8l_write_pixels(w, deltas, len(palette), cache_bits=0, use_lz77=False)
+        _vp8l_write_pixels(w, deltas, len(palette), level0=False)
         idx_of = {p: i for i, p in enumerate(palette)}
         wb = _palette_width_bits(len(palette))
         if wb:
@@ -1114,24 +1124,19 @@ def encode_webp_lossless(
         else:
             body, bw = [idx_of[p] << 8 for p in pixels], width
     else:
-        if subtract_green:
-            w.put(1, 1)
-            w.put(2, 2)  # SUBTRACT_GREEN
-            pixels = [
-                (p & 0xFF000000)
-                | ((((p >> 16) - (p >> 8)) & 0xFF) << 16)
-                | (p & 0xFF00)
-                | (((p & 0xFF) - ((p >> 8) & 0xFF)) & 0xFF)
-                for p in pixels
-            ]
-        body, bw = pixels, width
+        w.put(1, 1)
+        w.put(2, 2)  # SUBTRACT_GREEN
+        body = [
+            (p & 0xFF000000)
+            | ((((p >> 16) - (p >> 8)) & 0xFF) << 16)
+            | (p & 0xFF00)
+            | (((p & 0xFF) - ((p >> 8) & 0xFF)) & 0xFF)
+            for p in pixels
+        ]
+        bw = width
     w.put(0, 1)  # no more transforms
-    _vp8l_write_pixels(w, body, bw, cache_bits=cache_bits, level0=True)
-    payload = w.flush()
-    chunk = b"VP8L" + _s.pack("<I", len(payload)) + payload
-    if len(payload) % 2:
-        chunk += b"\x00"
-    return b"RIFF" + _s.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+    _vp8l_write_pixels(w, body, bw, level0=True)
+    return _riff_chunk(b"RIFF", b"WEBP" + _riff_chunk(b"VP8L", w.flush()))
 
 
 @_malformed_raises_value_error
@@ -1142,25 +1147,19 @@ def decode_webp_lossless(data: bytes) -> tuple[int, int, bytes]:
     color-indexing incl. pixel bundling, the PREDICTOR transform with
     all 14 spatial modes, and cross-color), color cache, LZ77
     with linear distance codes, canonical prefix codes in both simple
-    and code-length-coded forms. Returns (width, height, RGBA bytes)."""
-    import struct as _s
-
+    and code-length-coded forms. Returns (width, height, RGBA bytes); a
+    canvas over `_VP8L_MAX_PIXELS` pixels raises ValueError before any
+    pixel is decoded."""
     if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP (bad RIFF header)")
-    pos, payload, saw_lossy = 12, None, False
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (ln,) = _s.unpack_from("<I", data, pos + 4)
-        if pos + 8 + ln > len(data):
-            raise ValueError(f"truncated RIFF chunk {tag!r}")
+    payload, saw_lossy = None, False
+    for tag, bs, ln in _walk_riff(data, 12, len(data)):
         if tag == b"VP8L":
-            payload = data[pos + 8 : pos + 8 + ln]
+            payload = data[bs : bs + ln]
             break
-        if tag == b"VP8 ":
-            saw_lossy = True
         # VP8X is just the extended-features header: metadata-carrying
         # LOSSLESS files are VP8X followed by VP8L, so keep scanning
-        pos += 8 + ln + (ln % 2)
+        saw_lossy = saw_lossy or tag == b"VP8 "
     if payload is None:
         raise ValueError(
             "lossy WebP (VP8) needs an imaging library"
@@ -1175,23 +1174,20 @@ def decode_webp_lossless(data: bytes) -> tuple[int, int, bytes]:
     br.bits(1)  # alpha hint
     if br.bits(3) != 0:
         raise ValueError("unknown VP8L version")
+    if width * height > _VP8L_MAX_PIXELS:
+        raise ValueError(f"VP8L canvas {width}x{height} exceeds {_VP8L_MAX_PIXELS} pixels")
     transforms = []
     palette = None
     eff_width = width
     while br.bits(1):
         ttype = br.bits(2)
-        if ttype == 0:  # PREDICTOR
+        if ttype in (0, 1):  # PREDICTOR or CROSS_COLOR: one pixel per tile
             size_bits = br.bits(3) + 2
             tiles_x = (width + (1 << size_bits) - 1) >> size_bits
             tiles_y = (height + (1 << size_bits) - 1) >> size_bits
-            modes = _vp8l_read_pixels(br, tiles_x, tiles_y)
-            transforms.append(("predictor", modes, size_bits, tiles_x))
-        elif ttype == 1:  # CROSS_COLOR
-            size_bits = br.bits(3) + 2
-            tiles_x = (width + (1 << size_bits) - 1) >> size_bits
-            tiles_y = (height + (1 << size_bits) - 1) >> size_bits
-            mults = _vp8l_read_pixels(br, tiles_x, tiles_y)
-            transforms.append(("cross_color", mults, size_bits, tiles_x))
+            tiles = _vp8l_read_pixels(br, tiles_x, tiles_y)
+            inverse = _vp8l_predictor_inverse if ttype == 0 else _cross_color_inverse
+            transforms.append(("tiles", inverse, tiles, size_bits, tiles_x))
         elif ttype == 2:  # SUBTRACT_GREEN
             transforms.append(("subtract_green",))
         elif ttype == 3:  # COLOR_INDEXING
@@ -1200,32 +1196,20 @@ def decode_webp_lossless(data: bytes) -> tuple[int, int, bytes]:
             palette = []
             prev = 0
             for d in deltas:
-                p = 0
-                for sh in (24, 16, 8, 0):
-                    p |= (((d >> sh) + (prev >> sh)) & 0xFF) << sh
-                palette.append(p)
-                prev = p
+                prev = _vp8l_add_px(d, prev)
+                palette.append(prev)
             wb = _palette_width_bits(n_colors)
             eff_width = (width + (1 << wb) - 1) >> wb if wb else width
             transforms.append(("palette", palette, wb))
         else:
             raise ValueError(f"unknown transform type {ttype}")
     pixels = _vp8l_read_pixels(br, eff_width, height, level0=True)
-    if palette is not None and any(
-        t[0] in ("predictor", "cross_color") for t in transforms
-    ):
+    if palette is not None and any(t[0] == "tiles" for t in transforms):
         raise ValueError("spatial transforms combined with color-indexing unsupported")
     for t in reversed(transforms):
-        if t[0] == "predictor":
-            _tag, modes, size_bits, tiles_x = t
-            pixels = _vp8l_predictor_inverse(
-                pixels, modes, width, height, size_bits, tiles_x
-            )
-        elif t[0] == "cross_color":
-            _tag, mults, size_bits, tiles_x = t
-            pixels = _cross_color_inverse(
-                pixels, mults, width, height, size_bits, tiles_x
-            )
+        if t[0] == "tiles":
+            _tag, inverse, tiles, size_bits, tiles_x = t
+            pixels = inverse(pixels, tiles, width, height, size_bits, tiles_x)
         elif t[0] == "subtract_green":
             pixels = [
                 (p & 0xFF000000)
@@ -1274,13 +1258,8 @@ def probe_webp(data: bytes) -> tuple[int, int, str, int]:
 
     if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP (bad RIFF header)")
-    pos = 12
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (ln,) = _s.unpack_from("<I", data, pos + 4)
-        body = data[pos + 8 : pos + 8 + ln]
-        if len(body) != ln:
-            raise ValueError(f"truncated RIFF chunk {tag!r}")
+    for tag, bs, ln in _walk_riff(data, 12, len(data)):
+        body = data[bs : bs + ln]
         if tag == b"VP8L":
             if len(body) < 5 or body[0] != 0x2F:
                 raise ValueError("bad VP8L header")
@@ -1297,7 +1276,6 @@ def probe_webp(data: bytes) -> tuple[int, int, str, int]:
             wm1 = int.from_bytes(body[4:7], "little")
             hm1 = int.from_bytes(body[7:10], "little")
             return wm1 + 1, hm1 + 1, "VP8X", ln
-        pos += 8 + ln + (ln % 2)
     raise ValueError("no image chunk in WebP")
 
 
@@ -1576,32 +1554,10 @@ def decode_tiff(data: bytes) -> tuple[int, int, int, bytes]:
     the supported baseline subset."""
     import struct as _s
 
-    if len(data) < 8:
-        raise ValueError("truncated TIFF header")
-    if data[:2] == b"II":
-        end = "<"
-    elif data[:2] == b"MM":
-        end = ">"
-    else:
-        raise ValueError("not a TIFF (bad byte-order mark)")
-    magic, ifd_off = _s.unpack_from(f"{end}HI", data, 2)
-    if magic != 42:
-        raise ValueError("not a TIFF (bad magic)")
-    if ifd_off + 2 > len(data):
-        raise ValueError("IFD offset past end of data")
-    (n,) = _s.unpack_from(f"{end}H", data, ifd_off)
-    if ifd_off + 2 + 12 * n > len(data):
-        raise ValueError("truncated IFD")
+    end, _n, entries = _tiff_ifd0(data)
     tags: dict[int, list[int]] = {}
-    for i in range(n):
-        tag, typ, cnt, _raw = _s.unpack_from(f"{end}HHII", data, ifd_off + 2 + 12 * i)
-        if typ not in (3, 4):
-            continue  # rational/ascii metadata tags: irrelevant here
-        size = (2 if typ == 3 else 4) * cnt
-        at = ifd_off + 2 + 12 * i + 8
-        if size > 4:
-            (at,) = _s.unpack_from(f"{end}I", data, at)
-        if at + size > len(data):
+    for tag, typ, cnt, at in entries:
+        if at + (2 if typ == 3 else 4) * cnt > len(data):
             raise ValueError(f"tag {tag} values past end of data")
         fmt = "H" if typ == 3 else "I"
         tags[tag] = list(_s.unpack_from(f"{end}{cnt}{fmt}", data, at))
@@ -1928,36 +1884,21 @@ def frame_sample_gray8_batches(
     """
     import numpy as np
 
-    passthrough = passthrough or [
-        c for c in df.columns if c not in (binary_col, w_col, h_col)
-    ]
-    result_schema = StructType(
-        [f for f in df.schema.fields if f.name in passthrough]
-        + list(SAMPLED_VIDEO_SCHEMA.fields)
+    def sample(data, w, h):
+        frames = np.frombuffer(data, dtype=np.uint8).reshape(-1, int(w) * int(h))
+        sampled = frames[::every_n]
+        sums = sampled.astype(np.int64).sum(axis=1)
+        return (
+            int(frames.shape[0]),
+            int(sampled.shape[0]),
+            sampled.tobytes(),
+            int(sums[0]) if len(sums) else None,
+            int(sums[-1]) if len(sums) else None,
+        )
+
+    return _map_rows(
+        df, [binary_col, w_col, h_col], SAMPLED_VIDEO_SCHEMA, sample, passthrough
     )
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            n_in, n_out, blobs, fsum, lsum = [], [], [], [], []
-            for data, w, h in zip(pdf[binary_col], pdf[w_col], pdf[h_col]):
-                frame_px = int(w) * int(h)
-                frames = np.frombuffer(data, dtype=np.uint8).reshape(-1, frame_px)
-                sampled = frames[::every_n]
-                n_in.append(int(frames.shape[0]))
-                n_out.append(int(sampled.shape[0]))
-                blobs.append(sampled.tobytes())
-                sums = sampled.astype(np.int64).sum(axis=1)
-                fsum.append(int(sums[0]) if len(sums) else None)
-                lsum.append(int(sums[-1]) if len(sums) else None)
-            out = pdf[passthrough].copy()
-            out["n_frames_in"] = n_in
-            out["n_frames_out"] = n_out
-            out["sampled"] = blobs
-            out["first_frame_sum"] = fsum
-            out["last_frame_sum"] = lsum
-            yield out
-
-    return df.mapInPandas(run, result_schema)
 
 
 # --- image: REAL GIF codec (stdlib-only LZW, grayscale palette) ------------
@@ -2531,36 +2472,23 @@ def resize_gray8_batches(
     """
     import numpy as np
 
-    passthrough = passthrough or [
-        c for c in df.columns if c not in (binary_col, w_col, h_col)
-    ]
-    result_schema = StructType(
-        [f for f in df.schema.fields if f.name in passthrough]
-        + list(RESIZED_IMAGE_SCHEMA.fields)
+    def thumbnail(data, w, h):
+        img = np.frombuffer(data, dtype=np.uint8).reshape(int(h), int(w))
+        ys = (np.arange(out_h) * int(h)) // out_h
+        xs = (np.arange(out_w) * int(w)) // out_w
+        thumb = img[np.ix_(ys, xs)]
+        return (
+            thumb.tobytes(),
+            out_w,
+            out_h,
+            int(thumb.flat[0]),
+            int(thumb.flat[-1]),
+            int(thumb.astype(np.int64).sum()),
+        )
+
+    return _map_rows(
+        df, [binary_col, w_col, h_col], RESIZED_IMAGE_SCHEMA, thumbnail, passthrough
     )
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            thumbs, p00s, plasts, sums = [], [], [], []
-            for data, w, h in zip(pdf[binary_col], pdf[w_col], pdf[h_col]):
-                img = np.frombuffer(data, dtype=np.uint8).reshape(int(h), int(w))
-                ys = (np.arange(out_h) * int(h)) // out_h
-                xs = (np.arange(out_w) * int(w)) // out_w
-                thumb = img[np.ix_(ys, xs)]
-                thumbs.append(thumb.tobytes())
-                p00s.append(int(thumb.flat[0]))
-                plasts.append(int(thumb.flat[-1]))
-                sums.append(int(thumb.astype(np.int64).sum()))
-            out = pdf[passthrough].copy()
-            out["thumb"] = thumbs
-            out["thumb_w"] = out_w
-            out["thumb_h"] = out_h
-            out["p00"] = p00s
-            out["p_last"] = plasts
-            out["pixel_sum"] = sums
-            yield out
-
-    return df.mapInPandas(run, result_schema)
 
 
 # --- image: REAL PNG codec (stdlib zlib + struct, no external library) -----
@@ -3117,53 +3045,22 @@ _AC_VALUES_PROG = list(range(256))
 _JPEG_SUBSAMPLE = {"444": (1, 1), "422": (2, 1), "420": (2, 2)}
 
 
-class _HuffLUT:
-    """JPEG Huffman fast decoder (the VP8L LUT's MSB-first twin): a
-    256-entry table over the next 8 stream bits resolves every code of
-    length <= 8 in one lookup; longer codes fall back to the
-    (length, code) bit-walk, which also owns the malformed-stream
-    errors. Valid because no Huffman code is a prefix of another.
-    LUT entries are packed ints `(sym << 4) | length`, -1 for "no short
-    code" — one int per symbol is the cheapest unpack in `_read_symbol`,
-    the decode profile's hottest frame. Read-only: every decode of the
-    same DHT spec shares one instance."""
-
-    __slots__ = ("table", "lut")
-
-    def __init__(self, table: dict[tuple[int, int], int], lut: list[int]):
-        object.__setattr__(self, "table", MappingProxyType(table))  # (length, code) -> sym
-        object.__setattr__(self, "lut", tuple(lut))
-
-    def __setattr__(self, name, value):
-        raise AttributeError("shared Huffman tables are read-only")
-
-
 @lru_cache(maxsize=64)
-def _huff_tables(bits: bytes, values: bytes) -> tuple[tuple, _HuffLUT]:
+def _huff_tables(bits: bytes, values: bytes) -> tuple[tuple, _PrefixTable]:
     """Canonical Huffman tables of one DHT spec (T.81 C.2): the
     encoder's symbol -> (code_length, code) table (a 256-entry tuple,
-    None for symbols without a code) and the decoder's LUT. Memoized on
-    the spec bytes: every call with the Annex K tables (and every
-    MJPEG/AVI frame's identical DHT bytes) shares one build, and LRU
-    eviction drops one cold spec at a time, never the hot ones. The
-    tables are read-only because all callers share them."""
-    codes: list = [None] * 256
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            codes[values[k]] = (length, code)  # a repeated symbol keeps its last code
-            code += 1
-            k += 1
-        code <<= 1
-    coded = [(sym, lc) for sym, lc in enumerate(codes) if lc]
-    lut = [-1] * 256
-    for sym, (ln, code) in coded:
-        if ln <= 8:
-            base = code << (8 - ln)
-            for lo in range(1 << (8 - ln)):
-                lut[base | lo] = (sym << 4) | ln
-    return tuple(codes), _HuffLUT({lc: sym for sym, lc in coded}, lut)
+    None for symbols without a code) and the decoder's MSB-first
+    `_PrefixTable`. Memoized on the spec bytes: every call with the
+    Annex K tables (and every MJPEG/AVI frame's identical DHT bytes)
+    shares one build, and LRU eviction drops one cold spec at a time,
+    never the hot ones. The tables are read-only because all callers
+    share them. An over-subscribed DHT raises ValueError."""
+    lengths = [ln for ln in range(1, 17) for _ in range(bits[ln - 1])]
+    codes = _canonical_codes([values[k] for k in range(len(lengths))], lengths)
+    return (
+        tuple(codes.get(sym) for sym in range(256)),
+        _PrefixTable(codes, lsb_first=False),
+    )
 
 
 @lru_cache(maxsize=1)
@@ -3672,10 +3569,10 @@ def encode_jpeg_color_progressive(
     )
 
 
-def _read_symbol(r, t: _HuffLUT) -> int:
+def _read_symbol(r, t: _PrefixTable) -> int:
     # inlined peek8 + packed-LUT hit: this is the decode profile's
-    # hottest call pair; consumed bits are identical to the peek/drop
-    # composition (peek8 never consumes, drop only lowers nbits)
+    # hottest call pair; consumed bits are identical to a peek8 followed
+    # by consuming the code's length (peek8 never consumes)
     nb = r.nbits
     while nb < 8 and r._fill():
         nb = r.nbits
@@ -3776,18 +3673,15 @@ class _BitReader:
 
     def peek8(self) -> tuple[int, int]:
         """Next (up to) 8 bits MSB-first, zero-padded on the right, plus
-        how many are real — the `_HuffLUT` feed. Never consumes, never
-        raises (the bit-walk fallback owns the errors)."""
+        how many are real — the `_PrefixTable` LUT key that `_read_symbol`
+        computes inline. Never consumes, never raises (the bit-walk
+        fallback owns the errors)."""
         while self.nbits < 8 and self._fill():
             pass
         n = self.nbits
         if n >= 8:
             return (self.acc >> (n - 8)) & 0xFF, 8
         return ((self.acc & ((1 << n) - 1)) << (8 - n)) & 0xFF, n
-
-    def drop(self, n: int) -> None:
-        """Consume n bits previously peeked (n <= self.nbits)."""
-        self.nbits -= n
 
     def expect_restart(self) -> None:
         """Byte-align and consume the next RSTn marker (raw, unstuffed).
@@ -3962,7 +3856,7 @@ def _read_jpeg(data: bytes, ncomp: int):
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     qtab: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], _HuffLUT] = {}
+    huff: dict[tuple[int, int], _PrefixTable] = {}
     progressive = None  # fixed by the first frame marker
     comps = coef = None
     restart = 0

@@ -22,8 +22,6 @@ from pyspark.sql import functions as F
 
 from redpanda_to_parquet_writer_spark.functions.dates import event_epoch_us
 
-_SINK_TABLE = "streaming_hourly_stats_sink"
-
 
 def streaming_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly event stats computed by Structured Streaming (availableNow
@@ -34,16 +32,7 @@ def streaming_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     source splits micro-batches or how tasks interleave (the same
     invariant the partition-invariance suite asserts for batch plans).
     """
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    # the file stream source requires a DIRECTORY; narrow the listing to
-    # the events table with a glob (the driver fixtures are one file per
-    # table in a flat dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _events_stream(spark, sf_dir)
     ts = F.timestamp_micros(event_epoch_us(stream))
     agg = (
         stream.withColumn("evt_ts", ts)
@@ -57,23 +46,14 @@ def streaming_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("window_start"), "n", "total_value")
     )
-    # rerun idempotence: the driver (and drive_entry.py) executes each
-    # query twice in one session
-    spark.catalog.dropTempView(_SINK_TABLE)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(_SINK_TABLE)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(_SINK_TABLE)
+    return _drain_to_memory(agg, "streaming_hourly_stats_sink", "complete")
 
 
 def _events_stream(spark: SparkSession, sf_dir: str):
     """File-source stream over the events fixture (schema from a batch
-    footer read; glob narrows the flat fixture dir to one table)."""
+    footer read). The file stream source requires a DIRECTORY, so a
+    glob narrows the flat fixture dir (one file per table) to the
+    events table."""
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     return (
         spark.readStream.schema(schema)
@@ -83,6 +63,10 @@ def _events_stream(spark: SparkSession, sf_dir: str):
 
 
 def _drain_to_memory(agg: DataFrame, sink_table: str, output_mode: str) -> DataFrame:
+    """Drain `agg` with Trigger.AvailableNow into a memory sink and return
+    the sink table. The sink's temp view is dropped first for rerun
+    idempotence: the driver (and drive_entry.py) executes each query
+    twice in one session."""
     spark = agg.sparkSession
     spark.catalog.dropTempView(sink_table)
     q = (

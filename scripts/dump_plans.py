@@ -2,7 +2,9 @@
 
 For each query: exchange count, join strategies, aggregate styles,
 TakeOrderedAndProject usage, whether scan filters pushed down — the
-at-a-glance audit of "does this plan scale". Full formatted plans are
+at-a-glance audit of "does this plan scale" — and a digest of the whole
+id-normalized plan, so any plan change (partition columns or filters,
+read schema) shows in a diff of the table. Full formatted plans are
 included for a handful of flagship shapes.
 
 Usage: python scripts/dump_plans.py [sf_dir]   (writes PLANS.md at repo root)
@@ -10,9 +12,11 @@ Usage: python scripts/dump_plans.py [sf_dir]   (writes PLANS.md at repo root)
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -59,7 +63,15 @@ def normalize_ids(plan: str) -> str:
     variable suffixes by first appearance within the plan. Spark draws
     all three from session-wide counters, so the raw text of a plan
     depends on everything the session planned before it; renumbered,
-    two checkouts' plans compare byte for byte."""
+    two checkouts' plans compare byte for byte. The 8-character random
+    suffix of a `tempfile.mkdtemp` directory (persisted indexes,
+    bucketed tables and streaming sinks live in one) is masked the same
+    way, so those plans compare across runs too."""
+    plan = re.sub(
+        re.escape(tempfile.gettempdir()) + r"/([\w.-]*?)[a-z0-9_]{8}(?=/)",
+        lambda m: f"{tempfile.gettempdir()}/{m.group(1)}XXXXXXXX",
+        plan,
+    )
     for pattern, fmt in (
         (r"#(\d+)", "#{}"),
         (r"plan_id=(\d+)", "plan_id={}"),
@@ -115,9 +127,11 @@ def main() -> None:
         except Exception as e:  # pragma: no cover - diagnostic tool
             rows.append((name, {"error": str(e)[:80]}))
             continue
-        rows.append((name, summarize(p)))
+        normalized = normalize_ids(p)
+        digest = hashlib.sha256(normalized.encode()).hexdigest()[:12]
+        rows.append((name, {**summarize(p), "digest": digest}))
         if name in FLAGSHIPS:
-            full[name] = normalize_ids(p)
+            full[name] = normalized
 
     out = [
         "# PLANS — physical-plan audit of every registered query",
@@ -134,19 +148,20 @@ def main() -> None:
         "filters reach the parquet scan; `scans` = parquet scan count "
         "(a doubled scan means a missing reuse). Full plans renumber "
         "expression and plan ids by first appearance, so they compare "
-        "across checkouts.",
+        "across checkouts; `plan` = the first 12 hex digits of the sha256 "
+        "of the whole renumbered plan, so any plan change shows here.",
         "",
-        "| query | exch | 1part | joins | semi/anti | win | TOaP | push | scans |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| query | exch | 1part | joins | semi/anti | win | TOaP | push | scans | plan |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, s in rows:
         if "error" in s:
-            out.append(f"| {name} | ERROR: {s['error']} | | | | | | | |")
+            out.append(f"| {name} | ERROR: {s['error']} | | | | | | | | |")
             continue
         out.append(
             f"| {name} | {s['exchanges']} | {s['single_part'] or ''} | "
             f"{s['joins']} | {s['join_types']} | {s['windows'] or ''} | "
-            f"{s['take_ordered']} | {s['pushed']} | {s['scans']} |"
+            f"{s['take_ordered']} | {s['pushed']} | {s['scans']} | {s['digest']} |"
         )
     out.append("")
     out.append("## Flagship plans (full)")

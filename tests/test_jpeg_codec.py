@@ -1,7 +1,9 @@
 """Image codec pins: JPEG, PNG and GIF encoder bytes and decoded pixels
-fixed by sha256, the Huffman table memo's sharing and eviction contract,
-the frame-size guard of the JPEG frame reader, and the size caps that
-stop PNG and GIF decoders from expanding a blob past its header.
+fixed by sha256, the canonical prefix-code builder that JPEG and VP8L
+share, the Huffman table memo's sharing and eviction contract, the
+frame-size guard of the JPEG frame reader, the size caps that stop PNG
+and GIF decoders from expanding a blob past its header, and the VP8L
+canvas limit.
 
 The JPEG digests were computed with the six-decoder codec that preceded
 the single frame reader/writer (rev fd358e7), the PNG and GIF ones with
@@ -13,6 +15,7 @@ from __future__ import annotations
 
 import hashlib
 import struct
+import time
 import tracemalloc
 import zlib
 
@@ -338,6 +341,58 @@ def test_huffman_memo_is_read_only_and_evicts_one_entry_at_a_time():
         M._huff_tables(bytes([1] + [0] * 15), bytes([n]))
         assert M._huff_tables(*annex_k)[0] is codes
     assert M._huff_tables.cache_info().misses == misses + 65
+
+
+def test_canonical_codes_follow_rfc1951_and_t81_table_k3():
+    # RFC 1951 section 3.2.2: lengths (3,3,3,3,3,2,4,4) for symbols A..H
+    codes = M._canonical_codes(range(8), [3, 3, 3, 3, 3, 2, 4, 4])
+    bits = [format(code, f"0{ln}b") for ln, code in (codes[s] for s in range(8))]
+    assert bits == ["010", "011", "100", "101", "110", "00", "1110", "1111"]
+    # T.81 Table K.3: the luminance DC differences, categories 0..11
+    dc = M._huff_tables(bytes(M._DC_BITS), bytes(M._DC_VALUES))[0]
+    assert [format(code, f"0{ln}b") for ln, code in dc[:12]] == [
+        "00", "010", "011", "100", "101", "110", "1110", "11110",
+        "111110", "1111110", "11111110", "111111110",
+    ]
+    assert dc[12:] == (None,) * 244
+
+
+def test_over_subscribed_dht_is_rejected():
+    """128 seven-bit codes fill the whole code space, so one more code of
+    any length is over-subscribed: the table is rejected even when no
+    scan uses it."""
+    bits = bytes([0] * 6 + [128, 0, 1] + [0] * 7)
+    values = bytes(range(129))
+    with pytest.raises(ValueError, match="over-subscribed"):
+        M._huff_tables(bits, values)
+    blob = M.encode_jpeg_gray8(16, 16, bytes(range(256)))
+    dht = b"\xff\xc4" + struct.pack(">H", 2 + 1 + 16 + 129) + b"\x01" + bits + values
+    assert M.decode_jpeg_gray8(blob)[:2] == (16, 16)
+    with pytest.raises(ValueError, match="over-subscribed"):
+        M.decode_jpeg_gray8(blob[:2] + dht + blob[2:])
+
+
+def test_vp8l_canvas_past_the_pixel_limit_is_rejected_at_once():
+    """A 28-byte WebP declaring a 16384x16384 canvas whose five prefix
+    codes each have one symbol, so every literal pixel reads zero bits:
+    the header alone is rejected, before any pixel is decoded."""
+    w = M._LsbBitWriter()
+    for value, n in ((0x2F, 8), (16383, 14), (16383, 14), (0, 1), (0, 3)):
+        w.put(value, n)  # signature, width-1, height-1, alpha hint, version
+    w.put(0, 3)  # no transform, no color cache, no meta-prefix groups
+    for _code in range(5):
+        w.put(0b0001, 4)  # simple code, one 1-bit symbol: 0
+    payload = w.flush()
+    blob = (
+        b"RIFF" + struct.pack("<I", 12 + len(payload)) + b"WEBP"
+        + b"VP8L" + struct.pack("<I", len(payload)) + payload
+    )
+    assert len(blob) == 28
+    assert M.probe_webp(blob) == (16384, 16384, "VP8L", 8)
+    start = time.perf_counter()
+    with pytest.raises(ValueError, match="exceeds"):
+        M.decode_webp_lossless(blob)
+    assert time.perf_counter() - start < 1.0
 
 
 def test_frame_larger_than_its_stream_is_rejected_before_allocating():

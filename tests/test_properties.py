@@ -1050,15 +1050,12 @@ def test_tiff_crafted_contract_holes():
     st.integers(min_value=1, max_value=32),
     st.integers(min_value=1, max_value=32),
     st.integers(min_value=0, max_value=2**32 - 1),
-    st.sampled_from([0, 4, 8, 11]),
-    st.booleans(),
 )
 @settings(max_examples=40, deadline=None)
-def test_webp_lossless_roundtrip_arbitrary_images(w, h, seed, cache_bits, sg):
-    """VP8L encode->decode is the identity on arbitrary RGBA bitmaps
-    across cache sizes and the subtract-green switch, on noise (literal
-    path), tiny palettes (color-indexing with every bundling width) and
-    flat fills (LZ77 runs)."""
+def test_webp_lossless_roundtrip_arbitrary_images(w, h, seed):
+    """VP8L encode->decode is the identity on arbitrary RGBA bitmaps, on
+    noise (literal path), tiny palettes (color-indexing with every
+    bundling width) and flat fills (LZ77 runs)."""
     import random as _random
 
     from redpanda_to_parquet_writer_spark.operators.multimodal import (
@@ -1074,20 +1071,21 @@ def test_webp_lossless_roundtrip_arbitrary_images(w, h, seed, cache_bits, sg):
         images.append(b"".join(rng.choice(pal) for _ in range(w * h)))
     images.append(bytes(rng.randrange(256) for _ in range(4)) * (w * h))
     for rgba in images:
-        blob = encode_webp_lossless(
-            w, h, rgba, cache_bits=cache_bits, subtract_green=sg
-        )
+        blob = encode_webp_lossless(w, h, rgba)
         assert decode_webp_lossless(blob) == (w, h, rgba)
         assert probe_webp(blob)[:3] == (w, h, "VP8L")
 
 
-# VP8L streams that exercise the decoder's spatial transforms, which the
-# encoder does not emit: a 9x7 noise image and a 9x7 gradient, each coded
-# with the predictor transform alone, the cross-color transform alone, and
-# both after subtract-green, at predictor_size_bits 2 and 3 (tile modes
-# 0, 1 and 12; non-identity cross-color multipliers). Each entry holds the
-# stream and the sha256 of the RGBA it decodes to.
-_VP8L_SPATIAL_STREAMS = {
+# VP8L streams with features the encoder does not emit. The spatial
+# transforms: a 9x7 noise image and a 9x7 gradient, each coded with the
+# predictor transform alone, the cross-color transform alone, and both
+# after subtract-green, at predictor_size_bits 2 and 3 (tile modes 0, 1
+# and 12; non-identity cross-color multipliers). Color caches of 0, 4 and
+# 11 bits and images without subtract-green: a 9x7 image of six colors
+# and the 9x7 noise image, coded without the color-indexing transform by
+# the encoder at rev fd450c7, which still took these settings as options.
+# Each entry holds the stream and the sha256 of the RGBA it decodes to.
+_VP8L_PINNED_STREAMS = {
     "noise_pred_sb2": (
         "5249464696010000574542505650384c8a0100002f08800110012141a29dffdb"
         "23fa1f6422b609000419a3259a221a82a031a235245a5a1b3aa03dfac02188a0"
@@ -1163,11 +1161,56 @@ _VP8L_SPATIAL_STREAMS = {
         "400d16377b61862a287180f30900",
         "fd8de67762bd4c6155eed5f69297576c08017d9d9d185ba1a94501181d7490ba",
     ),
+    "few_colors_cache0": (
+        "5249464672000000574542505650384c660000002f08800100059100c932666a"
+        "f7021ffc48244032549a85e0715f1008884c32a45f2d30a7571de87f24ef8224"
+        "ef22227bdf8962f2bd88b817d9db0579278a5df6be13f78aa2b81779f72e7997"
+        "2e48f277c9bb20a2b83739b2f75df22eefde898888ecedf22e39",
+        "cd2aea6dbc2b0ece447a92a44337abff9a8347399b909c5e55c1b4ff4aff10fe",
+    ),
+    "few_colors_cache4": (
+        "524946465e000000574542505650384c520000002f0880010095b04dd806cc65"
+        "3db3defb427ee899c2187b301b24c8a1b9b534f0785f180812645243f8d502e7"
+        "f4aa03fd8f775e3c37e3aadfefbf0773712d9a2b847365c04d26e8327a855767"
+        "22b92ab5c800",
+        "cd2aea6dbc2b0ece447a92a44337abff9a8347399b909c5e55c1b4ff4aff10fe",
+    ),
+    "few_colors_cache11": (
+        "524946466c000000574542505650384c5f0000002f0880010075b10d9030cc65"
+        "3db3ddfb427ec8ffffffffffffcfe0ffffffe7ffd7fafff5beecffffffff0091"
+        "00c9506d1603c77941202032a921fd6a4173bc72a0fff1c68f3ecf74fafeee0e"
+        "988b6b352007036e32a9cb54f0ea4c09a5560600",
+        "cd2aea6dbc2b0ece447a92a44337abff9a8347399b909c5e55c1b4ff4aff10fe",
+    ),
+    "few_colors_no_sg": (
+        "524946465e000000574542505650384c520000002f0880010022b6011286b9ac"
+        "67b67b5fc80ff991cdf33dcc433cc2854082041ad08eb6f6c37f4e20122099e3"
+        "13d778c2c64d9ef43f5ef9e2c3e2d3f67fee0e5151e50eac2140dd62378b0b4a"
+        "b578a3545e00",
+        "cd2aea6dbc2b0ece447a92a44337abff9a8347399b909c5e55c1b4ff4aff10fe",
+    ),
+    "noise_no_sg_cache0": (
+        "5249464686010000574542505650384c790100002f08800110609b004090ada1"
+        "a0a5adc18626b121a8cdc6b668696c6a6e6c6c6a692e686a736aae035a9a8af6"
+        "a608821cdc4202213c846d0200413e706d68a8a1081a9a1a2388a03070ac0704"
+        "89205a82865a5a1a3aa2ada5a16a29ec857215ea0f57619b0040906869880e68"
+        "8cd6c61a23687788da9aa296a0a1a9a5a1a539885a1aa2a1a5a986a041211a43"
+        "70ee81c608da0a42d8260010a4076a6a68a9206888a0081c1a9ba3688a163b20"
+        "6849a2b129686b0b3a22088a4ea8a5351c9d5b72086a4b229eb1e49a48364a85"
+        "d83cb5c067a05d138b50a971005b98b9ab03f49091ffbe7a9a41d8353fdd2afd"
+        "f09ce9478748ac716152b6f928a9cf546eda71ad38fb95ae32ebf5a1064d4977"
+        "46c5b95c4998daa0529a376d07d69f79ef31753fb657fb2ce6697761bbe6aa72"
+        "1e827c6e6cc1d4c307fb1f15a2337d38b589e0b3880a43eda0b838075462524a"
+        "b2080d789a119f33bc63f0d6c12872e645bbbe7fc425ce826fc4ac440f00e5c9"
+        "1ca92107aed8cf2b10f5439b6300",
+        "634e37ebb141af7cfa94cee2913cc5f7af7daf666ed53f3ff1f73a6341e663dd",
+    ),
 }
 
 
 def test_webp_lossless_decodes_pinned_spatial_transform_streams():
-    """The predictor and cross-color inverse transforms reproduce the
+    """The predictor and cross-color inverse transforms, and color caches
+    and transform lists the encoder no longer chooses, reproduce the
     exact pixels of committed streams, so external VP8L files that use
     them keep decoding although the encoder never writes them."""
     import hashlib
@@ -1176,7 +1219,7 @@ def test_webp_lossless_decodes_pinned_spatial_transform_streams():
         decode_webp_lossless,
     )
 
-    for name, (stream, rgba_sha256) in _VP8L_SPATIAL_STREAMS.items():
+    for name, (stream, rgba_sha256) in _VP8L_PINNED_STREAMS.items():
         w, h, rgba = decode_webp_lossless(bytes.fromhex(stream))
         assert (w, h) == (9, 7), name
         assert hashlib.sha256(rgba).hexdigest() == rgba_sha256, name
@@ -1244,9 +1287,10 @@ def test_webp_crafted_contract_holes():
     assert probe_webp(vp8) == (20, 30, "VP8", 10)
     with pytest.raises(ValueError, match="imaging library"):
         decode_webp_lossless(vp8)
-    with pytest.raises(ValueError, match="distinct colors"):
-        enc_px = b"".join(struct.pack(">I", i) for i in range(320))  # 320 distinct
-        encode_webp_lossless(16, 20, enc_px, use_palette=True)
+    # past 256 distinct colors the encoder takes subtract-green instead
+    # of the color-indexing transform
+    enc_px = b"".join(struct.pack(">I", i) for i in range(320))
+    assert decode_webp_lossless(encode_webp_lossless(16, 20, enc_px))[2] == enc_px
 
 
 def test_webp_vp8x_wrapped_lossless_decodes():
