@@ -52,15 +52,6 @@ def event_epoch_sec(df: DataFrame, col: str = "ts") -> Column:
     return F.expr(f"CAST(({_epoch_us_sql(df, col)}) DIV 1000000 AS BIGINT)")
 
 
-def event_epoch_ns(df: DataFrame, col: str = "ts") -> Column:
-    """Epoch-nanoseconds BIGINT, dtype-adaptive. Sub-microsecond digits
-    are zero when the store is micros-resolution (current fixtures)."""
-    dtype = dict(df.dtypes).get(col)
-    if dtype not in ("timestamp", "timestamp_ntz"):
-        return F.col(col).cast("bigint")
-    return F.expr(f"CAST(({_epoch_us_sql(df, col)}) * 1000 AS BIGINT)")
-
-
 def date_path(epoch_ms: Column | str) -> Column:
     """epoch-ms long -> 'yyyy/MM/dd' string (F1, collector:863-867)."""
     col = F.col(epoch_ms) if isinstance(epoch_ms, str) else epoch_ms

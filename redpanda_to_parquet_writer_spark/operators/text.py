@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from redpanda_to_parquet_writer_spark.functions.ratio import exact_ratio
+
 #: default English-ish stopword markers present in the synthetic corpus
 STOPWORDS = ("the", "a")
 
@@ -172,8 +174,8 @@ def exact_dedup_hash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def _whitespace_token_cols(text_col: str) -> list[F.Column]:
-    """The whitespace-tokenizer stat columns (shared by `token_stats`
-    and the combined `tokenizer_stats`)."""
+    """The whitespace-tokenizer stat columns of `tokenizer_stats`:
+    n_chars, n_tokens, avg token length."""
     t = F.col(text_col)
     n_tokens = token_count(text_col)
     # single-space corpus: chars-without-spaces / n_tokens == avg token len
@@ -183,11 +185,6 @@ def _whitespace_token_cols(text_col: str) -> list[F.Column]:
         n_tokens.alias("n_tokens"),
         F.round(compact_len.cast("double") / n_tokens, 6).alias("avg_token_len"),
     ]
-
-
-def token_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Per-document token stats: n_tokens, avg token length, n_chars."""
-    return df.select(F.col(id_col), *_whitespace_token_cols(text_col))
 
 
 def stopword_stats(
@@ -215,8 +212,9 @@ BPE_PATTERN = r" ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\s]+"
 
 
 def _bpe_token_cols(text_col: str) -> list[F.Column]:
-    """The BPE-pre-tokenizer stat columns (shared by `bpe_token_stats`
-    and the combined `tokenizer_stats`).
+    """The BPE-pre-tokenizer stat columns of `tokenizer_stats`:
+    letter/digit/punct runs count separately, the way a subword
+    tokenizer's pre-tokenization does.
 
     The pattern is passed as a lit() column, NOT interpolated into
     F.expr — SQL string literals unescape backslashes, which silently
@@ -237,13 +235,6 @@ def _bpe_token_cols(text_col: str) -> list[F.Column]:
             6,
         ).alias("avg_bpe_token_len"),
     ]
-
-
-def bpe_token_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Token counting with a BPE-ish regex pre-tokenizer (vs whitespace
-    `token_stats`): letter/digit/punct runs count separately, the way a
-    subword tokenizer's pre-tokenization does. JVM-side regexp, no UDF."""
-    return df.select(F.col(id_col), *_bpe_token_cols(text_col))
 
 
 def tokenizer_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -357,13 +348,13 @@ def minhash_signature(
     any SQL engine). Min over the shingle SET equals min over the
     multiset, so dedupe first.
 
-    Plan shape (same lesson as simhash32, A/B-measured ~20% faster than
-    per-row higher-order-function mins): explode the distinct shingles
-    and take the k mins as vectorized hash aggregates — partial
-    aggregation collapses each doc's shingles to one k-counter row
-    map-side, so the shuffle carries k longs per doc, and codegen'd
-    min() beats interpreted array transforms. Docs with no shingles drop
-    out of the signature frame (they can't pair anyway).
+    Plan shape (same lesson as simhash_fingerprint, A/B-measured ~20%
+    faster than per-row higher-order-function mins): explode the
+    distinct shingles and take the k mins as vectorized hash aggregates
+    — partial aggregation collapses each doc's shingles to one
+    k-counter row map-side, so the shuffle carries k longs per doc, and
+    codegen'd min() beats interpreted array transforms. Docs with no
+    shingles drop out of the signature frame (they can't pair anyway).
     """
     ex = df.select(
         F.col(id_col), F.explode(F.array_distinct(F.col(ngram_col))).alias("__g")
@@ -429,46 +420,14 @@ def lsh_candidate_pairs(
     ).select("id_a", "id_b")
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    ngram_col: str,
-    threshold: float,
-    max_doc_freq: int | None = None,
+def _shingle_overlap(
+    df: DataFrame, id_col: str, ngram_col: str, max_doc_freq: int | None
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all doc pairs above threshold.
-
-    Inverted index: explode distinct shingles into per-shingle posting
-    lists, count pair co-occurrences, |A∪B| = |A| + |B| - |A∩B|. The
-    posting-list formulation is the scalable one (no cross join); pair
-    blowup is bounded by shingle-bucket sizes, and in production this
-    runs AFTER LSH banding restricts the pair space.
-
-    r18 priced-and-rejected (VERDICT r17 #6): hashing each shingle to
-    64 bits AFTER the explode (codegen'd xxhash64 projection, so the
-    posting exchange carries 8-byte longs instead of gram strings —
-    guide §2.3 narrower types). Outputs identical at sf0.1 (anti-join
-    0/0 both ways, 256 pairs) but interleaved fresh-process mins read a
-    WASH here (old {1.95, 2.15, 2.13}s vs new {1.98, 1.92, 2.10}s) and
-    only ~5-11% on containment — not enough to trade away the
-    documented EXACT string-keyed semantics, which 64-bit collisions
-    would silently bend at corpus scale (~10^11 distinct shingles ->
-    ~3e5 expected colliding bucket merges). Harness:
-    scripts/ab_hash_g_r18.py at rev f23f2ab.
-
-    `max_doc_freq` caps posting-list length: shingles appearing in more
-    docs are dropped BEFORE their posting list is collected, bounding
-    the per-shingle pair blowup at cap^2/2. Document-frequency capping
-    is the standard guard against boilerplate shingles; note it makes
-    the similarity *approximate* (a capped shingle no longer counts
-    toward intersections OR set sizes — sizes are recomputed from
-    surviving shingles so |A∪B| stays consistent), i.e. Jaccard over the
-    DF-filtered shingle space. The guard path costs two extra shuffles
-    of the exploded shingle rows (the DF window partitions on the
-    shingle, the size recompute on the doc id, then the posting groupBy
-    re-partitions on the shingle) — pay it only on corpora where a hot
-    shingle actually threatens the pair space.
-    """
+    """(id_a, id_b, na, nb, common) for every doc pair (id_a < id_b)
+    sharing at least one distinct shingle: na/nb are the two shingle-set
+    sizes and common the intersection size. The one posting-list counter
+    behind `jaccard_pairs` and `containment_pairs`; `max_doc_freq` drops
+    shingles found in more docs (see `jaccard_pairs`)."""
     # each doc's shingle-set size rides the exploded rows (computed
     # narrow, BEFORE the explode) so the posting-list pipeline is the
     # ONLY lineage — no second scan for sizes and no join-back (the
@@ -522,12 +481,55 @@ def jaccard_pairs(
     pairs = lhs.select("a", F.explode("ids").alias("b")).filter(
         F.col("a.id") < F.col("b.id")
     )
-    inter = pairs.groupBy(
+    return pairs.groupBy(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
         F.col("a.n").alias("na"),
         F.col("b.n").alias("nb"),
     ).agg(F.count("*").alias("common"))
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    ngram_col: str,
+    threshold: float,
+    max_doc_freq: int | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity for all doc pairs above threshold.
+
+    Inverted index: explode distinct shingles into per-shingle posting
+    lists, count pair co-occurrences, |A∪B| = |A| + |B| - |A∩B|. The
+    posting-list formulation is the scalable one (no cross join); pair
+    blowup is bounded by shingle-bucket sizes, and in production this
+    runs AFTER LSH banding restricts the pair space.
+
+    r18 priced-and-rejected (VERDICT r17 #6): hashing each shingle to
+    64 bits AFTER the explode (codegen'd xxhash64 projection, so the
+    posting exchange carries 8-byte longs instead of gram strings —
+    guide §2.3 narrower types). Outputs identical at sf0.1 (anti-join
+    0/0 both ways, 256 pairs) but interleaved fresh-process mins read a
+    WASH here (old {1.95, 2.15, 2.13}s vs new {1.98, 1.92, 2.10}s) and
+    only ~5-11% on containment — not enough to trade away the
+    documented EXACT string-keyed semantics, which 64-bit collisions
+    would silently bend at corpus scale (~10^11 distinct shingles ->
+    ~3e5 expected colliding bucket merges). Harness:
+    scripts/ab_hash_g_r18.py at rev f23f2ab.
+
+    `max_doc_freq` caps posting-list length: shingles appearing in more
+    docs are dropped BEFORE their posting list is collected, bounding
+    the per-shingle pair blowup at cap^2/2. Document-frequency capping
+    is the standard guard against boilerplate shingles; note it makes
+    the similarity *approximate* (a capped shingle no longer counts
+    toward intersections OR set sizes — sizes are recomputed from
+    surviving shingles so |A∪B| stays consistent), i.e. Jaccard over the
+    DF-filtered shingle space. The guard path costs two extra shuffles
+    of the exploded shingle rows (the DF window partitions on the
+    shingle, the size recompute on the doc id, then the posting groupBy
+    re-partitions on the shingle) — pay it only on corpora where a hot
+    shingle actually threatens the pair space.
+    """
+    inter = _shingle_overlap(df, id_col, ngram_col, max_doc_freq)
     jac = F.col("common").cast("double") / (F.col("na") + F.col("nb") - F.col("common"))
     return inter.select(
         "id_a", "id_b", F.round(jac, 6).alias("jaccard")
@@ -576,11 +578,6 @@ def simhash_fingerprint(
         term = F.when(F.col(f"bit{b}") > 0, F.lit(2 ** b).cast("long")).otherwise(F.lit(0).cast("long"))
         simhash = term if simhash is None else simhash + term
     return agg.select(F.col(id_col), simhash.alias("simhash"))
-
-
-def simhash32(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """32-bit SimHash (compat wrapper over simhash_fingerprint)."""
-    return simhash_fingerprint(df, text_col, id_col, bits=32)
 
 
 def _check_simhash_banding(max_hamming: int, n_bands: int, bits: int) -> None:
@@ -955,9 +952,8 @@ def repetition_stats(
     INTERPRETED higher-order calls and A/B-measured ~2.3x slower at
     sf0.1 (1.74s vs 0.75s).
 
-    Fractions round at 6 dp via exact integer half-up arithmetic
-    ((2*cnt*10^6 + n) DIV (2*n), one float division by 1e6) so any SQL
-    oracle reproduces them bitwise; the keep verdict compares those
+    Fractions follow the exact-ratio rule (`functions.ratio`) so any
+    SQL oracle reproduces them bitwise; the keep verdict compares those
     bitwise-stable doubles against the thresholds.
     """
     # max multiplicity == longest equal-run in the sorted array, and
@@ -1000,20 +996,15 @@ def repetition_stats(
         )
     )
 
-    def frac6(cnt: str, total: str) -> Column:
-        return F.expr(f"({cnt} * 2000000 + {total}) DIV (2 * {total})") / F.lit(
-            1000000.0
-        )
-
-    distinct_frac = frac6("__nd", "__n")
-    top_token_frac = frac6("__top", "__n")
+    distinct_frac = exact_ratio("__nd", "__n")
+    top_token_frac = exact_ratio("__top", "__n")
     return base.select(
         F.col(id_col),
         F.col("__n").alias("n_tokens"),
         F.col("__nd").alias("n_distinct"),
         distinct_frac.alias("distinct_frac"),
         top_token_frac.alias("top_token_frac"),
-        F.when(F.size("__bg") > 0, frac6("__topbg", "size(__bg)")).alias(
+        F.when(F.size("__bg") > 0, exact_ratio("__topbg", "size(__bg)")).alias(
             "top_bigram_frac"
         ),
         (
@@ -1077,11 +1068,7 @@ def unigram_logprob(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return per_doc.select(
         id_col,
         "n_tokens",
-        F.expr(
-            "CAST((CASE WHEN s < 0 THEN -1 ELSE 1 END)"
-            " * ((2 * CAST(abs(s) * 1000000 AS DECIMAL(38,0)) + n_tokens)"
-            "    DIV (2 * n_tokens)) AS DOUBLE) / 1000000.0"
-        ).alias("avg_logprob"),
+        exact_ratio("s", "n_tokens").alias("avg_logprob"),
     )
 
 
@@ -1098,47 +1085,13 @@ def containment_pairs(
     containment 1.0. The standard companion to `jaccard_pairs` in
     news/web dedup, where wrapper pages embed whole articles.
 
-    Same single-scan posting-list shape as `jaccard_pairs` (set sizes
-    ride the exploded rows, pair co-occurrence counts ARE the
-    intersection sizes, `max_doc_freq` caps hot shingles); the
-    threshold is applied by exact integer cross-multiplication and the
-    emitted score is exact half-up millionths — no double ratio crosses
-    an engine boundary.
+    Shares `_shingle_overlap` with `jaccard_pairs` (set sizes ride the
+    exploded rows, pair co-occurrence counts ARE the intersection sizes,
+    `max_doc_freq` caps hot shingles); the threshold is applied by exact
+    integer cross-multiplication and the emitted score follows the
+    exact-ratio rule — no double ratio crosses an engine boundary.
     """
-    shingles = df.select(
-        F.col(id_col), F.array_distinct(F.col(ngram_col)).alias("__gs")
-    ).select(
-        F.col(id_col),
-        F.size("__gs").alias("n"),
-        F.explode("__gs").alias("g"),
-    )
-    if max_doc_freq is not None:
-        # aggregate + join-back DF guard, not a shingle-keyed window —
-        # see jaccard_pairs (r12): the hot shingle the guard targets
-        # would own one unsplittable window task
-        iw = Window.partitionBy(id_col)
-        dfs = shingles.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
-        shingles = (
-            shingles.join(dfs, "g")
-            .filter(F.col("__df") <= max_doc_freq)
-            .withColumn("n", F.count(F.lit(1)).over(iw))
-            .select(F.col(id_col), F.col("n"), F.col("g"))
-        )
-    postings = (
-        shingles.groupBy("g")
-        .agg(F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("n"))).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    lhs = postings.select(F.explode("ids").alias("a"), "ids")
-    pairs = lhs.select("a", F.explode("ids").alias("b")).filter(
-        F.col("a.id") < F.col("b.id")
-    )
-    inter = pairs.groupBy(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        F.col("a.n").alias("na"),
-        F.col("b.n").alias("nb"),
-    ).agg(F.count("*").alias("common"))
+    inter = _shingle_overlap(df, id_col, ngram_col, max_doc_freq)
     thr_millionths = int(round(threshold * 1000000))
     return (
         inter.filter(
@@ -1148,10 +1101,7 @@ def containment_pairs(
             "id_a",
             "id_b",
             "common",
-            (
-                F.expr("(2 * common * 1000000 + least(na, nb)) DIV (2 * least(na, nb))")
-                / F.lit(1000000.0)
-            ).alias("containment"),
+            exact_ratio("common", "least(na, nb)").alias("containment"),
         )
     )
 
@@ -1469,12 +1419,9 @@ def dup_ngram_fraction(
             .alias("n_dup_positions"),
         )
     )
-    dup_frac = F.expr(
-        "(n_dup_positions * 2000000 + n_positions) DIV (2 * n_positions)"
-    ) / F.lit(1000000.0)
     return out.select(
         F.col(id_col),
         "n_positions",
         "n_dup_positions",
-        dup_frac.alias("dup_frac"),
+        exact_ratio("n_dup_positions", "n_positions").alias("dup_frac"),
     )

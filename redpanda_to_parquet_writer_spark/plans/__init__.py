@@ -7,7 +7,11 @@ sorts columns by name and hash-compares values.
 
 Floating-point convention: any column produced by arithmetic/aggregation
 is `round()`ed to a fixed scale on BOTH sides, so double summation-order
-differences between engines can't flip the hash. Columns that merely copy
+differences between engines can't flip the hash. Averages and ratios of
+exact (integral or decimal) aggregates go through
+`functions.ratio.exact_ratio` instead: exact integer half-away-from-zero
+rounding at 6 dp, which the oracle reproduces bit for bit where round()
+of a double would split the engines at .5 ties. Columns that merely copy
 stored values stay exact.
 
 Driver-window rotation (VERDICT r7 #1/#8)
@@ -53,13 +57,6 @@ branch:
   multimodal_container_probe         <- jpeg_probe + mp4_probe
   docs_tokenizer_stats               <- docs_token_stats + docs_bpe_token_stats
 
-The merged names are born never-covered, so they lead the round-8 window
-and the consolidated codec paths re-verify under the driver gate
-immediately (this also covers the r7-verdict-named driver-debt rows
-`multimodal_png_interlaced_decode` / `multimodal_jpeg_progressive_decode`
-/ `multimodal_jpeg_progressive_color`, whose codec paths now ride in
-their merged successors).
-
 The multimodal branches are built by one builder per image family
 (`plans/multimodal_queries.py`): `_image_roundtrip` (the four PNG
 branches, the GIF row and the blob stage of `streaming_media_ingest`,
@@ -104,35 +101,6 @@ _MERGED_QUERIES = {
     **curation_pipeline.QUERIES,
 }
 
-#: Tie-break among never-covered queries: names listed here lead, in this
-#: order (the queries the current round's verdict most wants verified);
-#: unlisted never-covered queries follow alphabetically. Everything
-#: covered sorts strictly after, by staleness.
-_NEVER_COVERED_ORDER = [
-    # the new-in-r7 queries the r7 driver window deliberately held out
-    "docs_bm25_topk",
-    "docs_hybrid_rrf_topk",
-    "docs_dup_ngram_fraction",
-    "docs_lang_temperature_sample",
-    "embeddings_kmeans_assign",
-    "ann_ivf_append_topk",
-    "multimodal_tiff_roundtrip",
-    "multimodal_webp_roundtrip",
-    "streaming_media_ingest",
-    # new in r8 (verdict-mandated: r7 #4 and #5)
-    "ann_ivfadc_compact_topk",
-    "ann_kmeans_recall_audit",
-    # r8 consolidation successors (see module docstring) — these carry
-    # the codec paths of the merged-away r7 driver-debt rows
-    "multimodal_jpeg_progressive_roundtrip",
-    "multimodal_png_roundtrip",
-    "multimodal_jpeg_baseline_roundtrip",
-    "multimodal_avi_decode",
-    "multimodal_container_probe",
-    "docs_tokenizer_stats",
-]
-
-
 def _green(row: dict) -> bool:
     """A driver row counts as coverage only if it fully passed: row count,
     schema AND value hash. A red/partial row leaves the query at the
@@ -172,16 +140,10 @@ def _last_green() -> dict[str, tuple[int, int]]:
 
 
 def _staleness_order(names) -> list[str]:
+    """Never-covered names first, alphabetically; then covered ones by
+    (round, window position) of their last green row."""
     last = _last_green()
-    head_rank = {n: i for i, n in enumerate(_NEVER_COVERED_ORDER)}
-
-    def key(n: str):
-        rnd, idx = last.get(n, (0, 0))
-        if rnd == 0:
-            return (0, head_rank.get(n, len(head_rank)), 0, n)
-        return (rnd, len(head_rank), idx, n)
-
-    return sorted(names, key=key)
+    return sorted(names, key=lambda n: (*last.get(n, (0, 0)), n))
 
 
 def _ordered(merged: dict) -> dict:

@@ -24,6 +24,7 @@ from redpanda_to_parquet_writer_spark.functions.dates import (
     event_epoch_sec,
     event_epoch_us,
 )
+from redpanda_to_parquet_writer_spark.functions.ratio import exact_ratio
 from redpanda_to_parquet_writer_spark.operators.dedup import anti_join_dedup
 from redpanda_to_parquet_writer_spark.sources.parquet import load_table
 
@@ -50,11 +51,7 @@ def topk_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             F.expr("CAST(s AS DOUBLE)").alias("total_value"),
-            F.expr(
-                "CAST((CASE WHEN s < 0 THEN -1 ELSE 1 END)"
-                " * ((2 * CAST(abs(s) * 1000000 AS DECIMAL(38,0)) + n_events)"
-                "    DIV (2 * n_events)) AS DOUBLE) / 1000000.0"
-            ).alias("avg_value"),
+            exact_ratio("s", "n_events").alias("avg_value"),
             "max_value",
             "n_events",
         )
@@ -113,13 +110,9 @@ def numeric_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.stddev(c), 6).alias(f"{c}__std"),
         ]
     wide = events.agg(*aggs)
-    mean_exprs = [
-        f"CAST((CASE WHEN `{c}__s` < 0 THEN -1 ELSE 1 END)"
-        f" * ((2 * CAST(abs(`{c}__s`) * 1000000 AS DECIMAL(38,0)) + `{c}__n`)"
-        f"    DIV (2 * `{c}__n`)) AS DOUBLE) / 1000000.0 AS `{c}__mean`"
-        for c in cols
-    ]
-    wide = wide.selectExpr("*", *mean_exprs)
+    wide = wide.select(
+        "*", *[exact_ratio(f"`{c}__s`", f"`{c}__n`").alias(f"{c}__mean") for c in cols]
+    )
     stack = ", ".join(
         f"'{c}', `{c}__min`, `{c}__max`, `{c}__mean`, `{c}__std`" for c in cols
     )
@@ -176,13 +169,9 @@ def dedup_content_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    # avg_k is rounded via EXACT integer arithmetic (half-up at 6 dp:
-    # (2*sum*1e6 + cnt) DIV (2*cnt), then one float division by 1e6) so
-    # Spark and the oracle produce bitwise-identical doubles. round(avg)
-    # on a double differs between engines in the last ulps on boundary
-    # values (Spark rounds the shortest decimal repr via BigDecimal,
-    # DuckDB the binary value) — invisible at 9 sig digits but fatal to
-    # the driver's value hash.
+    # avg_k follows the exact-ratio rule (functions/ratio.py), so Spark
+    # and the oracle produce bitwise-identical doubles; sum_k can be
+    # negative, and the mean rounds half away from zero
     return (
         events.select("event_type", k.alias("k"))
         .groupBy("event_type")
@@ -192,15 +181,7 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("k").isNull(), 1)).alias("null_k"),
         )
         .withColumn(
-            "avg_k",
-            F.when(
-                F.col("cnt_k") > 0,
-                F.expr(
-                    "(CAST(sum_k AS DECIMAL(38,0)) * 2000000 + cnt_k)"
-                    " DIV (2 * cnt_k)"
-                )
-                / F.lit(1000000.0),
-            ),
+            "avg_k", F.when(F.col("cnt_k") > 0, exact_ratio("sum_k", "cnt_k"))
         )
         .select("event_type", "sum_k", "avg_k", "null_k")
     )
@@ -421,11 +402,7 @@ def hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "window_start",
             "n",
             F.expr("CAST(s AS DOUBLE)").alias("total_value"),
-            F.expr(
-                "CAST((CASE WHEN s < 0 THEN -1 ELSE 1 END)"
-                " * ((2 * CAST(abs(s) * 1000000 AS DECIMAL(38,0)) + n)"
-                "    DIV (2 * n)) AS DOUBLE) / 1000000.0"
-            ).alias("avg_value"),
+            exact_ratio("s", "n").alias("avg_value"),
         )
     )
 
@@ -635,8 +612,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         (F.max("ts_sec") - F.min("ts_sec")).alias("span_sec"),
     )
-    # avg via exact integer half-up rounding (see json_extract_props) —
-    # bitwise-stable across engines; n_sessions >= 1 so no zero guard
+    # avg via the exact-ratio rule — bitwise-stable across engines
     return (
         per_session.groupBy("user_id")
         .agg(
@@ -644,14 +620,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_events").alias("n_events"),
             F.max("span_sec").alias("max_session_span_sec"),
         )
-        .withColumn(
-            "avg_session_events",
-            F.expr(
-                "(CAST(n_events AS DECIMAL(38,0)) * 2000000 + n_sessions)"
-                " DIV (2 * n_sessions)"
-            )
-            / F.lit(1000000.0),
-        )
+        .withColumn("avg_session_events", exact_ratio("n_events", "n_sessions"))
         .select(
             "user_id",
             "n_sessions",
@@ -972,8 +941,9 @@ ORACLES = {
         SELECT event_type,
                CAST(sum(k) AS BIGINT) AS sum_k,
                CASE WHEN count(k) > 0
-                    THEN CAST((sum(k) * 2000000 + count(k))
-                              // (2 * count(k)) AS BIGINT)
+                    THEN CAST((CASE WHEN sum(k) < 0 THEN -1 ELSE 1 END)
+                              * ((abs(sum(k)) * 2000000 + count(k))
+                                 // (2 * count(k))) AS BIGINT)
                          / 1000000.0
                END AS avg_k,
                count(*) FILTER (k IS NULL) AS null_k

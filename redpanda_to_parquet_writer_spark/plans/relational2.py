@@ -8,8 +8,7 @@ TPC-H plans do, staying within tables the driver provides.
 
 Floating-point discipline (see plans/__init__.py): money sums accumulate
 as decimal(18,4) (order-independent, exact); ratios of exact aggregates
-round via EXACT integer half-up arithmetic — (2*num*10^6 + den) DIV
-(2*den) then one float division by 1e6 — so Spark and DuckDB produce
+round through `functions.ratio.exact_ratio`, so Spark and DuckDB produce
 bitwise-identical doubles (round() on a double differs between engines in
 the last ulps on rounding-boundary values).
 """
@@ -20,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redpanda_to_parquet_writer_spark.functions.dates import event_epoch_sec
+from redpanda_to_parquet_writer_spark.functions.ratio import exact_ratio
 from redpanda_to_parquet_writer_spark.sources.parquet import load_table
 
 #: money expression accumulated exactly (same convention as
@@ -83,9 +83,8 @@ def promo_revenue_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: % of one quarter's revenue from PROMO parts.
 
     part broadcasts (small dim); revenue accumulates as decimal(18,4)
-    (exact). The percentage is derived from the two exact sums via
-    integer half-up rounding at 6 dp — scaling the decimals by 10^4
-    into integer units first — so both engines emit the same double.
+    (exact). The percentage is derived from the two exact sums through
+    the exact-ratio rule, so both engines emit the same double.
     """
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-09-01"))
@@ -107,15 +106,7 @@ def promo_revenue_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "promo_revenue"
         ),
         F.expr("CAST(round(__total, 2) AS DOUBLE)").alias("total_revenue"),
-        F.expr(
-            "(CAST(coalesce(__promo, 0) * 10000 AS DECIMAL(38,0)) * 200000000"
-            " + CAST(__total * 10000 AS DECIMAL(38,0)))"
-            " DIV (2 * CAST(__total * 10000 AS DECIMAL(38,0)))"
-        ).cast("double").alias("__n6"),
-    ).select(
-        "promo_revenue",
-        "total_revenue",
-        (F.col("__n6") / F.lit(1000000.0)).alias("promo_pct"),
+        exact_ratio("100 * coalesce(__promo, 0)", "__total").alias("promo_pct"),
     )
 
 

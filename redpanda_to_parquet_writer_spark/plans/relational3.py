@@ -9,9 +9,9 @@ Reference parity note: as with relational2, these extend the reference's
 scan/filter/agg surface (SURVEY §2) over the driver-provided tables.
 
 Floating-point discipline (see plans/__init__.py): money accumulates as
-decimal(18,4); per-group ratios round via EXACT integer half-up
-arithmetic — (2*num*10^6 + den) DIV (2*den), then ONE float division by
-1e6 — so Spark and DuckDB emit bitwise-identical doubles.
+decimal(18,4); per-group ratios round through `functions.ratio.exact_ratio`
+(exact integer half-away-from-zero arithmetic, then ONE float division by
+1e6), so Spark and DuckDB emit bitwise-identical doubles.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from redpanda_to_parquet_writer_spark.functions.ratio import exact_ratio
 from redpanda_to_parquet_writer_spark.sources.parquet import load_table
 
 _REV_DEC = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))"
@@ -151,19 +152,7 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "nation_revenue"
             ),
             F.expr("CAST(round(__tot, 2) AS DOUBLE)").alias("total_revenue"),
-            F.expr(
-                "(2 * CAST(coalesce(__nat, 0) * 10000 AS DECIMAL(38,0)) * 1000000"
-                " + CAST(__tot * 10000 AS DECIMAL(38,0)))"
-                " DIV (2 * CAST(__tot * 10000 AS DECIMAL(38,0)))"
-            )
-            .cast("double")
-            .alias("__n6"),
-        )
-        .select(
-            "order_year",
-            "nation_revenue",
-            "total_revenue",
-            (F.col("__n6") / F.lit(1000000.0)).alias("market_share"),
+            exact_ratio("coalesce(__nat, 0)", "__tot").alias("market_share"),
         )
         .orderBy("order_year")
     )
@@ -214,8 +203,9 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: ONE shuffle on user_id, then three chained window aggregates
     over the same partitioning (each stage's cutoff references the
     previous stage's window output; Spark stacks WindowExecs without
-    re-exchanging), then a global conditional count. Integer counts only
-    — exact in any engine.
+    re-exchanging), one per-user row on that partitioning, then a global
+    count of the users reaching each stage. Integer counts only — exact
+    in any engine.
     """
     from pyspark.sql import Window
 
@@ -246,16 +236,17 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).over(w),
         )
     )
-    return staged.agg(
-        F.countDistinct(F.when(F.col("m1").isNotNull(), F.col("user_id"))).alias(
-            "n_view"
-        ),
-        F.countDistinct(F.when(F.col("m2").isNotNull(), F.col("user_id"))).alias(
-            "n_click_after_view"
-        ),
-        F.countDistinct(F.when(F.col("m3").isNotNull(), F.col("user_id"))).alias(
-            "n_purchase_after_click"
-        ),
+    # one row per user over the window's own user_id partitioning (no
+    # second exchange), then plain counts: a countDistinct here would go
+    # through Spark's distinct-aggregate Expand rewrite, whose projection
+    # order varies between builds of the same query
+    per_user = staged.groupBy("user_id").agg(
+        *[F.max(m).alias(m) for m in ("m1", "m2", "m3")]
+    )
+    return per_user.agg(
+        F.count("m1").alias("n_view"),
+        F.count("m2").alias("n_click_after_view"),
+        F.count("m3").alias("n_purchase_after_click"),
     )
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redpanda_to_parquet_writer_spark.functions.dates import event_epoch_sec
+from redpanda_to_parquet_writer_spark.functions.ratio import exact_ratio
 from redpanda_to_parquet_writer_spark.operators.zorder import (
     interleave_sql,
     quantize_sql,
@@ -186,8 +187,8 @@ def events_value_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     before any window, so the rank window's frame is bounded by the
     value DOMAIN (exact-2dp metric), not the row count; the 5-row cut
     table broadcasts back over a fresh scan for the clip aggregate, and
-    the mean comes from exact micro-unit integer sums with half-up
-    division (values are non-negative).
+    the mean comes from exact micro-unit integer sums through the
+    exact-ratio rule.
     """
     events = load_table(spark, sf_dir, "events")
     base = events.select("event_type", "event_id", "value")
@@ -245,9 +246,8 @@ def events_value_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame
             "n_clipped_hi",
             "lo_cut",
             "hi_cut",
-            (
-                F.expr("(2 * su + n_events) DIV (2 * n_events)") / F.lit(1000000.0)
-            ).alias("winsorized_mean"),
+            # su is in micro-units: su / (n * 1e6) is the mean
+            exact_ratio("su", "n_events * 1000000").alias("winsorized_mean"),
         )
     )
 
@@ -375,14 +375,9 @@ def events_value_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         "value",
-        (
-            F.expr(
-                "CASE WHEN n = 1 THEN 0 ELSE"
-                " (2 * (CAST(rn AS DECIMAL(38,0)) - 1) * 1000000 + (n - 1))"
-                " DIV (2 * (n - 1)) END"
-            )
-            / F.lit(1000000.0)
-        ).alias("pct_rank"),
+        F.when(F.col("n") == 1, F.lit(0.0))
+        .otherwise(exact_ratio("rn - 1", "n - 1"))
+        .alias("pct_rank"),
     )
 
 
@@ -504,10 +499,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "from_type",
             "to_type",
             "n",
-            (
-                F.expr("(2 * n * 1000000 + row_total) DIV (2 * row_total)")
-                / F.lit(1000000.0)
-            ).alias("p"),
+            exact_ratio("n", "row_total").alias("p"),
         )
     )
 
@@ -854,8 +846,11 @@ ORACLES = {
                  AS n_clipped_hi,
                min(lo_cut) AS lo_cut,
                min(hi_cut) AS hi_cut,
-               CAST((2 * CAST(sum(CAST(round(cv * 1000000) AS BIGINT)) AS HUGEINT)
-                  + count(*)) // (2 * count(*)) AS BIGINT)
+               CAST((CASE WHEN sum(CAST(round(cv * 1000000) AS BIGINT)) < 0
+                          THEN -1 ELSE 1 END)
+                  * ((2 * abs(CAST(sum(CAST(round(cv * 1000000) AS BIGINT))
+                                   AS HUGEINT))
+                      + count(*)) // (2 * count(*))) AS BIGINT)
                  / 1000000.0 AS winsorized_mean
         FROM clipped GROUP BY event_type
     """,

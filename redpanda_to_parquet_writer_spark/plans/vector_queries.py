@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from redpanda_to_parquet_writer_spark.functions.ratio import exact_ratio
 from redpanda_to_parquet_writer_spark.operators import similarity as S
 from redpanda_to_parquet_writer_spark.sources.parquet import load_table
 
@@ -204,10 +205,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "n_exact",
         "n_matched",
-        (
-            F.expr("(n_matched * 2000000 + n_exact) DIV (2 * n_exact)")
-            / F.lit(1000000.0)
-        ).alias("recall"),
+        exact_ratio("n_matched", "n_exact").alias("recall"),
     )
 
 
@@ -266,10 +264,7 @@ def ann_ivfadc_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "n_exact",
         "n_matched",
-        (
-            F.expr("(n_matched * 2000000 + n_exact) DIV (2 * n_exact)")
-            / F.lit(1000000.0)
-        ).alias("recall"),
+        exact_ratio("n_matched", "n_exact").alias("recall"),
     )
 
 
@@ -1256,18 +1251,13 @@ def ann_kmeans_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _recall(matched: str):
-        return F.expr(
-            f"({matched} * 2000000 + n_exact) DIV (2 * n_exact)"
-        ) / F.lit(1000000.0)
-
     return per_q.select(
         "query_id",
         "n_exact",
         "n_matched_kmeans",
         "n_matched_det",
-        _recall("n_matched_kmeans").alias("recall_kmeans"),
-        _recall("n_matched_det").alias("recall_det"),
+        exact_ratio("n_matched_kmeans", "n_exact").alias("recall_kmeans"),
+        exact_ratio("n_matched_det", "n_exact").alias("recall_det"),
         (F.col("n_matched_kmeans") >= F.col("n_matched_det")).alias(
             "kmeans_not_worse"
         ),

@@ -433,13 +433,18 @@ def fuzz_bm25_topk(rng, spark) -> bool:
 
 
 def fuzz_jaccard_max_doc_freq(rng, spark) -> bool:
-    """`jaccard_pairs(max_doc_freq=...)` against a PURE-PYTHON oracle:
-    Jaccard over the DF-filtered shingle space, computed driver-side
-    from the collected shingle sets (threshold 0 so no rounded-boundary
-    filter flake; values compare within 2e-6 of the exact rational)."""
+    """`jaccard_pairs` and `containment_pairs` (both `max_doc_freq=...`,
+    one shared posting-list counter) against a PURE-PYTHON oracle:
+    Jaccard and containment over the DF-filtered shingle space, computed
+    driver-side from the collected shingle sets of one draw (threshold 0
+    so no rounded-boundary filter flake; Jaccard compares within 2e-6 of
+    the exact rational, containment exactly against Decimal half-up)."""
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
     from fractions import Fraction
 
     from redpanda_to_parquet_writer_spark.operators.text import (
+        containment_pairs,
         jaccard_pairs,
         with_ngrams,
     )
@@ -447,20 +452,24 @@ def fuzz_jaccard_max_doc_freq(rng, spark) -> bool:
     df = _random_docs(rng, spark)
     cap = rng.randint(1, 6)
     grams = with_ngrams(df, "text", 2)
-    got = {
+    got_j = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in jaccard_pairs(grams, "doc_id", "ngrams", 0.0, max_doc_freq=cap).collect()
+    }
+    got_c = {
+        (r["id_a"], r["id_b"]): (r["common"], r["containment"])
+        for r in containment_pairs(
+            grams, "doc_id", "ngrams", 0.0, max_doc_freq=cap
+        ).collect()
     }
 
     sets = {
         r["doc_id"]: set(r["ngrams"] or [])
         for r in grams.select("doc_id", "ngrams").collect()
     }
-    from collections import Counter
-
     dfc = Counter(g for s in sets.values() for g in s)
     surviving = {d: {g for g in s if dfc[g] <= cap} for d, s in sets.items()}
-    expected = {}
+    want_j, want_c = {}, {}
     ids = sorted(surviving)
     for i, a in enumerate(ids):
         for bb in ids[i + 1 :]:
@@ -468,10 +477,15 @@ def fuzz_jaccard_max_doc_freq(rng, spark) -> bool:
             if common == 0:
                 continue
             union = len(surviving[a]) + len(surviving[bb]) - common
-            expected[(a, bb)] = Fraction(common, union)
-    if set(got) != set(expected):
+            want_j[(a, bb)] = Fraction(common, union)
+            smaller = min(len(surviving[a]), len(surviving[bb]))
+            share = (Decimal(common) / smaller).quantize(
+                Decimal("0.000001"), rounding=ROUND_HALF_UP
+            )
+            want_c[(a, bb)] = (common, float(share))
+    if set(got_j) != set(want_j) or got_c != want_c:
         return False
-    return all(abs(got[p] - float(expected[p])) < 2e-6 for p in got)
+    return all(abs(got_j[p] - float(want_j[p])) < 2e-6 for p in got_j)
 
 
 def fuzz_lsh_salted_bucket_cap(rng, spark) -> bool:

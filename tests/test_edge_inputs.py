@@ -23,13 +23,11 @@ def edge_df(spark):
 @pytest.mark.parametrize(
     "op",
     [
-        T.token_stats,
         T.stopword_stats,
         T.language_id,
         T.quality_score,
-        T.bpe_token_stats,
         T.tokenizer_stats,
-        T.simhash32,
+        T.simhash_fingerprint,
         T.exact_dedup_hash,
     ],
     ids=lambda f: f.__name__,
@@ -40,21 +38,29 @@ def test_text_ops_survive_edge_inputs(edge_df, op):
 
 
 def test_tokenizer_stats_matches_both_tokenizers(edge_df):
-    """The r8-consolidated single-scan operator must agree column-for-
-    column with the two standalone tokenizers it merged."""
-    ws = {r["doc_id"]: r for r in T.token_stats(edge_df, "text", "doc_id").collect()}
-    bpe = {r["doc_id"]: r for r in T.bpe_token_stats(edge_df, "text", "doc_id").collect()}
-    both = {r["doc_id"]: r for r in T.tokenizer_stats(edge_df, "text", "doc_id").collect()}
-    assert set(both) == set(ws) == set(bpe)
-    for doc_id, row in both.items():
-        for c in ("n_chars", "n_tokens", "avg_token_len"):
-            assert row[c] == ws[doc_id][c], (doc_id, c)
-        for c in ("n_bpe_tokens", "n_distinct_bpe_tokens", "avg_bpe_token_len"):
-            assert row[c] == bpe[doc_id][c], (doc_id, c)
+    """Both tokenizers' column sets of the single-scan operator, derived
+    by hand: whitespace tokens of the trimmed text (an empty text is one
+    empty token), BPE runs " ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\\s]+" with
+    their lengths trimmed; a NULL text yields NULL stats."""
+    cols = (
+        "n_chars", "n_tokens", "avg_token_len",
+        "n_bpe_tokens", "n_distinct_bpe_tokens", "avg_bpe_token_len",
+    )
+    want = {
+        1: (15, 3, 4.333333, 3, 3, 4.333333),  # "hello world foo": 13/3
+        2: (0, 1, 0.0, 0, 0, None),
+        3: (None,) * 6,
+        4: (6, 1, 6.0, 1, 1, 6.0),
+    }
+    got = {
+        r["doc_id"]: tuple(r[c] for c in cols)
+        for r in T.tokenizer_stats(edge_df, "text", "doc_id").collect()
+    }
+    assert got == want
 
 
 def test_empty_doc_ratios_null_not_crash(edge_df):
-    bpe = {r["doc_id"]: r for r in T.bpe_token_stats(edge_df, "text", "doc_id").collect()}
+    bpe = {r["doc_id"]: r for r in T.tokenizer_stats(edge_df, "text", "doc_id").collect()}
     assert bpe[2]["n_bpe_tokens"] == 0
     assert bpe[2]["avg_bpe_token_len"] is None
     q = {r["doc_id"]: r for r in T.quality_score(edge_df, "text", "doc_id").collect()}

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from redpanda_to_parquet_writer_spark.functions.dates import (
     event_epoch_ms,
-    event_epoch_ns,
     event_epoch_sec,
     event_epoch_us,
 )
@@ -39,7 +38,6 @@ def test_dtypes_as_expected(frames):
         (event_epoch_us, US),
         (event_epoch_ms, US // 1_000),
         (event_epoch_sec, US // 1_000_000),
-        (event_epoch_ns, US * 1_000),
     ],
 )
 def test_epoch_helpers_agree_across_dtypes(frames, helper, expected):

@@ -1,26 +1,23 @@
-"""Property test for the exact-average formula (r10, hardened r11).
+"""Property tests for the exact-ratio rule (`functions/ratio.py`).
 
-Four query lineages (hourly_event_stats, topk_events_by_type,
-numeric_profile_events means, docs_unigram_logprob) compute
-round(sum/n, 6) as
+Every averaged or ratio column of the registry computes round(num/den, 6)
+as
 
-    sign(s) * ((2 * |s|*1e6 + n) DIV (2 * n)) / 1e6
+    sign(num) * ((2 * |num|*1e6 + den) DIV (2 * den)) / 1e6
 
-on a DECIMAL(.,≤6dp) sum s and a BIGINT count n, because round() of a
-double ratio splits Spark from DuckDB at exact .5 boundaries (two sf1
-failures). This pins the formula itself against Python Decimal
-ROUND_HALF_UP (= half away from zero) on BOTH engines over randomized
-inputs plus every boundary shape that has bitten: exact ties, negative
-ties, values one micro-ulp either side of a tie, zero sums, n=1.
+through `exact_ratio`, because round() of a double ratio splits Spark
+from DuckDB at exact .5 boundaries (two sf1 failures). The Spark side
+below drives `exact_ratio` itself; the DuckDB side runs the oracles'
+form of the same rule. Both are pinned against Python Decimal
+ROUND_HALF_UP (= half away from zero) over randomized inputs plus every
+boundary shape that has bitten: exact ties, negative ties, values one
+micro-ulp either side of a tie, zero sums, n=1.
 
-r11 overflow hardening: the r10 formula cast the micro-unit numerator
-to BIGINT, which wraps/errors once 2·|s|·1e6 > 2^63 — i.e. a group sum
-of only ~4.6e12, reachable at cluster scale (ADVICE r10 #1). Production
-now keeps the numerator in DECIMAL(38,0) (Spark) / HUGEINT (DuckDB);
-the only remaining int64 term is the QUOTIENT — the rounded mean in
-micro-units — so the bound moved from the group SUM (~4.6e12) to the
-group MEAN (~9.2e12), six decades looser and independent of row count.
-The cases below deliberately cross the old 2^63 numerator wall.
+Overflow bound: the micro-unit numerator is carried in DECIMAL(38,0)
+(Spark) / HUGEINT (DuckDB), so the only int64 term is the QUOTIENT, the
+rounded ratio in micro-units: the bound is a ratio under ~9.2e12,
+independent of the sum and the row count. The cases below deliberately
+cross the 2^63 numerator wall a BIGINT numerator would hit.
 
 Two-tier contract, because the output column is a DOUBLE:
   1. |mean|·1e6 < 2^53 (mean under ~9.0e9): the emitted double is the
@@ -42,13 +39,10 @@ from decimal import ROUND_HALF_UP, Decimal
 import duckdb
 import pytest
 
-# the production formula, verbatim modulo the integer-division operator
-# and the 128-bit integer carrier of each engine
-_SPARK_AVG = (
-    "CAST((CASE WHEN s < 0 THEN -1 ELSE 1 END)"
-    " * ((2 * CAST(abs(s) * 1000000 AS DECIMAL(38,0)) + n)"
-    "    DIV (2 * n)) AS DOUBLE) / 1000000.0"
-)
+from redpanda_to_parquet_writer_spark.functions.ratio import exact_ratio
+
+# the oracles' form of the rule: DuckDB's integer division and its
+# 128-bit integer carrier
 _DUCK_AVG = (
     # the quotient narrows to BIGINT before the double cast: DuckDB's
     # NEGATIVE hugeint->double conversion is not correctly rounded
@@ -139,7 +133,7 @@ def test_exact_avg_formula_matches_decimal_half_up(engine, spark):
         )
         got = {
             r["i"]: r["avg"]
-            for r in df.selectExpr("i", f"{_SPARK_AVG} AS avg").collect()
+            for r in df.select("i", exact_ratio("s", "n").alias("avg")).collect()
         }
     else:
         con = duckdb.connect()
@@ -168,3 +162,120 @@ def test_exact_avg_formula_matches_decimal_half_up(engine, spark):
             if float(got[i]).hex() != exact.hex():
                 bad.append((s, n, got[i], exact))
     assert not bad, f"{len(bad)} mismatches, first: {bad[:3]}"
+
+
+def _half_up(num: Decimal, den: int) -> float:
+    return float((num / den).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+
+def test_exact_ratio_count_ratios(spark):
+    """The recall, fraction and share sites pass BIGINT counts (and
+    `100 * count` for percentages): non-negative, exact, NULL on a zero
+    denominator instead of an ANSI divide-by-zero failure. A compound
+    SQL operand (pct_rank's `n - 1`) binds as one value."""
+    rng = random.Random(20261019)
+    rows = [(0, 0, 0), (1, 1, 3), (2, 2, 3), (3, 1, 8), (4, 7, 7), (5, 5, 0)]
+    for i in range(6, 300):
+        den = rng.randint(1, 10**9)
+        rows.append((i, rng.randint(0, den), den))
+    df = spark.createDataFrame(rows, "i long, c long, d long")
+    got = {
+        r["i"]: (r["frac"], r["pct"], r["plus1"])
+        for r in df.select(
+            "i",
+            exact_ratio("c", "d").alias("frac"),
+            exact_ratio("100 * c", "d").alias("pct"),
+            exact_ratio("c", "d + 1").alias("plus1"),
+        ).collect()
+    }
+    assert dict(df.select(exact_ratio("c", "d").alias("x")).dtypes)["x"] == "double"
+    for i, c, d in rows:
+        assert got[i][2].hex() == _half_up(Decimal(c), d + 1).hex(), (c, d)
+        if d == 0:
+            assert got[i][:2] == (None, None), (c, d)
+            continue
+        assert got[i][0].hex() == _half_up(Decimal(c), d).hex(), (c, d)
+        assert got[i][1].hex() == _half_up(Decimal(100 * c), d).hex(), (c, d)
+
+
+def test_negative_means_round_half_away_from_zero(spark, tmp_path):
+    """`json_extract_props.avg_k` and `events_value_winsorized_stats`
+    average sums that can be negative. Integer division truncates toward
+    zero in both engines, so the unsigned form (2s+n) DIV 2n rounds a
+    negative mean toward zero (-7/3 came out -2.333332, -7/128 as
+    -0.054687). Engine and oracle must both round half away from zero."""
+    import datetime
+
+    from redpanda_to_parquet_writer_spark.plans import ORACLES, QUERIES
+    from redpanda_to_parquet_writer_spark.plans.relational5 import (
+        WINSOR_HI_PCT,
+        WINSOR_LO_PCT,
+    )
+
+    rng = random.Random(7)
+    groups = {
+        "a": [(-0.01, -3), (0.0, 0), (0.0, 0)],
+        "b": [(-1.25, -2), (-2.5, -1), (0.75, -4)],
+        "c": [(round(rng.uniform(-50, 10), 2), rng.randint(-99, 20)) for _ in range(40)],
+        # an exact negative tie: -7/128 = -0.0546875
+        "d": [(-0.01, -1)] * 7 + [(0.0, 0)] * 121,
+    }
+    rows = []
+    for etype, vals in groups.items():
+        for v, k in vals:
+            eid = len(rows)
+            ts = datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=eid)
+            rows.append((eid, ts, eid % 5, etype, v, f'{{"k": {k}}}'))
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
+        " value double, props string",
+    ).coalesce(1).write.parquet(f"{sf}/events.parquet")
+
+    want_k, want_w = {}, {}
+    for etype, vals in groups.items():
+        ks = [k for _, k in vals]
+        want_k[etype] = _half_up(Decimal(sum(ks)), len(ks))
+        ranked = sorted(
+            (v, eid) for eid, _, _, t, v, _ in rows if t == etype
+        )
+        n = len(ranked)
+        lo = ranked[((n - 1) * WINSOR_LO_PCT) // 100][0]
+        hi = ranked[((n - 1) * WINSOR_HI_PCT) // 100][0]
+        su = sum(round(min(max(v, lo), hi) * 1_000_000) for v, _ in ranked)
+        want_w[etype] = _half_up(Decimal(su) / 1_000_000, n)
+
+    spark_k = {
+        r["event_type"]: r["avg_k"]
+        for r in QUERIES["json_extract_props"](spark, sf).collect()
+    }
+    spark_w = {
+        r["event_type"]: r["winsorized_mean"]
+        for r in QUERIES["events_value_winsorized_stats"](spark, sf).collect()
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'")
+    duck_k = {
+        r[0]: r[1]
+        for r in con.execute(
+            f"SELECT event_type, avg_k FROM ({ORACLES['json_extract_props']})"
+        ).fetchall()
+    }
+    duck_w = {
+        r[0]: r[1]
+        for r in con.execute(
+            "SELECT event_type, winsorized_mean FROM"
+            f" ({ORACLES['events_value_winsorized_stats']})"
+        ).fetchall()
+    }
+    assert want_k["b"] == -2.333333 and want_k["d"] == -0.054688
+    assert want_w["a"] == -0.003333
+    for got in (spark_k, duck_k):
+        assert {t: v.hex() for t, v in got.items()} == {
+            t: v.hex() for t, v in want_k.items()
+        }
+    for got in (spark_w, duck_w):
+        assert {t: v.hex() for t, v in got.items()} == {
+            t: v.hex() for t, v in want_w.items()
+        }

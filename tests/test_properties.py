@@ -1377,7 +1377,14 @@ def test_png_adam7_truncated_pass_raises():
         decode_png(bad)
 
 
-# --- r8 merged tokenizer: single-scan operator vs the two standalone ones
+# --- r8 merged tokenizer: single-scan operator vs a pure-Python reference
+
+
+def _round6(x: float) -> float:
+    """Spark's round(double, 6): half-up on the shortest decimal repr."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
@@ -1391,21 +1398,35 @@ def test_png_adam7_truncated_pass_raises():
         max_size=8,
     )
 )
-def test_tokenizer_stats_fuzz_matches_standalone_ops(spark, texts):
-    """docs_tokenizer_stats' single-scan operator must agree with
-    token_stats + bpe_token_stats on arbitrary text — unicode,
-    whitespace runs, punctuation-only and empty strings included."""
+def test_tokenizer_stats_fuzz_matches_python_reference(spark, texts):
+    """docs_tokenizer_stats' single-scan operator against both
+    tokenizers written in Python (trim strips spaces only, Java's \\s
+    is [ \\t\\n\\x0b\\f\\r]) on arbitrary text — unicode, whitespace
+    runs, punctuation-only and empty strings included."""
+    import re
+
     from redpanda_to_parquet_writer_spark.operators import text as T
 
+    ws = "[ \t\n\x0b\f\r]+"
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
-    ws = {r["doc_id"]: r.asDict() for r in T.token_stats(df, "text", "doc_id").collect()}
-    bpe = {r["doc_id"]: r.asDict() for r in T.bpe_token_stats(df, "text", "doc_id").collect()}
-    both = {r["doc_id"]: r.asDict() for r in T.tokenizer_stats(df, "text", "doc_id").collect()}
-    for i, row in both.items():
-        expected = {**ws[i], **bpe[i]}
-        assert row == expected, (texts[i], row, expected)
+    got = {r["doc_id"]: r.asDict() for r in T.tokenizer_stats(df, "text", "doc_id").collect()}
+    for i, t in enumerate(texts):
+        toks = re.split(ws, t.strip(" "))
+        bpe = re.findall(T.BPE_PATTERN, t)
+        expected = {
+            "doc_id": i,
+            "n_chars": len(t),
+            "n_tokens": len(toks),
+            "avg_token_len": _round6(len(re.sub(ws, "", t)) / len(toks)),
+            "n_bpe_tokens": len(bpe),
+            "n_distinct_bpe_tokens": len(set(bpe)),
+            "avg_bpe_token_len": (
+                _round6(sum(len(b.strip(" ")) for b in bpe) / len(bpe)) if bpe else None
+            ),
+        }
+        assert got[i] == expected, (t, got[i], expected)
 
 
 def test_salted_dedup_rewrites_survive_degenerate_corpus(spark):
