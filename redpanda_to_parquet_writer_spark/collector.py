@@ -38,7 +38,7 @@ from redpanda_to_parquet_writer_spark.operators.validate import (
     internal_consistency,
 )
 from redpanda_to_parquet_writer_spark.streaming.ingest import ingest_available_now
-from redpanda_to_parquet_writer_spark.streaming.sink import _sink_exists, existing_max_offsets
+from redpanda_to_parquet_writer_spark.streaming.sink import existing_max_offsets
 
 
 @dataclass
@@ -49,12 +49,18 @@ class TopicRunReport:
     topic: str
     fmt: str
     seconds: float
+    #: rows this run committed, over the base table and any schema
+    #: versions (not the table total)
     rows_written: int
     validation: CountReport | None = None
     #: listener-observed micro-batch count / ingest rate (0 when the
     #: source produced no progress events, e.g. an already-drained topic)
     n_batches: int = 0
     rows_per_sec: float = 0.0
+    #: rows the base table held before the run, and rows this run
+    #: committed to the base table: V1 expects their sum
+    rows_before: int = 0
+    base_rows_written: int = 0
 
 
 @dataclass
@@ -92,7 +98,11 @@ class Collector:
         return f"{self.cfg.output_dir}/{topic}"
 
     def run_topic(self, topic: str, sample: list[bytes] | None = None) -> TopicRunReport:
-        """One topic end-to-end: resume -> drain -> count."""
+        """One topic end-to-end: resume -> drain -> count.
+
+        The resume scan also counts the rows the base table holds, and
+        the drain's ledger counts the rows it committed, so nothing
+        re-reads the table here."""
         from redpanda_to_parquet_writer_spark.streaming.metrics import (
             IngestMetricsListener,
         )
@@ -108,7 +118,7 @@ class Collector:
         listener = IngestMetricsListener().attach(self.spark)
         query_name = f"ingest-{topic}"
         try:
-            ingest_available_now(
+            ledger = ingest_available_now(
                 self.spark,
                 source,
                 root,
@@ -120,9 +130,6 @@ class Collector:
             listener.wait_quiesce(query_name=query_name)
         finally:
             listener.detach(self.spark)
-        # an empty topic commits no file: nothing to count, while any
-        # other read error propagates
-        rows = self.spark.read.parquet(root).count() if _sink_exists(self.spark, root) else 0
         # filter by query name: concurrent per-topic drains (ThreadPool
         # over run_topic) share the session listener bus, so this topic
         # must roll up ONLY its own query's batches
@@ -133,9 +140,11 @@ class Collector:
             topic=topic,
             fmt=fmt,
             seconds=time.monotonic() - t0,
-            rows_written=rows,
+            rows_written=sum(ledger.values()),
             n_batches=n_batches,
             rows_per_sec=rate,
+            rows_before=resume.rows,
+            base_rows_written=ledger.get(root, 0),
         )
 
     def run(
@@ -156,8 +165,12 @@ class Collector:
         for topic in topics:
             report = self.run_topic(topic, samples.get(topic))
             if not self.cfg.skip_validation:
+                # V1: the base table re-read once, against the rows it
+                # held before plus the rows the writer committed to it
                 report.validation = internal_consistency(
-                    self.spark, self.output_root(topic), report.rows_written
+                    self.spark,
+                    self.output_root(topic),
+                    report.rows_before + report.base_rows_written,
                 )
             run.reports.append(report)
         if high_watermarks and not self.cfg.skip_validation:

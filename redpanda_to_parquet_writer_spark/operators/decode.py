@@ -160,6 +160,17 @@ def decode_json(df: DataFrame, schema: StructType, value_col: str = "value") -> 
     )
 
 
+def msgpack_to_json(b) -> str | None:
+    """One MessagePack payload -> compact JSON text; None for a null or
+    undecodable payload (it then takes the raw_value path)."""
+    if b is None:
+        return None
+    try:
+        return json.dumps(msgpack_codec.unpackb(bytes(b)), separators=(",", ":"))
+    except Exception:
+        return None
+
+
 def msgpack_to_json_udf():
     """Arrow-vectorized msgpack-bytes -> JSON-string decoder.
 
@@ -171,15 +182,7 @@ def msgpack_to_json_udf():
     from pyspark.sql.functions import pandas_udf
 
     def _decode(values):
-        def one(b):
-            if b is None:
-                return None
-            try:
-                return json.dumps(msgpack_codec.unpackb(bytes(b)), separators=(",", ":"))
-            except Exception:
-                return None
-
-        return values.map(one)
+        return values.map(msgpack_to_json)
 
     # annotations set as OBJECTS: the module's `from __future__ import
     # annotations` turns inline hints into strings that pyspark's

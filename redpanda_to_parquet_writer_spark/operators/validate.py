@@ -5,9 +5,11 @@ The reference's post-run validation:
   - external: Parquet per-partition counts == Kafka high watermarks,
     with PASS / WARNING / ERROR statuses per partition
 
-Spark-side, the written-count comes from the StreamingQueryProgress /
-writer-side counters; the high-watermark map comes from the broker admin
-API (driver-side). Both checks are single projected-scan aggregations.
+Spark-side, the written count comes from the writer itself: each write
+observes `count(1)` on the rows it commits, and the collector adds them
+to the count its resume scan found before the run. The high-watermark
+map comes from the broker admin API (driver-side). Both checks are
+single projected-scan aggregations.
 """
 
 from __future__ import annotations
@@ -37,7 +39,11 @@ class CountReport:
 
 def internal_consistency(spark: SparkSession, root: str, written_count: int) -> CountReport:
     """V1: writer-claimed count vs re-read count (collector:1479-1480).
-    A root with no data file (an empty topic) holds 0 rows."""
+
+    `written_count` is what the table should hold: the rows it held
+    before the run plus the rows the run's writes committed to it. A
+    root with no data file (an empty topic) holds 0 rows. Fewer rows
+    than expected is ERROR (a lost file or batch), more is WARNING."""
     actual = spark.read.parquet(root).count() if _sink_exists(spark, root) else 0
     if actual == written_count:
         status = PASS

@@ -15,11 +15,37 @@ summary and the tests.
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from threading import Lock
 
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
+
+
+#: (query id, batch id) -> rows the micro-batch's foreachBatch body read,
+#: for the most recent `_ROWS_READ_KEPT` batches (see `record_rows_read`).
+#: Process-wide because the body and the listeners share only the
+#: session; every streaming query has a fresh id, so no query reads
+#: another's entries.
+_ROWS_READ: OrderedDict[tuple[str, int], int] = OrderedDict()
+_ROWS_READ_KEPT = 4096
+_ROWS_READ_LOCK = Lock()
+
+
+def record_rows_read(query_id: str, batch_id: int, rows: int) -> None:
+    """Record the rows a foreachBatch body read from its micro-batch; the
+    listener reports them instead of Spark's `numInputRows`.
+
+    Spark counts every pass over an uncached micro-batch: the schema
+    sample re-reads its head, and the merge path's date pass all of it.
+    The body counts one full pass with an `Observation` and records it
+    here before the batch's progress event is posted. A batch older than
+    the last `_ROWS_READ_KEPT` reports Spark's figure."""
+    with _ROWS_READ_LOCK:
+        _ROWS_READ[(query_id, batch_id)] = rows
+        while len(_ROWS_READ) > _ROWS_READ_KEPT:
+            _ROWS_READ.popitem(last=False)
 
 
 @dataclass
@@ -70,16 +96,20 @@ class IngestMetricsListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
+        with _ROWS_READ_LOCK:
+            rows = _ROWS_READ.get((str(p.id), p.batchId), p.numInputRows)
+        # Spark's rate is its own row count over the processing time
+        rate = (p.processedRowsPerSecond or 0.0) * rows / p.numInputRows if p.numInputRows else 0.0
         with self._lock:
             self._batches[(str(p.id), p.batchId)] = BatchMetric(
                 query_id=str(p.id),
                 batch_id=p.batchId,
-                input_rows=p.numInputRows,
+                input_rows=rows,
                 duration_ms=sum(
                     p.durationMs.get(k, 0)
                     for k in ("addBatch", "getBatch", "commitOffsets")
                 ),
-                rows_per_sec=p.processedRowsPerSecond or 0.0,
+                rows_per_sec=rate,
             )
 
     def onQueryIdle(self, event) -> None:  # pragma: no cover - no-op

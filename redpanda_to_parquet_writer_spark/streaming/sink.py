@@ -9,18 +9,25 @@ Reference parity (SURVEY 2.1/2.9):
     parallel tasks of one job.
   - S12 atomic write: free — the file-commit protocol stages task output
     and renames on commit.
-  - O1 clustered storage: sortWithinPartitions(partition, offset) orders
-    rows inside each file without a global sort.
+  - O1 clustered storage: sortWithinPartitions(date, topic, partition,
+    offset) orders rows inside each file without a global sort. The sort
+    leads with `date` because the planned write sorts each task by the
+    partition column: a local sort that does not lead with it is
+    replaced by that sort, and the files lose their key order.
   - T1 offset recovery: `existing_max_offsets` re-derives per-partition
     resume offsets by scanning ONLY the key columns of the output
     (projected read, S7 — Catalyst prunes to 2 columns), exactly the
     reference's `get_existing_max_offsets` (collector:468-530). Used as
-    the cross-run backstop when no checkpoint exists.
+    the cross-run backstop when no checkpoint exists. The same aggregate
+    also counts the rows the table holds, so a run knows its starting
+    total without a second scan.
+  - Written-row counts come from the write itself: `write_date_partitioned`
+    observes `count(1)` on the frame it commits and returns it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from redpanda_to_parquet_writer_spark.config import EngineConfig
@@ -43,29 +50,35 @@ def write_date_partitioned(
     root: str,
     cfg: EngineConfig | None = None,
     mode: str = "append",
-) -> None:
-    """Write a prepared (date-columned) frame as hive-partitioned Parquet.
+) -> int:
+    """Write a prepared (date-columned) frame as hive-partitioned Parquet
+    and return the number of rows it committed.
 
     zstd + large row groups per the reference's compression findings
     (collector:97-99); clustered by (partition, offset) inside each file
-    (O1, collector:858-860).
+    (O1, collector:858-860). The sort leads with `date`, the order the
+    planned write needs, so Spark keeps it instead of replacing it.
 
     Rows are repartitioned on the date key first: without this, every
     task holds every date and the job writes tasks x dates files (e.g.
     32 x 30 = 960 tiny files at sf0.1 — measured; with clustering, 30).
+
+    The count is an `Observation` of `count(1)` on the rows that reach
+    the writer, filled in by the write job itself: no second scan.
     """
     cfg = cfg or EngineConfig()
-    sort_cols = [c for c in ("kafka_topic", "kafka_partition", "kafka_offset") if c in df.columns]
-    if "date" in df.columns:
-        df = df.repartition(F.col("date"))
-    out = df.sortWithinPartitions(*sort_cols) if sort_cols else df
+    written = Observation()
+    df = df.repartition(F.col("date")).observe(written, F.count(F.lit(1)).alias("rows"))
+    keys = [c for c in ("kafka_topic", "kafka_partition", "kafka_offset") if c in df.columns]
     (
-        out.write.partitionBy("date")
+        df.sortWithinPartitions("date", *keys)
+        .write.partitionBy("date")
         .option("compression", cfg.compression)
         .option("parquet.block.size", str(cfg.parquet_block_bytes))
         .mode(mode)
         .parquet(root)
     )
+    return written.get["rows"]
 
 
 def _sink_exists(spark: SparkSession, root: str) -> bool:
@@ -83,23 +96,36 @@ def _sink_exists(spark: SparkSession, root: str) -> bool:
     return next(data_file_sizes(spark, root), None) is not None
 
 
-def existing_max_offsets(spark: SparkSession, root: str) -> dict[int, int]:
+class ResumeOffsets(dict):
+    """`kafka_partition -> max persisted offset`, plus `rows`: the rows
+    the table held when the offsets were read."""
+
+    rows: int = 0
+
+
+def existing_max_offsets(spark: SparkSession, root: str) -> ResumeOffsets:
     """Per-partition max persisted offset from the sink itself (T1).
 
     Projected scan of 2 columns + group-by-max (A1) — the reference's
     resume recovery (collector:468-530), kept as the backstop for
-    checkpoint loss (SURVEY 7.3 risk 2).
+    checkpoint loss (SURVEY 7.3 risk 2). The same aggregate counts the
+    table's rows (`.rows`), so a run learns its starting total with no
+    extra job. A root with no data file gives an empty map and 0 rows
+    without running a job.
     """
+    offsets = ResumeOffsets()
     if not _sink_exists(spark, root):
-        return {}
-    df = spark.read.parquet(root)
+        return offsets
     rows = (
-        df.select("kafka_partition", "kafka_offset")
+        spark.read.parquet(root)
+        .select("kafka_partition", "kafka_offset")
         .groupBy("kafka_partition")
-        .agg(F.max("kafka_offset").alias("max_offset"))
+        .agg(F.max("kafka_offset").alias("max_offset"), F.count(F.lit(1)).alias("rows"))
         .collect()
     )
-    return {int(r["kafka_partition"]): int(r["max_offset"]) for r in rows}
+    offsets.update((int(r["kafka_partition"]), int(r["max_offset"])) for r in rows)
+    offsets.rows = sum(int(r["rows"]) for r in rows)
+    return offsets
 
 
 def _pruned_partition_bytes(spark: SparkSession, root: str, dates: list[str]) -> int:
@@ -162,8 +188,9 @@ def merge_dedup_append(
     root: str,
     keys: tuple[str, ...] = ("kafka_partition", "kafka_offset"),
     cfg: EngineConfig | None = None,
-) -> None:
+) -> int:
     """Idempotent append: anti-join new rows against persisted keys (J2).
+    Returns the rows appended (after the anti-join).
 
     Run inside foreachBatch or as the batch-mode write path when
     SKIP_DEDUPLICATION=false; see `dedup_frame_for_merge` for the
@@ -177,7 +204,7 @@ def merge_dedup_append(
         deduped = dedup_frame_for_merge(spark, new_df, root, keys, cfg)
     else:
         deduped = new_df  # first write: nothing to dedup against
-    write_date_partitioned(deduped, root, cfg, mode="append")
+    return write_date_partitioned(deduped, root, cfg, mode="append")
 
 
 def export_reference_layout(
@@ -272,11 +299,11 @@ def backfill_date_partitions(
     old = spark.conf.get(conf_key, "static")
     spark.conf.set(conf_key, "dynamic")
     try:
-        (
-            out.sortWithinPartitions("kafka_partition", "kafka_offset")
-            if {"kafka_partition", "kafka_offset"} <= set(df.columns)
-            else out
-        ).write.mode("overwrite").partitionBy("date").parquet(root)
+        keys = [c for c in ("kafka_partition", "kafka_offset") if c in df.columns]
+        # leads with `date`, the order the planned write needs (O1)
+        out.sortWithinPartitions("date", *keys).write.mode("overwrite").partitionBy(
+            "date"
+        ).parquet(root)
     finally:
         spark.conf.set(conf_key, old)
     return dates

@@ -59,14 +59,15 @@ def _strip_reused_subtrees(plan: str) -> str:
 
 
 def normalize_ids(plan: str) -> str:
-    """Renumber expression ids (`#N`), exchange plan ids and lambda
-    variable suffixes by first appearance within the plan. Spark draws
-    all three from session-wide counters, so the raw text of a plan
-    depends on everything the session planned before it; renumbered,
-    two checkouts' plans compare byte for byte. The 8-character random
-    suffix of a `tempfile.mkdtemp` directory (persisted indexes,
-    bucketed tables and streaming sinks live in one) is masked the same
-    way, so those plans compare across runs too."""
+    """Renumber expression ids (`#N`), exchange plan ids, lambda
+    variable suffixes and common-expression names (`_common_expr_N`,
+    from `nullif` and other `With` expressions) by first appearance
+    within the plan. Spark draws all four from session-wide counters,
+    so the raw text of a plan depends on everything the session planned
+    before it; renumbered, two checkouts' plans compare byte for byte.
+    The 8-character random suffix of a `tempfile.mkdtemp` directory
+    (persisted indexes, bucketed tables and streaming sinks live in one)
+    is masked the same way, so those plans compare across runs too."""
     plan = re.sub(
         re.escape(tempfile.gettempdir()) + r"/([\w.-]*?)[a-z0-9_]{8}(?=/)",
         lambda m: f"{tempfile.gettempdir()}/{m.group(1)}XXXXXXXX",
@@ -75,6 +76,7 @@ def normalize_ids(plan: str) -> str:
     for pattern, fmt in (
         (r"#(\d+)", "#{}"),
         (r"plan_id=(\d+)", "plan_id={}"),
+        (r"_common_expr_(\d+)", "_common_expr_{}"),
         (r"(?<=lambda )(\w+?)_(\d+)", None),
     ):
         seen: dict[str, int] = {}

@@ -8,7 +8,7 @@ from redpanda_to_parquet_writer_spark.collector import Collector
 from redpanda_to_parquet_writer_spark.config import EngineConfig
 from redpanda_to_parquet_writer_spark.operators.validate import ERROR, PASS, internal_consistency
 
-from tests.test_streaming_ingest import ENVELOPE_COLS, _envelope_df
+from tests.test_streaming_ingest import ENVELOPE_COLS, _envelope_df, _envelope_rows
 
 
 @pytest.fixture
@@ -43,9 +43,14 @@ def test_multi_topic_run(spark, tmp_path, collector):
     # listener-fed throughput: every fresh topic saw >= 1 micro-batch
     assert all(r.n_batches >= 1 and r.rows_per_sec > 0 for r in run.reports)
 
-    # re-run: checkpointed -> no new rows, still consistent
+    # re-run: checkpointed -> this run writes no row, and V1 still
+    # balances the tables against the rows they held before
     run2 = collector.run(["topic_a", "topic_b"])
-    assert run2.total_rows == 70
+    assert run2.total_rows == 0
+    assert [(r.validation.status, r.validation.expected) for r in run2.reports] == [
+        (PASS, 30),
+        (PASS, 40),
+    ]
 
 
 def test_concurrent_topic_drains(spark, tmp_path, collector):
@@ -109,7 +114,8 @@ def test_checkpoint_loss_recovery_via_offset_backstop(spark, tmp_path):
 
     shutil.rmtree(str(tmp_path / "ckpt"))  # simulate checkpoint loss
     run2 = c.run(["t"])
-    assert run2.total_rows == 40  # backstop resumed past everything written
+    assert run2.total_rows == 0  # backstop resumed past everything written
+    assert spark.read.parquet(c.output_root("t")).count() == 40
 
 
 def _part_rows(partition: int, offsets: list[int]) -> list[tuple]:
@@ -217,7 +223,8 @@ def test_collector_partition_replay_with_gaps_and_trim_cycle(spark, tmp_path):
 
     run2 = c.run(["md"])
     n2 = sum(len(o) for o in seg2_new.values())
-    assert run2.total_rows == n1 + n2, "replayed tail leaked past the resume map"
+    assert run2.total_rows == n2, "replayed tail leaked past the resume map"
+    assert spark.read.parquet(root).count() == n1 + n2
     assert existing_max_offsets(spark, root) == {0: 11, 1: 16, 2: 12}
 
     # synthetic high watermarks = per-partition expected counts: exact
@@ -323,3 +330,96 @@ def test_trim_with_fake_admin(monkeypatch):
     assert calls["conf"] == {"bootstrap.servers": "broker:9092"}
     got = sorted((tp.topic, tp.partition, tp.offset) for tp in calls["tps"])
     assert got == [("t1", 0, 11), ("t1", 1, 21), ("t2", 0, 6)]
+
+
+@pytest.mark.parametrize("fmt", ["json", "msgpack"])
+def test_fresh_drain_runs_at_most_six_jobs(spark, tmp_path, fmt):
+    """One pass per micro-batch: a fresh file-stream drain with V1 on
+    runs the schema sample, the write's two jobs and V1's one re-count
+    of the table, and no more. A cached batch (AQE fills a cache in a
+    job of its own) or a second re-count of the table shows here as
+    extra jobs. Jobs are counted by the scheduler's job-id window."""
+    import json
+
+    from redpanda_to_parquet_writer_spark.functions.msgpack_codec import packb
+
+    rows = _envelope_rows(n=40)
+    if fmt == "msgpack":
+        rows = [(*r[:5], packb(json.loads(r[5]))) for r in rows]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, ENVELOPE_COLS).coalesce(1).write.parquet(src)
+    cfg = EngineConfig(
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        skip_validation=False,
+    )
+    c = Collector(
+        spark, cfg, lambda topic, resume: spark.readStream.schema(ENVELOPE_COLS).parquet(src)
+    )
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    job0 = scheduler.nextJobId()
+    (report,) = c.run(["t"], samples={"t": [r[5] for r in rows]}).reports
+    jobs = scheduler.nextJobId() - job0
+    assert report.fmt == fmt
+    assert report.rows_written == 40 and report.validation.status == PASS
+    assert jobs <= 6, f"{jobs} Spark jobs for one fresh drain"
+
+
+def test_v1_reports_a_lost_file_as_error(spark, tmp_path, collector, monkeypatch):
+    """V1 can fail: its expected count comes from the writer, not from
+    the table it checks. A data file lost after the writes committed,
+    before the run ends, shows as ERROR, short by exactly that file's
+    rows, while `rows_written` still reports what the writer committed."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from redpanda_to_parquet_writer_spark import collector as collector_mod
+
+    src = str(tmp_path / "src_lost")
+    _envelope_df(spark, n=96).write.parquet(src)
+    collector._test_sources["topic_lost"] = src
+    drain = collector_mod.ingest_available_now
+    lost = {}
+
+    def drain_then_lose_a_file(spark, source, root, *args, **kwargs):
+        ledger = drain(spark, source, root, *args, **kwargs)
+        victim = sorted(Path(root).glob("date=*/*.parquet"))[0]
+        lost["rows"] = pq.read_metadata(victim).num_rows
+        victim.unlink()
+        return ledger
+
+    monkeypatch.setattr(collector_mod, "ingest_available_now", drain_then_lose_a_file)
+    (report,) = collector.run(["topic_lost"]).reports
+    assert report.rows_written == 96
+    v1 = report.validation
+    assert v1.status == ERROR and v1.expected == 96
+    assert v1.expected - v1.actual == lost["rows"] > 0
+
+
+def test_v1_balances_a_resumed_merge_run(spark, tmp_path):
+    """A resumed merge-path run: V1 expects the rows the table held
+    before the run plus the rows this run committed, and the redelivered
+    keys the anti-join drops count in neither."""
+    cfg = EngineConfig(
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        skip_validation=False,
+        skip_dedup=False,
+    )
+    src = tmp_path / "src"
+    _envelope_df(spark, n=40).write.parquet(str(src / "a"))
+    c = Collector(
+        spark,
+        cfg,
+        lambda topic, resume: spark.readStream.schema(ENVELOPE_COLS).parquet(str(src / "*")),
+    )
+    (first,) = c.run(["t"]).reports
+    assert (first.rows_written, first.validation.status) == (40, PASS)
+
+    # offsets 30..59: 10 redeliveries and 20 new rows
+    spark.createDataFrame(_envelope_rows(n=60)[30:], ENVELOPE_COLS).write.parquet(str(src / "b"))
+    (second,) = c.run(["t"]).reports
+    assert second.rows_before == 40 and second.rows_written == 20
+    v1 = second.validation
+    assert (v1.status, v1.expected, v1.actual) == (PASS, 60, 60)

@@ -220,3 +220,42 @@ def test_roundtrip_arbitrary_json_like_values():
         assert unpackb(packb(obj)) == obj
 
     run()
+
+
+def test_sample_looks_past_an_undecodable_head(spark):
+    """The MessagePack schema sample decodes the batch's first 50
+    payloads on the driver. When none of them decodes, it looks further
+    through the Arrow UDF, so the payloads that do decode keep their
+    columns instead of the batch losing its payload schema."""
+    from redpanda_to_parquet_writer_spark.streaming.ingest import prepare_envelope_batch
+
+    from tests.test_streaming_ingest import ENVELOPE_COLS
+
+    rows = [
+        ("t", 0, i, 1704067200000 + i, None, b"\xc1bad" if i < 50 else packb({"a": i}))
+        for i in range(60)
+    ]
+    env = spark.createDataFrame(rows, ENVELOPE_COLS).coalesce(1)
+    out = prepare_envelope_batch(spark, env, fmt="msgpack")
+    assert "a" in out.columns
+    assert sorted(r["a"] for r in out.filter("a IS NOT NULL").collect()) == list(range(50, 60))
+
+
+def test_sample_is_the_first_fifty_decodable_payloads(spark):
+    """Undecodable payloads scattered through the head do not shrink
+    the sample: it is still the batch's first 50 payloads that decode,
+    so a field that only later payloads carry (`b`) keeps its column."""
+    from redpanda_to_parquet_writer_spark.streaming.ingest import prepare_envelope_batch
+
+    from tests.test_streaming_ingest import ENVELOPE_COLS
+
+    def payload(i):
+        if i < 50 and i % 5 == 0:
+            return b"\xc1bad"
+        return packb({"a": i, "b": i} if i >= 50 else {"a": i})
+
+    rows = [("t", 0, i, 1704067200000 + i, None, payload(i)) for i in range(60)]
+    env = spark.createDataFrame(rows, ENVELOPE_COLS).coalesce(1)
+    out = prepare_envelope_batch(spark, env, fmt="msgpack")
+    assert {"a", "b"} <= set(out.columns)
+    assert sorted(r["b"] for r in out.filter("b IS NOT NULL").collect()) == list(range(50, 60))

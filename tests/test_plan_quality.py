@@ -221,11 +221,7 @@ def test_funnel_single_partitioning_chain(spark, sf_dir):
     )
 
 
-def test_funnel_plan_text_stable_across_builds(spark, sf_dir):
-    """Three builds of the funnel in one session give one id-normalized
-    plan text — the text PLANS.md digests and scripts/ab.py compares.
-    countDistinct aggregates went through the distinct-aggregate Expand
-    rewrite, whose projection order varied between builds."""
+def _dump_plans():
     import importlib.util
     import os
 
@@ -233,12 +229,40 @@ def test_funnel_plan_text_stable_across_builds(spark, sf_dir):
     spec = importlib.util.spec_from_file_location("dump_plans", path)
     dump_plans = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(dump_plans)
+    return dump_plans
+
+
+def test_funnel_plan_text_stable_across_builds(spark, sf_dir):
+    """Three builds of the funnel in one session give one id-normalized
+    plan text — the text PLANS.md digests and scripts/ab.py compares.
+    countDistinct aggregates went through the distinct-aggregate Expand
+    rewrite, whose projection order varied between builds."""
+    dump_plans = _dump_plans()
     texts = {
         dump_plans.normalize_ids(plan_str(QUERIES["events_funnel_conversion"](spark, sf_dir)))
         for _ in range(3)
     }
     assert len(texts) == 1
     assert "Expand" not in texts.pop()
+
+
+def test_normalize_ids_renumbers_common_expressions():
+    """Spark numbers `_common_expr_N` from a session-wide counter, so two
+    plans that differ only in N normalize to one text, while two
+    distinct common expressions in one plan stay distinct."""
+    normalize_ids = _dump_plans().normalize_ids
+
+    def plan(a, b):
+        return (
+            f"Project [(x#3 / _common_expr_{a}#7) AS q#9]\n"
+            f"+- Project [x#3, nullif(r#4, 0) AS _common_expr_{a}#7, "
+            f"nullif(s#5, 0) AS _common_expr_{b}#8]"
+        )
+
+    assert normalize_ids(plan(12, 13)) == normalize_ids(plan(40, 41))
+    assert "_common_expr_0" in normalize_ids(plan(12, 13))
+    assert "_common_expr_1" in normalize_ids(plan(12, 13))
+    assert normalize_ids(plan(12, 13)) != normalize_ids(plan(12, 12))
 
 
 def test_cohorts_single_scan_and_window(spark, sf_dir):

@@ -197,7 +197,9 @@ def test_offset_recovery_from_sink(spark, tmp_path, cfg):
     offsets = existing_max_offsets(spark, out)
     # partitions 0..3, offsets round-robin: partition p's max is 36+p
     assert offsets == {0: 36, 1: 37, 2: 38, 3: 39}
+    assert offsets.rows == 40  # counted by the same aggregate
     assert existing_max_offsets(spark, str(tmp_path / "missing")) == {}
+    assert existing_max_offsets(spark, str(tmp_path / "missing")).rows == 0
 
 
 def test_offset_recovery_empty_sink_root(spark, tmp_path, cfg):
@@ -258,6 +260,19 @@ def _rows(spark, out):
     return sorted(tuple(r) for r in spark.read.parquet(out).drop("date").collect())
 
 
+def _assert_v1_balances_restart(spark, stream, out, ckpt, cfg, written):
+    """Restart the drain from `ckpt`; the ledger balances across the
+    restart: V1 passes with the rows landed before it (from the resume
+    scan) plus the `written` rows the restarted drain commits."""
+    from redpanda_to_parquet_writer_spark.operators.validate import PASS, internal_consistency
+
+    before = existing_max_offsets(spark, out).rows
+    ledger = ingest_available_now(spark, stream, out, ckpt, cfg)
+    assert ledger.get(out, 0) == written
+    v1 = internal_consistency(spark, out, before + ledger.get(out, 0))
+    assert (v1.status, v1.actual) == (PASS, 96)
+
+
 def _crashing_stream(spark, src, writer, ckpt):
     """Run an availableNow drain whose foreachBatch body is `writer`;
     returns the exception the query died with."""
@@ -306,7 +321,7 @@ def test_crash_mid_write_merge_path_recovers_exactly_once(spark, tmp_path, cfg):
 
     # restart: same checkpoint, the REAL merge writer
     stream = spark.readStream.schema(ENVELOPE_COLS).parquet(src)
-    ingest_available_now(spark, stream, out, ckpt, merge_cfg)
+    _assert_v1_balances_restart(spark, stream, out, ckpt, merge_cfg, written=96 - landed)
     assert _rows(spark, out) == baseline
 
     # and a further rerun stays idempotent
@@ -331,7 +346,7 @@ def test_crash_after_write_before_commit_merge_path(spark, tmp_path, cfg):
         output_dir=cfg.output_dir, checkpoint_dir=ckpt, skip_dedup=False
     )
     baseline = _clean_run_baseline(spark, tmp_path, merge_cfg, src)
-    real_writer = make_merge_batch_writer(spark, out, merge_cfg)
+    real_writer = make_merge_batch_writer(spark, out, merge_cfg, {})
 
     def write_then_crash(batch_df, batch_id):
         real_writer(batch_df, batch_id)
@@ -341,7 +356,7 @@ def test_crash_after_write_before_commit_merge_path(spark, tmp_path, cfg):
     assert spark.read.parquet(out).count() == 96  # write fully landed
 
     stream = spark.readStream.schema(ENVELOPE_COLS).parquet(src)
-    ingest_available_now(spark, stream, out, ckpt, merge_cfg)
+    _assert_v1_balances_restart(spark, stream, out, ckpt, merge_cfg, written=0)
     assert _rows(spark, out) == baseline
 
 
@@ -386,7 +401,7 @@ def test_crash_mid_write_direct_path_committer_atomicity(spark, tmp_path, cfg):
     assert not _sink_exists(spark, out)
 
     stream = spark.readStream.schema(ENVELOPE_COLS).parquet(src)
-    ingest_available_now(spark, stream, out, ckpt, direct_cfg)
+    _assert_v1_balances_restart(spark, stream, out, ckpt, direct_cfg, written=96)
     assert _rows(spark, out) == baseline
 
 
@@ -430,3 +445,24 @@ def test_schema_probe_raises_on_corrupt_base(spark, tmp_path, cfg):
     with pytest.raises(Exception):
         _run_stream(spark, tmp_path, direct_cfg, src, str(out), cfg.checkpoint_dir)
     assert data_files() == before
+
+
+def test_committed_files_keep_key_order(spark, tmp_path, cfg):
+    """O1: the rows of every committed data file are in (kafka_partition,
+    kafka_offset) order. The planned write sorts each task by `date`; a
+    local sort that does not lead with `date` is replaced by that sort,
+    and the files keep arrival order instead. Offsets round-robin over 4
+    partitions, so arrival order is not key order."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "src")
+    out = tmp_path / "table"
+    _envelope_df(spark, n=96).coalesce(1).write.parquet(src)
+    _run_stream(spark, tmp_path, cfg, src, str(out), cfg.checkpoint_dir)
+
+    files = sorted(out.glob("date=*/*.parquet"))
+    assert len(files) == 4
+    for f in files:
+        t = pq.read_table(f, columns=["kafka_partition", "kafka_offset"])
+        keys = list(zip(t.column("kafka_partition").to_pylist(), t.column("kafka_offset").to_pylist()))
+        assert len(keys) > 1 and keys == sorted(keys), f.name

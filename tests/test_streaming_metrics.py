@@ -51,3 +51,30 @@ def test_listener_accounts_for_all_ingested_rows(spark, tmp_path):
         listener.detach(spark)
 
     assert spark.read.parquet(str(tmp_path / "out")).count() == n
+
+
+def test_listener_counts_each_row_once_on_the_merge_path(spark, tmp_path):
+    """The micro-batch is not cached, so Spark's `numInputRows` counts
+    every pass over it: the schema sample, the merge path's date pass and
+    the write. The listener reports the rows of one full pass instead,
+    null-timestamp rows included (they are read, then dropped)."""
+    cfg = EngineConfig(
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        skip_dedup=False,
+    )
+    n = 100
+    src = str(tmp_path / "src")
+    _envelope_df(spark, n=n, with_null_ts=5).write.parquet(src)
+
+    listener = IngestMetricsListener().attach(spark)
+    try:
+        source = spark.readStream.schema(ENVELOPE_COLS).parquet(src)
+        ledger = ingest_available_now(spark, source, cfg.output_dir, cfg.checkpoint_dir, cfg)
+        listener.wait_quiesce()
+        (summary,) = listener.summary()
+        assert summary.total_rows == n
+        assert sum(b.input_rows for b in listener.batches) == n
+    finally:
+        listener.detach(spark)
+    assert ledger == {cfg.output_dir: n - 5}
